@@ -140,20 +140,6 @@ object Bench {
         if (a.startsWith("=")) n == a.drop(1) else n.contains(a)) }
     val runs = math.max(1, sys.env.get("SPARK_GRAFT_BENCH_RUNS")
       .flatMap(_.toIntOption).getOrElse(3))
-    // UNTIMED warmup runs per gate — default ONE, everywhere (the
-    // committed floors and every sweep-of-record were measured that
-    // way). The obvious fix for fresh-JVM children reading 1.5-3x the
-    // committed floors — more warmups to amortize the JIT ramp — was
-    // A/B'd this round and REJECTED: 3 warmups moved targeted medians
-    // by -6%/-2%/+8% (pl_knn_rerank/pl_dedup_minhash/pl_dedup_incr at
-    // sf0.1, same session) while inflating child wall-clock 10-60%,
-    // i.e. the solo premium is a steady per-JVM cost (a 230-gate sweep
-    // warms shared operator paths far past what repeated runs of one
-    // gate reach), not a ramp. The env knob stays for re-running that
-    // A/B; the escalation-economics fix lives in the child CLEAN bar
-    // and per-gate retry-agreement logic below instead.
-    val warmups = math.max(1, sys.env.get("SPARK_GRAFT_BENCH_WARMUPS")
-      .flatMap(_.toIntOption).getOrElse(1))
     // committed per-gate expectations: the escalation trigger's baseline
     val expected = expectedFor(sfDir)
     // floor-provenance audit (r15): a floor is a per-gate MINIMUM folded
@@ -207,8 +193,7 @@ object Bench {
       // otherwise bleeds into later queries' medians (measured: a 1.1 s
       // query reported 4.7 s mid-sweep). Outside the timed region.
       System.gc()
-      // UNTIMED warmup run(s) per query (`warmups` above): the first
-      // execution pays the
+      // ONE untimed warmup run per query: the first execution pays the
       // query's codegen/JIT bring-up and absorbs the async cleaner churn
       // the GC above schedules — with only 3 timed runs, one such
       // inflated sample (measured 4.2 s vs 1.8 s warm on pl_collapse)
@@ -216,10 +201,11 @@ object Bench {
       // unpersisted (no-op when not cached) AFTER its count so the
       // operators that return persisted frames don't stack one leaked
       // cache entry per run for the cleaner to churn through mid-sweep.
-      (0 until warmups).foreach { _ =>
-        try { val w = fn(spark, sfDir); w.count(); w.unpersist(true) }
-        catch { case _: Throwable => () }
-      }
+      // More warmups were A/B'd (r17) and rejected: 3 moved targeted
+      // medians by -6%/-2%/+8% while inflating child wall-clock 10-60%
+      // — the solo premium is a steady per-JVM cost, not a JIT ramp.
+      try { val w = fn(spark, sfDir); w.count(); w.unpersist(true) }
+      catch { case _: Throwable => () }
       def timed(): Double =
         try {
           // fn() is timed too: operators that materialize eagerly do

@@ -465,16 +465,7 @@ object PipelineQueries {
     // |S|−⌈t·|S|⌉+1 shingles enter the self-join; oracle = exact
     // uncapped Jaccard pairs, which is the operator's contract
     "pl_dedup_prefix" -> { (s, dir) =>
-      // SPARK_GRAFT_PREFIX_STORAGE=disk_only re-runs the gate with the
-      // shingle relation's single-box memory lever thrown (the sf10
-      // measurement knob; storage level is value-invisible)
-      val lvl = sys.env.get("SPARK_GRAFT_PREFIX_STORAGE") match {
-        case Some("disk_only") =>
-          org.apache.spark.storage.StorageLevel.DISK_ONLY
-        case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      }
-      Dedup.prefixFilterPairs(docs(s, dir), n = 3, threshold = 0.8,
-          shingleStorage = lvl)
+      Dedup.prefixFilterPairs(docs(s, dir), n = 3, threshold = 0.8)
         .select(col("id1"), col("id2"), sround(col("jaccard")).as("jaccard"))
         .orderBy("id1", "id2")
     },
@@ -570,12 +561,12 @@ object PipelineQueries {
       // executed plan carries 9 real shuffles, PlanAuditSpec-budgeted)
       val surv1 = FilterChain.c4Filter(u).filter(col("keep"))
         .select("doc_id", "text", "source")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val drop2 = Dedup.minhashLshPairs(surv1, n = 3, threshold = 0.8)
         .select(col("id2").as("doc_id")).distinct()
       val train = surv1.join(drop2, Seq("doc_id"), "left_anti")
         .filter(col("doc_id") % 13 =!= 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val evalSet = d.filter(col("doc_id") % 13 === 0)
       val contaminated = Dedup.decontaminate(train, evalSet, n = 4)
         .select(col("id").as("doc_id"))
@@ -621,7 +612,7 @@ object PipelineQueries {
       val d = docs(s, dir)
       val pairs = Dedup.simhashPairs(d, nBits = 60, maxHamming = 3)
         .select(col("id1"), col("id2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val out = Dedup.softDedupWeights(d, pairs).orderBy("doc_id")
       pairs.unpersist() // softDedupWeights materialized its labels
       out
@@ -1607,27 +1598,14 @@ object PipelineQueries {
     // the cheap bit-signature dedup stand in for the shingle pipeline";
     // contingency = one id join + hash agg, pair counts exact integers
     "pl_rand_index" -> { (s, dir) =>
-      // SPARK_GRAFT_RANDIDX_STORAGE=disk_only throws both detector
-      // chains' signature-relation storage levers (the pl_dedup_prefix
-      // pattern): this composite persists the minhash base (with its
-      // corpus-sized verification sets) and the simhash relation in ONE
-      // JVM, and its sf10 WARM rerun measured 179 s vs 71 s cold — the
-      // single-box storage-memory churn signature. Value-invisible.
-      val lvl = sys.env.get("SPARK_GRAFT_RANDIDX_STORAGE") match {
-        case Some("disk_only") =>
-          org.apache.spark.storage.StorageLevel.DISK_ONLY
-        case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      }
       val d = docs(s, dir)
       // the two detector chains are independent eager pipelines —
       // overlap them as concurrent jobs (guide §2.6; r16): the minhash
       // chain's verify tail and the simhash chain's candidate join
       // otherwise each leave most cores idle while the other waits
       val (mh, sh) = Dedup.inParallel(
-        Dedup.minhashLshPairs(d, 3, 0.8, sigStorage = lvl)
-          .select("id1", "id2"),
-        Dedup.simhashPairs(d, nBits = 60, maxHamming = 3, sigStorage = lvl)
-          .select("id1", "id2"))
+        Dedup.minhashLshPairs(d, 3, 0.8).select("id1", "id2"),
+        Dedup.simhashPairs(d, nBits = 60, maxHamming = 3).select("id1", "id2"))
       Dedup.clusterAgreement(d, mh, sh)
         .select(col("n"), col("sum_ij"), col("sum_a"), col("sum_b"),
           sround(col("ari")).as("ari"))

@@ -757,7 +757,7 @@ object SeriesAnalytics {
     // scalar ops on a 4-column row, nothing iterates over data.
     "q_pacf" -> { (s, dir) =>
       val b = buckets6h(s, dir, "view")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist()
       val lagged = b
         .select(col("skey"), col("t"), col("b").as("bx"),
           explode(array((1 to 4).map(lit(_)): _*)).as("k"))

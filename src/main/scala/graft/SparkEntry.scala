@@ -183,20 +183,16 @@ object SparkEntry {
     */
   private def runReplay(s: SparkSession, out: DataFrame, qn: String,
       outputMode: String = "append", partitions: Int = 1,
-      extraConfs: Map[String, String] = Map.empty,
       sinkPath: Option[String] = None)(
       batches: () => Seq[() => Unit]): Unit = {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = s.conf.get(
       "spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val prevExtra = extraConfs.keys
-      .map(k => k -> s.conf.getOption(k)).toMap
     val ckpt = GateScratch.tempDir("graft_replay_ckpt") // deleted inline below
     // 1 partition is the measured default (per-batch fixed cost dominates
     // the small-state replays); heavy keyed-state gates override it so
     // state-store work parallelizes (q_sessionize_stream's A/B, r13)
     s.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    extraConfs.foreach { case (k, v) => s.conf.set(k, v) }
     // every processAllAvailable otherwise appends a NO-DATA micro-batch
     // for watermark bookkeeping — doubling the per-batch fixed cost of a
     // bounded replay. The replays don't need them: joins emit on data,
@@ -230,10 +226,6 @@ object SparkEntry {
       catch { case _: Throwable => () } // never skip the conf restore
       s.conf.set("spark.sql.shuffle.partitions", prev)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      prevExtra.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
       try rmTree(ckpt) catch { case _: java.io.IOException => () }
     }
   }
@@ -332,7 +324,7 @@ object SparkEntry {
     // fact-table pass runs once per consumer. Dim-sized (one row per
     // series); Bench's post-gate cache sweep reclaims it.
     val index = graft.query.Meta.seriesTable(d.filter(col("metric") === "click"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val df = Planner.planSub(
       d,
       TsQuery(T0, T1),
@@ -1080,22 +1072,10 @@ object SparkEntry {
         // amplification, and local merge pays an extra per-batch sort.
         // Parquet sink: the emitted session set is also corpus-sized, so
         // it must not land in a driver-memory table either.
-        // SPARK_GRAFT_SESS_PARTS / _PROVIDER remain the measurement
-        // overrides for re-running the A/B at other state sizes.
+        // SPARK_GRAFT_SESS_PARTS remains the measurement override for
+        // re-running the partition A/B at other state sizes.
         val sessParts = autoSessParts(dir)
-        val sessConfs = sys.env.get("SPARK_GRAFT_SESS_PROVIDER")
-          .filter(_ == "rocksdb").map(_ =>
-            "spark.sql.streaming.stateStore.providerClass" ->
-              ("org.apache.spark.sql.execution.streaming.state." +
-                "RocksDBStateStoreProvider")).toMap ++
-          // measurement override (r17 A/B): state-store maintenance
-          // (snapshot/cleanup thread) interval during the replay
-          sys.env.get("SPARK_GRAFT_SESS_MAINT_SEC")
-            .flatMap(_.toIntOption).map(sec =>
-              "spark.sql.streaming.stateStore.maintenanceInterval" ->
-                s"${sec}s").toMap
         runReplay(s, st, qn = "", partitions = sessParts,
-          extraConfs = sessConfs,
           sinkPath = Some(outDir.toString)) { () =>
           // one drain: maxFilesPerTrigger=1 turns the four staged files
           // into four ordered micro-batches under processAllAvailable
@@ -1347,7 +1327,7 @@ object SparkEntry {
           .groupBy(col("skey"), col("ts"))
           .agg(max_by(col("value"), col("seq")).as("value"))
           .withColumn("q", floor(col("value") * 10000 + 0.5 + 1e-6).cast("long"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist()
         val med = d.groupBy("skey")
           .agg(percentile(col("q"), lit(0.5)).as("med"))
         val dev = d.join(broadcast(med), "skey")
@@ -1385,7 +1365,7 @@ object SparkEntry {
             (col("ts") - pmod(col("ts"), lit(SIXH))).as("bucket"))
           .agg(sum(col("q")).as("sq_"))
           .select(col("skey"), col("bucket"), expr("sq_ div 100").as("b"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist()
         val lagged = b
           .select(col("skey"), col("bucket"), col("b").as("bx"),
             explode(array((1 to 4).map(lit(_)): _*)).as("k"))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.CacheScope
 import graft.functions.GraftFunctions.md5Hash60
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -254,20 +255,6 @@ object Dedup {
       .toDF("id", "h", "hp")
   }
 
-  /** Materialize `result` (bounded: near-dup pairs), then release the
-    * shingle cache. Returned frame is cached; callers may unpersist it.
-    * Without this, each call would pin a shingle-sized cache for the
-    * session lifetime.
-    */
-  private def materializeAndRelease(result: DataFrame, sh: DataFrame,
-      more: DataFrame*): DataFrame = {
-    val out = result.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    sh.unpersist()
-    more.foreach(_.unpersist())
-    out
-  }
-
   /** Run two INDEPENDENT eager chain builders as concurrent Spark jobs
     * (optimization guide §2.6): Spark's scheduler happily runs several
     * jobs at once in one application — composite operators that
@@ -276,16 +263,18 @@ object Dedup {
     * scheduling makes the second chain's tasks back-fill executors the
     * first chain's tail frees. Each builder must be self-contained
     * (builds AND materializes its own frames — every producer in this
-    * module is); failures propagate to the caller unchanged.
+    * module is, and releases them through its [[CacheScope]] when it
+    * fails or is cancelled); failures propagate to the caller unchanged.
     */
   private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    import scala.concurrent.{Await, ExecutionContext, Future, Promise, blocking}
+    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
     import scala.concurrent.duration.Duration
     import scala.util.Failure
-    // a dedicated 2-thread pool per call, not the shared global EC:
-    // the builders BLOCK on Spark actions for seconds-to-minutes, and
-    // two such tasks parked on the CPU-sized global pool can starve any
-    // future nested/wider use (ADVICE r16). The pool dies with the call.
+    // a dedicated 2-thread pool per call, not the shared global EC: the
+    // builders block on Spark actions for seconds-to-minutes, and two
+    // such tasks parked on the CPU-sized global pool could starve other
+    // users of it. One thread per builder is what keeps both running;
+    // the pool dies with the call.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     // Spark job-group/description properties are snapshotted per THREAD
@@ -310,7 +299,7 @@ object Dedup {
         if (callerDesc != null)
           sc.setLocalProperty("spark.job.description", callerDesc)
       }
-      blocking(f)
+      f
     }
     val f1 = run(fa)
     val f2 = run(fb)
@@ -343,31 +332,11 @@ object Dedup {
     * hot shingle would connect are nowhere near duplicates); pass None
     * only when the corpus is known skew-free.
     */
-  /** Storage level for the CORPUS-SIZED detector relations (shingle
-    * tables, minhash/simhash signature bases) — the default for every
-    * `shingleStorage`/`sigStorage` parameter in this module.
-    * `SPARK_GRAFT_DETECTOR_STORAGE` is the measurement override for the
-    * full-sweep storage A/B (r15 probed `disk_only`: a wash at 48 g;
-    * r17 probed `memory_and_disk_ser`: see OPTIMIZATION_r17.md).
-    * Bounded result frames (pair sets, contingency tables, labels) stay
-    * MEMORY_AND_DISK unconditionally — they are not the churn source.
-    */
-  private[graft] def detectorStorage: org.apache.spark.storage.StorageLevel =
-    sys.env.get("SPARK_GRAFT_DETECTOR_STORAGE") match {
-      case Some("memory_and_disk_ser") =>
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-      case Some("disk_only") =>
-        org.apache.spark.storage.StorageLevel.DISK_ONLY
-      case _ => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    }
-
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
-      maxDocFreq: Option[Int] = Some(1000)): DataFrame = {
-    // consumed by three plan branches (sizes + both join sides) — persist
+      maxDocFreq: Option[Int] = Some(1000)): DataFrame = CacheScope.eager { cache =>
+    // consumed by three plan branches (sizes + both join sides) — kept
     // so tokenize+md5 runs once; spills to disk when it outgrows memory
-    val sh0 = shingleHashes(docs, n).select("id", "h")
-      .persist(detectorStorage)
-    var sh: DataFrame = sh0
+    var sh: DataFrame = cache.keep(shingleHashes(docs, n).select("id", "h"))
     maxDocFreq.foreach { df =>
       val hot = sh.groupBy("h").count().filter(col("count") > df).select("h")
       sh = sh.join(hot, Seq("h"), "left_anti")
@@ -379,14 +348,13 @@ object Dedup {
       .join(b, col("a.h") === col("b.h") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
       .agg(count("*").as("i"))
-    val pairs = inter
+    inter
       .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("n", "n1"), "id1")
       .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("n", "n2"), "id2")
       .withColumn("jaccard",
         col("i").cast("double") / (col("n1") + col("n2") - col("i")))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
-    materializeAndRelease(pairs, sh0)
   }
 
   /** Exact all-pairs Jaccard ≥ `threshold` via PREFIX FILTERING
@@ -409,20 +377,9 @@ object Dedup {
     * RAREST shingles.
     */
   def prefixFilterPairs(docs: DataFrame, n: Int = 3,
-      threshold: Double = 0.8,
-      shingleStorage: org.apache.spark.storage.StorageLevel =
-        Dedup.detectorStorage): DataFrame = {
-    // `shingleStorage` is the single-box memory lever SCALING.md names
-    // for this operator: the persisted shingle relation is corpus-sized
-    // (250M rows / ~4 GB at the sf10 rehearsal) and consumed by two
-    // join branches, so on one box its storage-memory churn — not the
-    // plan — dominates above ~sf1 (cold-run pair stages 4.9 s vs 29 s
-    // once the cache competes with execution memory). DISK_ONLY trades
-    // re-read I/O for zero storage-memory pressure; on a real cluster
-    // the relation partitions across executors and the default
-    // MEMORY_AND_DISK is right.
-    val sh0 = shingleHashes(docs, n).select("id", "h")
-      .persist(shingleStorage)
+      threshold: Double = 0.8): DataFrame = CacheScope.eager { cache =>
+    // kept: consumed by the df aggregation and both verify join branches
+    val sh0 = cache.keep(shingleHashes(docs, n).select("id", "h"))
     val dfreq = sh0.groupBy("h").agg(count(lit(1)).as("df"))
     val ranked = sh0.join(dfreq, "h")
       .withColumn("pos", row_number().over(
@@ -439,17 +396,16 @@ object Dedup {
     // bare ceil is 5 → a one-short, LOSSY prefix); erring longer is
     // always lossless.
     val idxFrac = 2.0 * threshold / (1.0 + threshold)
-    // one persisted frame for both prefixes (the index prefix is a
+    // one kept frame for both prefixes (the index prefix is a
     // subset of the probe prefix): the asymmetric self-join's sides are
     // no longer identical subplans, so without this the df-rank window
     // pipeline would execute once PER SIDE (ReuseExchange only
     // deduplicates identical plans)
-    val prefProbe = ranked
+    val prefProbe = cache.keep(ranked
       .filter(col("pos") <= col("n") - ceil(lit(threshold) * col("n") - 1e-9) + 1)
       .withColumn("inIdx",
         col("pos") <= col("n") - ceil(lit(idxFrac) * col("n") - 1e-9) + 1)
-      .select("id", "h", "pos", "n", "inIdx")
-      .persist(shingleStorage)
+      .select("id", "h", "pos", "n", "inIdx"))
     val prefIdx = prefProbe.filter(col("inIdx"))
     // Candidate join: smaller-side index prefix ⊠ larger-side probe
     // prefix on the shingle, with the LENGTH filter (J ≥ t forces
@@ -490,14 +446,13 @@ object Dedup {
       .join(sh0.select(col("id").as("id1"), col("h")), Seq("id1"))
       .join(sh0.select(col("id").as("id2"), col("h")), Seq("id2", "h"))
       .groupBy("id1", "id2", "n1", "n2").agg(count(lit(1)).as("i"))
-    val pairs = inter
+    inter
       .withColumn("jaccard",
         col("i").cast("double") / (col("n1") + col("n2") - col("i")))
       .filter(col("jaccard") >= threshold)
       // canonical id1 < id2 output regardless of the size orientation
       .select(least(col("id1"), col("id2")).as("id1"),
         greatest(col("id1"), col("id2")).as("id2"), col("jaccard"))
-    materializeAndRelease(pairs, sh0, prefProbe)
   }
 
   /** Asymmetric CONTAINMENT pairs: `C(A→B) = |A∩B| / |A| ≥ threshold`
@@ -515,10 +470,8 @@ object Dedup {
     * join.
     */
   def containmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.9,
-      maxDocFreq: Option[Int] = Some(1000)): DataFrame = {
-    val sh0 = shingleHashes(docs, n).select("id", "h")
-      .persist(detectorStorage)
-    var sh: DataFrame = sh0
+      maxDocFreq: Option[Int] = Some(1000)): DataFrame = CacheScope.eager { cache =>
+    var sh: DataFrame = cache.keep(shingleHashes(docs, n).select("id", "h"))
     maxDocFreq.foreach { cap =>
       val hot = sh.groupBy("h").count().filter(col("count") > cap).select("h")
       sh = sh.join(hot, Seq("h"), "left_anti")
@@ -532,14 +485,13 @@ object Dedup {
       .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("n", "n1"), "id1")
       .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("n", "n2"), "id2")
     // both orientations from the one intersection relation
-    val oriented = withSizes.select(col("id1").as("contained"),
+    withSizes.select(col("id1").as("contained"),
         col("id2").as("container"),
         (col("i").cast("double") / col("n1")).as("containment"))
       .unionAll(withSizes.select(col("id2").as("contained"),
         col("id1").as("container"),
         (col("i").cast("double") / col("n2")).as("containment")))
       .filter(col("containment") >= threshold)
-    materializeAndRelease(oriented, sh0)
   }
 
   /** MinHash-ESTIMATED containment — the at-scale sibling of the exact
@@ -557,14 +509,13 @@ object Dedup {
     * shape in both engines, quantized at 4 dp.
     */
   def containmentEstimate(docs: DataFrame, n: Int = 3,
-      threshold: Double = 0.5, maxBucket: Int = 100): DataFrame = {
+      threshold: Double = 0.5, maxBucket: Int = 100): DataFrame = CacheScope.eager { cache =>
     val mins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
       min(pmod(col("hp") * a + b, lit(MinhashP))).as(s"m$i")
     }
-    val base = shingleHashes(docs, n)
+    val base = cache.keep(shingleHashes(docs, n)
       .groupBy("id")
-      .agg(mins.head, (mins.tail :+ count(lit(1)).as("nsh")): _*)
-      .persist(detectorStorage)
+      .agg(mins.head, (mins.tail :+ count(lit(1)).as("nsh")): _*))
     val banded0 = bandRows(base)
     val banded =
       if (maxBucket <= 0) banded0
@@ -592,7 +543,7 @@ object Dedup {
     // unionAll of two selects would recompute the candidate joins twice)
     def estExpr(nc: Column) =
       col("jhat") / (col("jhat") + 1.0) * (col("n1") + col("n2")) / nc
-    val oriented = scored
+    scored
       .select(explode(array(
         struct(col("id1").as("contained"), col("id2").as("container"),
           estExpr(col("n1")).as("e")),
@@ -603,7 +554,6 @@ object Dedup {
       .filter(col("e") >= threshold)
       .select(col("contained"), col("container"),
         (floor(col("e") * 10000 + 0.5 + 1e-6) / 10000.0).as("est"))
-    materializeAndRelease(oriented, base)
   }
 
   /** MinHash parameters shared with the oracle SQL: universal hashes
@@ -658,17 +608,7 @@ object Dedup {
     * the exchange that join needs anyway.
     */
   def minhashLshPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
-      maxBucket: Int = 100,
-      sigStorage: org.apache.spark.storage.StorageLevel =
-        Dedup.detectorStorage): DataFrame = {
-    // `sigStorage` is the prefixFilterPairs(shingleStorage=…) twin for
-    // THIS chain's corpus-sized persisted relation: `base` carries every
-    // doc's verification shingle-hash SET, so on one box a composite
-    // that runs this chain alongside another detector (pl_rand_index)
-    // can evict execution memory with it — DISK_ONLY trades re-read I/O
-    // for zero storage-memory pressure. On a real cluster the relation
-    // partitions across executors and the default is right.
-    //
+      maxBucket: Int = 100): DataFrame = CacheScope.eager { cache =>
     // ONE aggregation over the shingle relation produces BOTH the
     // signature columns and the verification sets — previously two
     // groupBys (signatures + collect_set) each shuffled the full
@@ -678,10 +618,9 @@ object Dedup {
     val mins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
       min(pmod(col("hp") * a + b, lit(MinhashP))).as(s"m$i")
     }
-    val base = shingleHashes(docs, n)
+    val base = cache.keep(shingleHashes(docs, n)
       .groupBy("id")
-      .agg(mins.head, (mins.tail :+ collect_set(col("h")).as("hs")): _*)
-      .persist(sigStorage)
+      .agg(mins.head, (mins.tail :+ collect_set(col("h")).as("hs")): _*))
     // explode into 4 band keys: (band_id, m_{2k}, m_{2k+1})
     val banded0 = bandRows(base)
     val banded =
@@ -699,7 +638,7 @@ object Dedup {
     // exact verification per candidate: shingle-hash-set intersection
     // (the sets rode along in the fused aggregation above)
     val sets = base.select(col("id"), col("hs"))
-    val pairs = cand
+    cand
       .join(sets.select(col("id").as("id1"), col("hs").as("hs1")), "id1")
       .join(sets.select(col("id").as("id2"), col("hs").as("hs2")), "id2")
       .withColumn("i", size(array_intersect(col("hs1"), col("hs2"))).cast("double"))
@@ -707,7 +646,6 @@ object Dedup {
         col("i") / (size(col("hs1")) + size(col("hs2")) - col("i")))
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
-    materializeAndRelease(pairs, base)
   }
 
   /** The corpus-side LSH dedup index: one row per (doc, band) with the
@@ -748,16 +686,15 @@ object Dedup {
   def incrementalNearDups(newDocs: DataFrame, corpusIndex: DataFrame,
       corpusShingles: DataFrame, n: Int = 3,
       threshold: Double = 0.8, maxBucket: Int = 100,
-      shingleBuckets: Int = 0): DataFrame = {
+      shingleBuckets: Int = 0): DataFrame = CacheScope.eager { cache =>
     // new-side signatures and verification sets from ONE aggregation
     // over the batch shingles (same fusion as minhashLshPairs)
     val newMins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
       min(pmod(col("hp") * a + b, lit(MinhashP))).as(s"m$i")
     }
-    val newBase = shingleHashes(newDocs, n)
+    val newBase = cache.keep(shingleHashes(newDocs, n)
       .groupBy("id")
-      .agg(newMins.head, (newMins.tail :+ collect_set(col("h")).as("hs")): _*)
-      .persist(detectorStorage)
+      .agg(newMins.head, (newMins.tail :+ collect_set(col("h")).as("hs")): _*))
     // the corpus-side twin of minhashLshPairs' band-bucket skew guard: a
     // pathological index bucket would multiply EVERY future batch's probe
     // fan-out, so cap corpus bucket membership before the band join (the
@@ -767,14 +704,13 @@ object Dedup {
     // to price exactly that deployment shape (pl_dedup_incr_fixed).
     val okIndex = capBandBuckets(corpusIndex, maxBucket)
     // consumed by two plan branches (pair join + corpus-set semi-join):
-    // persisted so the index probe — the expensive part — runs once
-    val cand = bandRows(newBase).as("a")
+    // kept so the index probe — the expensive part — runs once
+    val cand = cache.keep(bandRows(newBase).as("a")
       .join(okIndex.as("b"),
         col("a.band") === col("b.band") && col("a.x") === col("b.x") &&
           col("a.y") === col("b.y"))
       .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val newSets = newBase.select(col("id"), col("hs"))
     // PARTITION-PRUNED shingle read (r15): when the persisted shingle
     // table is hash-partitioned on `sb = pmod(xxhash64(id), shingleBuckets)`
@@ -810,7 +746,7 @@ object Dedup {
       .join(cand.select(col("corpus_id").as("id")).distinct(), Seq("id"),
         "left_semi")
       .groupBy("id").agg(collect_set("h").as("hs"))
-    val pairs = cand
+    cand
       .join(newSets.select(col("id").as("new_id"), col("hs").as("hs1")), "new_id")
       .join(corpusSets.select(col("id").as("corpus_id"), col("hs").as("hs2")),
         "corpus_id")
@@ -819,9 +755,6 @@ object Dedup {
         col("i") / (size(col("hs1")) + size(col("hs2")) - col("i")))
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
-    val out = materializeAndRelease(pairs, newBase)
-    cand.unpersist()
-    out
   }
 
   /** Connected components over near-dup pairs — turns pairwise matches
@@ -849,41 +782,35 @@ object Dedup {
     * in one place.
     */
   def clusters(pairs: DataFrame, nodes: DataFrame,
-      maxIter: Int = 25, driverEdgeCap: Long = 4L << 20): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val labels = subgraphLabels(pairs, maxIter, driverEdgeCap)
-    // widen the subgraph labels back to the full node set (left join —
-    // the label side is duplicate docs only, broadcast-sized in practice)
-    val full = nodes.select(col("id").cast("long").as("id"))
-      .join(labels.withColumnRenamed("cid", "ecid"), Seq("id"), "left")
-      .select(col("id"), coalesce(col("ecid"), col("id")).as("cid"))
-      .persist(lvl)
-    full.count()
-    labels.unpersist()
-    full // persisted; callers may unpersist once consumed
-  }
+      maxIter: Int = 25, driverEdgeCap: Long = 4L << 20): DataFrame =
+    CacheScope.eager { cache =>
+      val labels = subgraphLabels(cache, pairs, maxIter, driverEdgeCap)
+      // widen the subgraph labels back to the full node set (left join —
+      // the label side is duplicate docs only, broadcast-sized in practice)
+      nodes.select(col("id").cast("long").as("id"))
+        .join(labels.withColumnRenamed("cid", "ecid"), Seq("id"), "left")
+        .select(col("id"), coalesce(col("ecid"), col("id")).as("cid"))
+    }
 
   /** `(id, cid)` for every node of the pair graph, driver union-find or
-    * distributed hash-min depending on the pair count. Returned frame is
-    * persisted. `pairs` should already be persisted (every producer in
-    * this module returns it so) — the sizing count is then free.
+    * distributed hash-min depending on the pair count. The returned
+    * frame is materialized and kept in `cache`. `pairs` should already
+    * be persisted (every producer in this module returns it so) — the
+    * sizing count is then free.
     */
-  private def subgraphLabels(pairs: DataFrame, maxIter: Int,
-      driverEdgeCap: Long): DataFrame = {
+  private def subgraphLabels(cache: CacheScope, pairs: DataFrame,
+      maxIter: Int, driverEdgeCap: Long): DataFrame = CacheScope { local =>
     // the edge relation is consumed TWICE (size probe, then the
     // driver collect or the iterative propagation's edge build) —
-    // persist it so the detector chain upstream runs once, not twice
+    // kept so the detector chain upstream runs once, not twice
     // (pre-r14, an unpersisted chain like the simhash candidate join
     // re-ran in full under driverLabels' collect: pl_rand_index's
     // variance source). Edge frames are the duplicate subgraph only —
     // the broadcast-regime size this function already assumes.
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = local.keep(pairs)
     val n = p.count()
-    val out =
-      if (n <= driverEdgeCap) driverLabels(p) // collects eagerly
-      else iterativeLabels(p, maxIter) // persists + materializes its own edges
-    p.unpersist()
-    out
+    if (n <= driverEdgeCap) driverLabels(cache, p) // collects eagerly
+    else iterativeLabels(cache, p, maxIter) // keeps + materializes its own edges
   }
 
   /** Union-find over a collected edge list — the small-graph fast path.
@@ -891,7 +818,7 @@ object Dedup {
     * forest shallow and makes every root its component's minimum id, the
     * exact `cid` contract of [[clusters]].
     */
-  private def driverLabels(pairs: DataFrame): DataFrame = {
+  private def driverLabels(cache: CacheScope, pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
     val edges = pairs
       .select(col("id1").cast("long"), col("id2").cast("long"))
@@ -910,9 +837,8 @@ object Dedup {
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
     import spark.implicits._
-    val labels = parent.keysIterator.map(id => (id, find(id))).toSeq
-      .toDF("id", "cid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val labels = cache.keep(parent.keysIterator.map(id => (id, find(id))).toSeq
+      .toDF("id", "cid"))
     labels.count()
     labels
   }
@@ -923,20 +849,18 @@ object Dedup {
     * rounds (near-dup clusters are shallow: duplicates of one source
     * form a star). This is the standard MapReduce connected-components
     * shape — each round is one shuffle on node id, no driver-side graph
-    * state; labels persist per round and release after the next
-    * materializes. `maxIter` bounds pathological chains; convergence is
-    * detected via the strictly decreasing label sum.
+    * state; labels are kept in `cache` per round and released after the
+    * next materializes. `maxIter` bounds pathological chains; convergence
+    * is detected via the strictly decreasing label sum.
     */
-  private def iterativeLabels(pairs: DataFrame, maxIter: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  private def iterativeLabels(cache: CacheScope, pairs: DataFrame,
+      maxIter: Int): DataFrame = CacheScope { local =>
     val e = pairs.select(col("id1").cast("long").as("src"),
       col("id2").cast("long").as("dst"))
-    val edges = e
-      .unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .persist(lvl)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cid", col("id"))
-      .persist(lvl)
+    val edges = local.keep(e
+      .unionByName(e.select(col("dst").as("src"), col("src").as("dst"))))
+    var labels = cache.keep(edges.select(col("src").as("id")).distinct()
+      .withColumn("cid", col("id")))
     // exact 38-digit sum: labels only decrease, so the sum strictly
     // decreases until the fixpoint — a Long sum would overflow for
     // md5-derived 60-bit ids and could fake convergence. Computed in the
@@ -954,17 +878,15 @@ object Dedup {
         .join(labels.select(col("id").as("dst"), col("cid").as("dcid")), "dst")
         .groupBy(col("src").as("id"))
         .agg(min(col("dcid")).as("nmin"))
-      val next = labels.join(nbrMin, Seq("id"), "left")
+      val next = cache.keep(labels.join(nbrMin, Seq("id"), "left")
         .select(col("id"),
-          least(col("cid"), coalesce(col("nmin"), col("cid"))).as("cid"))
-        .persist(lvl)
+          least(col("cid"), coalesce(col("nmin"), col("cid"))).as("cid")))
       prevSum = curSum
       curSum = materializeSum(next) // materializes `next` + sums, one job
-      labels.unpersist()
+      cache.release(labels)
       labels = next
       iter += 1
     }
-    edges.unpersist()
     labels
   }
 
@@ -987,13 +909,14 @@ object Dedup {
     // producers return): id-longs of the duplicate subgraph, evictable
     // under memory pressure — callers looping per ingest round should
     // prefer incrementalNearDups, which releases its intermediates.
-    val labels = subgraphLabels(pairs, maxIter = 25, driverEdgeCap = 4L << 20)
-    val drop = labels
-      .filter(col("id") =!= col("cid"))
-      .select(col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    drop.count()
-    labels.unpersist()
+    val drop = CacheScope { cache =>
+      val d = subgraphLabels(cache, pairs, maxIter = 25, driverEdgeCap = 4L << 20)
+        .filter(col("id") =!= col("cid"))
+        .select(col("id"))
+        .persist()
+      d.count()
+      d
+    }
     // no broadcast hint: at 100 TB the drop set can be a large fraction
     // of the corpus (30-50% dup rates are normal) — let AQE pick
     // broadcast when the materialized size allows it
@@ -1009,16 +932,16 @@ object Dedup {
     * Output: (doc_id, csize, weight).
     */
   def softDedupWeights(docs: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id"): DataFrame = {
-    val labels = clusters(pairs, docs.select(col(idCol).cast("long").as("id")))
+      idCol: String = "doc_id"): DataFrame = CacheScope.eager { cache =>
+    // clusters() returns its labels frame persisted (node-count-sized);
+    // kept so it is released once the weights materialize, rather than
+    // pinning a corpus-sized cache entry for the session lifetime
+    val labels = cache.keep(
+      clusters(pairs, docs.select(col(idCol).cast("long").as("id"))))
     val sizes = labels.groupBy("cid").agg(count(lit(1)).as("csize"))
-    val out = labels.join(sizes, "cid")
+    labels.join(sizes, "cid")
       .select(col("id").as(idCol), col("csize"),
         (lit(1.0) / col("csize")).as("weight"))
-    // clusters() returns its labels frame persisted (node-count-sized);
-    // materialize the weights and release it here rather than pinning a
-    // corpus-sized cache entry for the session lifetime
-    materializeAndRelease(out, labels)
   }
 
   /** Benchmark decontamination: flag TRAIN documents that share any word
@@ -1088,21 +1011,19 @@ object Dedup {
     * after is eval-sized.
     */
   def contaminationReport(train: DataFrame, evalSet: DataFrame, n: Int = 8,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val evalGrams = distinctGramRows(evalSet, n, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
+    val evalGrams = cache.keep(distinctGramRows(evalSet, n, idCol, textCol))
     val evalGramSet = evalGrams.select(col("g")).distinct()
     val matched = distinctGramRows(train, n, idCol, textCol)
       .join(broadcast(evalGramSet), Seq("g"), "left_semi")
       .select(col("g")).distinct()
-    val out = evalGrams
+    evalGrams
       .join(matched.withColumn("hit", lit(1L)), Seq("g"), "left")
       .groupBy(col("id").as(idCol))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("hit"), lit(0L))).as("n_dirty"))
       .withColumn("dirty_frac",
         col("n_dirty").cast("double") / col("n_grams"))
-    materializeAndRelease(out, evalGrams)
   }
 
   /** Bloom-filter decontamination — the fixed-memory variant of
@@ -1176,10 +1097,13 @@ object Dedup {
         }
         .toDF("id", "ps")
     }
+    // eval-sized and probed by all k joins — cached lazily so the eval
+    // hashing runs once per action; session-lifetime entry (the operator
+    // stays lazy), swept by Bench between gates
     val bits = gramPositions(evalSet)
       .select(explode(col("ps")).as("pos"))
       .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     // a gram is flagged iff ALL k positions are set — k chained
     // broadcast LEFT SEMI joins, one per hash row, so the train side
     // never shuffles (an explode + groupBy(id, gram) formulation
@@ -1278,15 +1202,7 @@ object Dedup {
     * documented recall price of the skew fuse.
     */
   def simhashPairs(docs: DataFrame, nBits: Int = 60, maxHamming: Int = 3,
-      maxBucket: Int = 1000,
-      sigStorage: org.apache.spark.storage.StorageLevel =
-        Dedup.detectorStorage,
-      blocks: Int = 0): DataFrame = {
-    // one row per doc — tiny next to the token flatMap + nBits-vote
-    // aggregation that builds it; persisted so the chunk self-join's two
-    // branches don't each re-run that pipeline (minhashLshPairs persists
-    // for exactly the same reason). `sigStorage` mirrors that function's
-    // single-box storage lever for composites that run both chains.
+      maxBucket: Int = 1000, blocks: Int = 0): DataFrame = {
     // an invalid opt-in must fail loudly, not silently take the
     // pigeonhole path: at the multi-million-doc scale the lever exists
     // for, the quadratic fallback is a multi-order-of-magnitude cliff
@@ -1294,12 +1210,18 @@ object Dedup {
       (blocks > maxHamming + 1 && nBits % blocks == 0),
       s"blocks=$blocks must be 0 (pigeonhole) or a divisor of " +
         s"nBits=$nBits greater than maxHamming+1=${maxHamming + 1}")
-    val sh = simhash(docs, nBits).persist(sigStorage)
-    val keyed =
-      if (blocks != 0)
-        simhashComboKeyed(sh, nBits, blocks, blocks - maxHamming)
-      else simhashChunked(sh, nBits, maxHamming + 1)
-    pairsFromKeyed(keyed, sh, maxHamming, maxBucket)
+    CacheScope.eager { cache =>
+      // one row per doc — tiny next to the token flatMap + nBits-vote
+      // aggregation that builds it; kept so the chunk self-join's two
+      // branches don't each re-run that pipeline (minhashLshPairs keeps
+      // its base for exactly the same reason)
+      val sh = cache.keep(simhash(docs, nBits))
+      val keyed =
+        if (blocks != 0)
+          simhashComboKeyed(sh, nBits, blocks, blocks - maxHamming)
+        else simhashChunked(sh, nBits, maxHamming + 1)
+      pairsFromKeyed(keyed, maxHamming, maxBucket)
+    }
   }
 
   /** Lexicographic block combinations for [[simhashPairs]]' multi-index:
@@ -1348,23 +1270,10 @@ object Dedup {
       .select(col("id"), col("simhash"), col("ck.c"), col("ck.v"))
   }
 
-  /** Chunk-bucket candidate join over a pre-persisted (id, simhash)
-    * relation via the (r+1)-chunk pigeonhole index; unpersists `sh`
-    * once the pair set is materialized. [[simhashPairsAuto]]'s
-    * candidate-mass probe prices exactly this index, so the auto
-    * operator stays on it — tightening the radius is its scale lever,
-    * where [[simhashPairs]]' is the combinatorial index.
-    */
-  private def pairsFromSimhash(sh: DataFrame, nBits: Int, maxHamming: Int,
-      maxBucket: Int): DataFrame =
-    pairsFromKeyed(simhashChunked(sh, nBits, maxHamming + 1), sh,
-      maxHamming, maxBucket)
-
   /** Bucket-guarded candidate self-join + radius filter over any keyed
-    * (id, simhash, c, v) index relation; unpersists `sh` once the pair
-    * set is materialized.
+    * (id, simhash, c, v) index relation (lazy; callers materialize).
     */
-  private def pairsFromKeyed(chunked0: DataFrame, sh: DataFrame,
+  private def pairsFromKeyed(chunked0: DataFrame,
       maxHamming: Int, maxBucket: Int): DataFrame = {
     // bucket-size guard: semi-join on the same (c, v) key the candidate
     // join shuffles on, so it rides the exchange that join needs anyway
@@ -1382,7 +1291,7 @@ object Dedup {
     // candidate is cheap enough that the coalesced join stage keeps up;
     // the expensive per-candidate work (Levenshtein) lives in
     // [[editVerify]], which pins its own DP stage.
-    val pairs = chunkedG.as("a")
+    chunkedG.as("a")
       .join(chunkedG.as("b"),
         col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
           col("a.id") < col("b.id"))
@@ -1392,7 +1301,6 @@ object Dedup {
       // so the distinct shuffles only the survivors
       .filter(col("hamming") <= maxHamming)
       .distinct()
-    materializeAndRelease(pairs, sh)
   }
 
   /** SimHash near-dup pairs with a MEASURED candidates-per-doc probe
@@ -1424,9 +1332,8 @@ object Dedup {
     * `pl_neardup_eval` at each scale.
     */
   def simhashPairsAuto(docs: DataFrame, nBits: Int = 60,
-      maxBucket: Int = 1000, budgetPerDoc: Long = 64): DataFrame = {
-    val sh = simhash(docs, nBits)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      maxBucket: Int = 1000, budgetPerDoc: Long = 64): DataFrame = CacheScope { cache =>
+    val sh = cache.keep(simhash(docs, nBits))
     val n = sh.count()
     // Σ C(bucket,2) at a c-way chunking: exact candidate count before
     // the radius filter (and before the maxBucket guard — the probe
@@ -1441,9 +1348,14 @@ object Dedup {
       if (candMass(4) <= budget) 4
       else if (candMass(3) <= budget) 3
       else 2
-    // the chosen radius rides along so a gate can pin the CHOICE itself
+    // exactly the pigeonhole chunk index the probe priced (this
+    // operator's scale lever is the radius, not simhashPairs'
+    // combinatorial index); the pair set materializes in its own eager
+    // scope before `sh` is released. The chosen radius
+    // rides along so a gate can pin the CHOICE itself
     // (pl_dedup_simhash_auto), not just the pair set it induces
-    pairsFromSimhash(sh, nBits, maxHamming = chunks - 1, maxBucket)
+    CacheScope.eager(_ => pairsFromKeyed(simhashChunked(sh, nBits, chunks),
+        maxHamming = chunks - 1, maxBucket))
       .withColumn("radius", lit(chunks - 1).cast("long"))
   }
 
@@ -1466,17 +1378,18 @@ object Dedup {
     shiftright(c.cast("long") * (c.cast("long") - 1), 1)
 
   def clusterAgreement(docs: DataFrame, pairs1: DataFrame,
-      pairs2: DataFrame, idCol: String = "doc_id"): DataFrame = {
+      pairs2: DataFrame, idCol: String = "doc_id"): DataFrame = CacheScope.eager { cache =>
     val nodes = docs.select(col(idCol).cast("long").as("id"))
     // the two clusterings are independent eager chains — overlap them
     // (guide §2.6): each is a size probe + union-find/propagation whose
-    // straggler tail the other side's jobs back-fill
-    val (l1, l2) = inParallel(
-      clusters(pairs1, nodes).withColumnRenamed("cid", "c1"),
-      clusters(pairs2, nodes).withColumnRenamed("cid", "c2"))
-    val ct = l1.join(l2, "id").groupBy("c1", "c2")
-      .agg(count(lit(1)).as("nij"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // straggler tail the other side's jobs back-fill. Each side's labels
+    // are kept as soon as they exist, so a failure on the other side
+    // still releases them
+    val (c1, c2) = inParallel(
+      cache.keep(clusters(pairs1, nodes)), cache.keep(clusters(pairs2, nodes)))
+    val ct = cache.keep(c1.withColumnRenamed("cid", "c1")
+      .join(c2.withColumnRenamed("cid", "c2"), "id").groupBy("c1", "c2")
+      .agg(count(lit(1)).as("nij")))
     val sij = ct.agg(sum(pairsOf(col("nij"))).as("sum_ij"),
       sum(col("nij")).as("n"))
     val sa = ct.groupBy("c1").agg(sum(col("nij")).as("ai"))
@@ -1488,13 +1401,9 @@ object Dedup {
     val expE = col("sum_a").cast("double") * col("sum_b").cast("double") /
       col("tot").cast("double")
     val den = (col("sum_a") + col("sum_b")).cast("double") / 2.0 - expE
-    val out = j.select(col("n"), col("sum_ij"), col("sum_a"), col("sum_b"),
+    j.select(col("n"), col("sum_ij"), col("sum_a"), col("sum_b"),
       when(den === 0.0, lit(1.0))
         .otherwise((col("sum_ij").cast("double") - expE) / den).as("ari"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    ct.unpersist(); l1.unpersist(); l2.unpersist()
-    out
   }
 
   /** Exact edit-distance VERIFICATION of a candidate near-dup pair

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.CacheScope
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,12 +36,11 @@ object Retrieval {
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int = 10,
       k1: Double = 1.2, b: Double = 0.75,
       idCol: String = "doc_id", textCol: String = "text",
-      qidCol: String = "qid", qtextCol: String = "qtext"): DataFrame = {
+      qidCol: String = "qid", qtextCol: String = "qtext"): DataFrame = CacheScope.eager { cache =>
     val n = docs.count() // parquet metadata count, not a data pass
-    val tf = TextAnalysis.withTokens(docs, textCol)
+    val tf = cache.keep(TextAnalysis.withTokens(docs, textCol)
       .select(col(idCol), explode(col("w_")).as("token"))
-      .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf")))
     // doc length = Σ tf — derived from the cached tf relation instead of
     // re-scanning the corpus; avgdl over docs with ≥1 token (mirrored in
     // the oracle). Exact integer sums → the double division is
@@ -63,12 +63,8 @@ object Retrieval {
       .agg((sum(col("sq")) / 10000.0).as("score"))
     val w = Window.partitionBy(col(qidCol))
       .orderBy(col("score").desc, col(idCol))
-    val out = scored.withColumn("rank", row_number().over(w).cast("long"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tf.unpersist()
-    out
   }
 
   /** Per-group distinctive terms by Dunning's log-likelihood ratio
@@ -84,12 +80,11 @@ object Retrieval {
     * aggregation of that relation; group margins are a tiny frame joined
     * broadcast. All the G² math is per-row `Column` arithmetic.
     */
-  def distinctiveTerms(docs: DataFrame, groupCol: String = "source",
-      k: Int = 5, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val gt = TextAnalysis.withTokens(docs, textCol)
+  def distinctiveTerms(docs: DataFrame, groupCol: String = "source", k: Int = 5,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
+    val gt = cache.keep(TextAnalysis.withTokens(docs, textCol)
       .select(col(groupCol).as("grp"), explode(col("w_")).as("token"))
-      .groupBy("grp", "token").agg(count(lit(1)).as("a"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("grp", "token").agg(count(lit(1)).as("a")))
     val tokTot = gt.groupBy("token").agg(sum(col("a")).as("ttot"))
     val grpTot = gt.groupBy("grp").agg(sum(col("a")).as("gtot"))
     val nTotal = gt.agg(sum(col("a"))).head().getLong(0).toDouble
@@ -119,13 +114,9 @@ object Retrieval {
       .withColumn("llr", floor(col("g2") * 10000 + 0.5 + 1e-6) / 10000.0)
     val w = Window.partitionBy(col("grp"))
       .orderBy(col("llr").desc, col("token"))
-    val out = scored.withColumn("rank", row_number().over(w).cast("long"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("grp").as(groupCol), col("token"), col("llr"), col("rank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    gt.unpersist()
-    out
   }
 
   /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken 2003): hash
@@ -216,27 +207,25 @@ object Retrieval {
     * quantize to 4 dp, so the oracle replays it bit-for-bit.
     */
   def pmiCollocations(docs: DataFrame, k: Int = 20, minCount: Int = 5,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
     val spark = docs.sparkSession
     import spark.implicits._
-    val uni = TextAnalysis.withTokens(docs, textCol)
+    val uni = cache.keep(TextAnalysis.withTokens(docs, textCol)
       .select(explode(col("w_")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val big = docs
+      .groupBy("w").agg(count(lit(1)).as("c")))
+    val big = cache.keep(docs
       .select(col(textCol)).as[String]
       .flatMap { text =>
         val t = text.split(" ", -1)
         (0 until t.length - 1).iterator.map(i => (t(i), t(i + 1)))
       }
       .toDF("w1", "w2")
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c12")))
     val nt = uni.agg(sum(col("c"))).head().getLong(0).toDouble
     val nb = big.agg(sum(col("c12"))).head().getLong(0).toDouble
     // top-k via orderBy+limit = TakeOrdered (distributed partial top-k,
     // no global exchange); the rank window then runs over k rows only
-    val scored = big.filter(col("c12") >= minCount)
+    big.filter(col("c12") >= minCount)
       .join(uni.select(col("w").as("w1"), col("c").as("c1")), "w1")
       .join(uni.select(col("w").as("w2"), col("c").as("c2")), "w2")
       .withColumn("pmi", floor(
@@ -247,10 +236,6 @@ object Retrieval {
       .withColumn("rank", row_number().over(
         Window.orderBy(col("pmi").desc, col("w1"), col("w2"))).cast("long"))
       .select(col("w1"), col("w2"), col("c12"), col("pmi"), col("rank"))
-    val out = scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    uni.unpersist(); big.unpersist()
-    out
   }
 
   /** DSIR importance weights (Xie et al. 2023, "Data Selection for
@@ -272,7 +257,7 @@ object Retrieval {
     */
   def dsirWeights(docs: DataFrame, targetPred: Column, k: Int = 50,
       buckets: Int = 4096, alpha: Double = 1.0,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
     val spark = docs.sparkSession
     import spark.implicits._
     def gramBuckets(d: DataFrame): DataFrame = d
@@ -290,8 +275,7 @@ object Retrieval {
         }
       }
       .toDF("id", "b")
-    val raw = gramBuckets(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val raw = cache.keep(gramBuckets(docs))
     val rawCnt = raw.groupBy("b").agg(count(lit(1)).as("cr"))
     val tgtCnt = gramBuckets(docs.filter(targetPred))
       .groupBy("b").agg(count(lit(1)).as("ct"))
@@ -310,17 +294,13 @@ object Retrieval {
           * 10000 + 0.5 + 1e-6).cast("long"))
       .select("b", "lrq")
     // top-k selection via TakeOrdered (orderBy+limit), rank over k rows
-    val weighted = raw
+    raw
       .join(broadcast(lr), "b")
       .groupBy(col("id").as(idCol))
       .agg(count(lit(1)).as("n_grams"), (sum(col("lrq")) / 10000.0).as("weight"))
       .orderBy(col("weight").desc, col(idCol)).limit(k)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("weight").desc, col(idCol))).cast("long"))
-    val out = weighted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    raw.unpersist()
-    out
   }
 
   /** Source-pair vocabulary overlap: Jaccard similarity between every
@@ -337,18 +317,17 @@ object Retrieval {
     * sizes ride in via a broadcast of an n_sources-row frame.
     */
   def sourceOverlap(docs: DataFrame, groupCol: String = "source",
-      textCol: String = "text"): DataFrame = {
-    val st = docs
+      textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
+    val st = cache.keep(docs
       .select(col(groupCol).as("src"),
         explode(TextAnalysis.tokens(col(textCol))).as("t"))
-      .distinct()
-      .persist()
+      .distinct())
     val sizes = st.groupBy("src").agg(count(lit(1)).as("n"))
     val inter = st.toDF("src_a", "t")
       .join(st.toDF("src_b", "t"), "t")
       .filter(col("src_a") < col("src_b"))
       .groupBy("src_a", "src_b").agg(count(lit(1)).as("n_common"))
-    val out = inter
+    inter
       .join(broadcast(sizes.toDF("src_a", "na")), "src_a")
       .join(broadcast(sizes.toDF("src_b", "nb")), "src_b")
       .select(col("src_a"), col("src_b"), col("n_common"),
@@ -356,10 +335,6 @@ object Retrieval {
             / (col("na") + col("nb") - col("n_common"))
             * 10000 + 0.5 + 1e-6) / 10000.0).as("jaccard"))
       .orderBy("src_a", "src_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    st.unpersist()
-    out
   }
 
   /** TextRank keyword salience (Mihalcea & Tarau, EMNLP 2004): PageRank
@@ -387,26 +362,25 @@ object Retrieval {
     * ever collected to the driver.
     */
   def textRank(docs: DataFrame, iters: Int = 5,
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
     val Scale = 100000000L
     val w = TextAnalysis.tokens(col(textCol))
-    val edges = docs
+    val edges = cache.keep(docs
       .select(explode(zip_with(
         slice(w, lit(1), greatest(size(w) - 1, lit(0))),
         slice(w, lit(2), greatest(size(w) - 1, lit(0))),
         (a, b) => struct(a.as("src"), b.as("dst")))).as("e"))
       .select(col("e.src"), col("e.dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .persist()
-    val vertices = edges.select(col("src").as("word"))
-      .union(edges.select(col("dst"))).distinct().persist()
+      .distinct())
+    val vertices = cache.keep(edges.select(col("src").as("word"))
+      .union(edges.select(col("dst"))).distinct())
     val nv = vertices.count()
     val r0 = Math.floorDiv(Scale, nv)
     val tele = Math.floorDiv(r0, 4)
     // static (src, dst, out) frame reused every round
-    val ed = edges.join(
-      edges.groupBy("src").agg(count(lit(1)).as("out")), "src").persist()
+    val ed = cache.keep(edges.join(
+      edges.groupBy("src").agg(count(lit(1)).as("out")), "src"))
     ed.count()
     // the 5 bounded rounds stay ONE lazy job (a measured 2× win over
     // per-round blocking materialization at gate scale, where
@@ -425,12 +399,8 @@ object Retrieval {
           (lit(tele) + floor(lit(3) * coalesce(col("s"), lit(0L)) / 4.0)
             .cast("long")).as("r"))
     }
-    val out = ranks
+    ranks
       .select(col("word"), (col("r") / Scale.toDouble).as("rank"))
       .orderBy("word")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    edges.unpersist(); vertices.unpersist(); ed.unpersist()
-    out
   }
 }

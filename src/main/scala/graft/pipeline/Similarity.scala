@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.CacheScope
 import graft.functions.GraftFunctions.dotp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -397,17 +398,12 @@ object Similarity {
     cents
   }
 
-  def kmeans(emb: DataFrame, k: Int, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val pts = emb.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def kmeans(emb: DataFrame, k: Int, iters: Int, idCol: String = "vec_id",
+      vecCol: String = "embedding"): DataFrame = CacheScope.eager { cache =>
+    val pts = cache.keep(emb.select(col(idCol).cast("long").as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v")))
     val cents = lloydCentroids(pts, k, iters)
-    val out = assignTo(pts, cents).select(col("id"), col("cid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    pts.unpersist()
-    out
+    assignTo(pts, cents).select(col("id"), col("cid"))
   }
 
   /** k-means clustering quality report: per-cluster membership count and
@@ -420,16 +416,15 @@ object Similarity {
     * assignment pass + one map-side-combined aggregation.
     * Output: (cid, n, inertia) with inertia on the 1e-4 grid.
     */
-  def clusterStats(emb: DataFrame, k: Int, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def clusterStats(emb: DataFrame, k: Int, iters: Int, idCol: String = "vec_id",
+      vecCol: String = "embedding"): DataFrame = CacheScope.eager { cache =>
     val spark = emb.sparkSession
     import spark.implicits._
-    val pts = emb.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pts = cache.keep(emb.select(col(idCol).cast("long").as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v")))
     val cents = lloydCentroids(pts, k, iters)
     val centsDf = cents.toDF("cid", "cv")
-    val out = assignTo(pts, cents)
+    assignTo(pts, cents)
       .join(broadcast(centsDf), Seq("cid"))
       .withColumn("d2", aggregate(
         zip_with(col("v"), col("cv"), (x, c) => (x - c) * (x - c)),
@@ -437,10 +432,6 @@ object Similarity {
       .withColumn("d2q", floor(col("d2") * 10000 + 0.5 + 1e-6).cast("long"))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n"), (sum(col("d2q")) / 10000.0).as("inertia"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    pts.unpersist()
-    out
   }
 
   /** Simplified (centroid-based) silhouette per cluster: for each point,
@@ -454,11 +445,10 @@ object Similarity {
     * the order-free per-cluster mean; degenerate a=b=0 points score 0.
     * Output: (cid, n, sil).
     */
-  def silhouette(emb: DataFrame, k: Int, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val pts = emb.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def silhouette(emb: DataFrame, k: Int, iters: Int, idCol: String = "vec_id",
+      vecCol: String = "embedding"): DataFrame = CacheScope.eager { cache =>
+    val pts = cache.keep(emb.select(col(idCol).cast("long").as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v")))
     val cents = lloydCentroids(pts, k, iters)
     val spark = emb.sparkSession
     import spark.implicits._
@@ -476,16 +466,12 @@ object Similarity {
     val sb = sqrt(col("b2"))
     val s = when(greatest(sa, sb) === 0.0, lit(0.0))
       .otherwise((sb - sa) / greatest(sa, sb))
-    val out = per
+    per
       .withColumn("sq", floor(s * 1e6 + 0.5).cast("long"))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n"),
         (sum(col("sq")).cast("double") /
           (count(lit(1)).cast("double") * lit(1e6))).as("sil"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    pts.unpersist()
-    out
   }
 
   /** Maximal Marginal Relevance selection (Carbonell & Goldstein 1998):
@@ -549,12 +535,12 @@ object Similarity {
     * the same bounded footprint the kmeans gate carries.
     */
   def pqCodebooks(emb: DataFrame, m: Int, k: Int, iters: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Seq[Seq[(Long, Seq[Double])]] = {
+      idCol: String = "vec_id",
+      vecCol: String = "embedding"): Seq[Seq[(Long, Seq[Double])]] = CacheScope { cache =>
     val spark = emb.sparkSession
     import spark.implicits._
-    val full = emb.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("fv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val full = cache.keep(emb.select(col(idCol).cast("long").as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("fv")))
     val dim = full.select(size(col("fv"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val sub = dim / m
@@ -588,7 +574,6 @@ object Similarity {
         book.map { case (cid, cv) => cid -> updated.getOrElse((s, cid), cv) }
       }
     }
-    full.unpersist()
     books
   }
 
@@ -774,21 +759,19 @@ object Similarity {
   def ivfPqKnn(corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 8, nprobe: Int = 2, m: Int = 4, kPq: Int = 8,
       iters: Int = 2, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = CacheScope.eager { cache =>
     val spark = corpus.sparkSession
     import spark.implicits._
-    val pts = corpus.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pts = cache.keep(corpus.select(col(idCol).cast("long").as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v")))
     // coarse quantizer + per-vector residuals (exact elementwise
     // subtraction — deterministic)
     val coarse = lloydCentroids(pts, nlist, iters)
     val centsDf = coarse.toDF("lcid", "cv")
-    val resid = assignTo(pts, coarse).withColumnRenamed("cid", "lcid")
+    val resid = cache.keep(assignTo(pts, coarse).withColumnRenamed("cid", "lcid")
       .join(broadcast(centsDf), Seq("lcid"))
       .select(col("id"), col("lcid"),
-        zip_with(col("v"), col("cv"), (x, c) => x - c).as("rv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        zip_with(col("v"), col("cv"), (x, c) => x - c).as("rv")))
     // residual PQ: same trainer/encoder as plain PQ, fed residuals
     val books = pqCodebooks(resid, m, kPq, iters, idCol = "id", vecCol = "rv")
     val codes = pqEncode(resid, books, idCol = "id", vecCol = "rv")
@@ -847,14 +830,9 @@ object Similarity {
           .otherwise(lit(Double.NaN)).as("adc"))
       .filter(col("nid") =!= col("qid"))
     val w = Window.partitionBy(col("qid")).orderBy(col("adc").asc, col("nid"))
-    val out = scored.withColumn("rk", row_number().over(w))
+    scored.withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)
       .select(col("qid"), col("nid"), col("adc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    resid.unpersist()
-    pts.unpersist()
-    out
   }
 
   /** Exact re-rank of an ANN candidate list (the FAISS "refine" stage):
@@ -900,8 +878,10 @@ object Similarity {
     * Output: (id1, id2, cos) with id1 < id2, cos ≥ threshold.
     */
   def semanticPairs(emb: DataFrame, k: Int, iters: Int, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val asg = kmeans(emb, k, iters, idCol, vecCol) // (id, cid), persisted
+      idCol: String = "vec_id",
+      vecCol: String = "embedding"): DataFrame = CacheScope.eager { cache =>
+    // (id, cid), materialized by kmeans; released once the pairs materialize
+    val asg = cache.keep(kmeans(emb, k, iters, idCol, vecCol))
     val p = prep(emb, idCol, vecCol, "pid", "v", "n")
       .join(asg, col("pid") === col("id"))
       .select(col("cid"), col("id"), col("v"), col("n"))
@@ -909,15 +889,11 @@ object Similarity {
       col("v").as("v1"), col("n").as("n1"))
     val b = p.select(col("cid"), col("id").as("id2"),
       col("v").as("v2"), col("n").as("n2"))
-    val pairs = a.join(b, Seq("cid"))
+    a.join(b, Seq("cid"))
       .filter(col("id1") < col("id2"))
       .withColumn("cos", pairCos("v1", "n1", "v2", "n2"))
       .filter(col("cos") >= threshold)
       .select(col("id1"), col("id2"), col("cos"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // materialize before releasing the assignment cache
-    asg.unpersist()
-    pairs // persisted; callers may unpersist once consumed
   }
 
   /** Full SemDeDup labels: (id, cid) where cid is the representative
@@ -928,11 +904,9 @@ object Similarity {
     * component-diameter step, no driver graph state.
     */
   def semanticDedup(emb: DataFrame, k: Int, iters: Int, threshold: Double,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val pairs = semanticPairs(emb, k, iters, threshold, idCol, vecCol)
-    val labels = Dedup.clusters(pairs, emb.select(col(idCol).as("id")))
-    pairs.unpersist()
-    labels
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = CacheScope { cache =>
+    val pairs = cache.keep(semanticPairs(emb, k, iters, threshold, idCol, vecCol))
+    Dedup.clusters(pairs, emb.select(col(idCol).as("id")))
   }
 
   /** Deterministic hyperplane component r[p][d] ∈ [-1, 1], derived from
@@ -994,11 +968,10 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val pts = corpus.select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cents = lloydCentroids(pts, k, iters)
-    pts.unpersist()
+    val cents = CacheScope { cache =>
+      lloydCentroids(cache.keep(corpus.select(col(idCol).cast("long").as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v"))), k, iters)
+    }
     cents.toDF("cid", "cv")
       .withColumn("cn", sqrt(dotp(col("cv"), col("cv"))))
   }

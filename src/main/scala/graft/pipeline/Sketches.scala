@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.CacheScope
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -143,13 +144,12 @@ object Sketches {
     * a byte of data.
     */
   def hllOverlap(df: DataFrame, keyCol: String, groupCol: String,
-      p: Int = 8): DataFrame = {
+      p: Int = 8): DataFrame = CacheScope.eager { cache =>
     // registers feed three plan branches (two pair sides + singles) —
-    // persist so the one corpus-wide pass runs once
+    // kept so the one corpus-wide pass runs once
     val spark = df.sparkSession
     import spark.implicits._
-    val regs = hllRegisters(df, keyCol, groupCol, p)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val regs = cache.keep(hllRegisters(df, keyCol, groupCol, p))
     regs.count()
     // group names are the report's axis — bounded by construction (the
     // caller picks which sources/shards to compare; same contract as the
@@ -175,7 +175,7 @@ object Sketches {
     val eu = hllEstimate(unionRegs, Seq("grp", "grp2"), p)
       .withColumnRenamed("est", "est_union")
     val singles = hllEstimate(regsS, Seq("grp"), p)
-    val out = eu
+    eu
       .join(singles.select(col("grp"), col("est").as("e1")), "grp")
       .join(singles.select(col("grp").as("grp2"), col("est").as("e2")), "grp2")
       .withColumn("est_inter",
@@ -183,10 +183,6 @@ object Sketches {
       .withColumn("jacc", col("est_inter") / col("est_union"))
       .select(col("grp").as("g1"), col("grp2").as("g2"),
         col("est_union"), col("est_inter"), col("jacc"))
-    val o = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    o.count()
-    regs.unpersist()
-    o
   }
 
   /** Fixed-grid (equi-width histogram) quantile sketch per group: values
@@ -251,11 +247,10 @@ object Sketches {
     */
   def cmsHeavyHitters(docs: DataFrame, k: Int = 20, depth: Int = 4,
       width: Int = 1024, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val tc = TextAnalysis.withTokens(docs, textCol)
+      textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
+    val tc = cache.keep(TextAnalysis.withTokens(docs, textCol)
       .select(explode(col("w_")).as("token"))
-      .groupBy("token").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("token").agg(count(lit(1)).as("cnt")))
     val sketch = cmsSketch(tc, depth, width)
     // true top-k (deterministic ties by token) → bounded candidate frame
     val cand = tc.orderBy(col("cnt").desc, col("token")).limit(k)
@@ -264,13 +259,9 @@ object Sketches {
       cand.withColumn("row", lit(i))
         .withColumn("bucket", cmsBucket(col("token"), i, width))
     }.reduce(_ unionByName _)
-    val out = addressed
+    addressed
       .join(broadcast(sketch), Seq("row", "bucket"))
       .groupBy(col("token"), col("cnt"))
       .agg(min(col("c")).as("est"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tc.unpersist()
-    out
   }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.CacheScope
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -271,7 +272,7 @@ object TextAnalysis {
     // Bench between gates) so the operator itself stays lazy/composable
     val toks = withTokens(docs, textCol)
       .select(col(idCol), explode(col("w_")).as("token"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     // corpus size rides inside the plan (global window over the already
     // vocab-sized frequency table) instead of a separate .first() action
     // — the heavy tokenize+count pass runs once, not twice
@@ -304,7 +305,7 @@ object TextAnalysis {
     // token cache
     val bg = withTokens(docs, textCol)
       .select(col(idCol), explode(ngramsOf(col("w_"), 2)).as("g"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     // V rides inside the plan as a broadcast 1-row frame (the oracle's
     // `v` CTE) — an eager .first() here would pay a second full corpus
     // scan at plan-construction time (see the unigramNll note)
@@ -339,12 +340,11 @@ object TextAnalysis {
     * may unpersist) so the tf cache can be released here.
     */
   def tfidfKeywords(docs: DataFrame, k: Int = 5, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
     val n = docs.count()
-    val tf = withTokens(docs, textCol)
+    val tf = cache.keep(withTokens(docs, textCol)
       .select(col(idCol), explode(col("w_")).as("token"))
-      .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy(col(idCol), col("token")).agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val idf = log(lit(n + 1.0) / (col("df") + 1.0)) + 1.0
     val scored = tf.join(dfreq, "token")
@@ -352,13 +352,9 @@ object TextAnalysis {
         floor(col("tf") * idf * 10000 + 0.5 + 1e-6) / 10000.0)
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("score").desc, col("token"))
-    val out = scored.withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col(idCol), col("token"), col("score"), col("rank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    tf.unpersist()
-    out
   }
 
   /** Fixed weights for [[qualityLrScore]] — a frozen linear model over
@@ -421,7 +417,7 @@ object TextAnalysis {
     * (feature, weight) rows, "bias" included.
     */
   def lrTrain(docs: DataFrame, label: Column, iters: Int = 3,
-      eta: Double = 1.0, textCol: String = "text"): DataFrame = {
+      eta: Double = 1.0, textCol: String = "text"): DataFrame = CacheScope { cache =>
     val spark = docs.sparkSession
     import spark.implicits._
     def q4(c: Column): Column = floor(c * 10000 + 0.5 + 1e-6) / 10000.0
@@ -429,10 +425,9 @@ object TextAnalysis {
       .map(_._1)
     val base = withTokens(docs, textCol)
     val feats = qualityFeatureCols(col(textCol), col("w_"))
-    val table = base.select(
+    val table = cache.keep(base.select(
       feats.map { case (n, c) => q4(c).as(n) } :+
-        when(label, lit(1.0)).otherwise(lit(0.0)).as("y"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        when(label, lit(1.0)).otherwise(lit(0.0)).as("y"): _*))
     val n = table.count().toDouble
     val w = Array.fill(featNames.size + 1)(0.0) // features then bias
     for (_ <- 0 until iters) {
@@ -452,7 +447,6 @@ object TextAnalysis {
         j += 1
       }
     }
-    table.unpersist()
     (featNames :+ "bias").zip(w).toDF("feature", "weight")
   }
 
@@ -615,7 +609,7 @@ object TextAnalysis {
     // N·V scalars) — cached or the tokenize pass runs four times
     // (the bigramNll lesson; session-lifetime entry)
     val tt = withTokens(docs.filter(col(idCol) % 2 === 0), textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val c3 = grams(tt, 3).groupBy("w1", "w2", "w3")
       .agg(count(lit(1)).as("c3"))
     val cb = grams(tt, 2).groupBy("w1", "w2")
@@ -835,7 +829,7 @@ object TextAnalysis {
     val toks = withTokens(docs, textCol)
       .join(ids, Seq(idCol))
       .select(col("bucket"), explode(col("w_")).as("token"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val tokPerB = toks.groupBy("bucket").agg(count(lit(1)).as("tb"))
     val vocabPerB = toks.groupBy("token").agg(min(col("bucket")).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("vb"))
@@ -910,13 +904,13 @@ object TextAnalysis {
       .select(col(idCol), explode(ngramsOf(col("w_"), 2)).as("g"))
       .withColumn("w1", substring_index(col("g"), " ", 1))
       .withColumn("w2", substring_index(col("g"), " ", -1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     // train-half bigram types feed FIVE branches (c2 join, c1, N1+(w1·),
     // N1+(·w2), |types|) — persisted, or the tokenize+ngram+count chain
     // re-runs per branch
     val c2 = bg.filter(pmod(col(idCol), lit(2)) === 0)
       .groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist()
     val c1n1f = c2.groupBy("w1")
       .agg(sum(col("c2")).as("c1"), count(lit(1)).as("n1f"))
     val n1r = c2.groupBy("w2").agg(count(lit(1)).as("n1r"))

@@ -3,6 +3,7 @@ package graft.store
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import graft.CacheScope
 import graft.model.Dp
 import graft.query.Planner
 import graft.rollup.Rollup
@@ -247,19 +248,11 @@ final class Store(spark: SparkSession, root: String,
     * are serialized on [[writeLock]].
     */
   def ingest(batch: DataFrame): Unit = writeLock.synchronized {
-    def t[A](name: String)(f: => A): A =
-      if (!Store.timePhases) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[store-time] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     // snapshot BEFORE the flush: checkpoints that arrive mid-commit wait
     // for the next cycle, exactly the reference's rotate-task ordering
     checkpoints.takeSnapshot()
-    val keyed = Dp.withSeriesKey(batch.select(Dp.columns.map(col): _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope { cache =>
+      val keyed = cache.keep(Dp.withSeriesKey(batch.select(Dp.columns.map(col): _*)))
       // shuffle-free append (unlike Ingest.writePartitioned's
       // repartition-by-date): ingest batches are micro-batch sized, so
       // densifying per write would pay a shuffle per batch for nothing —
@@ -274,21 +267,21 @@ final class Store(spark: SparkSession, root: String,
       // the series-index update, so the index pass reads the tiny slice
       // aggregate instead of re-scanning the whole batch for distinct
       // skeys — one fewer full-batch pass per ingest
-      val (slices, mergedState) = t("computeSliceState")(computeSliceState(keyed))
-      val days = try {
+      val days = CacheScope { sliceCache =>
+        val (slices, mergedState) = computeSliceState(sliceCache, keyed)
         // metadata must not commit before the data it describes: a crash
         // window may lose metadata for committed data (queries then see
         // raw-only, still correct) but never the reverse
-        t("await dataCommit")(Await.result(dataCommit, Duration.Inf))
+        Await.result(dataCommit, Duration.Inf)
         // all four metadata updates (slice state, both rollup levels,
         // series index) commit as ONE Spark write job — each alone is a
         // tiny write whose wall time is job-launch overhead, not data,
         // so an ingest's latency is job-COUNT-bound: one unioned write
         // beats four concurrent ones on a busy or cold driver
-        t("commitMetadata")(commitMetadata(keyed, slices, mergedState))
-      } finally slices.unpersist()
-      t("maybeCompact")(maybeCompact(days))
-    } finally keyed.unpersist()
+        commitMetadata(keyed, slices, mergedState)
+      }
+      maybeCompact(days)
+    }
     // the batch (and everything before it) is committed: the snapshot's
     // checkpoints are now safe to serve to replication followers. A
     // checkpoint-file failure must NOT fail the ingest that already
@@ -392,9 +385,9 @@ final class Store(spark: SparkSession, root: String,
       Seq("skey"), "left_anti")
   }
 
-  /** Compute the batch's slice-state merge; returns the still-cached
-    * slice aggregate (caller releases it after the commit job reads it)
-    * and the merged state frame for the caller to commit. Within-batch
+  /** Compute the batch's slice-state merge; returns the slice aggregate,
+    * kept in the caller's `cache` until the commit job has read it, and
+    * the merged state frame for the caller to commit. Within-batch
     * OOO is detected with a window over the BATCH's rows (bounded by
     * batch size — the reference's in-memory page state); cross-batch
     * OOO compares the batch's min ts against the stored hwm. NO action
@@ -402,10 +395,14 @@ final class Store(spark: SparkSession, root: String,
     * broadcast semi-join (not a collected `isin` list), so the whole
     * merge stays inside the single metadata commit job.
     */
-  private def computeSliceState(keyed: DataFrame): (DataFrame, DataFrame) = {
+  private def computeSliceState(cache: CacheScope,
+      keyed: DataFrame): (DataFrame, DataFrame) = {
     val w = Window.partitionBy(col("skey"), col("day")).orderBy(col("seq"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val slices = keyed
+    // kept: consumed by the state merge AND the series-index branch of
+    // the same commit job; one row per touched slice, so the cache is
+    // tiny but saves a second window pass over the batch
+    val slices = cache.keep(keyed
       .withColumn("day", col("ts") - pmod(col("ts"), lit(Rollup.DayMs)))
       .withColumn("prior", max(col("ts")).over(w))
       .withColumn("bad",
@@ -417,11 +414,7 @@ final class Store(spark: SparkSession, root: String,
       .agg(
         min(col("ts")).as("bmin"),
         max(col("ts")).as("bmax"),
-        max(col("bad")).as("booo"))
-      // consumed by the state merge AND the series-index branch of the
-      // same commit job; one row per touched slice, so the cache is
-      // tiny but saves a second window pass over the batch
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        max(col("bad")).as("booo")))
     val prev = readManifestedForDays(statePath, stateSchema,
       slices.select("day").distinct())
     val merged = prev.as("p")
@@ -467,23 +460,22 @@ final class Store(spark: SparkSession, root: String,
     * merge result instead of recomputing the batch aggregation.
     */
   private def commitMetadata(keyed: DataFrame, slices: DataFrame,
-      mergedState: DataFrame): Seq[Long] = {
+      mergedState: DataFrame): Seq[Long] = CacheScope { cache =>
     val batchRollup = Rollup.rollup1hKeyed(keyed)
       .withColumn("day", col("wts") - pmod(col("wts"), lit(Rollup.DayMs)))
     val prev = readManifestedForDays(rollupPath, rollupDaySchema,
       slices.select("day").distinct())
-    val merged = prev.unionByName(batchRollup)
+    // kept: consumed by both level branches of the union; tiny (touched
+    // days' rollup rows). Both branches materialize inside the ONE write
+    // job — the block manager serializes per-partition computes.
+    val merged = cache.keep(prev.unionByName(batchRollup)
       .groupBy(col("skey"), col("wts"), col("day"))
       .agg(
         sum(col("cnt")).as("cnt"),
         min(col("min")).as("min"),
         max(col("max")).as("max"),
         sum(col("sum")).as("sum"))
-      .select("skey", "cnt", "min", "max", "sum", "wts", "day")
-      // consumed by both level branches of the union; tiny (touched
-      // days' rollup rows). Both branches materialize inside the ONE
-      // write job — the block manager serializes per-partition computes.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("skey", "cnt", "min", "max", "sum", "wts", "day"))
     val merged1d = merged
       .groupBy(col("skey"), col("day"))
       .agg(
@@ -500,8 +492,7 @@ final class Store(spark: SparkSession, root: String,
       widen(mergedState, "slice_state"),
       widen(merged, "rollup_1h"), widen(merged1d, "rollup_1d"),
       widen(index, "series_index")).reduce(_ unionByName _)
-    try commitUnioned(union)
-    finally merged.unpersist()
+    commitUnioned(union)
   }
 
   /** Write the unioned metadata frame once, then per table: rename its
@@ -518,19 +509,11 @@ final class Store(spark: SparkSession, root: String,
     * bug — the defensive `entries.remove` keeps the manifest honest.
     */
   private def commitUnioned(union: DataFrame): Seq[Long] = {
-    def t[A](name: String)(f: => A): A =
-      if (!Store.timePhases) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[store-time] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
     val gen = System.nanoTime()
     val tmp = s"$root/.meta_tmp_$gen"
-    t("meta write job")(union.withColumn("day_p", col("day"))
+    union.withColumn("day_p", col("day"))
       .repartition(col("tbl"), col("day_p"))
-      .write.mode(SaveMode.Overwrite).partitionBy("tbl", "day_p").parquet(tmp))
-    val tPub0 = System.nanoTime()
+      .write.mode(SaveMode.Overwrite).partitionBy("tbl", "day_p").parquet(tmp)
     def tmpDays(tbl: String): Seq[Long] = {
       val d = new Path(s"$tmp/tbl=$tbl")
       if (!fs.exists(d)) Nil
@@ -572,8 +555,6 @@ final class Store(spark: SparkSession, root: String,
         }
     }
     fs.delete(new Path(tmp), true)
-    if (Store.timePhases)
-      println(f"[store-time] meta publish: ${(System.nanoTime() - tPub0) / 1e9}%.2f s")
     days
   }
 
@@ -787,10 +768,4 @@ final class Store(spark: SparkSession, root: String,
         d.getModificationTime < cutoff)
       .foreach(d => fs.delete(d.getPath, true))
   }
-}
-
-object Store {
-  /** Env-gated ingest phase timing (diagnostic; prints [store-time] lines). */
-  val timePhases: Boolean =
-    sys.env.get("SPARK_GRAFT_STORE_TIME").exists(v => v.nonEmpty && v != "0")
 }

@@ -1964,4 +1964,58 @@ class PipelineSpec extends SparkSpec {
     // on this corpus LSH recall is total, so the count also ties to truth
     assert(pairs === Dedup.ngramJaccardPairs(docs, 3, 0.8).count())
   }
+
+  test("materializing operators leave no cache behind once the caller unpersists") {
+    import graft.pipeline.{Retrieval, Sketches}
+    val qs = Seq("q1" -> "spark window join", "q2" -> "slow query filter")
+      .toDF("qid", "qtext")
+    // at least one operator per module; the Dedup ones cover the nested
+    // scopes (label chains, pair inputs released downstream, inParallel)
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "Dedup.prefixFilterPairs" -> (() => Dedup.prefixFilterPairs(docs)),
+      "Dedup.incrementalNearDups" -> (() => Dedup.incrementalNearDups(
+        docs.filter($"doc_id" % 5 === 0),
+        Dedup.lshBandIndex(docs.filter($"doc_id" % 5 =!= 0)),
+        Dedup.shingleHashes(docs.filter($"doc_id" % 5 =!= 0)))),
+      "Dedup.softDedupWeights" -> (() =>
+        Dedup.softDedupWeights(docs, Dedup.simhashPairs(docs))),
+      "Dedup.clusterAgreement" -> (() => Dedup.clusterAgreement(docs,
+        Dedup.minhashLshPairs(docs), Dedup.simhashPairs(docs))),
+      "Retrieval.bm25TopK" -> (() => Retrieval.bm25TopK(docs, qs, k = 3)),
+      "Retrieval.textRank" -> (() => Retrieval.textRank(docs)),
+      "Similarity.semanticDedup" -> (() =>
+        Similarity.semanticDedup(emb, k = 4, iters = 2, threshold = 0.3)),
+      "Similarity.ivfPqKnn" -> (() =>
+        Similarity.ivfPqKnn(emb, emb.filter($"vec_id" < 3), k = 2)),
+      "Sketches.cmsHeavyHitters" -> (() => Sketches.cmsHeavyHitters(docs)),
+      "TextAnalysis.tfidfKeywords" -> (() => TextAnalysis.tfidfKeywords(docs)))
+    ops.foreach { case (name, op) =>
+      val before = cacheState()
+      val out = op()
+      assert(out.storageLevel === org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK,
+        s"$name: result not materialized in cache")
+      out.unpersist()
+      assertNoCacheBeyond(before, name)
+    }
+  }
+
+  test("a materializing operator that fails releases what it cached") {
+    import graft.pipeline.{Retrieval, Sketches}
+    // every row fails on evaluation, i.e. inside the operator's first
+    // action — after it has cached its intermediates
+    val failing = expr("assert_true(doc_id < 0) IS NULL")
+    val badDocs = docs.filter(failing)
+    val badEmb = emb.withColumnRenamed("vec_id", "doc_id").filter(failing)
+      .withColumnRenamed("doc_id", "vec_id")
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "Dedup.prefixFilterPairs" -> (() => Dedup.prefixFilterPairs(badDocs)),
+      "Retrieval.textRank" -> (() => Retrieval.textRank(badDocs)),
+      "Similarity.kmeans" -> (() => Similarity.kmeans(badEmb, k = 4, iters = 2)),
+      "Sketches.cmsHeavyHitters" -> (() => Sketches.cmsHeavyHitters(badDocs)))
+    ops.foreach { case (name, op) =>
+      val before = cacheState()
+      intercept[Exception](op())
+      assertNoCacheBeyond(before, s"failed $name")
+    }
+  }
 }

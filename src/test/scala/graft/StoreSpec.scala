@@ -41,6 +41,19 @@ class StoreSpec extends SparkSpec {
     assert(fromStore === derived && fromStore.nonEmpty)
   }
 
+  test("ingest releases every intermediate it cached") {
+    val dir = java.nio.file.Files.createTempDirectory("store_cache").toString
+    val store = new Store(spark, dir)
+    val t0 = 1704412800000L
+    val before = cacheState()
+    store.ingest(mkDp((0 until 20).map(i =>
+      ("cache.m", s"h${i % 3}", t0 + i * H, i.toDouble, i.toLong))))
+    // a late point: the second commit merges prior slice state and rollups
+    store.ingest(mkDp(Seq(("cache.m", "h0", t0 + 30 * 60000L, 7.0, 99L))))
+    assertNoCacheBeyond(before, "Store.ingest")
+    assert(store.data.filter(col("metric") === "cache.m").count() === 21)
+  }
+
   test("concurrent ingests from many threads serialize: nothing lost") {
     val dir = java.nio.file.Files.createTempDirectory("store_mt").toString
     val store = new Store(spark, dir)
