@@ -206,13 +206,9 @@ object QueryApi {
         else (Array.empty[org.apache.spark.sql.Row], collected)
       val seriesTags: Seq[Map[String, String]] = opt.seriesIndex match {
         case Some(index) =>
-          // dim-table path: series cardinality scan, fact data untouched
-          index
-            .filter(col("metric") === sub.metric)
-            .filter(graft.query.TagFilters.compileAll(
-              col("tags"), sub.tags, sub.explicitTags))
-            .select(col("tags")).collect()
-            .map(_.getAs[Map[String, String]](0)).toSeq
+          // the series set the planner selected, resolved the same way on
+          // the driver: no Spark job over the store's local catalog
+          Planner.matchingSeries(index, sub).map(tagsOfKey)
         case None =>
           rosterRows.iterator
             .flatMap(_.getAs[scala.collection.Seq[String]]("skeys_"))

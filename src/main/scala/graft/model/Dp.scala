@@ -49,6 +49,14 @@ object Dp {
   def withSeriesKey(df: DataFrame): DataFrame =
     df.withColumn("skey", seriesKey(col("metric"), col("tags")))
 
+  /** [[withSeriesKey]] unless the frame already carries `skey` (the
+    * store's scan, the bucketed layout, a planner stage): a stored key is
+    * a plain scan attribute, so keeping it spares a per-row derivation
+    * and keeps any partitioning on it visible to the aggregates.
+    */
+  def ensureSeriesKey(df: DataFrame): DataFrame =
+    if (df.columns.contains("skey")) df else withSeriesKey(df)
+
   /** Inverse of [[seriesKey]]: re-derive the tag map from the canonical
     * key. Exists so aggregation stages never carry a MapType column —
     * `first(tags)` forces SortAggregate (maps have no mutable hash

@@ -69,11 +69,9 @@ object Meta {
     Dp.withSeriesKey(dp)
       .groupBy(col("skey"))
       .agg(first(col("metric")).as("metric"), first(col("tags")).as("tags"))
-  // first(real columns), NOT Dp.tagsFromKey(skey): were tags an expression
-  // of skey, constraint propagation would rewrite the index's tag
-  // predicate in terms of the join key and push the whole skey-rebuild
-  // onto the fact side of the semi-join — per-row again, worse than no
-  // index. first(MapType) costs a SortAggregate, but only in this
+  // first(real columns), NOT Dp.tagsFromKey(skey): the index keeps each
+  // series' tag map as ingested (the key's inverse degrades values that
+  // hold a comma). first(MapType) costs a SortAggregate, but only in this
   // derivation (maintained incrementally at scale), never in a query.
 
   /** Parse the lookup `m` param: `metric{tag=value,...}`, tag block

@@ -11,7 +11,10 @@ import org.apache.spark.sql.functions._
   * analyzer/optimizer; this is the ~200-line declarative "planner"
   * (SURVEY.md §3.1):
   *
-  *   source.filter(time ∧ metric ∧ tags)      — partition/rowgroup pruning
+  *   source.filter(time ∧ metric ∧ series)    — partition/rowgroup pruning;
+  *                                               series = a literal key set
+  *                                               resolved on the driver from
+  *                                               an index, else tag predicates
   *    .dedup(last-wins by seq)                — `query_with_ooo`, query.cpp:722-803
   *    .downsample(bucket agg per series)      — src/agg/down.cpp
   *    .fill(bucket spine left-join)           — down.cpp:248-311
@@ -37,19 +40,26 @@ object Planner {
     *     immutable batch-loaded data.
     *   - `seriesIndex` is the index-scan path (reference
     *     `Tsdb::query_for_ts`, `src/core/tsdb.cpp:1586-1609`): a
-    *     (skey, metric, tags) dimension table (see [[Meta.seriesTable]]).
-    *     Tag predicates then run on the tiny dim table to resolve the
-    *     matching series set, and the fact scan does a broadcast
-    *     semi-join on `skey` — no per-row regex/map probing over the bulk
-    *     data. Results are identical either way; at 100 TB the dim-table
-    *     route is the difference between evaluating a wildcard regex
-    *     10¹¹ times and 10⁶ times.
+    *     (skey, metric, tags) dimension table covering the source's
+    *     series (the store's driver-resident catalog, or
+    *     [[Meta.seriesTable]]). The sub-query's tag predicates run on it
+    *     ON THE DRIVER ([[matchingSeries]]: a filter + collect, which a
+    *     local index such as the store's answers without a Spark job),
+    *     and a source that stores `skey` is then filtered with the
+    *     resolved keys as a literal set — no per-row regex/map probing and
+    *     no broadcast job. A source that derives `skey` keeps its per-row
+    *     tag predicates (comparing a derived key would cost more than the
+    *     predicates it replaces); the index then serves first/last's rank.
+    *     Results are identical either way.
     *   - `approxPercentileAccuracy`: opt-in sketch percentiles for
     *     cross-series pNN over unbounded series counts (see
     *     [[GraftFunctions.aggFor]]); None = exact reference semantics.
     *   - `rollup1h`/`rollup1d`/`oooMarks`: materialized rollup tables and
     *     the maintained invalidation frame. When `rollup1h` is set, the
-    *     API layer executes eligible queries through [[planRouted]].
+    *     API layer executes eligible queries through [[planRouted]], which
+    *     collects the marks of the query's series and days on the driver
+    *     (no job over the store's local snapshot) and applies them as
+    *     literal predicates.
     *   - `collectSeriesKeys`: aggregated results additionally carry a
     *     `skeys_` column = the sorted distinct member series keys of each
     *     output row. Lets the API layer answer "which series fed this
@@ -96,30 +106,10 @@ object Planner {
     }
 
     // ---- 2. predicate pushdown: time ∧ metric ∧ tag filters. With a
-    // series index the tag predicates resolve on the dim table and the
-    // fact scan semi-joins on skey; otherwise they evaluate per row.
-    val timeAndMetric = dp
-      .filter(col("ts").between(scanStart, scanEnd))
-      .filter(col("metric") === sub.metric)
-    // a source with a pre-materialized skey (e.g. the bucketed store,
-    // Maintenance.writeBucketed) keeps its scan attribute — recomputing
-    // the expression would hide the bucket partitioning from the
-    // aggregates and reintroduce their shuffles
-    def keyed(d: DataFrame): DataFrame =
-      if (d.columns.contains("skey")) d
-      else d.withColumn("skey", Dp.seriesKey(col("metric"), col("tags")))
-    var df = opt.seriesIndex match {
-      case Some(index) =>
-        val matched = index
-          .filter(col("metric") === sub.metric)
-          .filter(TagFilters.compileAll(col("tags"), sub.tags, sub.explicitTags))
-          .select(col("skey"))
-        keyed(timeAndMetric)
-          .join(broadcast(matched), Seq("skey"), "left_semi")
-      case None =>
-        keyed(timeAndMetric
-          .filter(TagFilters.compileAll(col("tags"), sub.tags, sub.explicitTags)))
-    }
+    // series index the matching keys resolve on the driver (lazily: a
+    // source that derives skey needs them only for first/last's rank)
+    lazy val keys = opt.seriesIndex.map(matchingSeries(_, sub))
+    var df = selectSeries(dp.filter(col("ts").between(scanStart, scanEnd)), sub, keys)
 
     // ---- 3. last-wins dedup (seq = ingest order). max_by gets map-side
     // partial aggregation, so duplicates collapse before the shuffle.
@@ -214,32 +204,25 @@ object Planner {
         // reference walks series in creation order (aggregate.cpp:218-233);
         // we define canonical skey order for determinism.
         //
-        // With a maintained series index (r17), first/last order by the
-        // index's numeric skey RANK instead of the skey string: a
+        // With a series index (r17), first/last order by the skey's RANK
+        // in the resolved key set instead of the skey string: a
         // min_by/max_by whose ordering column is a string has an
         // immutable aggregation buffer, so Spark falls back from hash to
         // SortAggregate — a per-partition sort of the whole downsampled
         // frame with no cheap map-side combine. Ranked by a long, the
         // same aggregation is a map-side-combinable HashAggregate. The
-        // rank table is dim-sized (cardinality = #series), derived by
-        // one window over the broadcast index, and rank order == skey
-        // order (row_number over the metric's skeys), so results are
-        // identical; rows already passed the step-2 index semi-join with
-        // the same metric filter, so the inner rank join drops nothing.
-        val indexedRanks =
-          if ((agg == "first" || agg == "last") && opt.seriesIndex.isDefined)
-            Some(broadcast(opt.seriesIndex.get
-              .filter(col("metric") === sub.metric)
-              .select(col("skey")).distinct()
-              .withColumn("srank_",
-                row_number().over(Window.orderBy(col("skey"))).cast("long"))))
-          else None
-        val aggSrc = indexedRanks.map(r => df.join(r, Seq("skey")))
-          .getOrElse(df)
-        val ordCol = if (indexedRanks.isDefined) col("srank_") else col("skey")
+        // keys are sorted, so rank order == skey order and results are
+        // identical; the rank is the key's position in that literal
+        // array (a linear probe per downsampled row, over the series one
+        // query selects).
+        val ordCol = keys match {
+          case Some(ks) if agg == "first" || agg == "last" =>
+            array_position(typedLit(ks), col("skey"))
+          case _ => col("skey")
+        }
         val valueAgg = GraftFunctions.aggFor(agg, col("value"), ordCol,
           opt.approxPercentileAccuracy).as("value")
-        val grouped = aggSrc.groupBy(col("ts") +: groupCols: _*)
+        val grouped = df.groupBy(col("ts") +: groupCols: _*)
         if (opt.collectSeriesKeys) {
           // member rosters ride along as ONE extra row per result group
           // (ts = null), not an array on every timestamp row — the
@@ -310,48 +293,41 @@ object Planner {
         val scanEnd = q.endMs - math.floorMod(q.endMs, snapped) + snapped - 1
 
         // series selection, shared by the raw and rollup sides: with an
-        // index, resolve matching skeys on the dim table once and
-        // semi-join; otherwise per-row predicates (key-derived columns
-        // on the rollup side, which carries skey only)
-        val matched = opt.seriesIndex.map { index =>
-          broadcast(index
-            .filter(col("metric") === sub.metric)
-            .filter(TagFilters.compileAll(col("tags"), sub.tags, sub.explicitTags))
-            .select(col("skey")))
-        }
-        def selectSeries(d: DataFrame, keyDerived: Boolean): DataFrame =
-          matched match {
-            case Some(m) =>
-              val keyed = if (d.columns.contains("skey")) d
-                else d.withColumn("skey", Dp.seriesKey(col("metric"), col("tags")))
-              keyed.join(m, Seq("skey"), "left_semi")
-            case None =>
-              val tags =
-                if (keyDerived) Dp.tagsFromKey(col("skey")) else col("tags")
-              val metricPred =
-                if (keyDerived) Dp.metricFromKey(col("skey")) === sub.metric
-                else col("metric") === sub.metric
-              d.filter(metricPred)
-                .filter(TagFilters.compileAll(tags, sub.tags, sub.explicitTags))
-          }
-
-        val raw = selectSeries(dp, keyDerived = false)
+        // index, the keys resolve on the driver once and both sides filter
+        // on their stored skey; otherwise per-row predicates (key-derived
+        // columns on the rollup side, which carries skey only)
+        val keys = opt.seriesIndex.map(matchingSeries(_, sub))
+        val raw = selectSeries(dp, sub, keys)
           .filter(col("ts").between(q.startMs, scanEnd))
-        val rolled = selectSeries(source, keyDerived = true)
-          .filter(col("wts").between(q.startMs, scanEnd))
-        // marks derive over WHOLE day slices intersecting the range: an
-        // OOO point's earlier-ingested witness may lie outside the query
+        val rolled = (keys match {
+          case Some(ks) => source.filter(keyIn(ks))
+          case None => source
+            .filter(Dp.metricFromKey(col("skey")) === sub.metric)
+            .filter(TagFilters.compileAll(Dp.tagsFromKey(col("skey")),
+              sub.tags, sub.explicitTags))
+        }).filter(col("wts").between(q.startMs, scanEnd))
+        // marks cover WHOLE day slices intersecting the range: an OOO
+        // point's earlier-ingested witness may lie outside the query
         // window but inside the slice
-        val marks = opt.oooMarks.getOrElse {
-          val dayLo = q.startMs - math.floorMod(q.startMs, Rollup.DayMs)
-          val dayHi = scanEnd - math.floorMod(scanEnd, Rollup.DayMs) +
-            Rollup.DayMs - 1
-          Rollup.oooSlices(
-            selectSeries(dp, keyDerived = false)
-              .filter(col("ts").between(dayLo, dayHi)))
+        val dayLo = q.startMs - math.floorMod(q.startMs, Rollup.DayMs)
+        val dayHi = scanEnd - math.floorMod(scanEnd, Rollup.DayMs) +
+          Rollup.DayMs - 1
+        val series = opt.oooMarks match {
+          // maintained marks resolve on the driver to the query's series
+          // and days, and join as literals
+          case Some(m) =>
+            val resolved = (keys match {
+              case Some(ks) => m.filter(keyIn(ks))
+              case None => m
+            }).filter(col("day").between(dayLo, dayHi))
+              .select("skey", "day").collect()
+              .map(r => (r.getString(0), r.getLong(1))).toSeq
+            Rollup.downsampleWithFallback(raw, rolled, resolved, snapped, ds.func)
+          case None =>
+            val derived = Rollup.oooSlices(
+              selectSeries(dp, sub, keys).filter(col("ts").between(dayLo, dayHi)))
+            Rollup.downsampleWithFallback(raw, rolled, derived, snapped, ds.func)
         }
-        val series = Rollup
-          .downsampleWithFallback(raw, rolled, marks, snapped, ds.func)
         // hand the per-series buckets to the shared pipeline tail (fill,
         // cross-series aggregation, rate): an identity re-downsample at
         // the snapped interval — values sit exactly on the bucket grid,
@@ -377,6 +353,40 @@ object Planner {
           tail,
           opt.copy(dedup = false, seriesIndex = None, rollup1h = None))
     }
+  }
+
+  /** The series a sub-query selects, resolved on the driver from a
+    * (skey, metric, tags) index: sorted, distinct. Filter + collect only,
+    * so a local index (the store's catalog) answers without a Spark job
+    * — an aggregate here would launch one.
+    */
+  def matchingSeries(index: DataFrame, sub: SubQuery): Seq[String] =
+    index
+      .filter(col("metric") === sub.metric)
+      .filter(TagFilters.compileAll(col("tags"), sub.tags, sub.explicitTags))
+      .select(col("skey")).collect()
+      .map(_.getString(0)).distinct.sorted.toSeq
+
+  /** Membership in a resolved key set, as a literal predicate (a hash
+    * InSet past a handful of keys); an empty set is a constant false the
+    * optimizer folds to an empty relation.
+    */
+  private def keyIn(keys: Seq[String]): Column =
+    if (keys.isEmpty) lit(false) else col("skey").isin(keys: _*)
+
+  /** Series selection over a dp frame. With resolved keys, a frame that
+    * stores skey filters on it with the literal set. Otherwise the tag
+    * predicates run per row and the key is derived once for the rows
+    * that pass: a literal predicate on a DERIVED key would be pushed
+    * below its projection and evaluate [[Dp.seriesKey]] per row more
+    * than once, costing more than the predicates it replaces.
+    */
+  private def selectSeries(dp: DataFrame, sub: SubQuery,
+      keys: => Option[Seq[String]]): DataFrame = {
+    val ofMetric = dp.filter(col("metric") === sub.metric)
+    if (dp.columns.contains("skey") && keys.isDefined) ofMetric.filter(keyIn(keys.get))
+    else Dp.ensureSeriesKey(ofMetric
+      .filter(TagFilters.compileAll(col("tags"), sub.tags, sub.explicitTags)))
   }
 
   private val TopBottomRe = """(top|bottom)([1-9])""".r

@@ -94,7 +94,7 @@ object Rollup {
   def oooSlices(dp: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("skey"), col("day")).orderBy(col("seq"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    Dp.withSeriesKey(dp)
+    Dp.ensureSeriesKey(dp)
       .withColumn("day", col("ts") - pmod(col("ts"), lit(DayMs)))
       .withColumn("hwm", max(col("ts")).over(w))
       .filter(
@@ -130,17 +130,41 @@ object Rollup {
   def downsampleWithFallback(dp: DataFrame, rollup: DataFrame,
       precomputedMarks: DataFrame, intervalMs: Long, func: String): DataFrame = {
     val marks = broadcast(precomputedMarks)
-    val clean = rollup
-      .withColumn("day", col("wts") - pmod(col("wts"), lit(DayMs)))
-      .join(marks, Seq("skey", "day"), "left_anti")
-      .drop("day")
-    val rawSlices = Dp.withSeriesKey(dp)
-      .withColumn("day", col("ts") - pmod(col("ts"), lit(DayMs)))
-      .join(marks, Seq("skey", "day"), "left_semi")
-      .groupBy(col("skey"), col("ts")) // last-wins dedup at raw resolution
+    mergeFallback(
+      withDay(rollup, "wts").join(marks, Seq("skey", "day"), "left_anti"),
+      withDay(Dp.ensureSeriesKey(dp), "ts").join(marks, Seq("skey", "day"), "left_semi"),
+      intervalMs, func)
+  }
+
+  /** Variant taking marks already resolved on the driver (the store's
+    * catalog, restricted to the query's series and days): membership is
+    * a literal predicate, so neither side joins and no broadcast job
+    * runs; with no marks the raw branch folds away at plan time.
+    */
+  def downsampleWithFallback(dp: DataFrame, rollup: DataFrame,
+      marks: Seq[(String, Long)], intervalMs: Long, func: String): DataFrame = {
+    val marked = marks.groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (day, ms) => col("day") === day && col("skey").isin(ms.map(_._1).sorted: _*) }
+      .reduceOption(_ || _).getOrElse(lit(false))
+    mergeFallback(
+      withDay(rollup, "wts").filter(!marked),
+      withDay(Dp.ensureSeriesKey(dp), "ts").filter(marked),
+      intervalMs, func)
+  }
+
+  private def withDay(df: DataFrame, tsCol: String): DataFrame =
+    df.withColumn("day", col(tsCol) - pmod(col(tsCol), lit(DayMs)))
+
+  /** Clean rollup slices plus the marked slices recomputed from raw
+    * (last-wins dedup at raw resolution), downsampled together.
+    */
+  private def mergeFallback(clean: DataFrame, rawSlices: DataFrame,
+      intervalMs: Long, func: String): DataFrame = {
+    val recomputed = rawSlices
+      .groupBy(col("skey"), col("ts"))
       .agg(max_by(col("value"), col("seq")).as("value"))
     downsampleFromRollup(
-      clean.unionByName(rollup1hKeyed(rawSlices), allowMissingColumns = false),
+      clean.drop("day").unionByName(rollup1hKeyed(recomputed), allowMissingColumns = false),
       intervalMs, func)
   }
 

@@ -2,13 +2,14 @@ package graft.store
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 import graft.CacheScope
 import graft.model.Dp
 import graft.query.Planner
 import graft.rollup.Rollup
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,6 +17,12 @@ import org.apache.spark.sql.types._
 /** The maintained store: raw data plus the three metadata tables the
   * reference keeps write-time state for, updated incrementally on every
   * ingest batch — queries never derive them from fact data.
+  *
+  * Raw data lives in date partitions, one parquet file per batch and date
+  * (compacted per date on a batch cadence). Each row carries the dp
+  * columns and its canonical series key `skey`, written next to them, so
+  * a query reads the key instead of deriving it per row (see
+  * [[readDataFiles]] for files written without it).
   *
   *   - `series_index` (skey, metric, tags): the per-metric series
   *     registry (`g_metric_map` + `Mapping`, reference
@@ -50,12 +57,23 @@ import org.apache.spark.sql.types._
   * batch spanning a few days moves a few days of tiny metadata, not
   * history.
   *
+  * Queries resolve series and OOO marks from a driver-resident catalog:
+  * local (LocalRelation) snapshots of `series_index` and of the
+  * slice_state rows marked OOO, the reference's in-memory registry. A
+  * snapshot is replaced, never mutated: it reloads only the index files
+  * and state day dirs it has not read, and only when the index's file
+  * set or the state manifest seq moved (one listing and one manifest
+  * read per query tell). The writer reloads it as the last step of each
+  * commit, so the queries after a put run no Spark job for metadata.
+  *
   * Contract: batches arrive with `seq` monotonically increasing across
   * batches (what [[graft.ingest.Ingest]] produces — batch-stamped under
   * streaming), because query-time last-wins dedup on the DATA still
   * resolves by seq. Writes are single-threaded per store (the reference
-  * serializes ingest per shard the same way); reads are concurrency-safe
-  * against a writer.
+  * serializes ingest per shard the same way), and one store instance is
+  * the only writer of its root — which is what keeps the catalog current
+  * without a reload per query; reads are concurrency-safe against a
+  * writer.
   */
 final class Store(spark: SparkSession, root: String,
     compactEveryBatches: Int = 8,
@@ -93,14 +111,10 @@ final class Store(spark: SparkSession, root: String,
   // collapses first-batch joins/unions against it at PLAN time — an
   // empty-RDD frame looks non-empty to the optimizer and keeps its
   // shuffle stages alive
-  private def emptyFrame(schema: StructType): DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+  private def emptyFrame(schema: StructType): DataFrame = localFrame(Nil, schema)
 
-  /** Plain-directory read (append-only tables). */
-  private def readOr(path: String, schema: StructType): DataFrame =
-    if (exists(path)) spark.read.schema(schema).parquet(path)
-    else emptyFrame(schema)
+  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Manifest-resolved read: load exactly the day dirs the newest
     * manifest names (day is a data column inside the files).
@@ -112,19 +126,16 @@ final class Store(spark: SparkSession, root: String,
       .parquet(entries.values.map(n => s"$path/$n").toSeq: _*)
   }
 
-  /** [[readManifested]] restricted to the batch's touched days: a
-    * broadcast semi-join on `day` — except on a table with no committed
-    * manifest, where the read is a provably empty frame and the semi-join
-    * would only add a broadcast-build sub-job (~0.3 s of pure latency per
-    * table on a first-batch ingest) to produce the same empty frame.
+  /** [[readManifested]] restricted to the batch's touched days, resolved
+    * on the driver: the read names only those days' dirs, so it neither
+    * joins nor grows with history. No committed dir for any of the days
+    * (a first batch) is a provably empty frame.
     */
   private def readManifestedForDays(path: String, schema: StructType,
-      batchDays: DataFrame): DataFrame = {
-    val (_, entries) = currentManifest(path)
-    if (entries.isEmpty) emptyFrame(schema)
-    else spark.read.schema(schema)
-      .parquet(entries.values.map(n => s"$path/$n").toSeq: _*)
-      .join(broadcast(batchDays), Seq("day"), "left_semi")
+      days: Seq[Long]): DataFrame = {
+    val dirs = currentManifest(path)._2.view.filterKeys(days.toSet).values.toSeq
+    if (dirs.isEmpty) emptyFrame(schema)
+    else spark.read.schema(schema).parquet(dirs.map(n => s"$path/$n"): _*)
   }
 
   private val dpSchema = StructType(Seq(
@@ -132,6 +143,12 @@ final class Store(spark: SparkSession, root: String,
     StructField("tags", MapType(StringType, StringType)),
     StructField("ts", LongType), StructField("value", DoubleType),
     StructField("seq", LongType)))
+  // the data files' schema: the dp columns plus the canonical series key
+  // the store writes next to them (null when read from a file written
+  // without it)
+  private val dataFileSchema = dpSchema.add(StructField("skey", StringType))
+  // the name suffix of the data files that carry it
+  private val KeyedSuffix = ".sk.parquet"
 
   /** Raw data as the canonical dp frame (empty before the first ingest —
     * a freshly-booted server must answer queries with [] not a scan
@@ -146,18 +163,21 @@ final class Store(spark: SparkSession, root: String,
     * schema yields the correct empty result.
     */
   def data: DataFrame = currentDataManifest() match {
-    case Some((_, entries)) => readDataFiles(entries.values.flatten.toSeq)
+    case Some((_, entries)) =>
+      readDataFiles(entries.values.flatten.toSeq).select(Dp.columns.map(col): _*)
     case None =>
       if (!exists(dataPath)) emptyFrame(dpSchema)
       else spark.read.schema(dpSchema).parquet(dataPath)
         .select(Dp.columns.map(col): _*)
   }
 
-  /** Day-pruned data read: only the date partitions that can contain
-    * `[startMs - slackMs, endMs + slackMs]` (±1 local date of extra
-    * slack covers a UTC/session-timezone straddle). At scale this is
-    * the difference between opening every day's file footers per query
-    * and opening the queried window's.
+  /** The query scan: day-pruned data read, only the date partitions that
+    * can contain `[startMs - slackMs, endMs + slackMs]` (±1 local date of
+    * extra slack covers a UTC/session-timezone straddle). At scale this
+    * is the difference between opening every day's file footers per
+    * query and opening the queried window's. Besides the dp columns it
+    * carries each row's `skey` as stored, so series selection filters a
+    * scan column instead of deriving the key per row.
     */
   def dataForRange(startMs: Long, endMs: Long, slackMs: Long = 0L): DataFrame =
     currentDataManifest() match {
@@ -174,24 +194,38 @@ final class Store(spark: SparkSession, root: String,
       case None => data
     }
 
-  private def readDataFiles(files: Seq[String]): DataFrame =
-    if (files.isEmpty) emptyFrame(dpSchema).select(Dp.columns.map(col): _*)
-    else spark.read.schema(dpSchema)
-      .parquet(files.map(f => s"$dataPath/$f"): _*)
-      .select(Dp.columns.map(col): _*)
+  /** Committed data files as dp columns + `skey`. Files the store wrote
+    * carry the key (named `*.sk.parquet`), and the scan reads it as a
+    * plain column. A file named otherwise was written without it (by an
+    * earlier store, or adopted from [[graft.ingest.Ingest.writePartitioned]]
+    * output): a scan naming one reads the key as
+    * `coalesce(skey, Dp.seriesKey(metric, tags))` — one expression, whose
+    * derivation runs only for the rows that lack the column.
+    */
+  private def readDataFiles(files: Seq[String]): DataFrame = {
+    val skey =
+      if (files.forall(_.endsWith(KeyedSuffix))) col("skey")
+      else coalesce(col("skey"), Dp.seriesKey(col("metric"), col("tags")))
+    (if (files.isEmpty) emptyFrame(dataFileSchema)
+     else spark.read.schema(dataFileSchema).parquet(files.map(f => s"$dataPath/$f"): _*))
+      .select(Dp.columns.map(col) :+ skey.as("skey"): _*)
+  }
 
   /** Root of the date-partitioned raw data (what [[Maintenance]] and the
     * admin commands operate on).
     */
   def dataLocation: String = dataPath
 
-  def seriesIndex: DataFrame = readOr(indexPath, indexSchema)
+  /** The series index as of the newest commit: the catalog's local
+    * (skey, metric, tags) snapshot.
+    */
+  def seriesIndex: DataFrame = catalog().index
 
   /** The maintained `(skey, day)` invalidation frame — what
-    * [[Planner.Options.oooMarks]] wants.
+    * [[Planner.Options.oooMarks]] wants: the catalog's local snapshot of
+    * the slice_state rows marked OOO.
     */
-  def oooMarks: DataFrame =
-    readManifested(statePath, stateSchema).filter(col("ooo")).select("skey", "day")
+  def oooMarks: DataFrame = catalog().marks
 
   def rollup1h: DataFrame =
     readManifested(rollupPath, rollupDaySchema)
@@ -210,12 +244,82 @@ final class Store(spark: SparkSession, root: String,
     * marks, and both rollup levels — the configuration every query should
     * run with (what the reference's QuerySuperTask always has).
     */
-  def plannerOptions(): Planner.Options =
+  def plannerOptions(): Planner.Options = {
+    val c = catalog()
     Planner.Options(
-      seriesIndex = Some(seriesIndex),
-      oooMarks = Some(oooMarks),
+      seriesIndex = Some(c.index),
+      oooMarks = Some(c.marks),
       rollup1h = Some(rollup1h),
       rollup1d = Some(rollup1d))
+  }
+
+  // ---- driver-resident catalog ------------------------------------------
+
+  /** One immutable snapshot of the series index and the OOO marks, and
+    * the on-disk state it was loaded from: the index's file names and the
+    * slice_state manifest seq, with the marks of each day dir it names.
+    */
+  private final class Catalog(val indexFiles: Set[String], val indexRows: Seq[Row],
+      val stateSeq: Long, val markDirs: Map[String, Seq[Row]]) {
+    lazy val index: DataFrame = localFrame(indexRows, indexSchema)
+    lazy val marks: DataFrame = localFrame(markDirs.values.flatten.toSeq, marksSchema)
+  }
+
+  private val marksSchema = StructType(Seq(
+    StructField("skey", StringType), StructField("day", LongType)))
+
+  @volatile private var snapshot = new Catalog(Set.empty, Nil, 0L, Map.empty)
+  private val catalogLock = new Object
+
+  /** The catalog, current with the store's files. Each call costs one
+    * listing of the index dir and one manifest read; a changed index file
+    * set or state manifest seq reloads what changed — the new index files
+    * (the index is append-only and its files are immutable) and the day
+    * dirs the new manifest names that the snapshot has not read — in one
+    * small Spark job each. [[ingest]] calls it as its commit's last step,
+    * so queries served after a put find it current and run no job for
+    * metadata. That relies on the single-writer contract: a commit by
+    * another process on the same root is picked up by the next caller's
+    * check instead, at the cost of that reload.
+    */
+  private def catalog(): Catalog = catalogLock.synchronized {
+    val c = snapshot
+    val files = indexFileNames()
+    val (seq, days) = currentManifest(statePath)
+    if (files != c.indexFiles || seq != c.stateSeq) {
+      val indexRows =
+        if (files == c.indexFiles) c.indexRows
+        else {
+          val grown = c.indexFiles.subsetOf(files)
+          val added = (if (grown) files -- c.indexFiles else files).toSeq.sorted
+          (if (grown) c.indexRows else Nil) ++ (
+            if (added.isEmpty) Nil
+            else spark.read.schema(indexSchema)
+              .parquet(added.map(f => s"$indexPath/$f"): _*).collect().toSeq)
+        }
+      val markDirs =
+        if (seq == c.stateSeq) c.markDirs
+        else {
+          val unread = days.filter { case (_, dir) => !c.markDirs.contains(dir) }
+          val read =
+            if (unread.isEmpty) Map.empty[Long, Seq[Row]]
+            else spark.read.schema(stateSchema)
+              .parquet(unread.values.map(d => s"$statePath/$d").toSeq: _*)
+              .filter(col("ooo")).select("skey", "day").collect().toSeq
+              .groupBy(_.getLong(1))
+          days.map { case (day, dir) =>
+            dir -> c.markDirs.getOrElse(dir, read.getOrElse(day, Nil)) }
+        }
+      snapshot = new Catalog(files, indexRows, seq, markDirs)
+    }
+    snapshot
+  }
+
+  private def indexFileNames(): Set[String] =
+    if (!exists(indexPath)) Set.empty
+    else fs.listStatus(new Path(indexPath)).iterator.map(_.getPath.getName)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
+      .toSet
 
   // Serializes writers: ServerMain wires several ingest edges into one
   // store (HTTP pool threads, two TCP batchers, UDP, self-metrics
@@ -268,7 +372,7 @@ final class Store(spark: SparkSession, root: String,
       // aggregate instead of re-scanning the whole batch for distinct
       // skeys — one fewer full-batch pass per ingest
       val days = CacheScope { sliceCache =>
-        val (slices, mergedState) = computeSliceState(sliceCache, keyed)
+        val (slices, mergedState, days) = computeSliceState(sliceCache, keyed)
         // metadata must not commit before the data it describes: a crash
         // window may lose metadata for committed data (queries then see
         // raw-only, still correct) but never the reverse
@@ -278,9 +382,17 @@ final class Store(spark: SparkSession, root: String,
         // tiny write whose wall time is job-launch overhead, not data,
         // so an ingest's latency is job-COUNT-bound: one unioned write
         // beats four concurrent ones on a busy or cold driver
-        commitMetadata(keyed, slices, mergedState)
+        commitMetadata(keyed, slices, mergedState, days)
       }
       maybeCompact(days)
+    }
+    // load this commit's new series and marks into the catalog now, so
+    // the queries that follow find it current; a failed load only defers
+    // it to the next caller's check
+    try catalog()
+    catch { case NonFatal(e) =>
+      org.apache.log4j.Logger.getLogger(getClass)
+        .warn(s"catalog reload failed (batch already committed): $e")
     }
     // the batch (and everything before it) is committed: the snapshot's
     // checkpoints are now safe to serve to replication followers. A
@@ -302,7 +414,7 @@ final class Store(spark: SparkSession, root: String,
   private def appendData(keyed: DataFrame): Unit = {
     val gen = System.nanoTime()
     val tmp = s"$dataPath/.ingest_tmp_$gen"
-    keyed.select(Dp.columns.map(col): _*)
+    keyed.select((Dp.columns :+ "skey").map(col): _*)
       .withColumn("date", to_date(timestamp_millis(col("ts"))))
       .write.mode(SaveMode.Overwrite).partitionBy("date").parquet(tmp)
     // adopting a pre-manifest layout: fold the existing files into the
@@ -321,7 +433,7 @@ final class Store(spark: SparkSession, root: String,
         fs.listStatus(dp)
           .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
           .foreach { f =>
-            val name = s"g${gen}_$i.parquet"
+            val name = s"g${gen}_$i$KeyedSuffix"
             i += 1
             fs.rename(f.getPath, new Path(liveDir, name))
             entries(date) = entries.getOrElse(date, Nil) :+ s"date=$date/$name"
@@ -369,9 +481,7 @@ final class Store(spark: SparkSession, root: String,
     * batch's series set, never the batch itself. The distinct runs on
     * the skey STRING and metric/tags re-derive from it afterwards —
     * `first(tags)` would force a SortAggregate on every ingest batch
-    * (maps have no hash buffer). Meta.seriesTable's
-    * constraint-propagation caveat doesn't apply here: the index is
-    * materialized to parquet, so readers see real columns.
+    * (maps have no hash buffer).
     */
   private def newSeries(slices: DataFrame): DataFrame = {
     val batchSeries = slices
@@ -386,17 +496,18 @@ final class Store(spark: SparkSession, root: String,
   }
 
   /** Compute the batch's slice-state merge; returns the slice aggregate,
-    * kept in the caller's `cache` until the commit job has read it, and
-    * the merged state frame for the caller to commit. Within-batch
-    * OOO is detected with a window over the BATCH's rows (bounded by
-    * batch size — the reference's in-memory page state); cross-batch
-    * OOO compares the batch's min ts against the stored hwm. NO action
-    * runs here: the prior state restricts to the batch's days via a
-    * broadcast semi-join (not a collected `isin` list), so the whole
-    * merge stays inside the single metadata commit job.
+    * kept in the caller's `cache` until the commit job has read it, the
+    * merged state frame for the caller to commit, and the batch's
+    * touched days. Within-batch OOO is detected with a window over the
+    * BATCH's rows (bounded by batch size — the reference's in-memory page
+    * state); cross-batch OOO compares the batch's min ts against the
+    * stored hwm. One action runs here: collecting the touched days
+    * materializes the kept slice aggregate (which the commit job then
+    * reads from cache), and the prior state and rollup reads name only
+    * those days' dirs — no join against history, no broadcast jobs.
     */
   private def computeSliceState(cache: CacheScope,
-      keyed: DataFrame): (DataFrame, DataFrame) = {
+      keyed: DataFrame): (DataFrame, DataFrame, Seq[Long]) = {
     val w = Window.partitionBy(col("skey"), col("day")).orderBy(col("seq"))
       .rowsBetween(Window.unboundedPreceding, -1)
     // kept: consumed by the state merge AND the series-index branch of
@@ -415,8 +526,10 @@ final class Store(spark: SparkSession, root: String,
         min(col("ts")).as("bmin"),
         max(col("ts")).as("bmax"),
         max(col("bad")).as("booo")))
-    val prev = readManifestedForDays(statePath, stateSchema,
-      slices.select("day").distinct())
+    // the batch's touched days, resolved once on the driver: the prior
+    // state and rollup reads then name only those days' dirs
+    val days = slices.select("day").distinct().collect().map(_.getLong(0)).toSeq
+    val prev = readManifestedForDays(statePath, stateSchema, days)
     val merged = prev.as("p")
       .join(slices.as("b"), Seq("skey", "day"), "full_outer")
       .select(
@@ -426,7 +539,7 @@ final class Store(spark: SparkSession, root: String,
           coalesce(col("b.booo"), lit(false)) ||
           coalesce(col("b.bmin") <= col("p.hwm"), lit(false))).as("ooo"),
         col("day"))
-    (slices, merged)
+    (slices, merged, days)
   }
 
   // the unioned metadata frame's superset schema: every table's columns,
@@ -460,11 +573,10 @@ final class Store(spark: SparkSession, root: String,
     * merge result instead of recomputing the batch aggregation.
     */
   private def commitMetadata(keyed: DataFrame, slices: DataFrame,
-      mergedState: DataFrame): Seq[Long] = CacheScope { cache =>
+      mergedState: DataFrame, days: Seq[Long]): Seq[Long] = CacheScope { cache =>
     val batchRollup = Rollup.rollup1hKeyed(keyed)
       .withColumn("day", col("wts") - pmod(col("wts"), lit(Rollup.DayMs)))
-    val prev = readManifestedForDays(rollupPath, rollupDaySchema,
-      slices.select("day").distinct())
+    val prev = readManifestedForDays(rollupPath, rollupDaySchema, days)
     // kept: consumed by both level branches of the union; tiny (touched
     // days' rollup rows). Both branches materialize inside the ONE write
     // job — the block manager serializes per-partition computes.
@@ -621,7 +733,7 @@ final class Store(spark: SparkSession, root: String,
         val moved = fs.listStatus(new Path(tmp))
           .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
           .map { f =>
-            val name = s"c${gen}_$i.parquet"
+            val name = s"c${gen}_$i$KeyedSuffix"
             i += 1
             fs.rename(f.getPath, new Path(liveDir, name))
             s"date=$date/$name"

@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.QueryApi
 import graft.model.{Dp, SubQuery, TsQuery}
 import graft.query.Planner
 import graft.rollup.Rollup
@@ -191,6 +192,7 @@ class StoreSpec extends SparkSpec {
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]
     @volatile var stop = false
     @volatile var lastDataCount = 0L
+    @volatile var lastSeries = 0L
     val reader = new Thread(() => {
       while (!stop) {
         try {
@@ -203,6 +205,11 @@ class StoreSpec extends SparkSpec {
           val d = st.data.count()
           if (d < lastDataCount) failures.add(s"data count went $lastDataCount -> $d")
           lastDataCount = d
+          // the catalog reloads while the writer commits: the append-only
+          // index never shrinks
+          val n = st.seriesIndex.count()
+          if (n < lastSeries) failures.add(s"series index went $lastSeries -> $n")
+          lastSeries = n
         } catch {
           case e: Throwable => failures.add(s"read threw: ${e.getMessage}")
         }
@@ -210,12 +217,15 @@ class StoreSpec extends SparkSpec {
     })
     reader.start()
     try {
+      // every batch also brings a series the index has not seen
       (2 to 10).foreach { i =>
-        st.ingest(mkDp(Seq(("m", "a", 1000L + i * 7, i.toDouble, i.toLong))))
+        st.ingest(mkDp(Seq(("m", "a", 1000L + i * 7, i.toDouble, i.toLong),
+          ("m", s"n$i", 1000L + i * 7, i.toDouble, 100L + i))))
       }
     } finally { stop = true; reader.join() }
     assert(failures.isEmpty, failures.toArray.mkString("; "))
     assert(lastDataCount > 0)
+    assert(st.seriesIndex.count() === 10)
     // generations are GC'd: at most 2 manifests + their dirs remain
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -292,5 +302,165 @@ class StoreSpec extends SparkSpec {
     assert(files <= 7, s"expected <= 7 files after compaction cadence, got $files")
     val got = st.data.select("ts", "value").as[(Long, Double)].collect().toSet
     assert(got === rows.map(r => (r._3, r._4)).toSet)
+  }
+
+  /** Call sites of the Spark jobs `f` runs: each job's stage call sites
+    * plus its SQL execution's (AQE and broadcast jobs start on their own
+    * threads and carry only the execution id).
+    */
+  private def jobSites(f: => Unit): Seq[String] = {
+    import org.apache.spark.ListenerProbe
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val execs = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execs.put(s.executionId, s.details)
+        case _ => ()
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val exec = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(execs.get(id.toLong)))
+        sites.add((e.stageInfos.map(_.details) ++ exec).mkString("\n"))
+      }
+    }
+    val sc = spark.sparkContext
+    ListenerProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; ListenerProbe.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    sites.toArray(Array.empty[String]).toSeq
+  }
+
+  private val T0 = 1704412800000L // day-aligned
+
+  /** Two days of three hosts over two dcs, then a late batch that
+    * rewrites points and marks slices OOO.
+    */
+  private def servedStore(name: String): Store = {
+    val root = java.nio.file.Files.createTempDirectory(name).toString
+    val st = new Store(spark, root, compactEveryBatches = 0)
+    def dp(rows: Seq[(String, String, Long, Double, Long)]) =
+      spark.createDataset(rows.map { case (h, dc, ts, v, q) =>
+        Dp("srv.m", Map("host" -> h, "dc" -> dc), ts, v, q)
+      }).toDF()
+    val hosts = Seq("a" -> "east", "b" -> "east", "c" -> "west")
+    st.ingest(dp(for {
+      ((h, dc), i) <- hosts.zipWithIndex; k <- 0 until 48
+    } yield (h, dc, T0 + k * H + i * 1000L, (k * 3 + i).toDouble, (i * 100 + k).toLong)))
+    st.ingest(dp(Seq(("a", "east", T0 + 5 * H, 99.0, 1000L),
+      ("c", "west", T0 + 30 * H + 2000L, -1.0, 1001L))))
+    st
+  }
+
+  private val servedQueries = Seq(
+    // routed to rollup_1h, with the late batch's OOO fallback
+    """{"start":1704412800,"end":1704585599,"queries":[{"metric":"srv.m",
+      |"aggregator":"sum","downsample":"6h-avg","tags":{"dc":"*"}}]}""",
+    // raw: dev has no rollup form
+    """{"start":1704412800,"end":1704585599,"queries":[{"metric":"srv.m",
+      |"aggregator":"max","downsample":"1d-dev","tags":{"host":"literal_or(a|c)"}}]}""",
+    // first across series, ordered by the resolved key set's rank
+    """{"start":1704412800,"end":1704585599,"queries":[{"metric":"srv.m",
+      |"aggregator":"first","downsample":"1h-max"}]}""",
+    // one result set per series
+    """{"start":1704412800,"end":1704499199,"queries":[{"metric":"srv.m",
+      |"aggregator":"none","downsample":"12h-min","tags":{"host":"b"}}]}""")
+    .map(b => QueryApi.parseRequest(b.stripMargin))
+
+  test("aggregated store query: no Spark job outside its answer's collect") {
+    val st = servedStore("store_jobs")
+    servedQueries.take(3).foreach { q =>
+      var json = ""
+      val sites = jobSites { json = QueryApi.runQuery(st, q) }
+      assert(json.contains("\"dps\":{\""), json)
+      assert(sites.nonEmpty)
+      // series, marks and aggregateTags all resolve from the catalog
+      sites.foreach(site => assert(site.contains("QueryApi$.cappedCollect"),
+        s"a job ran outside the answer's collect:\n$site"))
+    }
+  }
+
+  test("store query plan: the series key is read, never derived above the scan") {
+    val st = servedStore("store_plan")
+    servedQueries.foreach { q =>
+      val sub = q.subQueries.head
+      val plan = Planner.planRouted(QueryApi.storeFrame(st, q), q, sub,
+        st.plannerOptions()).queryExecution.executedPlan.toString
+      assert(!plan.contains("map_entries"), s"skey derived per row:\n$plan")
+    }
+  }
+
+  // a different file layout may sum a group's doubles in another order
+  private def rounded(json: String): String =
+    """-?\d+\.\d+""".r.replaceAllIn(json,
+      m => BigDecimal(m.matched).setScale(9, BigDecimal.RoundingMode.HALF_UP).toString)
+
+  test("a store whose data files lack skey answers identically") {
+    val keyed = servedStore("store_keyed")
+    val legacy = servedStore("store_legacy")
+    val root = legacy.dataLocation
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // rewrite every committed data file the way an earlier store wrote
+    // it: no skey column, no `.sk` name suffix — manifest included
+    val files = fs.listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
+      .filter(_.getPath.getName.startsWith("date="))
+      .flatMap(d => fs.listStatus(d.getPath).toSeq)
+      .map(_.getPath).filter(_.getName.endsWith(".sk.parquet"))
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val tmp = s"$root/.rewrite_${f.getName}"
+      spark.read.parquet(f.toString).drop("skey").coalesce(1)
+        .write.parquet(tmp)
+      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
+        .map(_.getPath).filter(_.getName.endsWith(".parquet")).head
+      fs.rename(part, new org.apache.hadoop.fs.Path(f.getParent,
+        f.getName.stripSuffix(".sk.parquet") + ".parquet"))
+      fs.delete(f, false)
+      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+    }
+    fs.listStatus(new org.apache.hadoop.fs.Path(root)).map(_.getPath)
+      .filter(_.getName.startsWith("manifest.")).foreach { m =>
+        val in = fs.open(m)
+        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+          finally in.close()
+        val out = fs.create(m, true)
+        try out.write(text.replace(".sk.parquet", ".parquet").getBytes("UTF-8"))
+        finally out.close()
+      }
+    // the legacy scan derives the key, so the comparison exercises it (a
+    // routed query without marks on its series reads no raw data at all)
+    assert(servedQueries.exists(q => Planner.planRouted(QueryApi.storeFrame(legacy, q),
+      q, q.subQueries.head, legacy.plannerOptions())
+      .queryExecution.executedPlan.toString.contains("map_entries")))
+    servedQueries.foreach(q =>
+      assert(rounded(QueryApi.runQuery(legacy, q)) === rounded(QueryApi.runQuery(keyed, q))))
+    // compaction rewrites a legacy day with the key stored
+    legacy.compactDay("2024-01-05")
+    servedQueries.foreach(q =>
+      assert(rounded(QueryApi.runQuery(legacy, q)) === rounded(QueryApi.runQuery(keyed, q))))
+  }
+
+  test("a series first seen in put N is in the next query, with its aggregateTags") {
+    val root = java.nio.file.Files.createTempDirectory("store_new_series").toString
+    val st = new Store(spark, root)
+    def put(rows: (String, String, Double, Long)*) =
+      st.ingest(spark.createDataset(rows.map { case (h, dc, v, q) =>
+        Dp("ns.m", Map("host" -> h, "dc" -> dc), T0, v, q)
+      }).toDF())
+    val q = QueryApi.parseRequest(
+      """{"start":1704412800,"end":1704416400,"queries":[
+        |{"metric":"ns.m","aggregator":"sum"}]}""".stripMargin)
+    put(("a", "east", 1.0, 1L), ("b", "east", 2.0, 2L))
+    assert(QueryApi.runQuery(st, q) ===
+      """[{"metric":"ns.m","tags":{"dc":"east"},"aggregateTags":["host"],""" +
+        """"dps":{"1704412800":3.0}}]""")
+    put(("c", "west", 4.0, 3L))
+    assert(QueryApi.runQuery(st, q) ===
+      """[{"metric":"ns.m","tags":{},"aggregateTags":["dc","host"],""" +
+        """"dps":{"1704412800":7.0}}]""")
   }
 }
