@@ -1,5 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.collection.mutable
+
+import org.apache.spark.{ListenerProbe, SparkContext}
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
@@ -8,72 +14,34 @@ import org.apache.spark.sql.SparkSession
   *
   * Input tables are cached up front (one read each; Spark's plan
   * canonicalization routes the queries' own reads through the
-  * InMemoryRelation), and a warmup job runs first so the first measured
+  * InMemoryRelation), and warm-up jobs run first so the first measured
   * query doesn't pay session/codegen bring-up.
   *
-  * Each query runs `SPARK_GRAFT_BENCH_RUNS` times (default 3) and
-  * reports the per-query MEDIAN — a single sample carries one-off
-  * GC/JIT noise worth ~50% of the steady-state total, and the driver
-  * invokes this main exactly once per round.
+  * Each gate gets one untimed warm-up and [[Runs]] timed runs; the
+  * recorded value is their median, measured in this one JVM. A
+  * full sweep also stamps the host: `cpus` (the local parallelism) and
+  * `cal` (seconds of a fixed CPU-bound job), so a total is only compared
+  * with totals of a similar stamp.
   *
-  * Trust, then verify: a gate whose in-sweep median lands >2× its
-  * COMMITTED expectation (`bench_expected_<sf>.json` resource), or
-  * whose samples still spread >2× after resampling, is re-measured in
-  * a fresh child JVM and the SMALLER of the two medians is recorded.
-  * All escalation BARS are host-speed-normalized (r16): they scale by
-  * max(cal/0.249, sweep-wide median of median/floor), clamped ≤2.5 —
-  * committed floors are fast-day minima, and on a uniformly slower
-  * host comparing today's medians to them queued 44 "violations" of
-  * which 9 fit the budget (r15 official record). Recorded values are
-  * never scaled —
-  * both measurements can only over-estimate (shared-JVM cache/GC wake
-  * in-sweep, cold-JIT ramp in the child), so the min is the best
-  * attested true cost and the sweep-of-record matches targeted reruns.
-  *
-  * The post-sweep children phase emits a PARTIAL headline line (from
-  * in-sweep medians) before it starts and runs under one global
-  * wall-clock budget (`SPARK_GRAFT_BENCH_ESC_BUDGET_SEC`, default
-  * 900 s) — the r13 official run was killed mid-phase with no total
-  * emitted, which is strictly worse than shipping in-sweep medians
-  * for the gates the budget can't reach. When the budget gets tight
-  * relative to the children still queued, the idle-host canary probes
-  * are skipped (they are an optimization, not a safety requirement —
-  * min(in-sweep, child) bounds a contended child's damage to its own
-  * ~10 s) so every queued child gets its shot: the r14 official run
-  * shipped 1.41× the floor sum vs the same code's 1.12× attested cost
-  * purely because canary probes stranded the escalation queue.
+  * Wall-clock moves with the host; the plan's work does not. A
+  * [[GateCounters]] listener therefore records, per gate, what Spark
+  * ran in its first timed run (jobs, stages, tasks, task CPU, shuffle
+  * bytes, spill, rows read). `bench_full.json` carries them under
+  * `"counters"` next to the `"queries"` medians: two sweeps on one host
+  * agree on the deterministic counters while their wall-clock differs,
+  * so a counter that moves is a plan change, not noise.
   */
 object Bench {
-  // host-speed calibration seconds for the emit line (set once per run;
-  // -1 = not measured, field omitted). See the measurement in main().
-  private var calibration: Double = -1.0
-  // cal reading on the quiet r15 build host — the session class the
-  // committed floors date from. The escalation BARS (never the recorded
-  // values) scale by calibration/calReference so a uniformly slow host
-  // doesn't queue every fast-day floor as a "violation" (r15 official:
-  // 44 queued, 9 ground-truthed before the budget died — most were host
-  // speed, per the same-day shakedown's clean children at 1.5-2× floor).
-  private val calReference = 0.249
-  // clamped: ≥1 (a fast host must not LOWER the bars below the committed
-  // contract) and ≤2 (a probe that itself caught a load spike must not
-  // double the bars off one bad sample; broader slowness is handled by
-  // the sweep-wide hostFactor below, which is measured on 200+ gates)
-  private def calFactor: Double =
-    if (calibration > 0)
-      math.min(2.0, math.max(1.0, calibration / calReference))
-    else 1.0
+  /** Timed runs per gate; odd, so the median is one of the samples. */
+  val Runs = 5
+
+  // the two streaming replay gates run LAST: each spins up micro-batch
+  // machinery (state stores, streaming threads, memory-sink tables)
+  // whose teardown churn measurably inflated the medians of whatever
+  // ran right after them mid-sweep (the r5 rollup/routed drift)
+  private val streamLast = Set("q_interval_stream", "q_asof_stream")
 
   def main(args: Array[String]): Unit = {
-    // opt-in per-gate isolation (diagnostic mode): each listed query runs
-    // in its own child JVM, so one gate's cache/shuffle/GC residue can't
-    // contaminate another's median — full-sweep numbers then match
-    // targeted ones (the r5 sf1 sweep measured 43.9 s mid-sweep vs 3.7 s
-    // targeted on pl_dedup_minhash, pure measurement contamination).
-    // Costs ~8 s of session bring-up per gate, so the driver path stays
-    // the in-process sweep.
-    if (sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").exists(v => v.nonEmpty && v != "0")) {
-      isolated(args); return
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors()).toString)
@@ -88,647 +56,210 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try {
+      warmUp(spark, sfDir)
+      // host stamp, full sweeps only (a targeted run must not pay the
+      // ~1 s probe): a fixed deterministic job, min of 3. pmod keeps the
+      // running sum under 2e8 × 2^20 ≈ 2e14 — a bare sum(xxhash64)
+      // overflows int64 under ANSI mode
+      val cal = if (args.nonEmpty) None else Some((0 until 3).map { _ =>
+        val t0 = System.nanoTime()
+        spark.range(200000000L)
+          .selectExpr("sum(pmod(xxhash64(id), 1048576))").collect()
+        (System.nanoTime() - t0) / 1e9
+      }.min)
+      val results = sweep(spark, sfDir, args.toSeq)
+      emit(results, sfDir, cpus.toInt, cal, Paths.get("bench_full.json"))
+    } finally spark.stop()
+  }
 
-    // warm up the session + cache shared inputs
+  /** Caches the shared inputs and warms codegen and the dp-view
+    * expression stack (skey build, map ops) so the first measured gate
+    * doesn't pay their JIT.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     Seq("events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$sfDir/$t.parquet").cache().count()
     }
-    spark.range(1000000).selectExpr("sum(id)").collect() // codegen warmup
-    // host-speed calibration: a fixed deterministic job, min of 3 — the
-    // emitted "cal" field gives every total a same-line denominator.
-    // Host speed measured ~1.5× apart across SESSIONS (r15: clean
-    // fresh-JVM children read 1.5-2× the committed floors all day), so
-    // a total is only comparable to another total at a similar cal.
-    // Reference: cal read 0.249 s on the r15 build host at a quiet
-    // moment; the committed floors date from faster sessions.
-    // full sweeps only: escalation children and targeted dev runs (args
-    // non-empty) must not each pay the ~1 s probe
-    // pmod keeps the running sum under 2e8 × 2^20 ≈ 2e14 — a bare
-    // sum(xxhash64) overflows int64 under ANSI mode and would crash
-    // the sweep (caught by the r15 shakedown run)
-    if (args.isEmpty) calibration = (0 until 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(200000000L)
-        .selectExpr("sum(pmod(xxhash64(id), 1048576))").collect()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    // warm the dp-view expression stack (skey build, map ops) so the
-    // first measured events query doesn't pay its JIT; collect() of the
-    // actual columns — count() would let Catalyst prune them all away
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    // collect() of the actual columns — count() would let Catalyst
+    // prune them all away
     graft.model.Dp
       .withSeriesKey(graft.model.DpView.dp(spark, sfDir).limit(64))
       .select("skey", "tags", "ts", "value")
       .collect()
+  }
 
-    // the input caches' RDD ids, snapshotted after materialization:
-    // everything cached beyond these is a query's leaked intermediate
-    val inputRddIds = spark.sparkContext.getPersistentRDDs.keySet
+  /** One gate's record: its median seconds (-1 when a run failed) and
+    * the counters of its first timed run.
+    */
+  final case class Record(name: String, median: Double, counters: Counters)
 
-    // optional substring filter over query names (dev iteration aid;
-    // an arg prefixed with `=` matches exactly — escalation children use
-    // this so escalating a prefix-named gate like pl_knn doesn't drag
-    // every same-prefix sibling into the child's "fresh JVM" measurement);
-    // driver invokes with no args = full run. The two streaming replay
-    // gates run LAST: each spins up micro-batch machinery (state stores,
-    // streaming threads, memory-sink tables) whose teardown churn
-    // measurably inflated the medians of whatever ran right after them
-    // mid-sweep (the r5 rollup/routed drift).
-    val streamLast = Set("q_interval_stream", "q_asof_stream")
+  /** Times every gate matching `filters` (substrings; `=name` matches
+    * exactly; none = all), streaming replays last. Inputs must already
+    * be cached: everything persisted beyond them when the sweep starts
+    * counts as a gate's leak and is released after that gate.
+    */
+  private[graft] def sweep(spark: SparkSession, sfDir: String,
+      filters: Seq[String]): Seq[Record] = {
+    val sc = spark.sparkContext
+    val inputRddIds = sc.getPersistentRDDs.keySet
     val picked = SparkEntry.queries.toSeq
       .sortBy { case (n, _) => (streamLast.contains(n), n) }
-      .filter { case (n, _) => args.isEmpty || args.exists(a =>
+      .filter { case (n, _) => filters.isEmpty || filters.exists(a =>
         if (a.startsWith("=")) n == a.drop(1) else n.contains(a)) }
-    val runs = math.max(1, sys.env.get("SPARK_GRAFT_BENCH_RUNS")
-      .flatMap(_.toIntOption).getOrElse(3))
-    // committed per-gate expectations: the escalation trigger's baseline
-    val expected = expectedFor(sfDir)
-    // floor-provenance audit (r15): a floor is a per-gate MINIMUM folded
-    // across rounds of sweeps, so one lucky sample becomes a bar every
-    // later sweep reads >2× of — and each such gate then burns a child
-    // JVM (or several) of escalation budget chasing noise. The committed
-    // sidecar records where each floor came from and whether any OTHER
-    // recorded sweep ever landed within 1.5× of it; the never-reproduced
-    // ones are flagged here so a reader of the bench log can discount
-    // their "violations" (tools/floor_provenance.py regenerates).
-    locally {
-      val stale = provenanceFor(sfDir).collect {
-        case (n, false) if expected.contains(n) => n
-      }.toSeq.sorted
-      if (stale.nonEmpty)
-        System.err.println(s"[bench-floors] ${stale.size} committed " +
-          s"floors never reproduced within 1.5x by another recorded " +
-          s"sweep (lucky-min risk): ${stale.mkString(",")}")
-    }
-    // No per-gate SLOT cap on fresh-JVM escalations (the r11 20-slot cap
-    // stranded 40 rows >2× floor), but the phase as a whole runs under a
-    // global WALL-CLOCK budget (see escBudgetNanos below): r13 proved the
-    // opposite failure mode, where an aggregate-unbounded children phase
-    // on a persistently busy host blew the driver's cap and the round
-    // shipped no total at all. Worst violations escalate first, so
-    // budget exhaustion strands only the least-distorting rows.
-    // second-chance children for escalations whose first child still
-    // reads >2× the committed floor (bounded — each retry is ~10 s)
-    var retriesLeft = 40
-    // spread-ONLY escalations (median fine, samples noisy) stay capped:
-    // on a noisy host every sub-10 s gate can spread >2× from ambient
-    // jitter alone, and uncapped that buys ~227 children (~38 min) with
-    // no contamination evidence. 30 slots covers every observed real
-    // case; the overExpected trigger — the one with a floor violation
-    // to explain — remains uncapped (the r11 lesson).
-    var spreadBudget = 30
-    val toEscalate = scala.collection.mutable.LinkedHashSet.empty[String]
-    // which queued gates were spread-only (samples noisy, median under
-    // the bar): the post-sweep host-factor re-filter must judge them by
-    // the SPREAD trigger's logic, not the floor bar their median
-    // already passed — a floor test there would drop every one of them
-    // unconditionally (hostFactor >= calFactor by construction)
-    val spreadQueued = scala.collection.mutable.Set.empty[String]
-    val results = picked.map { case (name, fn) =>
-      // label the gate's jobs (guide §1.5) — free (a local property),
-      // and a UI/event-log-enabled rerun maps stages to gates directly
-      spark.sparkContext.setJobDescription(s"bench: $name")
-      // let the ContextCleaner reclaim the previous queries' shuffle
-      // files/broadcasts before timing: 98 queries × 3 runs accumulate
-      // thousands of stale shuffle stages whose disk + heap pressure
-      // otherwise bleeds into later queries' medians (measured: a 1.1 s
-      // query reported 4.7 s mid-sweep). Outside the timed region.
-      System.gc()
-      // ONE untimed warmup run per query: the first execution pays the
-      // query's codegen/JIT bring-up and absorbs the async cleaner churn
-      // the GC above schedules — with only 3 timed runs, one such
-      // inflated sample (measured 4.2 s vs 1.8 s warm on pl_collapse)
-      // otherwise lands in the median. Each run's result frame is
-      // unpersisted (no-op when not cached) AFTER its count so the
-      // operators that return persisted frames don't stack one leaked
-      // cache entry per run for the cleaner to churn through mid-sweep.
-      // More warmups were A/B'd (r17) and rejected: 3 moved targeted
-      // medians by -6%/-2%/+8% while inflating child wall-clock 10-60%
-      // — the solo premium is a steady per-JVM cost, not a JIT ramp.
-      try { val w = fn(spark, sfDir); w.count(); w.unpersist(true) }
-      catch { case _: Throwable => () }
-      def timed(): Double =
-        try {
-          // fn() is timed too: operators that materialize eagerly do
-          // their real work during construction, not at count()
-          val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          df.count()
-          val el = (System.nanoTime() - t0) / 1e9
-          df.unpersist(true)
-          el
-        } catch { case _: Throwable => -1.0 }
-      def medianOf(xs: Seq[Double]): Double = {
-        // true median: for even n average the two middle samples —
-        // taking xs(n/2) alone would report the WORSE of the middle pair
-        val s = xs.sorted
-        val mid = s.size / 2
-        if (s.size % 2 == 1) s(mid) else (s(mid - 1) + s(mid)) / 2.0
-      }
-      val base = (0 until runs).map(_ => timed())
-      // short queries are where one GC/JIT hiccup is the whole number
-      // (driver-env medians landed up to 6× the builder's on 0.1-0.7 s
-      // gates, and the r5 sweep showed 1-2 s gates drifting >2× the same
-      // way): take extra samples up to 5 so a single inflated run can't
-      // reach the median. Costs <2 s per such query.
-      // a >2x max/min spread marks a contaminated gate regardless of
-      // its median: a genuinely heavy query times consistently, while a
-      // gate caught in a neighbor's cache-eviction wake mixes clean and
-      // inflated samples (r7 full sweep: pl_source_overlap 8.9 s
-      // mid-sweep median vs 1.1 s targeted, every sample in the wake) —
-      // resample those too so clean runs can reach the median
-      def spreadOf(xs: Seq[Double]): Double = {
-        val pos = xs.filter(_ > 0)
-        if (pos.isEmpty) 1.0 else pos.max / pos.min
-      }
-      // the spread trigger is bounded to sub-10 s medians: a genuinely
-      // heavy gate (the 100 s-class quadratic baselines at sf1) can have
-      // a naturally >2× max/min spread, and two extra full runs of it
-      // would triple its sweep cost for no information
-      val times =
-        if ((medianOf(base) < 3.0 ||
-             (spreadOf(base) > 2.0 && medianOf(base) < 10.0)) && runs < 5)
-          base ++ (0 until (5 - runs)).map(_ => timed())
-        else base
-      val median = medianOf(times)
-      // sweep this query's leaked caches: `df.unpersist(true)` above is
-      // a no-op when a gate returns a frame DERIVED from its persisted
-      // intermediate, so without this each query strands cache entries
-      // that stack across the sweep (at sf1: 46 queries' shingle/pair
-      // caches → spill churn that inflated later medians up to 6×).
-      // Freeing the RDD keeps the CacheManager entry valid — a rerun
-      // would just lazily recompute into cache. BLOCKING: this runs
-      // outside any timed region, and an async release here bleeds its
-      // block-manager churn into the NEXT gate's timed runs (measured:
-      // gates 0.9-2.2 s targeted reporting 7-9 s mid-sweep).
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!inputRddIds.contains(id)) rdd.unpersist(blocking = true)
-      }
-      // ESCALATION (flag now, run later): the in-process mitigations
-      // above (GC, warmup, resampling, blocking cache release) shrank
-      // but never killed shared-JVM contamination — r7's sweep-of-record
-      // still reported six gates at 3-7× their targeted cost. When a
-      // gate's median exceeds 2× its committed expectation, or its
-      // samples still spread >2× after resampling, the in-process
-      // number is not trustworthy. The fresh-JVM rerun happens AFTER
-      // the sweep (and after spark.stop()): a child launched mid-sweep
-      // contends with this process's resident 48g heap and measures the
-      // contention, not the gate (measured: q_theilsen 0.59 s targeted,
-      // 8.9 s in-sweep, 15.9 s in a mid-sweep child — the child on an
-      // idle machine reads 0.7 s). Full sweeps only (args = gate
-      // filters = dev iteration; children are invoked with their gate
-      // name, so this can't recurse). The 0.2 s expectation floor keeps
-      // 0.05 s gates from buying a 10 s child JVM over absolute noise.
-      // calFactor: the same-JVM calibration probe ran before the sweep,
-      // so the inline trigger can already discount a uniformly slow
-      // host; the sweep-wide hostFactor (measurable only once every
-      // median is in) re-filters the queue below
-      val overExpected = expected.get(name)
-        .exists(e => median > 2.0 * calFactor * math.max(e, 0.2))
-      val stillSpread = spreadOf(times) > 2.0 && median < 10.0
-      val spreadOnly = stillSpread && !overExpected
-      if (args.isEmpty && (overExpected || (spreadOnly && spreadBudget > 0))) {
-        if (spreadOnly) { spreadBudget -= 1; spreadQueued += name }
-        toEscalate += name
-      }
-      name -> median
-    }
-    // HOST FACTOR (r16): the calibration probe is one CPU-bound job and
-    // under-reads the slow-host modes that hit real gates hardest (r15:
-    // cal 0.267 vs 0.249 ≈ +7% while clean fresh-JVM children read
-    // 1.5-2× the committed floors all day). The sweep itself is the
-    // better speedometer: the MEDIAN of (in-sweep median / committed
-    // floor) across every floor-keyed gate reads ~1 on a fast day
-    // (floors are minima) and tracks the host's true slowdown on a slow
-    // one — no single gate's regression can move the median of 200+
-    // ratios, so scaling the bars by it cannot mask a real per-gate
-    // regression, only a fleet-wide one (which is the slow-host
-    // signature by definition). Escalation bars — the queue filter, the
-    // children's clean bar, the canary's floor — all scale by it;
-    // recorded values never do (they stay min(in-sweep, children)).
-    val inSweep = results.toMap
-    val hostFactor: Double = {
-      val ratios = results.flatMap { case (n, m) =>
-        expected.get(n).map(e => m / math.max(e, 0.2))
-      }.sorted
-      val medRatio =
-        if (ratios.isEmpty) 1.0 else ratios(ratios.size / 2)
-      math.min(2.5, math.max(calFactor, medRatio))
-    }
-    if (args.isEmpty && hostFactor > 1.05) System.err.println(
-      f"[bench-cal] host factor $hostFactor%.2f (cal $calibration%.3f vs " +
-        f"$calReference ref; sweep-wide median floor ratio) — escalation " +
-        "bars scaled, recorded values unaffected")
-    // re-filter the queue at the host-scaled bar: gates the inline 2×
-    // trigger caught but the day's speed explains ship their in-sweep
-    // medians without burning a child JVM. Spread-only candidates (no
-    // floor violation, just noisy samples) keep their slot on a quiet
-    // host — contamination mixing clean and inflated samples is exactly
-    // what the spread trigger exists for — but are dropped wholesale on
-    // a slow one, where ambient jitter widens every sub-10 s gate's
-    // spread and those children bought no information (r15 record).
-    locally {
-      val dropped = toEscalate.toSeq.filterNot { n =>
-        if (spreadQueued(n)) hostFactor <= 1.25
-        else expected.get(n) match {
-          case Some(e) => inSweep(n) > 2.0 * hostFactor * math.max(e, 0.2)
-          case None => hostFactor <= 1.25
+    val counters = new GateCounters
+    sc.addSparkListener(counters)
+    try {
+      val medians = picked.map { case (name, fn) =>
+        // label the gate's jobs (free: a local property)
+        sc.setJobDescription(s"bench: $name")
+        // let the ContextCleaner reclaim the previous gates' shuffle
+        // files/broadcasts before timing: stale shuffle stages' disk and
+        // heap pressure otherwise bleeds into later gates' medians
+        // (measured: a 1.1 s query reported 4.7 s mid-sweep)
+        System.gc()
+        // ONE untimed warm-up: the first execution pays the gate's
+        // codegen/JIT bring-up (measured 4.2 s vs 1.8 s warm on
+        // pl_collapse). Each run's frame is unpersisted after its count
+        // (no-op when not cached) so gates that return persisted frames
+        // don't stack one leaked cache entry per run.
+        try { val w = fn(spark, sfDir); w.count(); w.unpersist(true) }
+        catch { case _: Throwable => () }
+        def timed(): Double =
+          try {
+            // fn() is timed too: operators that materialize eagerly do
+            // their real work during construction, not at count()
+            val t0 = System.nanoTime()
+            val df = fn(spark, sfDir)
+            df.count()
+            val el = (System.nanoTime() - t0) / 1e9
+            df.unpersist(true)
+            el
+          } catch { case _: Throwable => -1.0 }
+        val first = GateCounters.counted(sc, name)(timed())
+        val times = (first +: (1 until Runs).map(_ => timed())).sorted
+        // release this gate's leaked caches: `df.unpersist(true)` is a
+        // no-op when a gate returns a frame DERIVED from its persisted
+        // intermediate, and such entries stack across the sweep (at sf1
+        // they inflated later medians up to 6×). Freeing the RDD keeps
+        // the CacheManager entry valid — a rerun lazily recomputes it.
+        // BLOCKING, outside any timed region: an async release bleeds
+        // its block-manager churn into the next gate's timed runs.
+        sc.getPersistentRDDs.foreach { case (id, rdd) =>
+          if (!inputRddIds.contains(id)) rdd.unpersist(blocking = true)
         }
+        name -> times(Runs / 2)
       }
-      if (dropped.nonEmpty) {
-        System.err.println(s"[bench-escalate] ${dropped.size} candidates " +
-          s"within the host-scaled bar ship in-sweep medians: " +
-          dropped.mkString(","))
-        toEscalate --= dropped
-      }
-    }
-    // free the sweep JVM's executors/heap BEFORE the ground-truth
-    // children run — they need the machine to themselves
-    spark.stop()
-    // PARTIAL emit before any child runs: the r13 official run was
-    // killed (rc=124) inside the post-sweep phase and the round shipped
-    // NO total at all. From here on a kill still leaves a parseable
-    // headline line on stdout and a complete bench_full.json on disk;
-    // the refined line printed after escalation supersedes it.
-    if (toEscalate.nonEmpty && args.isEmpty) emit(results, sfDir)
-    // ONE global wall-clock budget for the whole post-sweep phase —
-    // canary probes, backoff sleeps, children, retries. r13 bounded
-    // each gate's children individually but the phase in AGGREGATE was
-    // unbounded (~22 escalations on a host that kept reading busy), and
-    // the driver's cap hit first. When the budget runs out the
-    // remaining gates ship their in-sweep medians: a possibly-inflated
-    // number for them, never a wrong one (contamination only inflates),
-    // and strictly better than no record.
-    // 900 s default: the r14 shakedown sweep's 480 s only reached 5 of
-    // 25 escalations on a busy host (canary probes + second-chance
-    // children are ~10 s each), and the r12 driver run proves the cap
-    // comfortably fits sweep + ~15 min of children. Still a hard bound.
-    val escBudgetNanos = sys.env.get("SPARK_GRAFT_BENCH_ESC_BUDGET_SEC")
-      .flatMap(_.toIntOption).getOrElse(900) * 1000000000L
-    val escStart = System.nanoTime()
-    def escBudgetLeft(): Boolean = System.nanoTime() - escStart < escBudgetNanos
-    def escBudgetLeftSec(): Double =
-      (escBudgetNanos - (System.nanoTime() - escStart)) / 1e9
-    // CANARY-GATED slots: a ground-truth child is only trustworthy on an
-    // idle host, and the r12 record shipped two rows at 2.7×/4.5× floor
-    // because their children themselves ran contended (the same record's
-    // q_series_outlier child read 4.11 s for a 0.33 s gate — 12×
-    // inflation INSIDE the escalation path). Before each child slot, a
-    // known-cheap gate runs in its own child; if IT reads >2× its
-    // committed floor the host is busy — sleep and re-probe rather than
-    // burn the measurement. A clean canary (or any clean gate child)
-    // vouches for the next 60 s of slots so consecutive escalations
-    // don't each pay a ~10 s probe.
-    // floor ≥ 0.5 s: a smaller gate's child is dominated by session
-    // bring-up + JIT (~0.3 s), so the r13 first cut (smallest ≥ 0.15,
-    // i.e. q_rollup_1h at 0.152) read 0.44 s on an IDLE host — over its
-    // 2× bar from overhead alone — and every probe "backed off" through
-    // 4 × 15 s sleeps. The absolute +0.35 s allowance below covers the
-    // same overhead on the chosen gate.
-    val canary: Option[(String, Double)] =
-      expected.filter(_._2 >= 0.5).minByOption(_._2)
-        .orElse(expected.filter(_._2 >= 0.15).minByOption(_._2))
-    var lastIdleNanos = 0L
-    def slotVouched(): Unit = lastIdleNanos = System.nanoTime()
-    // CANARY CREDIBILITY (r15): the canary measures "is the host busy",
-    // but a child launched from this process always coexists with its
-    // resident heap, and on some box profiles a memory-bandwidth-bound
-    // canary reads 10-40× its floor from that residency alone while
-    // actual gate children interleave CLEAN (the r15 driver-profile
-    // shakedown: canary 17-21 s vs its 0.5 floor, next gate's child
-    // 0.87 s — four gates ground-truthed in 900 s, ~50 s of probes
-    // each). A busy verdict immediately contradicted by a clean child
-    // is evidence the canary is measuring residency, not the host;
-    // after two contradictions it is retired for the phase.
-    var canaryContradictions = 0
-    var lastProbeBusy = false
-    def canaryCredible: Boolean = canaryContradictions < 2
-    // CANARY AFFORDABILITY (r15): the canary is an optimization — it
-    // dodges short host-load spikes so a child doesn't waste its ~10 s
-    // measuring contention — not a safety requirement, because
-    // min(in-sweep, child) already bounds a contended child's damage to
-    // that one wasted child. When what's LEFT of the global budget,
-    // minus a canary round's worst-case cost, can no longer cover the
-    // children still queued, probing is the wrong trade: the r14
-    // official record shipped 1.41× the committed floor sum (vs the
-    // same-day attested 1.12×) because ~2 probes × 10 s per escalated
-    // gate on a contended host exhausted the budget before the children
-    // themselves ran. `projectedChildrenSec` is the caller's estimate of
-    // the cost of every child still queued (this gate included).
-    def awaitIdleSlot(projectedChildrenSec: Double): Unit =
-      canary.foreach { case (cn, cf) =>
-      if (!canaryCredible) return
-      if (lastIdleNanos > 0 &&
-          System.nanoTime() - lastIdleNanos < 60e9.toLong) return
-      val canaryRoundSec = 2 * (10.0 + 5.0) // 2 probes × (child + sleep)
-      if (escBudgetLeftSec() - canaryRoundSec < projectedChildrenSec) {
-        System.err.println(
-          s"[bench-canary] skipped: ${escBudgetLeftSec().toInt}s budget " +
-            s"left vs ~${projectedChildrenSec.toInt}s of queued children")
-        return
-      }
-      // 2.5x: the same healthy fresh-JVM solo premium the gate
-      // children's clean bar allows for (see cleanEnough below)
-      val cFloor = 2.5 * hostFactor * math.max(cf, 0.2) + 0.35
-      var tries = 0
-      var clean = false
-      // 2 probes × 5 s backoff, not r13's 4 × 15 s: each busy probe
-      // there cost ~10 s child + 15 s sleep, and on a host that stays
-      // busy the probes alone burned the phase budget (r13's last
-      // recorded line is a canary backing off). A persistently busy
-      // host is what the global budget handles; the canary's job is
-      // only to dodge SHORT spikes.
-      while (!clean && tries < 2 && escBudgetLeft()) {
-        val c = runChild(cn)
-        clean = c < 0 || c <= cFloor // a canary CRASH must not deadlock
-        if (!clean) {
-          System.err.println(
-            s"[bench-canary] $cn read $c vs floor $cf — host busy, backing off")
-          Thread.sleep(5000)
-        }
-        tries += 1
-      }
-      lastProbeBusy = !clean // a clean child right after = contradiction
-      // after busy probes proceed anyway: min(in-sweep, children)
-      // still bounds the damage, and stalling forever helps nobody
-      slotVouched()
-    }
-    // a gate child that comes back clean right after the canary said
-    // busy impeaches the canary (see canaryCredible above). Only a
-    // child with a COMMITTED floor counts as a contradiction: for a
-    // spread-only gate cleanEnough reduces to "did not crash", which is
-    // not evidence about host speed, and two such gates would retire
-    // the canary on a genuinely busy host.
-    def childVerdict(clean: Boolean, attested: Boolean): Unit = {
-      if (clean) {
-        slotVouched()
-        if (lastProbeBusy && attested) {
-          canaryContradictions += 1
-          if (!canaryCredible) System.err.println(
-            "[bench-canary] retired: busy verdicts twice contradicted " +
-              "by clean gate children — it is measuring this process's " +
-              "residency, not the host")
-        }
-      }
-      lastProbeBusy = false
-    }
-    // escalate the LARGEST recoverable excess first: under a budget,
-    // the gates left stranded at in-sweep medians when it runs out
-    // should be the ones whose medians distort the TOTAL least, and the
-    // total is distorted by absolute seconds over floor, not by ratio
-    // (a 2.5×-floor 5 s gate hides 3 s of excess; a 5×-floor 0.4 s gate
-    // hides 0.3 s). Two tiers — floor-keyed gates first, spread-only
-    // gates (no committed expectation) after, by raw median: a single
-    // sort key mixing units let a clean-but-slow spread-only gate
-    // outrank a genuine floor violation.
-    val escOrder = toEscalate.toSeq.sortBy { n =>
-      expected.get(n) match {
-        case Some(e) => (0, -(inSweep(n) - math.max(e, 0.2)))
-        case None => (1, -inSweep(n))
-      }
-    }
-    // projected cost of one gate's child: ~10 s of session bring-up +
-    // warmup + the gate's own runs (≥3 × its floor; in-sweep median
-    // capped at 2 s stands in when no floor is committed). This prior
-    // is blended with the OBSERVED per-gate escalation cost as gates
-    // complete — on a contended host children run several times the
-    // prior (the r15 shakedown averaged ~220 s/gate against a ~12 s
-    // estimate, so the affordability skip never fired and the budget
-    // died on probes after 4 of 30 gates).
-    def estChildSec(n: String): Double =
-      10.0 + 4.0 * expected.get(n).map(e => math.max(e, 0.2))
-        .getOrElse(math.min(inSweep(n), 2.0))
-    var escSpentNanos = 0L
-    var escDone = 0
-    // RETRY FUTILITY (r15): second-chance children exist to catch a
-    // child that landed in a busy WINDOW — the signature of which is
-    // children DISAGREEING (r8: 4-5× inflated children next to 1.4 s
-    // targeted reruns). When a gate's children all agree (spread <1.5×)
-    // and still read over the floor bar, the number is credible and the
-    // host is just slower than the committed minima today — the r15
-    // shakedown burned ~2/3 of its child time re-measuring such gates
-    // (q_seasonal_strength 1.29/1.42/1.57, q_theilsen 0.69/0.59/0.69).
-    // Two consecutive such gates retire retries for the phase.
-    var retryFutility = 0
-    val escalated = scala.collection.mutable.Map.empty[String, Double]
-    escOrder.zipWithIndex.foreach { case (name, idx) =>
-      if (escBudgetLeft()) {
-        val gateStart = System.nanoTime()
-        val observedAvgSec =
-          if (escDone == 0) 0.0 else escSpentNanos / 1e9 / escDone
-        val projectedChildrenSec = (escOrder.drop(idx).map(estChildSec).sum)
-          .max(observedAvgSec * (escOrder.size - idx))
-        val median = inSweep(name)
-        val floor = expected.get(name).map(e => math.max(e, 0.2))
-        // host-scaled CHILD clean bar (r17: 2.5x + 0.35 s, was 2.0x): a
-        // healthy fresh-JVM child never reaches the committed in-sweep
-        // floors — it pays a steady solo premium a 230-gate sweep's
-        // shared warmup amortizes away (r15 record: clean children at
-        // 1.5-2x floor all day; this round's quiet-host solo baselines:
-        // 2.1x/2.1x/2.1x/3.1x/1.5x floor on the five slowest gates, and
-        // extra warmups were A/B'd and do NOT close the gap). At 2.0x
-        // every healthy child of those gates read "dirty", bought 2
-        // retry children each, and the r16 official run exhausted its
-        // 900 s budget after 11/16 gates. The bar only gates RETRIES —
-        // recorded values stay min(in-sweep, children), so a looser bar
-        // can only ship an in-sweep median it would otherwise have spent
-        // the whole budget re-litigating. +0.35 s is the session
-        // bring-up allowance the canary bar already carries.
-        def cleanEnough(v: Double): Boolean =
-          v > 0 && floor.forall(f => v <= 2.5 * hostFactor * f + 0.35)
-        awaitIdleSlot(projectedChildrenSec)
-        val iso = runChild(name)
-        childVerdict(cleanEnough(iso), floor.isDefined)
-        // SECOND-CHANCE children: a child JVM can itself land in a busy
-        // window on a loaded machine (r8 driver record: children agreed
-        // with 4-5× inflated in-sweep medians that targeted reruns put
-        // at 1.4-2.1 s). While the best child is still over the clean
-        // bar, up to two more children — a few seconds each — buy the
-        // record independent shots at an idle window. A busy WINDOW
-        // means children DISAGREE, so once two children agree (<1.5x
-        // spread) the measurement is credible and this gate stops
-        // retrying immediately (r17; previously only two consecutive
-        // all-futile gates could stop the third child).
-        val retries = scala.collection.mutable.ArrayBuffer.empty[Double]
-        def kidsAgree: Boolean = {
-          val kids = (Seq(iso) ++ retries).filter(_ > 0)
-          kids.size >= 2 && kids.max / kids.min < 1.5
-        }
-        while (retries.size < 2 && retriesLeft > 0 && retryFutility < 2 &&
-               escBudgetLeft() && !kidsAgree &&
-               !(Seq(iso) ++ retries).exists(cleanEnough)) {
-          retriesLeft -= 1
-          awaitIdleSlot(projectedChildrenSec)
-          val r = runChild(name)
-          childVerdict(cleanEnough(r), floor.isDefined)
-          retries += r
-        }
-        // consistent-but-over-bar children: credible measurement, not a
-        // busy window — see retryFutility above
-        locally {
-          val kids = (Seq(iso) ++ retries).filter(_ > 0)
-          if (retries.nonEmpty && kids.size >= 2 &&
-              kids.max / kids.min < 1.5 && !kids.exists(cleanEnough)) {
-            retryFutility += 1
-            if (retryFutility >= 2) System.err.println(
-              "[bench-escalate] retries retired: consecutive gates' " +
-                "children agree over the floor bar — host slower than " +
-                "the committed minima, one child per gate from here")
-          } else if (retries.nonEmpty || cleanEnough(iso)) {
-            // a clean first child is evidence AGAINST host-wide
-            // slowness too: without this reset "two consecutive"
-            // futile gates could straddle any number of clean ones
-            retryFutility = 0
-          }
-        }
-        escSpentNanos += System.nanoTime() - gateStart
-        escDone += 1
-        System.err.println(
-          s"[bench-escalate] $name in-sweep $median -> isolated $iso" +
-            (if (retries.nonEmpty) retries.mkString(" / retry ", ",", "") else ""))
-        // record the SMALLEST attested measurement: contamination only
-        // ever inflates, and each carries its own inflation source —
-        // shared-JVM cache/GC wake here, cold-JIT ramp or a busy
-        // machine in the children — so min() is the best attested cost
-        val candidates = (Seq(median, iso) ++ retries).filter(_ > 0)
-        escalated(name) = candidates.min
-        // re-emit after every ground-truthed gate: if the driver's cap
-        // kills this phase anyway, the LAST stdout line (what a
-        // tail-window parser sees) is still a complete, current total
-        // rather than r13's nothing
-        emit(results.map { case (n, m) => n -> escalated.getOrElse(n, m) },
-          sfDir, headlineBudget = 700)
-      }
-    }
-    if (escalated.size < escOrder.size)
-      System.err.println(s"[bench-escalate] budget exhausted after " +
-        s"${escalated.size}/${escOrder.size} gates; " +
-        s"${escOrder.size - escalated.size} ship in-sweep medians")
-    val finalResults = results.map { case (name, median) =>
-      name -> escalated.getOrElse(name, median)
-    }
-    emit(finalResults, sfDir)
-  }
-
-  /** Parent side of `SPARK_GRAFT_BENCH_ISOLATE`: one child JVM per gate,
-    * same classpath and JVM flags as this process, isolation var stripped
-    * so the child takes the normal in-process path. A child failure
-    * records -1.0 for its gate and the sweep continues.
-    */
-  private def isolated(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => args.isEmpty || args.exists(a =>
-        if (a.startsWith("=")) n == a.drop(1) else n.contains(a)))
-    val results = names.map { name =>
-      val med = runChild(name)
-      System.err.println(s"[bench-isolate] $name -> $med")
-      name -> med
-    }
-    emit(results, sfDir)
-  }
-
-  /** Run ONE gate in a fresh child JVM (same classpath + JVM flags,
-    * its own temp working dir so its `bench_full.json` can't clobber
-    * the parent's) and return its median, or -1.0 on child failure.
-    * This is the ground-truth measurement: nothing from the sweep's
-    * shared JVM — cache residue, shuffle files, GC debt — exists in
-    * the child.
-    */
-  private def runChild(name: String): Double = {
-    import scala.jdk.CollectionConverters._
-    val javaBin = java.nio.file.Paths.get(
-      sys.props("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory
-      .getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val cmd = (Seq(javaBin) ++ jvmArgs ++
-      Seq("-cp", sys.props("java.class.path"), "graft.Bench", "=" + name)).asJava
-    val pb = new ProcessBuilder(cmd)
-    pb.environment().remove("SPARK_GRAFT_BENCH_ISOLATE")
-    val dir = java.nio.file.Files.createTempDirectory("bench_child_")
-    pb.directory(dir.toFile)
-    // the child prints its own headline line; route it (and Spark's
-    // stderr noise) away from this process's single-JSON-line stdout
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(dir.resolve("child.log").toFile)
-    val rc = pb.start().waitFor()
-    // the child's bench_full.json has exactly one entry: this gate
-    if (rc != 0) -1.0
-    else {
-      val txt = java.nio.file.Files.readString(dir.resolve("bench_full.json"))
-      val m = ("\"" + java.util.regex.Pattern.quote(name) + "\":([-0-9.]+)")
-        .r.findFirstMatchIn(txt)
-      m.map(_.group(1).toDouble).getOrElse(-1.0)
+      ListenerProbe.drain(sc)
+      val byGate = counters.snapshot
+      medians.map { case (n, m) => Record(n, m, byGate.getOrElse(n, Counters.zero)) }
+    } finally {
+      sc.removeSparkListener(counters)
+      sc.setJobDescription(null)
     }
   }
 
-  /** Committed per-gate expected medians for this dataset (classpath
-    * resource `bench_expected_<sfbase>.json`, e.g. sf0.1 → the driver's
-    * scale). Measured as per-gate minima across clean sweeps — a floor
-    * is the right expectation because measurement contamination only
-    * ever INFLATES a gate. Empty when no table is committed for the
-    * dataset (dev sf0.01 runs, ad-hoc dirs).
+  /** Writes the full record to `out` and prints the headline line: the
+    * slowest gates whose entries fit in 1500 bytes, so the line stays
+    * one short JSON object however many gates ran.
     */
-  private def expectedFor(sfDir: String): Map[String, Double] = {
-    val base = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val in = getClass.getResourceAsStream(s"/bench_expected_$base.json")
-    if (in == null) Map.empty
-    else try {
-      val txt = new String(in.readAllBytes(), "UTF-8")
-      "\"([^\"]+)\"\\s*:\\s*([0-9.]+)".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } finally in.close()
-  }
-
-  /** Floor provenance sidecar (classpath resource
-    * `bench_floor_provenance_<sfbase>.json`, written by
-    * `tools/floor_provenance.py`): gate → was this gate's committed
-    * floor ever reproduced within 1.5× by a recorded sweep OTHER than
-    * the one that set it. Empty when no sidecar is committed.
-    */
-  private def provenanceFor(sfDir: String): Map[String, Boolean] = {
-    val base = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val in = getClass.getResourceAsStream(s"/bench_floor_provenance_$base.json")
-    if (in == null) Map.empty
-    else try {
-      val txt = new String(in.readAllBytes(), "UTF-8")
-      ("\"([^\"]+)\"\\s*:\\s*\\{[^}]*\"repro\"\\s*:\\s*(true|false)").r
-        .findAllMatchIn(txt)
-        .map(m => m.group(1) -> (m.group(2) == "true")).toMap
-    } finally in.close()
-  }
-
-  /** `headlineBudget`: byte budget for the stdout line's "queries" map.
-    * The harness keeps only the LAST ~2000 chars of output, so a
-    * mid-escalation emit (followed by the next gate's canary/escalate
-    * stderr lines before any kill lands) uses a smaller budget — a full
-    * metric line + a few stderr lines must fit the tail window — while
-    * the final emit, which nothing follows, uses the full one.
-    */
-  private def emit(results: Seq[(String, Double)], sfDir: String,
-      headlineBudget: Int = 1500): Unit = {
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+  private[graft] def emit(results: Seq[Record], sfDir: String, cpus: Int,
+      cal: Option[Double], out: Path): Unit = {
+    val total = results.map(_.median).sum
     def fmt(v: Double) = BigDecimal(v).setScale(3,
       BigDecimal.RoundingMode.HALF_UP).toString
-    // Full per-query map goes to a file; the stdout line is kept under
-    // ~1800 bytes (headline = slowest entries that fit) because the
-    // harness capturing it keeps only the last 2000 characters of the
-    // run's output — a 98-query map with full double precision blows
-    // that window and the line arrives head-truncated, i.e. unparseable.
-    val fullJson = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    def ent(g: Record) = "\"" + g.name + "\":" + fmt(g.median)
+    val host = s""""nqueries":${results.size},"cpus":$cpus""" +
+      cal.fold("")(c => s""","cal":${fmt(c)}""")
+    val queries = results.map(ent).mkString("{", ",", "}")
+    val counters = results.map(g => "\"" + g.name + "\":" + g.counters.json)
       .mkString("{", ",", "}")
-    val cal = if (calibration > 0) s""","cal":${fmt(calibration)}""" else ""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_full.json"),
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nqueries":${results.size}$cal,"queries":$fullJson,"sf":"$sfDir"}""")
-    val budget = headlineBudget // bytes for the headline "queries" map body
-    val bySlowest = results.sortBy(-_._2)
-    val headline = scala.collection.mutable.ArrayBuffer.empty[String]
+    Files.writeString(out,
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$host,"queries":$queries,"counters":$counters,"sf":"$sfDir"}""")
     var used = 0
-    bySlowest.foreach { case (k, v) =>
-      val ent = "\"" + k + "\":" + fmt(v)
-      if (used + ent.length + 1 <= budget) { headline += ent; used += ent.length + 1 }
+    val headline = results.sortBy(-_.median).map(ent).filter { e =>
+      val fits = used + e.length + 1 <= 1500
+      if (fits) used += e.length + 1
+      fits
     }
-    val qs = headline.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nqueries":${results.size}$cal,"queries":$qs,"full":"bench_full.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$host,"queries":${headline.mkString("{", ",", "}")},"full":"${out.getFileName}","sf":"$sfDir"}""")
+  }
+}
+
+/** What Spark ran for one gate: jobs, stages submitted, tasks ended,
+  * task CPU, shuffle bytes read and written, bytes spilled to disk, and
+  * input records read (Spark's `inputMetrics.recordsRead`; a cached
+  * input counts its cached batches, not rows).
+  */
+final case class Counters(jobs: Long, stages: Long, tasks: Long,
+    taskCpuNs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
+    spillBytes: Long, rowsRead: Long) {
+  def json: String =
+    s"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_cpu_ms":${taskCpuNs / 1000000L},""" +
+      s""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,""" +
+      s""""spill_bytes":$spillBytes,"rows_read":$rowsRead}"""
+}
+
+object Counters { val zero: Counters = Counters(0, 0, 0, 0, 0, 0, 0, 0) }
+
+/** Attributes Spark's work to gates by the local property
+  * [[GateCounters.Key]], which [[GateCounters.counted]] sets around a
+  * gate's counted run. Spark copies local properties into the threads
+  * that run a query's broadcast and AQE stages, and threads started
+  * from a labelled thread (`Dedup.inParallel`'s pool, a streaming
+  * query's micro-batch thread) inherit it, so all of those jobs count
+  * for the gate; a job submitted while no gate is labelled counts for
+  * none. A job description would not do: a streaming query overwrites
+  * it per micro-batch.
+  *
+  * Events arrive asynchronously: drain the listener bus
+  * (`ListenerProbe.drain`) before reading [[snapshot]].
+  */
+final class GateCounters extends SparkListener {
+  private val byGate = mutable.LinkedHashMap.empty[String, Counters]
+  private val stageGate = mutable.HashMap.empty[Int, String]
+
+  private def gateOf(p: java.util.Properties): Option[String] =
+    Option(p).flatMap(p => Option(p.getProperty(GateCounters.Key)))
+
+  private def add(gate: String)(f: Counters => Counters): Unit =
+    byGate(gate) = f(byGate.getOrElse(gate, Counters.zero))
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    gateOf(e.properties).foreach(add(_)(c => c.copy(jobs = c.jobs + 1)))
+  }
+
+  // stages submitted, i.e. run: a job's skipped (reused) stages are
+  // never submitted, so they neither count nor map tasks here
+  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = synchronized {
+    gateOf(e.properties).foreach { g =>
+      stageGate(e.stageInfo.stageId) = g
+      add(g)(c => c.copy(stages = c.stages + 1))
+    }
+  }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    for (g <- stageGate.get(e.stageId); m <- Option(e.taskMetrics)) add(g) { c =>
+      c.copy(tasks = c.tasks + 1,
+        taskCpuNs = c.taskCpuNs + m.executorCpuTime,
+        shuffleReadBytes = c.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+        shuffleWriteBytes = c.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+        spillBytes = c.spillBytes + m.diskBytesSpilled,
+        rowsRead = c.rowsRead + m.inputMetrics.recordsRead)
+    }
+  }
+
+  def snapshot: Map[String, Counters] = synchronized(byGate.toMap)
+}
+
+object GateCounters {
+  /** Local property naming the gate a job counts for. */
+  val Key = "graft.bench.gate"
+
+  /** Runs `f` with its jobs counted for `gate`. */
+  def counted[T](sc: SparkContext, gate: String)(f: => T): T = {
+    sc.setLocalProperty(Key, gate)
+    try f finally sc.setLocalProperty(Key, null)
   }
 }

@@ -109,15 +109,13 @@ object SparkEntry {
     * partition then grows ~√input instead of linearly, while per-batch
     * state-store fixed cost (one provider per partition per batch) only
     * ever doubles per QUADRUPLING of the input. Plan-invisible to the
-    * oracle; `SPARK_GRAFT_SESS_PARTS` overrides.
+    * oracle.
     */
-  private[graft] def autoSessParts(dir: String): Int =
-    sys.env.get("SPARK_GRAFT_SESS_PARTS").flatMap(_.toIntOption)
-      .getOrElse {
-        val raw = math.sqrt(eventsBytes(dir) / 1024.0) / 16.0
-        val p2 = java.lang.Integer.highestOneBit(math.max(1, raw.toInt))
-        math.min(64, math.max(8, p2))
-      }
+  private[graft] def autoSessParts(dir: String): Int = {
+    val raw = math.sqrt(eventsBytes(dir) / 1024.0) / 16.0
+    val p2 = java.lang.Integer.highestOneBit(math.max(1, raw.toInt))
+    math.min(64, math.max(8, p2))
+  }
 
   /** The streaming-join replays' state-partition twin of
     * [[autoSessParts]], with a floor of ONE: their keyed state (open
@@ -128,16 +126,13 @@ object SparkEntry {
     * single-task stages inside `q_interval_stream`). Curve
     * `clamp(pow2floor(√(KiB)/32), 1, 64)` keeps 1 through sf0.1 and
     * lands 4/8 at sf1/sf10 (A/B'd in SCALING.md — 8 wins ~2× at sf10,
-    * 1 stays within noise of 4 at sf1). `SPARK_GRAFT_STREAM_PARTS`
-    * overrides for re-running the A/B.
+    * 1 stays within noise of 4 at sf1).
     */
-  private[graft] def autoJoinParts(dir: String): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").flatMap(_.toIntOption)
-      .getOrElse {
-        val raw = math.sqrt(eventsBytes(dir) / 1024.0) / 32.0
-        val p2 = java.lang.Integer.highestOneBit(math.max(1, raw.toInt))
-        math.min(64, p2)
-      }
+  private[graft] def autoJoinParts(dir: String): Int = {
+    val raw = math.sqrt(eventsBytes(dir) / 1024.0) / 32.0
+    val p2 = java.lang.Integer.highestOneBit(math.max(1, raw.toInt))
+    math.min(64, p2)
+  }
 
   /** Bytes on disk of `dir`/events.parquet (file or directory).
     * Recursive: a hive-partitioned layout nests its part files, and a
@@ -1069,8 +1064,6 @@ object SparkEntry {
         // amplification, and local merge pays an extra per-batch sort.
         // Parquet sink: the emitted session set is also corpus-sized, so
         // it must not land in a driver-memory table either.
-        // SPARK_GRAFT_SESS_PARTS remains the measurement override for
-        // re-running the partition A/B at other state sizes.
         val sessParts = autoSessParts(dir)
         runReplay(s, st, qn = "", partitions = sessParts,
           sinkPath = Some(outDir.toString)) { () =>

@@ -303,12 +303,13 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_e2e").toString
     val mem = MemoryStream[String]
     val dp = StreamIngest.dpStream(mem.toDS(), "plain")
-    val q = StreamIngest.writeRaw(dp, s"$dir/data", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    mem.addData(
+    val writer = StreamIngest.writeRaw(dp, s"$dir/data", s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    mem.addData( // before start(): see "streaming seq" below
       "put m 1704412800 1.0 host=a",
       "put m 1704412860 3.0 host=a",
       "put m 1704412800 10.0 host=b")
+    val q = writer.start()
     q.awaitTermination(30000)
     val stored = spark.read.parquet(s"$dir/data")
       .select("metric", "tags", "ts", "value", "seq")
@@ -549,12 +550,15 @@ class StreamingSpec extends SparkSpec {
     val mem = MemoryStream[String]
     // one partition ⇒ arrival order is the line order
     val dp = StreamIngest.dpStream(mem.toDS().repartition(1), "plain")
-    val q = StreamIngest.writeRaw(dp, s"$dir/data", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    val writer = StreamIngest.writeRaw(dp, s"$dir/data", s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    // data first: AvailableNow fixes its end offset when the query
+    // starts, so lines added after start() may never be read
     mem.addData( // three writes to the SAME (series, ts) in ONE batch
       "put m 1704412800 1.0 host=a",
       "put m 1704412800 2.0 host=a",
       "put m 1704412800 3.0 host=a")
+    val q = writer.start()
     q.awaitTermination(30000)
     val stored = spark.read.parquet(s"$dir/data")
       .select("metric", "tags", "ts", "value", "seq")
@@ -576,13 +580,14 @@ class StreamingSpec extends SparkSpec {
     val st = new graft.store.Store(spark, s"$dir/store")
     val mem = MemoryStream[String]
     val dp = StreamIngest.dpStream(mem.toDS().repartition(1), "plain")
-    val q = StreamIngest.writeStore(dp, st, s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    mem.addData(
+    val writer = StreamIngest.writeStore(dp, st, s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    mem.addData( // before start(): see "streaming seq" above
       "put m 3600 1.5 host=a",
       "put m 7200 2.5 host=a",
       "put m 3600 9.0 host=b",
       "put m 3600 2.0 host=a") // in-batch duplicate ts → slice marked OOO
+    val q = writer.start()
     q.awaitTermination(60000)
     assert(st.data.count() === 4)
     assert(st.seriesIndex.select("skey").as[String].collect().toSet ===
@@ -658,9 +663,10 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_raw").toString
     val mem = MemoryStream[String]
     val dp = StreamIngest.dpStream(mem.toDS(), "plain")
-    val q = StreamIngest.writeRaw(dp, s"$dir/data", s"$dir/ckpt",
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    mem.addData("put m 1704412800 5.5 host=a")
+    val writer = StreamIngest.writeRaw(dp, s"$dir/data", s"$dir/ckpt",
+      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    mem.addData("put m 1704412800 5.5 host=a") // before start(): see "streaming seq"
+    val q = writer.start()
     q.awaitTermination(30000)
     val back = spark.read.parquet(s"$dir/data")
     assert(back.count() === 1)

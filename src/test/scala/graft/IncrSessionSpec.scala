@@ -41,7 +41,7 @@ class IncrSessionSpec extends SparkSpec {
   test("gate survives a STOPPED first session (fresh child JVM e2e)") {
     // The genuine failure mode needs session1.stop(), which kills the
     // shared SparkContext — so it runs in its own JVM (same classpath
-    // and JVM flags, the Bench.runChild pattern).
+    // and JVM flags).
     import scala.jdk.CollectionConverters._
     val javaBin = java.nio.file.Paths.get(
       sys.props("java.home"), "bin", "java").toString

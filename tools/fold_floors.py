@@ -1,28 +1,24 @@
 #!/usr/bin/env python3
-"""Fold a sweep's per-gate medians into the committed floor table.
+"""Fold a sweep's per-gate medians into a reference floor table.
 
 Usage:
   tools/fold_floors.py <record.json> <sf>            # min-fold every gate
   tools/fold_floors.py <record.json> <sf> --replace g1,g2
       # additionally REPLACE the named gates' floors with the record's
-      # value even when it is HIGHER — the re-baselining path for floors
-      # the provenance sidecar flags as never-reproduced lucky minima
-      # (a floor no sweep ever lands near only burns escalation budget)
+      # value even when it is HIGHER — the re-baselining path for a
+      # floor no later sweep lands near (a lucky minimum)
 
 <record.json> is a Bench emit (bench_full.json or a BENCH_*.json with a
-"queries" map); <sf> picks the floor table (sf0.1 / sf1). The floor
-table stays a per-gate MINIMUM otherwise: measurement contamination only
-ever inflates, so min across clean records is the best attested cost.
-Always regenerates the provenance sidecars afterwards so the committed
-"where did this floor come from" record can't drift (the r15 lesson,
-enforced at commit time by tools/presnapshot.sh).
+"queries" map); <sf> picks the floor table next to this script
+(bench_expected_sf0.1.json / bench_expected_sf1.json). The table stays a
+per-gate MINIMUM otherwise: it is reference data for reading a sweep's
+wall-clock, and Bench itself does not read it.
 """
 import json
 import os
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def main():
@@ -43,8 +39,7 @@ def main():
 
     rec = json.load(open(record_path))
     queries = rec["queries"] if "queries" in rec else rec
-    floor_path = os.path.join(
-        REPO, f"src/main/resources/bench_expected_{sf}.json")
+    floor_path = os.path.join(HERE, f"bench_expected_{sf}.json")
     floors = json.load(open(floor_path))
 
     folded, replaced = [], []
@@ -72,9 +67,6 @@ def main():
         print(f"REPLACE {g}: {old} -> {new}")
     if not folded and not replaced:
         print("no floors changed")
-    subprocess.run([sys.executable,
-                    os.path.join(REPO, "tools/floor_provenance.py")],
-                   check=True)
     return 0
 
 

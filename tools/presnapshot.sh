@@ -13,22 +13,6 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-# Floor-provenance freshness: the sidecars must always be regenerated
-# from the current tree + history — r15 folded new minima without a
-# matching provenance run, and r16 committed an sf1 sidecar generated
-# BEFORE its floor fold was committed (src read "worktree uncommitted"
-# forever after). Cheap (~2 s), so run unconditionally; when a floor
-# fold is being committed right now, the src field can only name the
-# commit after it exists — re-run this script once post-commit to
-# finalize those entries (it will flag them below until you do).
-echo "== presnapshot: regenerating floor-provenance sidecars =="
-python3 tools/floor_provenance.py
-if grep -q "worktree uncommitted" \
-    src/main/resources/bench_floor_provenance_sf*.json; then
-  echo "== presnapshot: NOTE — some floors are uncommitted; re-run this"
-  echo "   script after committing them so provenance records the commit =="
-fi
-
 echo "== presnapshot: sbt compile =="
 sbt -batch compile
 
