@@ -7,6 +7,9 @@ import scala.collection.mutable
 import org.apache.spark.{ListenerProbe, SparkContext}
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line
@@ -189,8 +192,8 @@ object Bench {
 
 /** What Spark ran for one gate: jobs, stages submitted, tasks ended,
   * task CPU, shuffle bytes read and written, bytes spilled to disk, and
-  * input records read (Spark's `inputMetrics.recordsRead`; a cached
-  * input counts its cached batches, not rows).
+  * rows read: the rows its plans' scans output (file, cached, local and
+  * range scans alike).
   */
 final case class Counters(jobs: Long, stages: Long, tasks: Long,
     taskCpuNs: Long, shuffleReadBytes: Long, shuffleWriteBytes: Long,
@@ -213,12 +216,21 @@ object Counters { val zero: Counters = Counters(0, 0, 0, 0, 0, 0, 0, 0) }
   * none. A job description would not do: a streaming query overwrites
   * it per micro-batch.
   *
+  * Rows read are the tasks' updates of the scan nodes' `numOutputRows`
+  * metrics. Every SQL execution, a streaming micro-batch's included,
+  * announces its plan (and each adaptive re-plan) before it runs the
+  * tasks, so the listener knows which accumulators are scan row counts
+  * when their updates arrive. Task input metrics would not do: a cached
+  * input reports its column batches there, not rows.
+  *
   * Events arrive asynchronously: drain the listener bus
   * (`ListenerProbe.drain`) before reading [[snapshot]].
   */
 final class GateCounters extends SparkListener {
   private val byGate = mutable.LinkedHashMap.empty[String, Counters]
   private val stageGate = mutable.HashMap.empty[Int, String]
+  // scan row-count accumulator id -> the execution whose plan holds it
+  private val scanRows = mutable.HashMap.empty[Long, Long]
 
   private def gateOf(p: java.util.Properties): Option[String] =
     Option(p).flatMap(p => Option(p.getProperty(GateCounters.Key)))
@@ -240,13 +252,30 @@ final class GateCounters extends SparkListener {
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
-    for (g <- stageGate.get(e.stageId); m <- Option(e.taskMetrics)) add(g) { c =>
-      c.copy(tasks = c.tasks + 1,
-        taskCpuNs = c.taskCpuNs + m.executorCpuTime,
-        shuffleReadBytes = c.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
-        shuffleWriteBytes = c.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
-        spillBytes = c.spillBytes + m.diskBytesSpilled,
-        rowsRead = c.rowsRead + m.inputMetrics.recordsRead)
+    for (g <- stageGate.get(e.stageId); m <- Option(e.taskMetrics)) {
+      val rows = Option(e.taskInfo).toSeq.flatMap(_.accumulables)
+        .filter(a => scanRows.contains(a.id))
+        .flatMap(_.update).collect { case n: Long => n }.sum
+      add(g) { c =>
+        c.copy(tasks = c.tasks + 1,
+          taskCpuNs = c.taskCpuNs + m.executorCpuTime,
+          shuffleReadBytes = c.shuffleReadBytes + m.shuffleReadMetrics.totalBytesRead,
+          shuffleWriteBytes = c.shuffleWriteBytes + m.shuffleWriteMetrics.bytesWritten,
+          spillBytes = c.spillBytes + m.diskBytesSpilled,
+          rowsRead = c.rowsRead + rows)
+      }
+    }
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+    def plan(exec: Long, p: SparkPlanInfo): Unit =
+      GateCounters.scanRowIds(p).foreach(scanRows(_) = exec)
+    e match {
+      case s: SparkListenerSQLExecutionStart => plan(s.executionId, s.sparkPlanInfo)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate => plan(u.executionId, u.sparkPlanInfo)
+      case end: SparkListenerSQLExecutionEnd =>
+        scanRows.filterInPlace((_, exec) => exec != end.executionId)
+      case _ =>
     }
   }
 
@@ -256,6 +285,16 @@ final class GateCounters extends SparkListener {
 object GateCounters {
   /** Local property naming the gate a job counts for. */
   val Key = "graft.bench.gate"
+
+  /** The `numOutputRows` accumulators of a plan's scans: its leaves, and
+    * its cached-relation scans, whose plan lists the cached plan below
+    * them. Stages, reused exchanges and subqueries appear in a plan's
+    * description expanded, so their scans are reached too.
+    */
+  def scanRowIds(p: SparkPlanInfo): Seq[Long] =
+    if (p.children.isEmpty || p.nodeName == "InMemoryTableScan")
+      p.metrics.filter(_.name == "number of output rows").map(_.accumulatorId)
+    else p.children.flatMap(scanRowIds)
 
   /** Runs `f` with its jobs counted for `gate`. */
   def counted[T](sc: SparkContext, gate: String)(f: => T): T = {

@@ -1107,7 +1107,7 @@ object SparkEntry {
 
       // §2.1/§2.10 store ingest throughput: a FRESH store per call — ONE
       // full ingest batch (append + series index + slice state + both
-      // rollup levels, all metadata in a single unioned commit job). The
+      // rollup levels, all metadata from one collected slice aggregate). The
       // returned frame is the store's raw data read back with last-wins
       // dedup — proving the appended data round-trips, while the bench
       // entry prices ingest. The two-batch late-duplicate path stays

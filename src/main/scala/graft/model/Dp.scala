@@ -76,6 +76,15 @@ object Dp {
         }))
   }
 
+  /** [[metricFromKey]] and [[tagsFromKey]] of one key, on the driver. */
+  def parseKey(skey: String): (String, Map[String, String]) = {
+    val parts = skey.split(",", -1)
+    (parts.head, parts.iterator.drop(1).map { s =>
+      val kv = s.split("=", 2)
+      kv(0) -> (if (kv.length > 1) kv(1) else null)
+    }.toMap)
+  }
+
   /** One tag value from the canonical key (null when absent). */
   def tagFromKey(skey: Column, key: String): Column =
     element_at(tagsFromKey(skey), key)

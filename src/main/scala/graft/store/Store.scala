@@ -2,32 +2,38 @@ package graft.store
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
-import scala.util.control.NonFatal
 
 import graft.CacheScope
 import graft.model.Dp
 import graft.query.Planner
 import graft.rollup.Rollup
+import graft.store.Store.{Catalog, Day, Slice}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The maintained store: raw data plus the three metadata tables the
-  * reference keeps write-time state for, updated incrementally on every
-  * ingest batch — queries never derive them from fact data.
+  * reference keeps write-time state for. Each ingest batch appends its
+  * own increment to them, reading back only the slice state of days
+  * older than the catalog's resident week; queries never derive them
+  * from fact data.
   *
-  * Raw data lives in date partitions, one parquet file per batch and date
-  * (compacted per date on a batch cadence). Each row carries the dp
-  * columns and its canonical series key `skey`, written next to them, so
-  * a query reads the key instead of deriving it per row (see
-  * [[readDataFiles]] for files written without it).
+  * Raw data lives in date partitions, one parquet file per batch
+  * partition and date (compacted per date on a batch cadence). Each row
+  * carries the dp columns and its canonical series key `skey`, written
+  * next to them, so a query reads the key instead of deriving it per row
+  * (see [[readDataFiles]] for files written without it).
   *
   *   - `series_index` (skey, metric, tags): the per-metric series
   *     registry (`g_metric_map` + `Mapping`, reference
-  *     `src/core/tsdb.cpp:1586-1609`). Append-only: each batch anti-joins
-  *     its distinct series against the index and appends only new ones.
+  *     `src/core/tsdb.cpp:1586-1609`). Append-only: a batch appends the
+  *     series the catalog (below) does not hold yet.
   *   - `slice_state` (skey, day, hwm, ooo): per-(series, day-slice)
   *     high-water-mark and out-of-order flag. The reference marks OOO at
   *     WRITE time — a point at or before the slice's high water mark
@@ -35,36 +41,49 @@ import org.apache.spark.sql.types._
   *     (`src/core/ts.cpp:281-324`, `src/agg/rollup.cpp:214-243`) — so a
   *     routed query reads the marks, never re-derives them by sorting
   *     raw data. Within a batch, order is the batch's `seq`; across
-  *     batches, the stored hwm carries the comparison.
-  *   - `rollup_1h` (skey, wts, cnt, min, max, sum): the write-time hourly
-  *     accumulator (`src/agg/rollup.cpp:180-286`), merged per batch.
-  *     Duplicate/OOO points make a slice's rollup wrong by construction —
-  *     exactly the slices `slice_state` marks, which
-  *     [[Rollup.downsampleWithFallback]] recomputes from raw.
+  *     batches, the catalog's hwm carries the comparison. A batch
+  *     appends the new state of the slices it touched; a slice's state
+  *     is the max hwm and the or of ooo over its day's rows.
+  *   - `rollup_1h` and `rollup_1d` (skey, wts, cnt, min, max, sum): the
+  *     write-time hourly accumulator and its daily level
+  *     (`src/agg/rollup.cpp:180-286`). A batch appends its own partials
+  *     as a delta; a window's value is the merge of its deltas (sum of
+  *     cnts and sums, min of mins, max of maxes). A rollup-answered
+  *     downsample aggregates those four per bucket anyway, so the planner
+  *     reads the deltas unmerged, and only the public [[rollup1h]] and
+  *     [[rollup1d]] views merge them. Duplicate/OOO points make a slice's
+  *     rollup wrong by construction — exactly the slices `slice_state`
+  *     marks, which [[Rollup.downsampleWithFallback]] recomputes from raw.
   *
-  * `slice_state` and `rollup_1h` are MANIFEST-COMMITTED: each table is a
-  * set of immutable per-(day, generation) directories plus a numbered
-  * manifest file naming every day's current directory. A batch commit
-  * writes the touched days' new dirs, then publishes one new manifest
-  * (hidden write + atomic file rename) — readers resolve the newest
-  * manifest and read exactly the dirs it names, so they observe the
-  * previous commit or the new one, never a missing or half-swapped day.
-  * This is a miniature of the Delta/Iceberg commit protocol, chosen over
+  * The three day-keyed tables are MANIFEST-COMMITTED: each is a set of
+  * immutable generation directories, one per (day, batch), plus a
+  * numbered manifest listing every day's directories. A batch writes its
+  * deltas into new directories, then publishes each table's next
+  * manifest (hidden write + atomic file rename); readers resolve the
+  * newest manifest and read exactly the directories it names, so they
+  * observe the previous commit or the new one, never half of it. This is
+  * a miniature of the Delta/Iceberg commit protocol, chosen over
   * delete+rename partition swaps whose listing window can expose a
-  * half-swapped table. The previous generation's dirs survive one more
-  * commit (in-flight readers may hold its manifest) before GC. A batch
-  * still rewrites ONLY the day dirs it touches — at 100 TB an ingest
-  * batch spanning a few days moves a few days of tiny metadata, not
-  * history.
+  * half-swapped table. [[compactDay]] folds a day's deltas into one
+  * generation on the compaction cadence — the reference's
+  * flush/compaction split (`Tsdb::compact`) — which bounds the
+  * directories a read lists. Superseded generations survive the GC grace
+  * window for in-flight readers. A store written with one merged
+  * generation per day reads as one delta per day.
   *
-  * Queries resolve series and OOO marks from a driver-resident catalog:
-  * local (LocalRelation) snapshots of `series_index` and of the
-  * slice_state rows marked OOO, the reference's in-memory registry. A
-  * snapshot is replaced, never mutated: it reloads only the index files
-  * and state day dirs it has not read, and only when the index's file
-  * set or the state manifest seq moved (one listing and one manifest
-  * read per query tell). The writer reloads it as the last step of each
-  * commit, so the queries after a put run no Spark job for metadata.
+  * Series, OOO marks and recent slice state live in a driver-resident
+  * catalog, the reference's in-memory registry: the series index, every
+  * day's marked slices, and each series' hwm for the resident days — the
+  * [[Store.ResidentDays]] newest, as the reference keeps a week of
+  * partitions in memory before it archives them (`include/tsdb.h:48-77`).
+  * A batch is checked against it (cross-batch OOO, new series) on the
+  * driver; a batch that reaches an older day reads that day's state in
+  * one small Spark job. Its metadata files are a few rows per touched
+  * slice, so the driver writes them, and the commit replaces the
+  * snapshot with one that includes them: the queries after it run no
+  * metadata job. A snapshot is replaced, never mutated. A commit by
+  * another process on the same root is found by the next check (one
+  * listing and one manifest read) and read in one small Spark job.
   *
   * Contract: batches arrive with `seq` monotonically increasing across
   * batches (what [[graft.ingest.Ingest]] produces — batch-stamped under
@@ -97,45 +116,27 @@ final class Store(spark: SparkSession, root: String,
   private val stateSchema = StructType(Seq(
     StructField("skey", StringType), StructField("hwm", LongType),
     StructField("ooo", BooleanType), StructField("day", LongType)))
-  private val indexSchema = StructType(Seq(
-    StructField("skey", StringType), StructField("metric", StringType),
-    StructField("tags", MapType(StringType, StringType))))
+  private val indexSchema = Store.indexSchema
   private val rollupSchema = StructType(Seq(
     StructField("skey", StringType), StructField("cnt", LongType),
     StructField("min", DoubleType), StructField("max", DoubleType),
-    StructField("sum", DoubleType), StructField("wts", LongType)))
-  private val rollupDaySchema =
-    StructType(rollupSchema.fields :+ StructField("day", LongType))
+    StructField("sum", DoubleType), StructField("wts", LongType),
+    StructField("day", LongType)))
 
   // a LocalRelation (not an empty RDD): PropagateEmptyRelation then
   // collapses first-batch joins/unions against it at PLAN time — an
   // empty-RDD frame looks non-empty to the optimizer and keeps its
   // shuffle stages alive
-  private def emptyFrame(schema: StructType): DataFrame = localFrame(Nil, schema)
+  private def emptyFrame(schema: StructType): DataFrame = Store.localFrame(spark, Nil, schema)
 
-  private def localFrame(rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-
-  /** Manifest-resolved read: load exactly the day dirs the newest
-    * manifest names (day is a data column inside the files).
+  /** A rollup table's deltas as the newest manifest names them,
+    * unmerged: a window has one row per delta that touched it.
     */
-  private def readManifested(path: String, schema: StructType): DataFrame = {
-    val (_, entries) = currentManifest(path)
-    if (entries.isEmpty) emptyFrame(schema)
-    else spark.read.schema(schema)
-      .parquet(entries.values.map(n => s"$path/$n").toSeq: _*)
-  }
-
-  /** [[readManifested]] restricted to the batch's touched days, resolved
-    * on the driver: the read names only those days' dirs, so it neither
-    * joins nor grows with history. No committed dir for any of the days
-    * (a first batch) is a provably empty frame.
-    */
-  private def readManifestedForDays(path: String, schema: StructType,
-      days: Seq[Long]): DataFrame = {
-    val dirs = currentManifest(path)._2.view.filterKeys(days.toSet).values.toSeq
-    if (dirs.isEmpty) emptyFrame(schema)
-    else spark.read.schema(schema).parquet(dirs.map(n => s"$path/$n"): _*)
+  private def rollupDeltas(path: String): DataFrame = {
+    val dirs = currentManifest(path)._2.values.flatten.toSeq
+    (if (dirs.isEmpty) emptyFrame(rollupSchema)
+     else spark.read.schema(rollupSchema).parquet(dirs.map(n => s"$path/$n"): _*))
+      .select("skey", "wts", "cnt", "min", "max", "sum")
   }
 
   private val dpSchema = StructType(Seq(
@@ -182,10 +183,7 @@ final class Store(spark: SparkSession, root: String,
   def dataForRange(startMs: Long, endMs: Long, slackMs: Long = 0L): DataFrame =
     currentDataManifest() match {
       case Some((_, entries)) =>
-        val zone = java.time.ZoneId.of(
-          spark.conf.get("spark.sql.session.timeZone",
-            java.util.TimeZone.getDefault.getID))
-        def ld(ms: Long) = java.time.Instant.ofEpochMilli(ms).atZone(zone).toLocalDate
+        def ld(ms: Long) = java.time.Instant.ofEpochMilli(ms).atZone(sessionZone).toLocalDate
         val lo = ld(startMs - slackMs).minusDays(1).toString
         val hi = ld(endMs + slackMs).plusDays(1).toString
         // ISO date strings order lexicographically = chronologically
@@ -193,6 +191,9 @@ final class Store(spark: SparkSession, root: String,
           .values.flatten.toSeq)
       case None => data
     }
+
+  private def sessionZone = java.time.ZoneId.of(
+    spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID))
 
   /** Committed data files as dp columns + `skey`. Files the store wrote
     * carry the key (named `*.sk.parquet`), and the scan reads it as a
@@ -223,97 +224,139 @@ final class Store(spark: SparkSession, root: String,
 
   /** The maintained `(skey, day)` invalidation frame — what
     * [[Planner.Options.oooMarks]] wants: the catalog's local snapshot of
-    * the slice_state rows marked OOO.
+    * the slices marked OOO.
     */
   def oooMarks: DataFrame = catalog().marks
 
-  def rollup1h: DataFrame =
-    readManifested(rollupPath, rollupDaySchema)
-      .select("skey", "wts", "cnt", "min", "max", "sum")
+  /** The maintained hourly rollup, one row per (series, hour): its
+    * deltas merged.
+    */
+  def rollup1h: DataFrame = mergeDeltas(rollupPath,
+    currentManifest(rollupPath)._2.toSeq.sortBy(_._1).flatMap(_._2))
 
   /** The maintained level-2 (daily) rollup — the reference's
     * `RollupManager` level-2 files (`src/agg/rollup.cpp`, level2 query
     * path `include/mmap.h:299-315`). A year-long daily query reads 24×
     * fewer rows here than composing from the hourly table.
     */
-  def rollup1d: DataFrame =
-    readManifested(rollup1dPath, rollupDaySchema)
-      .select("skey", "wts", "cnt", "min", "max", "sum")
+  def rollup1d: DataFrame = mergeDeltas(rollup1dPath,
+    currentManifest(rollup1dPath)._2.toSeq.sortBy(_._1).flatMap(_._2))
+
+  /** A rollup table's deltas in `dirs` merged to one row per (series,
+    * window): cnt, min and max combine in any order, and the sums add in
+    * the order of `dirs` (oldest delta first). A merged value is then the
+    * one an accumulator fed batch by batch holds, whatever files hold
+    * the deltas — the same before and after [[compactDay]] folds them.
+    */
+  private def mergeDeltas(path: String, dirs: Seq[String]): DataFrame = {
+    val deltas =
+      if (dirs.isEmpty) emptyFrame(rollupSchema).withColumn("delta", lit(0))
+      else spark.read.schema(rollupSchema).parquet(dirs.map(d => s"$path/$d"): _*)
+        .withColumn("delta", element_at(typedLit(dirs.zipWithIndex.toMap),
+          regexp_extract(col("_metadata.file_path"), "/(d_[^/]+)/[^/]+$", 1)))
+    deltas
+      .groupBy(col("skey"), col("wts"))
+      .agg(
+        sum(col("cnt")).as("cnt"),
+        min(col("min")).as("min"),
+        max(col("max")).as("max"),
+        aggregate(array_sort(collect_list(struct(col("delta"), col("sum")))),
+          lit(null).cast(DoubleType),
+          (acc, d) => coalesce(acc + d("sum"), acc, d("sum"))).as("sum"))
+  }
 
   /** Default planner options over this store: index scans, maintained OOO
     * marks, and both rollup levels — the configuration every query should
-    * run with (what the reference's QuerySuperTask always has).
+    * run with (what the reference's QuerySuperTask always has). The
+    * rollups are the unmerged deltas: the routed downsample's own
+    * aggregation merges them.
     */
   def plannerOptions(): Planner.Options = {
     val c = catalog()
     Planner.Options(
       seriesIndex = Some(c.index),
       oooMarks = Some(c.marks),
-      rollup1h = Some(rollup1h),
-      rollup1d = Some(rollup1d))
+      rollup1h = Some(rollupDeltas(rollupPath)),
+      rollup1d = Some(rollupDeltas(rollup1dPath)))
   }
 
   // ---- driver-resident catalog ------------------------------------------
 
-  /** One immutable snapshot of the series index and the OOO marks, and
-    * the on-disk state it was loaded from: the index's file names and the
-    * slice_state manifest seq, with the marks of each day dir it names.
-    */
-  private final class Catalog(val indexFiles: Set[String], val indexRows: Seq[Row],
-      val stateSeq: Long, val markDirs: Map[String, Seq[Row]]) {
-    lazy val index: DataFrame = localFrame(indexRows, indexSchema)
-    lazy val marks: DataFrame = localFrame(markDirs.values.flatten.toSeq, marksSchema)
-  }
-
-  private val marksSchema = StructType(Seq(
-    StructField("skey", StringType), StructField("day", LongType)))
-
-  @volatile private var snapshot = new Catalog(Set.empty, Nil, 0L, Map.empty)
+  @volatile private var snapshot =
+    Catalog(Set.empty, Vector.empty, Set.empty, 0L, Map.empty)(spark)
   private val catalogLock = new Object
 
   /** The catalog, current with the store's files. Each call costs one
-    * listing of the index dir and one manifest read; a changed index file
-    * set or state manifest seq reloads what changed — the new index files
-    * (the index is append-only and its files are immutable) and the day
-    * dirs the new manifest names that the snapshot has not read — in one
-    * small Spark job each. [[ingest]] calls it as its commit's last step,
-    * so queries served after a put find it current and run no job for
-    * metadata. That relies on the single-writer contract: a commit by
-    * another process on the same root is picked up by the next caller's
-    * check instead, at the cost of that reload.
+    * listing of the index dir and one manifest read. A changed index
+    * file set or state manifest reloads what changed, in one small Spark
+    * job each: the new index files (the index is append-only and its
+    * files are immutable), and the state dirs the snapshot has not read
+    * — a day whose dirs only grew folds in its new deltas, a day whose
+    * dirs were replaced (compacted by another process) is re-read whole,
+    * and a day no longer listed is dropped. Of a day outside the
+    * resident window the read keeps only the marked rows. The writer
+    * replaces the snapshot as its commit's last step, so this check
+    * finds it current unless another process wrote to the root.
     */
   private def catalog(): Catalog = catalogLock.synchronized {
     val c = snapshot
     val files = indexFileNames()
-    val (seq, days) = currentManifest(statePath)
+    val (seq, dayDirs) = currentManifest(statePath)
     if (files != c.indexFiles || seq != c.stateSeq) {
-      val indexRows =
-        if (files == c.indexFiles) c.indexRows
+      val (indexRows, keys) =
+        if (files == c.indexFiles) (c.indexRows, c.keys)
         else {
           val grown = c.indexFiles.subsetOf(files)
-          val added = (if (grown) files -- c.indexFiles else files).toSeq.sorted
-          (if (grown) c.indexRows else Nil) ++ (
-            if (added.isEmpty) Nil
-            else spark.read.schema(indexSchema)
-              .parquet(added.map(f => s"$indexPath/$f"): _*).collect().toSeq)
+          val added = readRows(indexPath, indexSchema,
+            (if (grown) files -- c.indexFiles else files).toSeq.sorted)
+          if (grown) (c.indexRows ++ added, c.keys ++ added.map(_.getString(0)))
+          else (added, added.map(_.getString(0)).toSet)
         }
-      val markDirs =
-        if (seq == c.stateSeq) c.markDirs
+      val days =
+        if (seq == c.stateSeq) c.days
         else {
-          val unread = days.filter { case (_, dir) => !c.markDirs.contains(dir) }
-          val read =
-            if (unread.isEmpty) Map.empty[Long, Seq[Row]]
-            else spark.read.schema(stateSchema)
-              .parquet(unread.values.map(d => s"$statePath/$d").toSeq: _*)
-              .filter(col("ooo")).select("skey", "day").collect().toSeq
-              .groupBy(_.getLong(1))
-          days.map { case (day, dir) =>
-            dir -> c.markDirs.getOrElse(dir, read.getOrElse(day, Nil)) }
+          val from = Store.residentFrom(dayDirs.keys)
+          // what the snapshot read of a day still listed, while its dirs
+          // only grew; a resident day must hold its hwm
+          val kept = dayDirs.flatMap { case (day, dirs) =>
+            c.days.get(day)
+              .filter(d => d.dirs.forall(dirs.contains) && (d.hwm.isDefined || day < from))
+              .map(d => day -> (if (day >= from) d else d.copy(hwm = None)))
+          }
+          val read = readRows(statePath, stateSchema,
+            dayDirs.toSeq.flatMap { case (day, dirs) =>
+              dirs.filterNot(kept.get(day).fold(Seq.empty[String])(_.dirs).contains)
+            },
+            col("ooo") || col("day") >= from).groupBy(_.getLong(3))
+          dayDirs.map { case (day, dirs) =>
+            val base = kept.getOrElse(day,
+              Day(Nil, Set.empty, Option.when(day >= from)(Map.empty)))
+            day -> base.add(dirs, read.getOrElse(day, Nil))
+          }
         }
-      snapshot = new Catalog(files, indexRows, seq, markDirs)
+      snapshot = Catalog(files, indexRows, keys, seq, days)(spark)
     }
     snapshot
   }
+
+  /** Each series' hwm on each of `days`: the catalog's for a resident
+    * day, read from the day's state dirs for an older one (one small
+    * Spark job for all of them), empty for a day with no state yet.
+    */
+  private def hwmOf(c: Catalog, days: Seq[Long]): Map[Long, Map[String, Long]] = {
+    val older = days.filter(d => c.days.get(d).exists(_.hwm.isEmpty))
+    val read = readRows(statePath, stateSchema, older.flatMap(c.days(_).dirs))
+      .groupBy(_.getLong(3))
+    days.map { d =>
+      d -> c.days.get(d).flatMap(_.hwm).getOrElse(Store.foldHwm(Map.empty, read.getOrElse(d, Nil)))
+    }.toMap
+  }
+
+  private def readRows(dir: String, schema: StructType, names: Seq[String],
+      where: Column = lit(true)): Vector[Row] =
+    if (names.isEmpty) Vector.empty
+    else spark.read.schema(schema).parquet(names.map(n => s"$dir/$n"): _*)
+      .where(where).collect().toVector
 
   private def indexFileNames(): Set[String] =
     if (!exists(indexPath)) Set.empty
@@ -329,7 +372,7 @@ final class Store(spark: SparkSession, root: String,
   // serializes ingest per shard the same way; queries never take it.
   private val writeLock = new Object
 
-  // overlaps the data append with the metadata window pass — Spark job
+  // overlaps the data append with the slice aggregation — Spark job
   // submission is thread-safe, and each job alone underfills the
   // cluster. Daemon threads: an abandoned store must not pin the JVM.
   private val ingestPool = ExecutionContext.fromExecutor(
@@ -347,53 +390,31 @@ final class Store(spark: SparkSession, root: String,
     */
   val checkpoints = new CheckPoints(spark, root)
 
-  /** Ingest one batch: append the data, then update the three metadata
-    * tables incrementally. Thread-safe: batches from concurrent edges
-    * are serialized on [[writeLock]].
+  /** Ingest one batch: append the data, then append the batch's
+    * metadata deltas. Thread-safe: batches from concurrent edges are
+    * serialized on [[writeLock]].
     */
   def ingest(batch: DataFrame): Unit = writeLock.synchronized {
     // snapshot BEFORE the flush: checkpoints that arrive mid-commit wait
     // for the next cycle, exactly the reference's rotate-task ordering
     checkpoints.takeSnapshot()
-    CacheScope { cache =>
+    // the state this batch is checked against: current without a job
+    // unless another process committed since the last check
+    val prior = catalog()
+    val days = CacheScope { cache =>
       val keyed = cache.keep(Dp.withSeriesKey(batch.select(Dp.columns.map(col): _*)))
-      // shuffle-free append (unlike Ingest.writePartitioned's
-      // repartition-by-date): ingest batches are micro-batch sized, so
-      // densifying per write would pay a shuffle per batch for nothing —
-      // auto-compaction rewrites partitions densely on a batch cadence,
-      // exactly the reference's compaction split of responsibilities
-      // the data append and the slice aggregation race on materializing
-      // the SAME cached `keyed` blocks (the block manager serializes
+      // The append and the slice aggregation race on materializing the
+      // SAME cached `keyed` blocks (the block manager serializes
       // per-partition computes), so the append's write overlaps the
-      // metadata window pass instead of following it
+      // aggregation instead of following it
       val dataCommit = Future(appendData(keyed))(ingestPool)
-      // slice aggregation first: its cached (skey, day) frame also feeds
-      // the series-index update, so the index pass reads the tiny slice
-      // aggregate instead of re-scanning the whole batch for distinct
-      // skeys — one fewer full-batch pass per ingest
-      val days = CacheScope { sliceCache =>
-        val (slices, mergedState, days) = computeSliceState(sliceCache, keyed)
-        // metadata must not commit before the data it describes: a crash
-        // window may lose metadata for committed data (queries then see
-        // raw-only, still correct) but never the reverse
-        Await.result(dataCommit, Duration.Inf)
-        // all four metadata updates (slice state, both rollup levels,
-        // series index) commit as ONE Spark write job — each alone is a
-        // tiny write whose wall time is job-launch overhead, not data,
-        // so an ingest's latency is job-COUNT-bound: one unioned write
-        // beats four concurrent ones on a busy or cold driver
-        commitMetadata(keyed, slices, mergedState, days)
-      }
-      maybeCompact(days)
+      val partials = computeSliceState(keyed)
+      // metadata must not commit before the data it describes: a crash
+      // window may lose metadata for committed data but never the reverse
+      Await.result(dataCommit, Duration.Inf)
+      commitMetadata(prior, partials)
     }
-    // load this commit's new series and marks into the catalog now, so
-    // the queries that follow find it current; a failed load only defers
-    // it to the next caller's check
-    try catalog()
-    catch { case NonFatal(e) =>
-      org.apache.log4j.Logger.getLogger(getClass)
-        .warn(s"catalog reload failed (batch already committed): $e")
-    }
+    maybeCompact(days)
     // the batch (and everything before it) is committed: the snapshot's
     // checkpoints are now safe to serve to replication followers. A
     // checkpoint-file failure must NOT fail the ingest that already
@@ -409,7 +430,11 @@ final class Store(spark: SparkSession, root: String,
   /** Append the batch's files under their date partitions and commit
     * them to the data manifest: write to a hidden tmp, move the part
     * files in under generation names, publish. Readers resolve the
-    * manifest, so the batch appears atomically.
+    * manifest, so the batch appears atomically. Each of the batch's
+    * partitions writes its own file per date, with no shuffle (unlike
+    * Ingest.writePartitioned's repartition-by-date): auto-compaction
+    * rewrites partitions densely on a batch cadence — the reference's
+    * compaction split of responsibilities.
     */
   private def appendData(keyed: DataFrame): Unit = {
     val gen = System.nanoTime()
@@ -448,7 +473,7 @@ final class Store(spark: SparkSession, root: String,
   // partition was last rewritten densely — the auto-compaction cadence
   // the reference runs as a background task (`Tsdb::compact`). Without
   // it, micro-batch appends accrete one small file per batch per
-  // partition forever.
+  // partition forever, and one metadata delta per batch per day.
   private val batchesSinceCompact =
     scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
 
@@ -460,11 +485,8 @@ final class Store(spark: SparkSession, root: String,
     // both candidates (dedup'd) and let the existence check skip the one
     // this batch didn't actually write. Sessions on UTC collapse to the
     // single exact date.
-    val zone = java.time.ZoneId.of(
-      spark.conf.get("spark.sql.session.timeZone",
-        java.util.TimeZone.getDefault.getID))
     def localDate(ms: Long) =
-      java.time.Instant.ofEpochMilli(ms).atZone(zone).toLocalDate.toString
+      java.time.Instant.ofEpochMilli(ms).atZone(sessionZone).toLocalDate.toString
     days.flatMap(d => Seq(localDate(d), localDate(d + Rollup.DayMs - 1)))
       .distinct.foreach { date =>
         val n = batchesSinceCompact(date) + 1
@@ -475,199 +497,151 @@ final class Store(spark: SparkSession, root: String,
       }
   }
 
-  /** Series not yet in the index (append-only — no rewrite of existing
-    * rows). Input is the cached slice aggregate — one row per
-    * (skey, day), so the distinct runs over a frame the size of the
-    * batch's series set, never the batch itself. The distinct runs on
-    * the skey STRING and metric/tags re-derive from it afterwards —
-    * `first(tags)` would force a SortAggregate on every ingest batch
-    * (maps have no hash buffer).
+  /** The batch's partials, collected once: per (series, day, hour) the
+    * rollup accumulators (cnt/min/max/sum) and the slice inputs — the
+    * min and max ts, and whether a point was out of order within the
+    * batch or NaN/Inf. Within-batch OOO is a window over the BATCH's
+    * rows in `seq` order (bounded by batch size — the reference's
+    * in-memory page state); the cross-batch test against the stored hwm
+    * runs on the driver in [[commitMetadata]]. The window's shuffle by
+    * (skey, day) also serves the aggregate, whose keys extend it. Row
+    * layout: skey, day, wts, cnt, min, max, sum, bmin, bmax, booo.
     */
-  private def newSeries(slices: DataFrame): DataFrame = {
-    val batchSeries = slices
-      .select(col("skey")).distinct()
-      .select(col("skey"),
-        Dp.metricFromKey(col("skey")).as("metric"),
-        Dp.tagsFromKey(col("skey")).as("tags"))
-    if (!exists(indexPath)) batchSeries
-    else batchSeries.join(
-      spark.read.schema(indexSchema).parquet(indexPath).select("skey"),
-      Seq("skey"), "left_anti")
-  }
-
-  /** Compute the batch's slice-state merge; returns the slice aggregate,
-    * kept in the caller's `cache` until the commit job has read it, the
-    * merged state frame for the caller to commit, and the batch's
-    * touched days. Within-batch OOO is detected with a window over the
-    * BATCH's rows (bounded by batch size — the reference's in-memory page
-    * state); cross-batch OOO compares the batch's min ts against the
-    * stored hwm. One action runs here: collecting the touched days
-    * materializes the kept slice aggregate (which the commit job then
-    * reads from cache), and the prior state and rollup reads name only
-    * those days' dirs — no join against history, no broadcast jobs.
-    */
-  private def computeSliceState(cache: CacheScope,
-      keyed: DataFrame): (DataFrame, DataFrame, Seq[Long]) = {
+  private def computeSliceState(keyed: DataFrame): Seq[Row] = {
     val w = Window.partitionBy(col("skey"), col("day")).orderBy(col("seq"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    // kept: consumed by the state merge AND the series-index branch of
-    // the same commit job; one row per touched slice, so the cache is
-    // tiny but saves a second window pass over the batch
-    val slices = cache.keep(keyed
+    keyed
       .withColumn("day", col("ts") - pmod(col("ts"), lit(Rollup.DayMs)))
       .withColumn("prior", max(col("ts")).over(w))
-      .withColumn("bad",
-        (col("prior").isNotNull && col("ts") <= col("prior")) ||
-          isnan(col("value")) ||
-          col("value") === Double.PositiveInfinity ||
-          col("value") === Double.NegativeInfinity)
-      .groupBy(col("skey"), col("day"))
+      .groupBy(col("skey"), col("day"),
+        (col("ts") - pmod(col("ts"), lit(Rollup.HourMs))).as("wts"))
       .agg(
+        count(col("value")).as("cnt"),
+        min(col("value")).as("min"),
+        max(col("value")).as("max"),
+        sum(col("value")).as("sum"),
         min(col("ts")).as("bmin"),
         max(col("ts")).as("bmax"),
-        max(col("bad")).as("booo")))
-    // the batch's touched days, resolved once on the driver: the prior
-    // state and rollup reads then name only those days' dirs
-    val days = slices.select("day").distinct().collect().map(_.getLong(0)).toSeq
-    val prev = readManifestedForDays(statePath, stateSchema, days)
-    val merged = prev.as("p")
-      .join(slices.as("b"), Seq("skey", "day"), "full_outer")
-      .select(
-        col("skey"),
-        greatest(col("p.hwm"), col("b.bmax")).as("hwm"),
-        (coalesce(col("p.ooo"), lit(false)) ||
-          coalesce(col("b.booo"), lit(false)) ||
-          coalesce(col("b.bmin") <= col("p.hwm"), lit(false))).as("ooo"),
-        col("day"))
-    (slices, merged, days)
+        max(coalesce(
+          (col("prior").isNotNull && col("ts") <= col("prior")) ||
+            isnan(col("value")) ||
+            col("value") === Double.PositiveInfinity ||
+            col("value") === Double.NegativeInfinity,
+          lit(false))).as("booo"))
+      .collect().toSeq
   }
 
-  // the unioned metadata frame's superset schema: every table's columns,
-  // null where a table doesn't carry them (parquet readers project by
-  // name, so the dead columns cost bytes in tiny files, not correctness)
-  private val metaUnionCols: Seq[(String, DataType)] = Seq(
-    "skey" -> StringType, "hwm" -> LongType, "ooo" -> BooleanType,
-    "cnt" -> LongType, "min" -> DoubleType, "max" -> DoubleType,
-    "sum" -> DoubleType, "wts" -> LongType,
-    "metric" -> StringType, "tags" -> MapType(StringType, StringType),
-    "day" -> LongType)
-
-  private def widen(df: DataFrame, tbl: String): DataFrame =
-    df.select(lit(tbl).as("tbl") +: metaUnionCols.map { case (c, t) =>
-      if (df.columns.contains(c)) col(c) else lit(null).cast(t).as(c)
-    }: _*)
-
-  /** Merge and commit ALL the batch's metadata in one Spark write job:
-    * the slice-state merge, the touched days' merged hourly rollup, the
-    * daily rollup re-derived from it (each touched day's 1d entry is
-    * always the aggregate of its full, fresh 1h set — sum of sums, min
-    * of mins, the same composition rule the reference's level-2 build
-    * uses), and the batch's new series-index rows. The four frames
-    * union under a `tbl` discriminator and write once, partitioned by
-    * (tbl, day); each manifested table's day dirs then rename in and
-    * its manifest publishes. Rationale: each table's write alone is a
-    * tiny job whose wall time is scheduler/codegen launch overhead, so
-    * four concurrent jobs still pay 4× the fixed cost — on a cold or
-    * GC-pressured driver that fixed cost dominates the batch. One job
-    * bounds it once. The 1h merge is cached so the 1d branch reads the
-    * merge result instead of recomputing the batch aggregation.
+  /** Commit the batch's metadata from its collected partials, reading
+    * back only the state of days older than the resident week
+    * ([[hwmOf]]): per touched day, the hourly partials as a 1h delta,
+    * their per-series fold as a 1d delta (sum of sums, min of mins —
+    * the composition rule of the reference's level-2 build), and the
+    * touched slices' new state — the batch's slice checked against the
+    * catalog's (`hwm` = max, `ooo` = or, plus the cross-batch test: a
+    * batch point at or before the stored hwm) — plus the series the
+    * catalog lacks. The driver writes each as one file into a new
+    * generation dir, publishes the manifests, and replaces the catalog
+    * snapshot with one that holds the new state and series. Returns the
+    * touched days, for the compaction cadence.
     */
-  private def commitMetadata(keyed: DataFrame, slices: DataFrame,
-      mergedState: DataFrame, days: Seq[Long]): Seq[Long] = CacheScope { cache =>
-    val batchRollup = Rollup.rollup1hKeyed(keyed)
-      .withColumn("day", col("wts") - pmod(col("wts"), lit(Rollup.DayMs)))
-    val prev = readManifestedForDays(rollupPath, rollupDaySchema, days)
-    // kept: consumed by both level branches of the union; tiny (touched
-    // days' rollup rows). Both branches materialize inside the ONE write
-    // job — the block manager serializes per-partition computes.
-    val merged = cache.keep(prev.unionByName(batchRollup)
-      .groupBy(col("skey"), col("wts"), col("day"))
-      .agg(
-        sum(col("cnt")).as("cnt"),
-        min(col("min")).as("min"),
-        max(col("max")).as("max"),
-        sum(col("sum")).as("sum"))
-      .select("skey", "cnt", "min", "max", "sum", "wts", "day"))
-    val merged1d = merged
-      .groupBy(col("skey"), col("day"))
-      .agg(
-        sum(col("cnt")).as("cnt"),
-        min(col("min")).as("min"),
-        max(col("max")).as("max"),
-        sum(col("sum")).as("sum"))
-      .withColumn("wts", col("day"))
-      .select("skey", "cnt", "min", "max", "sum", "wts", "day")
-    // index rows carry day = -1: a real partition dir (not the Hive
-    // default-null one) that the per-table rename below can address
-    val index = newSeries(slices).withColumn("day", lit(-1L))
-    val union = Seq(
-      widen(mergedState, "slice_state"),
-      widen(merged, "rollup_1h"), widen(merged1d, "rollup_1d"),
-      widen(index, "series_index")).reduce(_ unionByName _)
-    commitUnioned(union)
-  }
-
-  /** Write the unioned metadata frame once, then per table: rename its
-    * generation dirs in and publish its manifest (series_index is
-    * append-only plain files — its parts just move in, no manifest).
-    * The `day_p` duplicate keeps `day` as a DATA column inside the
-    * files (partitionBy drops its own column), so manifest reads need
-    * no partition discovery. The batch's touched days come from the
-    * written partition dirs themselves (no driver-side collect), and
-    * are returned for the compaction cadence. Every touched day has
-    * rows in ALL three manifested tables by construction (a batch row
-    * in day d yields a slice row, an hourly row, and a daily row), so
-    * a day listed under one table but absent under another would be a
-    * bug — the defensive `entries.remove` keeps the manifest honest.
-    */
-  private def commitUnioned(union: DataFrame): Seq[Long] = {
+  private def commitMetadata(prior: Catalog, partials: Seq[Row]): Seq[Long] = {
+    if (partials.isEmpty) return Nil
     val gen = System.nanoTime()
-    val tmp = s"$root/.meta_tmp_$gen"
-    union.withColumn("day_p", col("day"))
-      .repartition(col("tbl"), col("day_p"))
-      .write.mode(SaveMode.Overwrite).partitionBy("tbl", "day_p").parquet(tmp)
-    def tmpDays(tbl: String): Seq[Long] = {
-      val d = new Path(s"$tmp/tbl=$tbl")
-      if (!fs.exists(d)) Nil
-      else fs.listStatus(d).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName).filter(_.startsWith("day_p="))
-        .flatMap(_.stripPrefix("day_p=").toLongOption)
+    val bySlice = partials.groupBy(r => (r.getLong(1), r.getString(0)))
+    val days = bySlice.keys.map(_._1).toSeq.distinct.sorted
+    // Spark's aggregate rules: nulls skipped, NaN above every number
+    def fold(hours: Seq[Row], i: Int)(f: (Double, Double) => Double): Any =
+      hours.filterNot(_.isNullAt(i)).map(_.getDouble(i)).reduceOption(f)
+        .map(Double.box).orNull
+    val order = Ordering.Double.TotalOrdering
+    val daily = bySlice.toSeq.map { case ((day, k), slice) =>
+      val hours = slice.sortBy(_.getLong(2))
+      day -> Row(k, hours.map(_.getLong(3)).sum, fold(hours, 4)(order.min),
+        fold(hours, 5)(order.max), fold(hours, 6)(_ + _), day, day)
     }
-    val days = Seq("slice_state", "rollup_1h", "rollup_1d")
-      .flatMap(tmpDays).distinct.sorted
-    Seq("slice_state" -> statePath, "rollup_1h" -> rollupPath,
-        "rollup_1d" -> rollup1dPath).foreach { case (tbl, live) =>
-      if (days.nonEmpty) {
-        fs.mkdirs(new Path(live))
-        val (prevSeq, prevEntries) = currentManifest(live)
-        val entries =
-          scala.collection.mutable.Map[Long, String](prevEntries.toSeq: _*)
-        days.foreach { d =>
-          val tmpPart = new Path(s"$tmp/tbl=$tbl/day_p=$d")
-          if (fs.exists(tmpPart)) {
-            val dirName = s"d_${d}_$gen"
-            fs.rename(tmpPart, new Path(s"$live/$dirName"))
-            entries(d) = dirName
-          } else entries.remove(d) // see scaladoc: defensive
-        }
-        publishManifestLines(live, prevSeq + 1,
-          entries.toSeq.sortBy(_._1).map { case (d, n) => (d.toString, n) })
-        gcGenerations(live)
+    val hwm = hwmOf(prior, days)
+    val state = bySlice.toSeq.map { case ((day, k), hours) =>
+      val bmin = hours.map(_.getLong(7)).min
+      val bmax = hours.map(_.getLong(8)).max
+      val ooo = hours.exists(_.getBoolean(9))
+      (day, k, hwm(day).get(k).fold(Slice(bmax, ooo))(h => Slice(h max bmax,
+        ooo || bmin <= h || prior.days.get(day).exists(_.marked(k)))))
+    }
+    def deltas(live: String, schema: StructType, rows: Seq[(Long, Row)]): Map[Long, String] =
+      rows.groupMap(_._1)(_._2).map { case (day, rs) =>
+        val dir = s"d_${day}_$gen"
+        writeLocal(s"$live/$dir/part-0.parquet", schema, rs)
+        day -> dir
       }
+    // state first: a reader between the publishes may see a slice marked
+    // before its rollup delta lands, which routes it to raw (correct)
+    val stateDirs = deltas(statePath, stateSchema,
+      state.map { case (day, k, s) => day -> Row(k, s.hwm, s.ooo, day) })
+    val (stateSeq, stateEntries) = appendToManifest(statePath, stateDirs)
+    appendToManifest(rollupPath, deltas(rollupPath, rollupSchema, partials.map(r =>
+      r.getLong(1) -> Row(r(0), r(3), r(4), r(5), r(6), r(2), r(1)))))
+    appendToManifest(rollup1dPath, deltas(rollup1dPath, rollupSchema, daily))
+    // new series: the append-only index gains one file, written hidden
+    // and renamed in, since readers list the index dir
+    val newRows = partials.map(_.getString(0)).distinct.filterNot(prior.keys).sorted
+      .map { k => val (metric, tags) = Dp.parseKey(k); Row(k, metric, tags) }
+    val indexFile = if (newRows.isEmpty) None else {
+      val name = s"g$gen.parquet"
+      val tmp = new Path(s"$indexPath/.$name")
+      writeLocal(tmp.toString, indexSchema, newRows)
+      fs.rename(tmp, new Path(s"$indexPath/$name"))
+      Some(name)
     }
-    val idxTmp = new Path(s"$tmp/tbl=series_index/day_p=-1")
-    if (fs.exists(idxTmp)) {
-      fs.mkdirs(new Path(indexPath))
-      var i = 0
-      fs.listStatus(idxTmp)
-        .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-        .foreach { f =>
-          fs.rename(f.getPath, new Path(indexPath, s"g${gen}_$i.parquet"))
-          i += 1
-        }
+    val from = Store.residentFrom(stateEntries.keys)
+    val touched = state.groupBy(_._1)
+    val nextDays = stateEntries.map { case (day, dirs) =>
+      val d = touched.get(day).fold(prior.days(day)) { ss =>
+        Day(dirs,
+          prior.days.get(day).fold(Set.empty[String])(_.marked) ++
+            ss.collect { case (_, k, s) if s.ooo => k },
+          Some(hwm(day) ++ ss.map { case (_, k, s) => k -> s.hwm }))
+      }
+      day -> (if (day >= from) d else d.copy(hwm = None))
     }
-    fs.delete(new Path(tmp), true)
+    catalogLock.synchronized {
+      snapshot = prior.copy(
+        indexFiles = prior.indexFiles ++ indexFile,
+        indexRows = prior.indexRows ++ newRows,
+        keys = prior.keys ++ newRows.map(_.getString(0)),
+        stateSeq = stateSeq,
+        days = nextDays)(spark)
+    }
     days
+  }
+
+  /** Writes `rows` as one parquet file at `path` from the driver, with
+    * the writer a Spark write task uses: no Spark job. For metadata
+    * deltas — a few rows per touched slice — a job's launch would cost
+    * more than the write.
+    */
+  private def writeLocal(path: String, schema: StructType, rows: Seq[Row]): Unit = {
+    val job = Job.getInstance(spark.sparkContext.hadoopConfiguration)
+    val writer = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      .newInstance(path, schema,
+        new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID()))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
+    finally writer.close()
+  }
+
+  /** Publish `live`'s next manifest: the current one with each day's new
+    * dir listed after its earlier deltas. Returns the published
+    * (seq, day -> dirs).
+    */
+  private def appendToManifest(live: String,
+      added: Map[Long, String]): (Long, Map[Long, Seq[String]]) = {
+    val (seq, entries) = currentManifest(live)
+    val next = added.foldLeft(entries) { case (m, (day, dir)) =>
+      m.updated(day, m.getOrElse(day, Nil) :+ dir)
+    }
+    publishManifest(live, seq + 1, next)
+    gcGenerations(live)
+    (seq + 1, next)
   }
 
   // ---- data-table manifest (date -> file list) --------------------------
@@ -683,8 +657,7 @@ final class Store(spark: SparkSession, root: String,
     if (seqs.isEmpty) None
     else {
       val s = seqs.max
-      Some((s, readManifestLines(dataPath, s).groupBy(_._1)
-        .map { case (d, ls) => d -> ls.map(_._2) }))
+      Some((s, readManifestLines(dataPath, s).groupMap(_._1)(_._2)))
     }
   }
 
@@ -715,8 +688,9 @@ final class Store(spark: SparkSession, root: String,
     * pruning) and swap it in via the manifest — readers either resolve
     * the small files or the dense one, never a half-swapped dir; the
     * superseded files survive the GC grace window for in-flight scans.
-    * The reference's `Tsdb::compact` with the WAL-era visibility rules
-    * replaced by the commit protocol.
+    * Then fold the metadata deltas of the UTC days the date covers
+    * ([[foldDeltas]]). The reference's `Tsdb::compact` with the WAL-era
+    * visibility rules replaced by the commit protocol.
     */
   def compactDay(date: String, numFiles: Int = 1): Unit = writeLock.synchronized {
     currentDataManifest() match {
@@ -745,6 +719,55 @@ final class Store(spark: SparkSession, root: String,
       case None => // legacy layout: dir-swap compaction
         Maintenance.compactPartition(spark, dataPath, date, numFiles)
     }
+    // the UTC days of the date's first and last ms (one day on UTC)
+    val local = java.time.LocalDate.parse(date)
+    def startMs(d: java.time.LocalDate) = d.atStartOfDay(sessionZone).toInstant.toEpochMilli
+    Seq(startMs(local), startMs(local.plusDays(1)) - 1)
+      .map(ms => ms - Math.floorMod(ms, Rollup.DayMs)).distinct
+      .foreach(foldDeltas)
+  }
+
+  /** Fold one UTC day's deltas into one generation per table, so reads
+    * list a bounded number of dirs. The rollups merge in one Spark
+    * aggregation each ([[mergeDeltas]]); the slice state is the
+    * catalog's, written from the driver (an older day's hwm is read
+    * first, [[hwmOf]]). Answers do not change: the
+    * merge is what every reader of the deltas computes.
+    */
+  private def foldDeltas(day: Long): Unit = {
+    Seq(rollupPath, rollup1dPath).foreach { live =>
+      val dirs = currentManifest(live)._2.getOrElse(day, Nil)
+      if (dirs.size > 1) {
+        val gen = System.nanoTime()
+        val tmp = s"$live/.fold_tmp_$gen"
+        mergeDeltas(live, dirs).withColumn("day", lit(day))
+          .write.mode(SaveMode.Overwrite).parquet(tmp)
+        val dir = s"d_${day}_$gen"
+        fs.rename(new Path(tmp), new Path(s"$live/$dir"))
+        replaceDay(live, day, dir)
+      }
+    }
+    val c = catalog()
+    c.days.get(day).filter(_.dirs.size > 1).foreach { d =>
+      val dir = s"d_${day}_${System.nanoTime()}"
+      writeLocal(s"$statePath/$dir/part-0.parquet", stateSchema,
+        hwmOf(c, Seq(day))(day).toSeq.sortBy(_._1)
+          .map { case (k, h) => Row(k, h, d.marked(k), day) })
+      val (seq, _) = replaceDay(statePath, day, dir)
+      catalogLock.synchronized {
+        snapshot = c.copy(stateSeq = seq, days = c.days.updated(day, d.copy(dirs = Seq(dir))))(spark)
+      }
+    }
+  }
+
+  /** Publish `live`'s next manifest with `day`'s dirs replaced by `dir`. */
+  private def replaceDay(live: String, day: Long,
+      dir: String): (Long, Map[Long, Seq[String]]) = {
+    val (seq, entries) = currentManifest(live)
+    val next = entries.updated(day, Seq(dir))
+    publishManifest(live, seq + 1, next)
+    gcGenerations(live)
+    (seq + 1, next)
   }
 
   /** Retention purge: unreference and delete partitions strictly older
@@ -769,9 +792,7 @@ final class Store(spark: SparkSession, root: String,
       Seq(statePath, rollupPath, rollup1dPath).foreach { live =>
         val (seq, entries) = currentManifest(live)
         val keep = entries.filter { case (day, _) => day >= cutoffDay }
-        if (keep.size != entries.size)
-          publishManifestLines(live, seq + 1,
-            keep.toSeq.sortBy(_._1).map { case (d, n) => (d.toString, n) })
+        if (keep.size != entries.size) publishManifest(live, seq + 1, keep)
       }
     }
     victims
@@ -800,9 +821,10 @@ final class Store(spark: SparkSession, root: String,
 
   // ---- manifest commit protocol -----------------------------------------
 
-
-  /** Newest committed (seq, day → dir). (0, empty) before any commit. */
-  private def currentManifest(live: String): (Long, Map[Long, String]) = {
+  /** Newest committed (seq, day → dirs, oldest delta first). (0, empty)
+    * before any commit.
+    */
+  private def currentManifest(live: String): (Long, Map[Long, Seq[String]]) = {
     val dir = new Path(live)
     if (!fs.exists(dir)) return (0L, Map.empty)
     val seqs = fs.listStatus(dir).filter(_.isFile)
@@ -812,8 +834,8 @@ final class Store(spark: SparkSession, root: String,
     else (seqs.max, readManifestFile(live, seqs.max))
   }
 
-  /** Raw manifest lines (key, value); metadata tables use one line per
-    * day, the data table many lines per date.
+  /** Raw manifest lines (key, value), one per dir or file: a metadata
+    * day lists one line per delta, a data date one per file.
     */
   private def readManifestLines(live: String, seq: Long): Seq[(String, String)] = {
     val in = fs.open(new Path(s"$live/manifest.$seq"))
@@ -825,8 +847,13 @@ final class Store(spark: SparkSession, root: String,
     finally in.close()
   }
 
-  private def readManifestFile(live: String, seq: Long): Map[Long, String] =
-    readManifestLines(live, seq).map { case (k, v) => k.toLong -> v }.toMap
+  private def readManifestFile(live: String, seq: Long): Map[Long, Seq[String]] =
+    readManifestLines(live, seq).groupMap(_._1.toLong)(_._2)
+
+  private def publishManifest(live: String, seq: Long,
+      entries: Map[Long, Seq[String]]): Unit =
+    publishManifestLines(live, seq, entries.toSeq.sortBy(_._1)
+      .flatMap { case (day, dirs) => dirs.map(d => (day.toString, d)) })
 
   /** Hidden write + atomic rename: the manifest appears fully written or
     * not at all.
@@ -846,10 +873,6 @@ final class Store(spark: SparkSession, root: String,
         s"manifest.$seq already published under $live — concurrent writer?")
   }
 
-  /** Keep the two newest manifests (a reader may hold the previous one
-    * mid-scan) and every dir either names; drop older manifests and
-    * unreferenced generation dirs.
-    */
   /** Delete superseded manifests and return the survivors' seqs.
     * Survivors: the 2 newest plus anything younger than the grace
     * window — a DataFrame resolved against manifest N (e.g. a
@@ -870,14 +893,74 @@ final class Store(spark: SparkSession, root: String,
     keep.map(_._1)
   }
 
+  /** Keep every generation dir a surviving manifest names; drop the
+    * unreferenced ones older than the grace window.
+    */
   private def gcGenerations(live: String): Unit = {
     val cutoff = System.currentTimeMillis() - gcGraceMs
     val referenced = gcManifests(live, cutoff)
-      .flatMap(s => readManifestFile(live, s).values).toSet
+      .flatMap(s => readManifestFile(live, s).values.flatten).toSet
     fs.listStatus(new Path(live)).toSeq.filter(_.isDirectory)
       .filter(d => d.getPath.getName.startsWith("d_") &&
         !referenced.contains(d.getPath.getName) &&
         d.getModificationTime < cutoff)
       .foreach(d => fs.delete(d.getPath, true))
   }
+}
+
+private object Store {
+
+  /** One slice's write-time state: its high-water mark, and whether a
+    * point arrived at or before it (or was NaN/Inf).
+    */
+  final case class Slice(hwm: Long, ooo: Boolean)
+
+  /** Days whose hwm the catalog holds: the newest week of days with
+    * slice state — the reference's archive threshold.
+    */
+  val ResidentDays = 7
+
+  /** The first resident day, given the days with slice state. */
+  def residentFrom(days: Iterable[Long]): Long =
+    days.maxOption.fold(Long.MinValue)(_ - (ResidentDays - 1) * Rollup.DayMs)
+
+  private val indexSchema = StructType(Seq(
+    StructField("skey", StringType), StructField("metric", StringType),
+    StructField("tags", MapType(StringType, StringType))))
+  private val marksSchema = StructType(Seq(
+    StructField("skey", StringType), StructField("day", LongType)))
+
+  /** One day's slice state as the catalog holds it: the state dirs read,
+    * the series marked OOO, and each series' hwm while the day is
+    * resident (None for an older day).
+    */
+  final case class Day(dirs: Seq[String], marked: Set[String],
+      hwm: Option[Map[String, Long]]) {
+    /** This day listed at `dirs`, with state rows (skey, hwm, ooo, day)
+      * folded in: a slice's hwm is the max, its mark the or.
+      */
+    def add(dirs: Seq[String], rows: Seq[Row]): Day = Day(dirs,
+      marked ++ rows.filter(_.getBoolean(2)).map(_.getString(0)),
+      hwm.map(foldHwm(_, rows)))
+  }
+
+  /** `hwm` with state rows (skey, hwm, ooo, day) folded in: the max. */
+  def foldHwm(hwm: Map[String, Long], rows: Seq[Row]): Map[String, Long] =
+    rows.foldLeft(hwm) { (m, r) =>
+      m.updated(r.getString(0), m.get(r.getString(0)).fold(r.getLong(1))(_ max r.getLong(1)))
+    }
+
+  /** One immutable snapshot of the series index and the slice state,
+    * and the on-disk state it holds: the index's file names and the
+    * slice_state manifest's seq.
+    */
+  final case class Catalog(indexFiles: Set[String], indexRows: Vector[Row],
+      keys: Set[String], stateSeq: Long, days: Map[Long, Day])(spark: SparkSession) {
+    lazy val index: DataFrame = localFrame(spark, indexRows, indexSchema)
+    lazy val marks: DataFrame = localFrame(spark,
+      for ((day, d) <- days.toSeq; k <- d.marked.toSeq) yield Row(k, day), marksSchema)
+  }
+
+  def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 }

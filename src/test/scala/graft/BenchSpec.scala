@@ -64,6 +64,54 @@ class BenchSpec extends SparkSpec {
     } finally sc.removeSparkListener(counters)
   }
 
+  test("counters: a gate over a cached input reports its scans' rows, not cached batches") {
+    val sc = spark.sparkContext
+    val counters = new GateCounters
+    // three partitions of 10,000 rows: one cached column batch each
+    val cached = spark.range(0, 30000, 1, 3).selectExpr("id AS k", "id % 7 AS v").cache()
+    sc.addSparkListener(counters)
+    try {
+      cached.count()
+      GateCounters.counted(sc, "cached")(
+        cached.filter(col("v") === 3).groupBy("v").count().collect())
+      // the cached side runs in the final stage, the range under a broadcast
+      GateCounters.counted(sc, "joined")(
+        cached.join(broadcast(spark.range(0, 10).toDF("k")), "k").collect())
+      ListenerProbe.drain(sc)
+      // every batch holds each residue, so no batch is pruned
+      assert(counters.snapshot("cached").rowsRead === 30000)
+      assert(counters.snapshot("joined").rowsRead === 30010)
+    } finally {
+      sc.removeSparkListener(counters)
+      cached.unpersist(true)
+    }
+  }
+
+  test("counters: a streaming gate reports its micro-batches' scan rows") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val counters = new GateCounters
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Int]
+    sc.addSparkListener(counters)
+    try {
+      GateCounters.counted(sc, "stream") {
+        val q = mem.toDF().groupBy(($"value" % 5).as("m")).count()
+          .writeStream.format("memory").queryName("bench_spec_stream_rows")
+          .outputMode("complete").start()
+        try {
+          // two micro-batches, 100 and 50 rows
+          mem.addData(1 to 100: _*)
+          q.processAllAvailable()
+          mem.addData(1 to 50: _*)
+          q.processAllAvailable()
+        } finally q.stop()
+      }
+      ListenerProbe.drain(sc)
+      assert(counters.snapshot("stream").rowsRead === 150)
+    } finally sc.removeSparkListener(counters)
+  }
+
   test("bench sweep: equal deterministic counters across runs, one record shape") {
     val gates = Seq("=q_scan_range", "=q_rollup_1h")
     Bench.warmUp(spark, sf)

@@ -342,18 +342,20 @@ class StoreSpec extends SparkSpec {
   private def servedStore(name: String): Store = {
     val root = java.nio.file.Files.createTempDirectory(name).toString
     val st = new Store(spark, root, compactEveryBatches = 0)
-    def dp(rows: Seq[(String, String, Long, Double, Long)]) =
-      spark.createDataset(rows.map { case (h, dc, ts, v, q) =>
-        Dp("srv.m", Map("host" -> h, "dc" -> dc), ts, v, q)
-      }).toDF()
     val hosts = Seq("a" -> "east", "b" -> "east", "c" -> "west")
-    st.ingest(dp(for {
+    st.ingest(srvDp(for {
       ((h, dc), i) <- hosts.zipWithIndex; k <- 0 until 48
     } yield (h, dc, T0 + k * H + i * 1000L, (k * 3 + i).toDouble, (i * 100 + k).toLong)))
-    st.ingest(dp(Seq(("a", "east", T0 + 5 * H, 99.0, 1000L),
+    st.ingest(srvDp(Seq(("a", "east", T0 + 5 * H, 99.0, 1000L),
       ("c", "west", T0 + 30 * H + 2000L, -1.0, 1001L))))
     st
   }
+
+  /** `srv.m` points as (host, dc, ts, value, seq). */
+  private def srvDp(rows: Seq[(String, String, Long, Double, Long)]) =
+    spark.createDataset(rows.map { case (h, dc, ts, v, q) =>
+      Dp("srv.m", Map("host" -> h, "dc" -> dc), ts, v, q)
+    }).toDF()
 
   private val servedQueries = Seq(
     // routed to rollup_1h, with the late batch's OOO fallback
@@ -462,5 +464,211 @@ class StoreSpec extends SparkSpec {
     assert(QueryApi.runQuery(st, q) ===
       """[{"metric":"ns.m","tags":{},"aggregateTags":["dc","host"],""" +
         """"dps":{"1704412800":7.0}}]""")
+  }
+
+  /** Rows as comparable values, doubles by their exact decimal form. */
+  private def exactRows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq.map {
+      case d: Double => d.toString
+      case x => x
+    }).toSet
+
+  /** [[exactRows]] with finite doubles rounded to 9 decimals, for
+    * rollups whose deltas merge in another order than the truth's.
+    */
+  private def roundedRows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq.map {
+      case d: Double if !d.isNaN && !d.isInfinite =>
+        BigDecimal(d).setScale(9, BigDecimal.RoundingMode.HALF_UP)
+      case d: Double => d.toString
+      case x => x
+    }).toSet
+
+  /** Deltas per day in a metadata table's newest manifest. */
+  private def deltasPerDay(root: String, table: String): Map[String, Int] = {
+    val dir = new java.io.File(s"$root/$table")
+    val newest = dir.list().filter(_.startsWith("manifest."))
+      .maxBy(_.stripPrefix("manifest.").toLong)
+    val src = scala.io.Source.fromFile(new java.io.File(dir, newest), "UTF-8")
+    try src.getLines().filter(_.nonEmpty).map(_.takeWhile(_ != '\t')).toSeq
+      .groupBy(identity).map { case (d, ls) => d -> ls.size }
+    finally src.close()
+  }
+
+  private val propQueries = Seq(
+    // routed to rollup_1h, per series
+    """{"start":1704412800,"end":1704585599,"queries":[{"metric":"p.m",
+      |"aggregator":"none","downsample":"1h-avg"}]}""",
+    // routed to rollup_1d, summed across hosts
+    """{"start":1704412800,"end":1704585599,"queries":[{"metric":"p.m",
+      |"aggregator":"sum","downsample":"1d-max"}]}""")
+    .map(b => QueryApi.parseRequest(b.stripMargin))
+
+  test("seeded: N puts answer as one ingest, before and after compactDay folds the deltas") {
+    Seq(7L, 19L, 31L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      var seq = 0L
+      def next() = { seq += 1; seq }
+      // five puts over two days: hosts a and b land anywhere on a
+      // half-hour grid (late points, rewritten timestamps, some NaN);
+      // host c is in order and clean; host d first appears in put 3
+      val puts = (0 until 5).map { b =>
+        val messy = (0 until 8).map { _ =>
+          val ts = T0 + rnd.nextInt(2) * D + rnd.nextInt(48) * 30 * 60000L
+          val v = if (rnd.nextInt(12) == 0) Double.NaN else rnd.nextInt(1000) / 10.0
+          (Seq("a", "b")(rnd.nextInt(2)), ts, v, next())
+        }
+        val inOrder = (0 until 4).map(j =>
+          ("c", T0 + (b * 4 + j) * 2 * H + 60000L, rnd.nextInt(1000) / 10.0, next()))
+        val fresh = if (b < 2) Nil else Seq(("d", T0 + b * 9 * H, b.toDouble, next()))
+        messy ++ inOrder ++ fresh
+      }
+      def dp(rows: Seq[(String, Long, Double, Long)]) =
+        spark.createDataset(rows.map { case (h, ts, v, q) =>
+          Dp("p.m", Map("host" -> h), ts, v, q)
+        }).toDF()
+      def mkStore(name: String) = {
+        val root = java.nio.file.Files.createTempDirectory(name).toString
+        (root, new Store(spark, root, compactEveryBatches = 0))
+      }
+      val (rootN, byPut) = mkStore(s"store_prop_n$seed")
+      puts.foreach(p => byPut.ingest(dp(p)))
+      val (_, once) = mkStore(s"store_prop_1$seed")
+      once.ingest(dp(puts.flatten))
+
+      def marks(st: Store) = st.oooMarks.as[(String, Long)].collect().toSet
+      def answers(st: Store) = propQueries.map(q => rounded(QueryApi.runQuery(st, q)))
+      val truthMarks = Rollup.oooSlices(dp(puts.flatten)).as[(String, Long)].collect().toSet
+      // the data exercises both halves of a routed answer
+      assert(truthMarks.nonEmpty && !truthMarks.exists(_._1 == "p.m,host=c"), s"seed $seed")
+      assert(deltasPerDay(rootN, "rollup_1h").values.forall(_ > 1))
+
+      val before = (exactRows(byPut.rollup1h), exactRows(byPut.rollup1d), answers(byPut))
+      assert(marks(byPut) === truthMarks, s"seed $seed")
+      assert(marks(once) === truthMarks, s"seed $seed")
+      assert(roundedRows(byPut.rollup1h) === roundedRows(once.rollup1h), s"seed $seed")
+      assert(roundedRows(byPut.rollup1d) === roundedRows(once.rollup1d), s"seed $seed")
+      assert(before._3 === answers(once), s"seed $seed")
+
+      Seq("2024-01-05", "2024-01-06").foreach(byPut.compactDay(_))
+      Seq("slice_state", "rollup_1h", "rollup_1d").foreach(t =>
+        assert(deltasPerDay(rootN, t).values.forall(_ == 1), s"$t seed $seed"))
+      assert(marks(byPut) === truthMarks, s"seed $seed")
+      // the fold adds sums in commit order: the merged views keep their bits
+      assert((exactRows(byPut.rollup1h), exactRows(byPut.rollup1d), answers(byPut)) === before,
+        s"seed $seed")
+      // and a fresh catalog loaded from the folded files agrees
+      val reopened = new Store(spark, rootN, compactEveryBatches = 0)
+      assert(marks(reopened) === truthMarks && answers(reopened) === before._3, s"seed $seed")
+    }
+  }
+
+  /** Rewrite a store's metadata files the way the previous layout wrote
+    * them: one unioned write holding every metadata table's columns,
+    * null where a table has none. Its day dirs keep their names.
+    */
+  private def toUnionedLayout(root: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val unionCols = Seq("skey" -> "string", "hwm" -> "bigint", "ooo" -> "boolean",
+      "cnt" -> "bigint", "min" -> "double", "max" -> "double", "sum" -> "double",
+      "wts" -> "bigint", "metric" -> "string", "tags" -> "map<string,string>",
+      "day" -> "bigint")
+    def widened(path: Path, tmp: String): Unit = {
+      val df = spark.read.parquet(path.toString)
+      df.select(unionCols.map { case (c, t) =>
+        (if (df.columns.contains(c)) col(c) else lit(null)).cast(t).as(c)
+      }: _*).coalesce(1).write.parquet(tmp)
+    }
+    Seq("slice_state", "rollup_1h", "rollup_1d").foreach { t =>
+      fs.listStatus(new Path(s"$root/$t")).map(_.getPath)
+        .filter(_.getName.startsWith("d_")).foreach { d =>
+          val tmp = s"$root/.unioned_${d.getName}"
+          widened(d, tmp)
+          fs.delete(d, true)
+          fs.rename(new Path(tmp), d)
+        }
+    }
+    fs.listStatus(new Path(s"$root/series_index")).map(_.getPath)
+      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith(".")).foreach { f =>
+        val tmp = s"$root/.unioned_${f.getName}"
+        widened(f, tmp)
+        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).head
+        fs.delete(f, false)
+        fs.rename(part, f)
+        fs.delete(new Path(tmp), true)
+      }
+  }
+
+  test("a store in the one-generation-per-day unioned layout answers identically, before and after its next put") {
+    val ref = servedStore("store_ref")
+    val old = servedStore("store_unioned")
+    Seq("2024-01-05", "2024-01-06").foreach(old.compactDay(_))
+    val root = new java.io.File(old.dataLocation).getParent
+    toUnionedLayout(root)
+    Seq("slice_state", "rollup_1h", "rollup_1d").foreach(t =>
+      assert(deltasPerDay(root, t).values.forall(_ == 1), t))
+    val reopened = new Store(spark, root, compactEveryBatches = 0)
+    def same(): Unit = {
+      assert(reopened.oooMarks.collect().toSet === ref.oooMarks.collect().toSet)
+      assert(reopened.seriesIndex.collect().toSet === ref.seriesIndex.collect().toSet)
+      assert(roundedRows(reopened.rollup1h) === roundedRows(ref.rollup1h))
+      assert(roundedRows(reopened.rollup1d) === roundedRows(ref.rollup1d))
+      servedQueries.foreach(q =>
+        assert(rounded(QueryApi.runQuery(reopened, q)) === rounded(QueryApi.runQuery(ref, q))))
+    }
+    same()
+    // a late point on a clean slice, and a new series
+    val next = Seq(("b", "east", T0 + 7 * H, 5.0, 2000L), ("d", "west", T0 + 40 * H, 1.0, 2001L))
+    Seq(reopened, ref).foreach(_.ingest(srvDp(next)))
+    assert(ref.oooMarks.as[(String, Long)].collect().contains(("srv.m,dc=east,host=b", T0)))
+    same()
+  }
+
+  test("a put runs only its append and slice collect; the catalog is current after it with no job") {
+    val st = servedStore("store_catalog")
+    val put = jobSites(st.ingest(srvDp(Seq(("b", "east", T0 + 7 * H, 5.0, 2000L),
+      ("d", "west", T0 + 40 * H, 1.0, 2001L)))))
+    assert(put.nonEmpty)
+    put.foreach(site => assert(
+      site.contains("Store.appendData") || site.contains("Store.computeSliceState"),
+      s"a put ran a job outside its append and slice collect:\n$site"))
+    var index = Set.empty[String]
+    var marks = Set.empty[(String, Long)]
+    val reads = jobSites {
+      index = st.seriesIndex.collect().map(_.getString(0)).toSet
+      marks = st.oooMarks.collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    }
+    assert(reads.isEmpty, reads.mkString("\n---\n"))
+    assert(index.contains("srv.m,dc=west,host=d"))
+    assert(marks.contains(("srv.m,dc=east,host=b", T0)))
+  }
+
+  test("a put to a day older than the resident week reads its state in one job: late points still mark") {
+    val root = java.nio.file.Files.createTempDirectory("store_resident").toString
+    val st = new Store(spark, root, compactEveryBatches = 0)
+    val old = Seq(("a", "east", T0 + 10 * H, 1.0, 1L), ("a", "east", T0 + 11 * H, 2.0, 2L),
+      ("e", "east", T0 + 12 * H, 3.0, 3L))
+    // ten days later: the newest day moves, and T0 leaves the resident week
+    val newer = Seq(("a", "east", T0 + 10 * D + H, 4.0, 4L))
+    // late on T0 for a, earlier than e's hwm for e
+    val late = Seq(("a", "east", T0 + 10 * H + 30 * 60000L, 5.0, 5L))
+    val later = Seq(("e", "east", T0 + 9 * H, 6.0, 6L))
+    def metaJobs(f: => Unit) = jobSites(f).count(_.contains("Store.commitMetadata"))
+    def marks(s: Store) = s.oooMarks.as[(String, Long)].collect().toSet
+    assert(metaJobs(st.ingest(srvDp(old))) === 0)
+    assert(metaJobs(st.ingest(srvDp(newer))) === 0)
+    assert(metaJobs(st.ingest(srvDp(late))) === 1)
+    assert(marks(st) === Set(("srv.m,dc=east,host=a", T0)))
+    // the fold writes the old day's whole state, and a fresh catalog reads it
+    st.compactDay("2024-01-05")
+    assert(deltasPerDay(root, "slice_state")(T0.toString) === 1)
+    val reopened = new Store(spark, root, compactEveryBatches = 0)
+    assert(marks(reopened) === marks(st))
+    reopened.ingest(srvDp(later))
+    val all = srvDp(old ++ newer ++ late ++ later)
+    assert(marks(reopened) === Rollup.oooSlices(all).as[(String, Long)].collect().toSet)
+    assert(marks(reopened) === Set(("srv.m,dc=east,host=a", T0), ("srv.m,dc=east,host=e", T0)))
   }
 }
