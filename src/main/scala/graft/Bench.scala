@@ -99,14 +99,13 @@ object Bench {
   final case class Record(name: String, median: Double, counters: Counters)
 
   /** Times every gate matching `filters` (substrings; `=name` matches
-    * exactly; none = all), streaming replays last. Inputs must already
-    * be cached: everything persisted beyond them when the sweep starts
-    * counts as a gate's leak and is released after that gate.
+    * exactly; none = all), streaming replays last. A gate owns its
+    * caches ([[CacheScope]]): unpersisting its result leaves the session
+    * as it found it.
     */
   private[graft] def sweep(spark: SparkSession, sfDir: String,
       filters: Seq[String]): Seq[Record] = {
     val sc = spark.sparkContext
-    val inputRddIds = sc.getPersistentRDDs.keySet
     val picked = SparkEntry.queries.toSeq
       .sortBy { case (n, _) => (streamLast.contains(n), n) }
       .filter { case (n, _) => filters.isEmpty || filters.exists(a =>
@@ -127,7 +126,7 @@ object Bench {
         // pl_collapse). Each run's frame is unpersisted after its count
         // (no-op when not cached) so gates that return persisted frames
         // don't stack one leaked cache entry per run.
-        try { val w = fn(spark, sfDir); w.count(); w.unpersist(true) }
+        try { val w = fn(spark, sfDir); try w.count() finally w.unpersist(true) }
         catch { case _: Throwable => () }
         def timed(): Double =
           try {
@@ -135,23 +134,11 @@ object Bench {
             // their real work during construction, not at count()
             val t0 = System.nanoTime()
             val df = fn(spark, sfDir)
-            df.count()
-            val el = (System.nanoTime() - t0) / 1e9
-            df.unpersist(true)
-            el
+            try { df.count(); (System.nanoTime() - t0) / 1e9 }
+            finally df.unpersist(true)
           } catch { case _: Throwable => -1.0 }
         val first = GateCounters.counted(sc, name)(timed())
         val times = (first +: (1 until Runs).map(_ => timed())).sorted
-        // release this gate's leaked caches: `df.unpersist(true)` is a
-        // no-op when a gate returns a frame DERIVED from its persisted
-        // intermediate, and such entries stack across the sweep (at sf1
-        // they inflated later medians up to 6×). Freeing the RDD keeps
-        // the CacheManager entry valid — a rerun lazily recomputes it.
-        // BLOCKING, outside any timed region: an async release bleeds
-        // its block-manager churn into the next gate's timed runs.
-        sc.getPersistentRDDs.foreach { case (id, rdd) =>
-          if (!inputRddIds.contains(id)) rdd.unpersist(blocking = true)
-        }
         name -> times(Runs / 2)
       }
       ListenerProbe.drain(sc)

@@ -3,12 +3,20 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** The one owner of cached intermediates: how an operator's shared frames
-  * are cached, and for how long. A frame the body [[keep]]s is persisted
-  * at MEMORY_AND_DISK and released (non-blocking unpersist) when the scope
-  * ends, whether the body returns or throws — so a failed operator, or a
-  * sibling chain cancelled by [[graft.pipeline.Dedup.inParallel]], leaves
-  * no cache behind in a long-lived session.
+/** The one owner of cached frames. A frame the body [[keep]]s is
+  * persisted at MEMORY_AND_DISK and released (non-blocking unpersist) when
+  * the scope ends, whether the body returns or throws — so a failed
+  * operator, or a sibling chain cancelled by
+  * [[graft.pipeline.Dedup.inParallel]], leaves no cache behind in a
+  * long-lived session.
+  *
+  * The rule: every cache is kept in a scope. An operator or gate whose
+  * result reads a cached frame materializes that result through [[eager]],
+  * keeping the frames it persists and the cached results other operators
+  * hand it; its result is then the only cache left, and the caller
+  * unpersists it. An operator with a LAZY result over a cached frame takes
+  * its caller's scope and keeps into it, so the frame lives exactly as
+  * long as the caller reads the result.
   *
   * {{{
   * CacheScope.eager { cache =>
@@ -16,10 +24,6 @@ import org.apache.spark.storage.StorageLevel
   *   pairsFrom(sh)                   // persisted + counted, then sh released
   * }
   * }}}
-  *
-  * Session-lifetime caches under a LAZY result (an operator's shared
-  * token stream, a gate's reused input) stay plain `persist()`: scoping
-  * them would need an extra action to materialize before release.
   */
 final class CacheScope private () {
   private val kept = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

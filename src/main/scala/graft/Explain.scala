@@ -1,6 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{DataSourceScanExec, EmptyRelationExec,
+  ReusedSubqueryExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  LogicalQueryStage, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec,
+  ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Plan-audit main: prints `explain("formatted")` for selected
   * SparkEntry queries (args = name substrings; no args = flagship set).
@@ -15,36 +26,56 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
 
-  /** Counts of the plan features that matter at scale, parsed from the
-    * formatted explain text of the EXECUTED (AQE-final) plan.
+  /** Counts of the plan features that matter at scale, over the
+    * operators that run: an adaptive plan's current plan (its final one,
+    * not its initial one, once it ran), each cached relation's plan once
+    * however many scans read it, and subqueries; a reused exchange or
+    * subquery counts zero.
     */
   final case class Fingerprint(
       exchanges: Int, broadcastJoins: Int, sortMergeJoins: Int,
       nestedLoopJoins: Int, hashAggregates: Int, sortAggregates: Int,
-      windows: Int, codegenSpans: Int, scans: Int, pushedFilters: Boolean)
+      windows: Int, codegenSpans: Int, pushedFilters: Boolean)
 
-  def fingerprint(plan: String): Fingerprint = {
-    // tree-form node mentions only ("HashAggregate (14)"), so the
-    // details section doesn't double-count; the lookbehind keeps
-    // "Exchange" from matching inside "BroadcastExchange"
-    // joins carry type/build info between name and id
-    // ("BroadcastHashJoin Inner BuildRight (111)")
-    def nodes(name: String): Int =
-      (raw"(?<![A-Za-z])" + name + raw"[^()\n]*\(\d+\)").r.findAllIn(plan).size
+  def fingerprint(plan: SparkPlan): Fingerprint = {
+    val cached = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val ops = Seq.newBuilder[SparkPlan]
+    def walk(p: SparkPlan): Unit = {
+      ops += p
+      (p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _: ReusedExchangeExec | _: ReusedSubqueryExec => Nil
+        // AQE cut this subtree short once a stage came back empty; the
+        // stages that had run by then are kept in its logical plan
+        case e: EmptyRelationExec =>
+          e.logical.collect { case s: LogicalQueryStage => s.physicalPlan }
+        case c: InMemoryTableScanExec =>
+          if (cached.add(c.relation.cachedPlan)) Seq(c.relation.cachedPlan) else Nil
+        case other => other.children
+      }).foreach(walk)
+      p.subqueries.foreach(walk)
+    }
+    walk(plan)
+    val ran = ops.result()
+    def n(kind: PartialFunction[SparkPlan, Unit]): Int = ran.count(kind.isDefinedAt)
     Fingerprint(
-      exchanges = nodes("Exchange"),
-      broadcastJoins = nodes("BroadcastHashJoin"),
-      sortMergeJoins = nodes("SortMergeJoin"),
-      nestedLoopJoins = nodes("BroadcastNestedLoopJoin") +
-        nodes("CartesianProduct"),
-      hashAggregates = nodes("HashAggregate") + nodes("ObjectHashAggregate"),
-      sortAggregates = nodes("SortAggregate"),
-      windows = nodes("Window") + nodes("WindowGroupLimit"),
-      codegenSpans = raw"\[codegen id : (\d+)\]".r.findAllMatchIn(plan)
-        .map(_.group(1)).toSet.size,
-      scans = nodes("Scan parquet[^(]*") + nodes("Scan ExistingRDD[^(]*") +
-        nodes("InMemoryTableScan"),
-      pushedFilters = raw"PushedFilters: \[[^\]]".r.findFirstIn(plan).isDefined)
+      exchanges = n { case _: ShuffleExchangeLike => },
+      broadcastJoins = n { case _: BroadcastHashJoinExec => },
+      sortMergeJoins = n { case _: SortMergeJoinExec => },
+      nestedLoopJoins = n {
+        case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => },
+      hashAggregates = n { case _: HashAggregateExec | _: ObjectHashAggregateExec => },
+      sortAggregates = n { case _: SortAggregateExec => },
+      windows = n { case _: WindowExec | _: WindowGroupLimitExec => },
+      codegenSpans = n { case _: WholeStageCodegenExec => },
+      pushedFilters = ran.exists {
+        case s: DataSourceScanExec =>
+          s.verboseStringWithOperatorId().linesIterator.exists(l =>
+            l.startsWith("PushedFilters: [") && !l.startsWith("PushedFilters: []"))
+        case _ => false
+      })
   }
 
   private val flagship = Seq("q_scan_range", "q_ds_avg", "q_agg_sum",
@@ -70,7 +101,8 @@ object Explain {
           .filter { case (n, _) => names.exists(n.contains) }
           .foreach { case (name, fn) =>
             println(s"\n========== $name ==========")
-            fn(spark, sfDir).explain("formatted")
+            val df = fn(spark, sfDir)
+            try df.explain("formatted") finally df.unpersist(true)
           }
     }
     spark.stop()
@@ -83,12 +115,14 @@ object Explain {
   private def writePlansMd(spark: SparkSession, sfDir: String, path: String): Unit = {
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val df = fn(spark, sfDir)
-      val err = try { df.count(); None } catch {
-        case e: Throwable => Some(e.getMessage)
-      }
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      (name, fingerprint(plan), plan, err)
+      try {
+        val err = try { df.count(); None } catch {
+          case e: Throwable => Some(e.getMessage)
+        }
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        (name, fingerprint(df.queryExecution.executedPlan), plan, err)
+      } finally df.unpersist(true)
     }
     val sb = new StringBuilder
     sb ++= "# PLANS — physical-plan audit (generated by `graft.Explain --plans-md`)\n\n"

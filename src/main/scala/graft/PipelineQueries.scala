@@ -177,8 +177,8 @@ object PipelineQueries {
     // cut into head/middle/tail terciles — the quality routing CCNet
     // applies before choosing what to train on. The rank window runs
     // over the (id, score) frame, never the text
-    "pl_ccnet_bucket" -> { (s, dir) =>
-      val scored = TextAnalysis.bigramNll(docs(s, dir))
+    "pl_ccnet_bucket" -> { (s, dir) => CacheScope.eager { cache =>
+      val scored = cache.keep(TextAnalysis.bigramNll(docs(s, dir)))
         .select(col("doc_id"), sround(col("nll")).as("nll"))
       val w = Window.orderBy(col("nll"), col("doc_id"))
       scored.withColumn("rn", row_number().over(w).cast("long"))
@@ -188,7 +188,7 @@ object PipelineQueries {
           when(col("t_") === 1, "head").when(col("t_") === 2, "middle")
             .otherwise("tail").as("bucket"))
         .orderBy("doc_id")
-    },
+    }},
 
     // PII/URL scrubbing — markers appended so the redaction chain
     // (email → URL → IPv4, order-sensitive) actually fires on every row
@@ -371,27 +371,27 @@ object PipelineQueries {
 
     // eval-side contamination report: per eval doc, distinct-gram count,
     // grams found anywhere in train, and the dirty fraction
-    "pl_contam_report" -> { (s, dir) =>
+    "pl_contam_report" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir)
-      Dedup.contaminationReport(
+      cache.keep(Dedup.contaminationReport(
         d.filter(col("doc_id") % 13 =!= 0),
-        d.filter(col("doc_id") % 13 === 0), n = 4)
+        d.filter(col("doc_id") % 13 === 0), n = 4))
         .select(col("doc_id"), col("n_grams"), col("n_dirty"),
           sround(col("dirty_frac")).as("dirty_frac"))
         .orderBy("doc_id")
-    },
+    }},
 
     // Bloom-filter decontamination: same train/eval split as
     // pl_decontam, but the eval set crosses the cluster as a fixed
     // 2^22-position Bloom frame instead of gram strings — flags are a
     // deterministic superset (FPs replayed exactly by the oracle)
-    "pl_decontam_bloom" -> { (s, dir) =>
+    "pl_decontam_bloom" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir)
-      Dedup.bloomDecontaminate(
+      cache.keep(Dedup.bloomDecontaminate(
         d.filter(col("doc_id") % 13 =!= 0),
-        d.filter(col("doc_id") % 13 === 0), n = 4)
+        d.filter(col("doc_id") % 13 === 0), n = 4))
         .orderBy("id")
-    },
+    }},
 
     // per-source document cap (the web pipeline's per-host cap):
     // deterministic salted-rank keep of at most 10 docs per source
@@ -436,62 +436,62 @@ object PipelineQueries {
       Dedup.exact(d.unionByName(dup)).orderBy("doc_id")
     },
 
-    "pl_dedup_ngram" -> { (s, dir) =>
-      Dedup.ngramJaccardPairs(docs(s, dir), n = 3, threshold = 0.8)
+    "pl_dedup_ngram" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Dedup.ngramJaccardPairs(docs(s, dir), n = 3, threshold = 0.8))
         .select(col("id1"), col("id2"), sround(col("jaccard")).as("jaccard"))
         .orderBy("id1", "id2")
-    },
+    }},
 
     // asymmetric containment |A∩B|/|A| — the quote/boilerplate detector
     // Jaccard structurally misses (small doc inside big one)
-    "pl_containment" -> { (s, dir) =>
-      Dedup.containmentPairs(docs(s, dir), n = 3, threshold = 0.9)
+    "pl_containment" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Dedup.containmentPairs(docs(s, dir), n = 3, threshold = 0.9))
         .select(col("contained"), col("container"),
           sround(col("containment")).as("containment"))
         .orderBy("contained", "container")
-    },
+    }},
 
     // MinHash-ESTIMATED containment: the at-scale sibling of the exact
     // pl_containment quadratic — LSH candidates + signature-match
     // Jaccard estimate + exact set sizes; only 8 slots and a count per
     // doc cross the shuffle, never a shingle set
-    "pl_containment_est" -> { (s, dir) =>
-      Dedup.containmentEstimate(docs(s, dir), n = 3, threshold = 0.5)
+    "pl_containment_est" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Dedup.containmentEstimate(docs(s, dir), n = 3, threshold = 0.5))
         .orderBy("contained", "container")
-    },
+    }},
 
     // prefix-filter all-pairs join (Bayardo et al. 2007): the LOSSLESS
     // scale path for exact Jaccard — only each set's rarest
     // |S|−⌈t·|S|⌉+1 shingles enter the self-join; oracle = exact
     // uncapped Jaccard pairs, which is the operator's contract
-    "pl_dedup_prefix" -> { (s, dir) =>
-      Dedup.prefixFilterPairs(docs(s, dir), n = 3, threshold = 0.8)
+    "pl_dedup_prefix" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Dedup.prefixFilterPairs(docs(s, dir), n = 3, threshold = 0.8))
         .select(col("id1"), col("id2"), sround(col("jaccard")).as("jaccard"))
         .orderBy("id1", "id2")
-    },
+    }},
 
     // the maxDocFreq skew guard actually biting: cap=3 drops the corpus's
     // hottest shingles (test data has shingles in up to 9 docs); the
     // oracle replays the identical cap, so the guarded result is still
     // hash-checked
-    "pl_dedup_ngram_hot" -> { (s, dir) =>
-      Dedup.ngramJaccardPairs(docs(s, dir), n = 3, threshold = 0.8,
-        maxDocFreq = Some(3))
+    "pl_dedup_ngram_hot" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Dedup.ngramJaccardPairs(docs(s, dir), n = 3, threshold = 0.8,
+        maxDocFreq = Some(3)))
         .select(col("id1"), col("id2"), sround(col("jaccard")).as("jaccard"))
         .orderBy("id1", "id2")
-    },
+    }},
 
-    "pl_dedup_minhash" -> { (s, dir) =>
-      Dedup.minhashLshPairs(docs(s, dir), n = 3, threshold = 0.8)
+    "pl_dedup_minhash" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Dedup.minhashLshPairs(docs(s, dir), n = 3, threshold = 0.8))
         .select(col("id1"), col("id2"), sround(col("jaccard")).as("jaccard"))
         .orderBy("id1", "id2")
-    },
+    }},
 
     // incremental dedup: a new batch (doc_id % 5 == 0, plus exact copies
     // of some corpus docs at +50000) matched against the established
     // corpus's persisted band index + shingle table — cost scales with
     // the batch, never the corpus
-    "pl_dedup_incr" -> { (s, dir) =>
+    "pl_dedup_incr" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val corpus = d.filter(col("doc_id") % 5 =!= 0)
       val fresh = d.filter(col("doc_id") % 5 === 0).unionByName(
@@ -499,12 +499,12 @@ object PipelineQueries {
           .withColumn("doc_id", col("doc_id") + 50000))
       val index = Dedup.lshBandIndex(corpus)
       val corpusSh = Dedup.shingleHashes(corpus).select("id", "h")
-      val out = Dedup.incrementalNearDups(fresh, index, corpusSh)
+      val out = cache.keep(Dedup.incrementalNearDups(fresh, index, corpusSh))
         .select(col("new_id"), col("corpus_id"),
           sround(col("jaccard")).as("jaccard"))
         .orderBy("new_id", "corpus_id")
       out
-    },
+    }},
 
     // incremental dedup, CONSTANT-size batch (r14): pl_dedup_incr's
     // batch is 20% of the corpus, so its cost grows with the corpus and
@@ -518,7 +518,7 @@ object PipelineQueries {
     // candidate ids, so the one thing that used to grow with the corpus
     // — the full columnar scan of the persisted shingle table — now
     // scales with the batch's candidate set.
-    "pl_dedup_incr_fixed" -> { (s, dir) =>
+    "pl_dedup_incr_fixed" -> { (s, dir) => CacheScope.eager { cache =>
       val (bandIdx, shIdx, nBuckets) = incrIndexFixture(s, dir)
       val d = docs(s, dir).select(col("doc_id"), col("text"))
       val fresh = d
@@ -528,15 +528,15 @@ object PipelineQueries {
               col("doc_id") < 2500)
             .withColumn("doc_id", col("doc_id") + 50000))
       // maxBucket = 0: the cap is already baked into the persisted index
-      Dedup.incrementalNearDups(fresh, bandIdx, shIdx,
-          maxBucket = 0, shingleBuckets = nBuckets)
+      cache.keep(Dedup.incrementalNearDups(fresh, bandIdx, shIdx,
+          maxBucket = 0, shingleBuckets = nBuckets))
         .select(col("new_id"), col("corpus_id"),
           sround(col("jaccard")).as("jaccard"))
         .orderBy("new_id", "corpus_id")
-    },
+    }},
 
     // END-TO-END curation composition — the full training-data pipeline
-    // as ONE lazy plan, priced and oracle-gated as a whole (each stage
+    // as ONE gate, priced and oracle-gated as a whole (each stage
     // is individually gated elsewhere; nothing else prices cross-stage
     // plan bloat like a lost ReuseExchange between stages):
     //   C4/Gopher filter chain (incl. exact dedup as its first rule)
@@ -550,23 +550,21 @@ object PipelineQueries {
     //     unit_id = doc_id·4 + epoch (epochs < 4 by the rate map).
     // The +10000 duplicate union gives the two dedup stages real work
     // (the pl_filter_chain / pl_dedup_exact fixture).
-    "pl_e2e_curation" -> { (s, dir) =>
+    "pl_e2e_curation" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir).select(col("doc_id"), col("text"), col("source"))
       val u = d.unionByName(d.withColumn("doc_id", col("doc_id") + 10000))
-      // the stage boundaries are persisted: surv1 feeds the LSH chain AND
+      // the stage boundaries are kept: surv1 feeds the LSH chain AND
       // the anti-join, train feeds the gram stream AND the survivor
-      // anti-join — without the persists each reference re-runs the whole
+      // anti-join — without the caches each reference re-runs the whole
       // upstream chain (ReuseExchange does not fire across these
-      // asymmetric references — the r8 lesson; with the two persists the
+      // asymmetric references — the r8 lesson; with the two caches the
       // executed plan carries 9 real shuffles, PlanAuditSpec-budgeted)
-      val surv1 = FilterChain.c4Filter(u).filter(col("keep"))
-        .select("doc_id", "text", "source")
-        .persist()
-      val drop2 = Dedup.minhashLshPairs(surv1, n = 3, threshold = 0.8)
+      val surv1 = cache.keep(FilterChain.c4Filter(u).filter(col("keep"))
+        .select("doc_id", "text", "source"))
+      val drop2 = cache.keep(Dedup.minhashLshPairs(surv1, n = 3, threshold = 0.8))
         .select(col("id2").as("doc_id")).distinct()
-      val train = surv1.join(drop2, Seq("doc_id"), "left_anti")
-        .filter(col("doc_id") % 13 =!= 0)
-        .persist()
+      val train = cache.keep(surv1.join(drop2, Seq("doc_id"), "left_anti")
+        .filter(col("doc_id") % 13 =!= 0))
       val evalSet = d.filter(col("doc_id") % 13 === 0)
       val contaminated = Dedup.decontaminate(train, evalSet, n = 4)
         .select(col("id").as("doc_id"))
@@ -579,27 +577,24 @@ object PipelineQueries {
         .select(col("doc_id"), col("epoch"), col("source"), col("bucket"),
           col("bin"))
         .orderBy("doc_id", "epoch")
-    },
+    }},
 
     // pairwise matches → dedup GROUPS: connected components over the
     // (verified) minhash pairs; cid = min reachable id = the doc to keep
-    "pl_dedup_clusters" -> { (s, dir) =>
+    "pl_dedup_clusters" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir)
-      val pairs = Dedup.minhashLshPairs(d, n = 3, threshold = 0.8)
-      val labeled = Dedup.clusters(pairs, d.select(col("doc_id").as("id")))
-      pairs.unpersist()
-      labeled.select(col("id"), col("cid")).orderBy("id")
-    },
+      val pairs = cache.keep(Dedup.minhashLshPairs(d, n = 3, threshold = 0.8))
+      cache.keep(Dedup.clusters(pairs, d.select(col("doc_id").as("id"))))
+        .select(col("id"), col("cid")).orderBy("id")
+    }},
 
     // end-to-end corpus dedup: minhash pairs → clusters → keep only
     // each cluster's representative (min id)
-    "pl_collapse" -> { (s, dir) =>
+    "pl_collapse" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir)
-      val pairs = Dedup.minhashLshPairs(d, n = 3, threshold = 0.8)
-      val kept = Dedup.collapse(d, pairs)
-      pairs.unpersist()
-      kept.select(col("doc_id")).orderBy("doc_id")
-    },
+      val pairs = cache.keep(Dedup.minhashLshPairs(d, n = 3, threshold = 0.8))
+      Dedup.collapse(cache, d, pairs).select(col("doc_id")).orderBy("doc_id")
+    }},
 
     // SoftDeDup-direction duplicate REWEIGHTING: instead of dropping a
     // near-dup cluster's non-representatives, every member keeps weight
@@ -608,40 +603,37 @@ object PipelineQueries {
     // the cheap simhash pass (any pair producer plugs in — the API is
     // pair-agnostic); then hash-min clustering + one size join;
     // exact-rational weights cross engines bit-for-bit
-    "pl_soft_dedup" -> { (s, dir) =>
+    "pl_soft_dedup" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir)
-      val pairs = Dedup.simhashPairs(d, nBits = 60, maxHamming = 3)
+      val pairs = cache.keep(Dedup.simhashPairs(d, nBits = 60, maxHamming = 3))
         .select(col("id1"), col("id2"))
-        .persist()
-      val out = Dedup.softDedupWeights(d, pairs).orderBy("doc_id")
-      pairs.unpersist() // softDedupWeights materialized its labels
-      out
-    },
+      cache.keep(Dedup.softDedupWeights(d, pairs)).orderBy("doc_id")
+    }},
 
     // CCNet-style unigram LM proxy: per-doc mean -ln p(token) under the
     // corpus unigram distribution
-    "pl_unigram_nll" -> { (s, dir) =>
-      TextAnalysis.unigramNll(docs(s, dir))
+    "pl_unigram_nll" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(TextAnalysis.unigramNll(docs(s, dir)))
         .select(col("doc_id"), sround(col("nll")).as("nll"))
         .orderBy("doc_id")
-    },
+    }},
 
     // bigram LM (KenLM-direction): per-doc mean -ln P(w2|w1), add-0.1
     // smoothing over corpus bigram counts
-    "pl_bigram_nll" -> { (s, dir) =>
-      TextAnalysis.bigramNll(docs(s, dir))
+    "pl_bigram_nll" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(TextAnalysis.bigramNll(docs(s, dir)))
         .select(col("doc_id"), sround(col("nll")).as("nll"))
         .orderBy("doc_id")
-    },
+    }},
 
     // trigram Stupid Backoff scoring (Brants 2007): eval-half docs
     // scored against train-half counts, so unseen trigrams actually
     // back off; per-doc NLL + how many positions backed off
-    "pl_sbo_nll" -> { (s, dir) =>
-      TextAnalysis.sboNll(docs(s, dir))
+    "pl_sbo_nll" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(TextAnalysis.sboNll(docs(s, dir)))
         .select(col("doc_id"), sround(col("nll")).as("nll"), col("n_backoff"))
         .orderBy("doc_id")
-    },
+    }},
 
     // deterministic salted-hash train/val/test assignment — reproducible
     // across engines/runs and stable under corpus growth
@@ -695,33 +687,33 @@ object PipelineQueries {
 
     // per-doc top-3 TF-IDF keywords (smoothed idf, quantized-score
     // ranking with token tie-break)
-    "pl_tfidf" -> { (s, dir) =>
-      TextAnalysis.tfidfKeywords(docs(s, dir), k = 3)
+    "pl_tfidf" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(TextAnalysis.tfidfKeywords(docs(s, dir), k = 3))
         .select(col("doc_id"), col("token"), col("score"),
           col("rank").cast("long").as("rank"))
         .orderBy("doc_id", "rank")
-    },
+    }},
 
     // BM25 top-5 retrieval for a fixed query set (the corpus-side tf/df
     // relations shuffle once; the query terms are the broadcast side)
-    "pl_bm25" -> { (s, dir) =>
+    "pl_bm25" -> { (s, dir) => CacheScope.eager { cache =>
       import s.implicits._
       val qs = Seq(
         "q1" -> "spark window join",
         "q2" -> "slow query filter",
         "q3" -> "customer order line table",
         "q4" -> "stream batch merge").toDF("qid", "qtext")
-      Retrieval.bm25TopK(docs(s, dir), qs, k = 5)
+      cache.keep(Retrieval.bm25TopK(docs(s, dir), qs, k = 5))
         .select(col("qid"), col("doc_id"), col("score"), col("rank"))
         .orderBy("qid", "rank")
-    },
+    }},
 
     // per-language distinctive vocabulary by Dunning G² — the corpus
     // audit "what characterizes this slice" operator
-    "pl_source_terms" -> { (s, dir) =>
-      Retrieval.distinctiveTerms(docs(s, dir), groupCol = "lang", k = 5)
+    "pl_source_terms" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Retrieval.distinctiveTerms(docs(s, dir), groupCol = "lang", k = 5))
         .orderBy("lang", "rank")
-    },
+    }},
 
     // winnowing fingerprints (Schleimer et al. 2003): window-min of
     // 3-gram hashes, the w×-smaller overlap-join relation
@@ -748,19 +740,19 @@ object PipelineQueries {
     // PMI collocations (Church & Hanks 1990): top-20 adjacent bigrams by
     // pointwise mutual information, min count 5 — two map-side-combined
     // count aggregations + token-keyed joins, top-k via TakeOrdered
-    "pl_pmi" -> { (s, dir) =>
-      Retrieval.pmiCollocations(docs(s, dir), k = 20, minCount = 5)
+    "pl_pmi" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Retrieval.pmiCollocations(docs(s, dir), k = 20, minCount = 5))
         .orderBy("rank")
-    },
+    }},
 
     // DSIR importance weights (Xie et al. 2023): hashed-bigram bucket
     // log-ratio of a small target slice vs the raw pool, top-50 docs;
     // the ratio table is 4096 rows broadcast, per-doc weights are
     // integer sums (order-free)
-    "pl_dsir" -> { (s, dir) =>
-      Retrieval.dsirWeights(docs(s, dir), col("source") === "src0", k = 50)
+    "pl_dsir" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Retrieval.dsirWeights(docs(s, dir), col("source") === "src0", k = 50))
         .orderBy("doc_id")
-    },
+    }},
 
     // HyperLogLog distinct tokens per source: deterministic md5-based
     // registers (engine-replayable, unlike approx_count_distinct's
@@ -782,15 +774,15 @@ object PipelineQueries {
     // Jaccard from both. The raw corpus is read once; the pairwise stage
     // costs |groups|²·256 register rows regardless of corpus size — how
     // a catalog prices overlap between any two of 10,000 shards
-    "pl_hll_overlap" -> { (s, dir) =>
+    "pl_hll_overlap" -> { (s, dir) => CacheScope.eager { cache =>
       val t = TextAnalysis.withTokens(docs(s, dir))
         .filter(col("source").isin("src0", "src1", "src2", "src3", "src4"))
         .select(col("source"), explode(col("w_")).as("token"))
-      Sketches.hllOverlap(t, "token", "source")
+      cache.keep(Sketches.hllOverlap(t, "token", "source"))
         .select(col("g1"), col("g2"), sround(col("est_union")).as("est_union"),
           sround(col("est_inter")).as("est_inter"), sround(col("jacc")).as("jacc"))
         .orderBy("g1", "g2")
-    },
+    }},
 
     // token-budget water-filling: split 80% of the corpus' tokens
     // across languages — small languages are taken whole, the big one
@@ -850,11 +842,11 @@ object PipelineQueries {
     // 100 TB memory contract), md5-derived hash family so the sketch is
     // engine-replayable; true top-20 tokens annotated with the sketch's
     // never-undershooting point estimate
-    "pl_cms_topk" -> { (s, dir) =>
-      Sketches.cmsHeavyHitters(docs(s, dir), k = 20, depth = 4, width = 1024)
+    "pl_cms_topk" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Sketches.cmsHeavyHitters(docs(s, dir), k = 20, depth = 4, width = 1024))
         .select(col("token"), col("cnt"), col("est"))
         .orderBy("token")
-    },
+    }},
 
     // context-length profile per source from the mergeable grid-quantile
     // sketch: p50/p90/p99 of per-doc token counts with ≤ cell−1 error —
@@ -905,11 +897,11 @@ object PipelineQueries {
         .crossJoin(reps.agg(count(lit(1)).as("n_reps")))
     },
 
-    "pl_dedup_simhash" -> { (s, dir) =>
-      Dedup.simhashPairs(docs(s, dir), nBits = 60, maxHamming = 3)
+    "pl_dedup_simhash" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Dedup.simhashPairs(docs(s, dir), nBits = 60, maxHamming = 3))
         .select(col("id1"), col("id2"), col("hamming").cast("long").as("hamming"))
         .orderBy("id1", "id2")
-    },
+    }},
 
     // AUTO-radius SimHash as a DIRECT gate (r14): the probe-chosen
     // radius rides along as a column, so the radius-choice logic —
@@ -919,12 +911,12 @@ object PipelineQueries {
     // it. This is the at-scale sibling of the fixed-radius
     // pl_dedup_simhash truth gate, whose radius-3 candidate set grows
     // birthday-rate with the corpus.
-    "pl_dedup_simhash_auto" -> { (s, dir) =>
-      Dedup.simhashPairsAuto(docs(s, dir))
+    "pl_dedup_simhash_auto" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Dedup.simhashPairsAuto(docs(s, dir)))
         .select(col("id1"), col("id2"),
           col("hamming").cast("long").as("hamming"), col("radius"))
         .orderBy("id1", "id2")
-    },
+    }},
 
     // URL-canonicalization dedup: the crawl-side first-stage dedup that
     // collapses scheme/case/www/trailing-slash/tracking-param variants
@@ -1090,25 +1082,25 @@ object PipelineQueries {
     // their 2 nearest of 8 lists and ADC-scan only those codes — the
     // billion-scale composite (routing bounds the scan, codes bound the
     // bytes); frames-shaped, no driver collect, plan O(1) in Q
-    "pl_knn_ivfpq" -> { (s, dir) =>
+    "pl_knn_ivfpq" -> { (s, dir) => CacheScope.eager { cache =>
       val e = emb(s, dir)
-      Similarity.ivfPqKnn(e, e.filter(col("vec_id") < 10), k = 5)
+      cache.keep(Similarity.ivfPqKnn(e, e.filter(col("vec_id") < 10), k = 5))
         .select(col("qid"), col("nid"), sround(col("adc")).as("adc"))
         .orderBy("qid", "nid")
-    },
+    }},
 
     // ANN + exact re-rank (the FAISS refine composite): IVF-PQ proposes
     // 20 candidates per query from the codes index, only those 20 fetch
     // full vectors for an exact cosine top-5 — approximate recall cost,
     // exact final ordering, |cand| vector reads instead of the corpus
-    "pl_knn_rerank" -> { (s, dir) =>
+    "pl_knn_rerank" -> { (s, dir) => CacheScope.eager { cache =>
       val e = emb(s, dir)
       val qs = e.filter(col("vec_id") < 10)
-      val cand = Similarity.ivfPqKnn(e, qs, k = 20)
+      val cand = cache.keep(Similarity.ivfPqKnn(e, qs, k = 20))
       Similarity.rerankCosine(cand, e, qs, k = 5)
         .select(col("qid"), col("nid"), sround(col("cos")).as("cos"))
         .orderBy("qid", "nid")
-    },
+    }},
 
     // ANN quality harness: recall@5 of the IVF probe path against the
     // brute-force exact top-5 — the measure-don't-guess gate that prices
@@ -1141,29 +1133,29 @@ object PipelineQueries {
 
     // Lloyd k-means (k=8, 2 iterations, deterministic first-k init) —
     // corpus clustering for curation; oracle replays both iterations
-    "pl_kmeans" -> { (s, dir) =>
-      Similarity.kmeans(emb(s, dir), k = 8, iters = 2)
+    "pl_kmeans" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Similarity.kmeans(emb(s, dir), k = 8, iters = 2))
         .orderBy("id")
-    },
+    }},
 
     // clustering quality report: per-cluster size + inertia on the
     // integer grid — the check before trusting cluster-based dedup or
     // IVF routing; one assignment pass + one map-side-combined agg
-    "pl_cluster_stats" -> { (s, dir) =>
-      Similarity.clusterStats(emb(s, dir), k = 8, iters = 2)
+    "pl_cluster_stats" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Similarity.clusterStats(emb(s, dir), k = 8, iters = 2))
         .orderBy("cid")
-    },
+    }},
 
     // centroid-based silhouette: cohesion-vs-separation score per
     // cluster — the can-these-clusters-be-trusted read before
     // SemDeDup/IVF routing bets on them; one assignment pass against
     // k broadcast centroids (the O(n²) pairwise silhouette is the
     // thing this variant exists to avoid at corpus scale)
-    "pl_silhouette" -> { (s, dir) =>
-      Similarity.silhouette(emb(s, dir), k = 8, iters = 2)
+    "pl_silhouette" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(Similarity.silhouette(emb(s, dir), k = 8, iters = 2))
         .select(col("cid"), col("n"), sround(col("sil")).as("sil"))
         .orderBy("cid")
-    },
+    }},
 
     // MMR diversified top-5 from the query's 20 ANN candidates
     // (Carbonell & Goldstein 1998): greedy relevance-minus-redundancy
@@ -1185,12 +1177,12 @@ object PipelineQueries {
 
     // SemDeDup: the pl_kmeans clustering + within-cluster cosine pairs
     // ≥ 0.4 + hash-min components; cid = kept representative
-    "pl_semdedup" -> { (s, dir) =>
+    "pl_semdedup" -> { (s, dir) => CacheScope.eager { cache =>
       val e = emb(s, dir)
-      Similarity.semanticDedup(e, k = sqrtSized(e, 8), iters = 2,
-        threshold = 0.4)
+      cache.keep(Similarity.semanticDedup(e, k = sqrtSized(e, 8), iters = 2,
+        threshold = 0.4))
         .orderBy("id")
-    },
+    }},
 
     // C4-style span dedup: first global occurrence of each sentence wins
     "pl_span_dedup" -> { (s, dir) =>
@@ -1562,7 +1554,7 @@ object PipelineQueries {
     // are the existing gated operators; the comparison is one full
     // outer join on the canonical (id1 < id2) pair key and exact
     // integer rates.
-    "pl_neardup_eval" -> { (s, dir) =>
+    "pl_neardup_eval" -> { (s, dir) => CacheScope.eager { cache =>
       // truth = the PREFIX-FILTER exact-Jaccard path (r12): provably
       // lossless (no df cap), and measured LINEAR sf0.1→sf1 where the
       // inverted-index chain is quadratic-prone — the truth chain was
@@ -1572,11 +1564,11 @@ object PipelineQueries {
       // sequentially, each chain's straggler tail idled the cores the
       // other chain could have been filling
       val (t, p) = Dedup.inParallel(
-        Dedup.prefixFilterPairs(docs(s, dir), n = 3, threshold = 0.8)
+        cache.keep(Dedup.prefixFilterPairs(docs(s, dir), n = 3, threshold = 0.8))
           .select(col("id1"), col("id2"), lit(1L).as("in_t")),
         // same AUTO-radius detector pl_neardup_edit verifies, so this
         // gate RECORDS the recall cost of each scale's tightened radius
-        Dedup.simhashPairsAuto(docs(s, dir))
+        cache.keep(Dedup.simhashPairsAuto(docs(s, dir)))
           .select(col("id1"), col("id2"), lit(1L).as("in_p")))
       t.join(p, Seq("id1", "id2"), "full_outer")
         .agg(sum(coalesce(col("in_t"), lit(0L))).as("n_truth"),
@@ -1591,25 +1583,26 @@ object PipelineQueries {
             .otherwise(expr("(tp * 10000) div n_pred")).as("prec_pm"),
           when(col("n_truth") === 0, lit(null).cast("long"))
             .otherwise(expr("(tp * 10000) div n_truth")).as("rec_pm"))
-    },
+    }},
 
     // adjusted Rand index between the MinHash-LSH (verified) clustering
     // and the SimHash clustering — ONE chance-corrected number for "can
     // the cheap bit-signature dedup stand in for the shingle pipeline";
     // contingency = one id join + hash agg, pair counts exact integers
-    "pl_rand_index" -> { (s, dir) =>
+    "pl_rand_index" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir)
       // the two detector chains are independent eager pipelines —
       // overlap them as concurrent jobs (guide §2.6; r16): the minhash
       // chain's verify tail and the simhash chain's candidate join
       // otherwise each leave most cores idle while the other waits
       val (mh, sh) = Dedup.inParallel(
-        Dedup.minhashLshPairs(d, 3, 0.8).select("id1", "id2"),
-        Dedup.simhashPairs(d, nBits = 60, maxHamming = 3).select("id1", "id2"))
-      Dedup.clusterAgreement(d, mh, sh)
+        cache.keep(Dedup.minhashLshPairs(d, 3, 0.8)).select("id1", "id2"),
+        cache.keep(Dedup.simhashPairs(d, nBits = 60, maxHamming = 3))
+          .select("id1", "id2"))
+      cache.keep(Dedup.clusterAgreement(d, mh, sh))
         .select(col("n"), col("sum_ij"), col("sum_a"), col("sum_b"),
           sround(col("ari")).as("ari"))
-    },
+    }},
 
     // two-sample Kolmogorov-Smirnov distance between every source
     // pair's token-count distributions: D = max |ecdf1 − ecdf2| as an
@@ -1677,7 +1670,7 @@ object PipelineQueries {
     // verify stage a production near-dup pipeline runs between the
     // cheap signature pass and the actual drop — O(len²) DP priced
     // only on candidate pairs, all-integer output
-    "pl_neardup_edit" -> { (s, dir) =>
+    "pl_neardup_edit" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir)
       // AUTO-radius signature pass (r13): at a fixed 60-bit budget the
       // radius-3 candidate set grows birthday-rate (verified pairs 17.4×
@@ -1686,17 +1679,17 @@ object PipelineQueries {
       // measured chunk-bucket collision mass exceeds 64 candidates/doc,
       // so verify cost tracks docs, not pairs. Recall cost is priced by
       // pl_neardup_eval under the same detector.
-      val cand = Dedup.simhashPairsAuto(d).select(col("id1"), col("id2"))
+      val cand = cache.keep(Dedup.simhashPairsAuto(d)).select(col("id1"), col("id2"))
       Dedup.editVerify(d, cand).orderBy("id1", "id2")
-    },
+    }},
 
     // Heaps-law vocabulary growth: cumulative docs/tokens/vocab at ten
     // ingestion-order checkpoints — does V(N) flatten, i.e. how big
     // must the tokenizer vocab / dedup hash space grow with the corpus
-    "pl_heaps" -> { (s, dir) =>
-      TextAnalysis.heapsGrowth(docs(s, dir), nBuckets = 10)
+    "pl_heaps" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(TextAnalysis.heapsGrowth(docs(s, dir), nBuckets = 10))
         .orderBy("bucket")
-    },
+    }},
 
     // Zipf rank-frequency OLS fit over the top-100 tokens: slope ≈ −1
     // is the natural-text signature; flat slopes flag templated or
@@ -1712,12 +1705,12 @@ object PipelineQueries {
     // against train-half counts with continuation-probability backoff —
     // one order deeper than add-α pl_bigram_nll, the smoothing KenLM
     // actually uses for CCNet-style quality scoring
-    "pl_kn_nll" -> { (s, dir) =>
-      TextAnalysis.knNll(docs(s, dir))
+    "pl_kn_nll" -> { (s, dir) => CacheScope.eager { cache =>
+      cache.keep(TextAnalysis.knNll(docs(s, dir)))
         .select(col("doc_id"), col("n_scored"), col("n_skip"),
           sround(col("nll")).as("nll"))
         .orderBy("doc_id")
-    },
+    }},
 
     // distinct-n lexical diversity (Li et al. 2016): distinct unigrams /
     // total and distinct bigrams / total per source — the repetition
@@ -1852,10 +1845,10 @@ object PipelineQueries {
     // scraped into crawl Y" before a training run. Pair-source-agnostic
     // like pl_soft_dedup — any pair relation plugs in; the source
     // attachment stays two id-equi joins on the (tiny) pair side
-    "pl_cross_source_leak" -> { (s, dir) =>
+    "pl_cross_source_leak" -> { (s, dir) => CacheScope.eager { cache =>
       val d = docs(s, dir)
       val src = d.select(col("doc_id"), col("source"))
-      Dedup.minhashLshPairs(d, 3, 0.8)
+      cache.keep(Dedup.minhashLshPairs(d, 3, 0.8))
         .select(col("id1"), col("id2"))
         .join(src.select(col("doc_id").as("id1"), col("source").as("sa")),
           "id1")
@@ -1865,7 +1858,7 @@ object PipelineQueries {
           greatest(col("sa"), col("sb")).as("src2"))
         .groupBy("src1", "src2").agg(count(lit(1)).as("n_pairs"))
         .orderBy("src1", "src2")
-    })
+    }})
 
   /** Inline fixture for [[queries]]' `pl_strip_html` — shared with its
     * oracle so gate and oracle can never drift.

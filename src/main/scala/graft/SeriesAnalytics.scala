@@ -755,9 +755,8 @@ object SeriesAnalytics {
     // fixed-shape IEEE expression chain (φ-columns per level, near-
     // singular denominators filtered) — the per-series work is O(K²)
     // scalar ops on a 4-column row, nothing iterates over data.
-    "q_pacf" -> { (s, dir) =>
-      val b = buckets6h(s, dir, "view")
-        .persist()
+    "q_pacf" -> { (s, dir) => CacheScope.eager { cache =>
+      val b = cache.keep(buckets6h(s, dir, "view"))
       val lagged = b
         .select(col("skey"), col("t"), col("b").as("bx"),
           explode(array((1 to 4).map(lit(_)): _*)).as("k"))
@@ -811,7 +810,7 @@ object SeriesAnalytics {
           sround(col("f22")).as("pacf2"), sround(col("f33")).as("pacf3"),
           sround(col("f44")).as("pacf4"))
         .orderBy("skey")
-    },
+    }},
 
     // ---- Apdex score (per series per day) ---------------------------
     // The latency-SLO summary ops dashboards report: satisfied

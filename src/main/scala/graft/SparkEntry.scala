@@ -1308,16 +1308,15 @@ object SparkEntry {
       // aggregations over the deduped frame (per-series state = that
       // series' values, the same bounded-group contract as exact pNN —
       // the percentile sketch route exists for unbounded groups) and two
-      // broadcast joins back; the deduped+quantized frame is persisted
+      // broadcast joins back; the deduped+quantized frame is kept
       // because three passes read it.
-      "q_mad" -> { (s, dir) =>
-        val d = graft.model.Dp.withSeriesKey(
+      "q_mad" -> { (s, dir) => CacheScope.eager { cache =>
+        val d = cache.keep(graft.model.Dp.withSeriesKey(
           DpView.dp(s, dir)
             .filter(col("metric") === "view" && col("ts").between(T0, T1)))
           .groupBy(col("skey"), col("ts"))
           .agg(max_by(col("value"), col("seq")).as("value"))
-          .withColumn("q", floor(col("value") * 10000 + 0.5 + 1e-6).cast("long"))
-          .persist()
+          .withColumn("q", floor(col("value") * 10000 + 0.5 + 1e-6).cast("long")))
         val med = d.groupBy("skey")
           .agg(percentile(col("q"), lit(0.5)).as("med"))
         val dev = d.join(broadcast(med), "skey")
@@ -1330,7 +1329,7 @@ object SparkEntry {
           .filter(col("rz") > 3.0)
           .select(col("skey"), col("ts"), sround(col("rz")).as("rz"))
           .orderBy("skey", "ts")
-      },
+      }},
 
       // BEYOND-REFERENCE autocorrelation profile: per series, the
       // lag-1..4 Pearson autocorrelation of 6h-bucketed value sums — the
@@ -1344,8 +1343,8 @@ object SparkEntry {
       // one fixed-shape IEEE expression. Shape at scale: one bucket
       // aggregation, a 4-way lag explode of the BUCKETED frame (not the
       // raw one), one self-join on (skey, bucket), one hash aggregate.
-      "q_acf" -> { (s, dir) =>
-        val b = graft.model.Dp.withSeriesKey(
+      "q_acf" -> { (s, dir) => CacheScope.eager { cache =>
+        val b = cache.keep(graft.model.Dp.withSeriesKey(
           DpView.dp(s, dir)
             .filter(col("metric") === "view" && col("ts").between(T0, T1)))
           .groupBy(col("skey"), col("ts"))
@@ -1354,8 +1353,7 @@ object SparkEntry {
           .groupBy(col("skey"),
             (col("ts") - pmod(col("ts"), lit(SIXH))).as("bucket"))
           .agg(sum(col("q")).as("sq_"))
-          .select(col("skey"), col("bucket"), expr("sq_ div 100").as("b"))
-          .persist()
+          .select(col("skey"), col("bucket"), expr("sq_ div 100").as("b")))
         val lagged = b
           .select(col("skey"), col("bucket"), col("b").as("bx"),
             explode(array((1 to 4).map(lit(_)): _*)).as("k"))
@@ -1376,7 +1374,7 @@ object SparkEntry {
               / sqrt(col("vx").cast("double") * col("vy").cast("double")))
           .select(col("skey"), col("k"), col("n"), sround(col("r")).as("r"))
           .orderBy("skey", "k")
-      },
+      }},
 
       // BEYOND-REFERENCE cohort series-outlier scan: which whole SERIES
       // deviates from its metric's cohort ("which host is broken") — a

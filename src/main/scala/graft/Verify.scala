@@ -23,9 +23,11 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"verify: $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val df = fn(spark, sfDir)
+        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        finally df.unpersist(true) // a materialized result is the gate's only cache
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

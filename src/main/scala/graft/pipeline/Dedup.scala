@@ -265,6 +265,10 @@ object Dedup {
     * (builds AND materializes its own frames — every producer in this
     * module is, and releases them through its [[CacheScope]] when it
     * fails or is cancelled); failures propagate to the caller unchanged.
+    *
+    * The chains' jobs run under the caller's job group and description
+    * (the pool threads inherit its local properties), so cancelling the
+    * caller's group cancels both chains.
     */
   private[graft] def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
     import scala.concurrent.{Await, ExecutionContext, Future, Promise}
@@ -274,51 +278,52 @@ object Dedup {
     // builders block on Spark actions for seconds-to-minutes, and two
     // such tasks parked on the CPU-sized global pool could starve other
     // users of it. One thread per builder is what keeps both running;
-    // the pool dies with the call.
+    // the pool dies with the call. Its threads are created by the first
+    // two submissions below, from the calling thread, so they inherit
+    // the caller's Spark local properties (job group, description).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    // Spark job-group/description properties are snapshotted per THREAD
-    // (InheritableThreadLocal) — capture the caller's label and job group
-    // id here and re-set them on the pool threads so the overlapped
-    // chains' jobs stay attributed to the calling gate in the UI, and so
-    // a failure can cancel the sibling's still-running jobs.
+    val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     // resolved lazily and defensively: a builder may be the thing that
     // CREATES the session (tests), so "no session yet" just means
-    // nothing to label/cancel yet
+    // nothing to tag/cancel yet
     def scOpt = org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       .map(_.sparkContext)
-    val callerDesc = scOpt
-      .map(_.getLocalProperty("spark.job.description")).orNull
-    val group = "graft-inParallel-" + inParallelSeq.incrementAndGet()
+    // a job tag, unlike a job group, adds to the caller's properties
+    // instead of replacing them: it only lets a failure cancel the
+    // sibling chain's jobs, interrupting their task threads so a task
+    // deep in a per-record UDF frees its core before this call returns
+    val tag = "graft-inParallel-" + inParallelSeq.incrementAndGet()
     def run[T](f: => T): Future[T] = Future {
-      scOpt.foreach { sc =>
-        sc.setJobGroup(group,
-          if (callerDesc != null) callerDesc else group,
-          interruptOnCancel = true)
-        if (callerDesc != null)
-          sc.setLocalProperty("spark.job.description", callerDesc)
-      }
+      scOpt.foreach { sc => sc.addJobTag(tag); sc.setInterruptOnCancel(true) }
       f
-    }
+    }(ec)
     val f1 = run(fa)
     val f2 = run(fb)
     // fail-FAST on either side (Future.zip alone waits out f1 before it
     // can see f2's failure), then cancel the surviving chain's Spark
-    // jobs and await its termination: without the cancel+await, the
-    // orphaned chain kept computing in the background and contaminated
-    // the NEXT gates' timed runs after Bench/Verify caught the error.
+    // jobs, interrupt its pre-Spark work, and await its termination:
+    // without that, the orphaned chain kept computing in the background
+    // and contaminated the NEXT gates' timed runs after Bench/Verify
+    // caught the error. The second cancel ends a job the chain submitted
+    // between the first and its interrupt. Callbacks run on the
+    // completing thread, so none is left for the pool once it shuts down.
     val first = Promise[(A, B)]()
-    f1.onComplete { case Failure(t) => first.tryFailure(t); case _ => () }
-    f2.onComplete { case Failure(t) => first.tryFailure(t); case _ => () }
-    f1.zip(f2).onComplete(first.tryComplete)
+    val parasitic = ExecutionContext.parasitic
+    f1.onComplete { case Failure(t) => first.tryFailure(t); case _ => () }(parasitic)
+    f2.onComplete { case Failure(t) => first.tryFailure(t); case _ => () }(parasitic)
+    f1.zip(f2).onComplete(first.tryComplete)(parasitic)
     try Await.result(first.future, Duration.Inf)
     catch {
       case t: Throwable =>
-        try scOpt.foreach(_.cancelJobGroup(group))
-        catch { case _: Throwable => () }
+        def cancel(): Unit =
+          try scOpt.foreach(_.cancelJobsWithTag(tag))
+          catch { case _: Throwable => () }
+        cancel()
+        pool.shutdownNow()
         try Await.ready(f1, Duration.Inf) catch { case _: Throwable => () }
         try Await.ready(f2, Duration.Inf) catch { case _: Throwable => () }
+        cancel()
         throw t
     } finally pool.shutdown()
   }
@@ -894,9 +899,11 @@ object Dedup {
     * id is their cluster's minimum ([[clusters]] over `pairs`). The
     * end-to-end "dedup the corpus" operation — broadcast-joinable when
     * the duplicate set is small relative to the corpus (the usual case);
-    * falls back to a shuffle join otherwise, both on the id key.
+    * falls back to a shuffle join otherwise, both on the id key. The
+    * result is lazy over a drop frame kept in the caller's `cache`, so
+    * it reads correctly until that scope ends.
     */
-  def collapse(docs: DataFrame, pairs: DataFrame,
+  def collapse(cache: CacheScope, docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id"): DataFrame = {
     // the drop set lives entirely in the pair subgraph (an isolated doc
     // is always its own cluster minimum), so collapse never widens the
@@ -904,16 +911,12 @@ object Dedup {
     // Materialize the SMALL side (drop ids, longs bounded by the pair
     // graph) and return the anti-join lazily: materializing the kept
     // frame would pin the whole text corpus in cache for no reason
-    // (measured 4× on the sf0.1 bench). The persisted drop frame stays
-    // cached for the session (same lifetime class as the pair frames the
-    // producers return): id-longs of the duplicate subgraph, evictable
-    // under memory pressure — callers looping per ingest round should
-    // prefer incrementalNearDups, which releases its intermediates.
-    val drop = CacheScope { cache =>
-      val d = subgraphLabels(cache, pairs, maxIter = 25, driverEdgeCap = 4L << 20)
-        .filter(col("id") =!= col("cid"))
-        .select(col("id"))
-        .persist()
+    // (measured 4× on the sf0.1 bench)
+    val drop = CacheScope { local =>
+      val d = cache.keep(
+        subgraphLabels(local, pairs, maxIter = 25, driverEdgeCap = 4L << 20)
+          .filter(col("id") =!= col("cid"))
+          .select(col("id")))
       d.count()
       d
     }
@@ -1050,7 +1053,7 @@ object Dedup {
     */
   def bloomDecontaminate(train: DataFrame, evalSet: DataFrame, n: Int = 4,
       mBits: Int = 1 << 22, k: Int = 4,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = CacheScope.eager { cache =>
     // per-doc distinct grams → the k Bloom positions, all inside ONE
     // typed flatMap (one MessageDigest, k digests per gram). The
     // declarative alternative — k × (concat ⊕ md5-hex ⊕ conv) Catalyst
@@ -1097,13 +1100,11 @@ object Dedup {
         }
         .toDF("id", "ps")
     }
-    // eval-sized and probed by all k joins — cached lazily so the eval
-    // hashing runs once per action; session-lifetime entry (the operator
-    // stays lazy), swept by Bench between gates
-    val bits = gramPositions(evalSet)
+    // eval-sized and probed by all k joins — kept so the eval hashing
+    // runs once
+    val bits = cache.keep(gramPositions(evalSet)
       .select(explode(col("ps")).as("pos"))
-      .distinct()
-      .persist()
+      .distinct())
     // a gram is flagged iff ALL k positions are set — k chained
     // broadcast LEFT SEMI joins, one per hash row, so the train side
     // never shuffles (an explode + groupBy(id, gram) formulation
@@ -1332,7 +1333,7 @@ object Dedup {
     * `pl_neardup_eval` at each scale.
     */
   def simhashPairsAuto(docs: DataFrame, nBits: Int = 60,
-      maxBucket: Int = 1000, budgetPerDoc: Long = 64): DataFrame = CacheScope { cache =>
+      maxBucket: Int = 1000, budgetPerDoc: Long = 64): DataFrame = CacheScope.eager { cache =>
     val sh = cache.keep(simhash(docs, nBits))
     val n = sh.count()
     // Σ C(bucket,2) at a c-way chunking: exact candidate count before
@@ -1350,12 +1351,11 @@ object Dedup {
       else 2
     // exactly the pigeonhole chunk index the probe priced (this
     // operator's scale lever is the radius, not simhashPairs'
-    // combinatorial index); the pair set materializes in its own eager
-    // scope before `sh` is released. The chosen radius
-    // rides along so a gate can pin the CHOICE itself
-    // (pl_dedup_simhash_auto), not just the pair set it induces
-    CacheScope.eager(_ => pairsFromKeyed(simhashChunked(sh, nBits, chunks),
-        maxHamming = chunks - 1, maxBucket))
+    // combinatorial index). The chosen radius rides along so a gate can
+    // pin the CHOICE itself (pl_dedup_simhash_auto), not just the pair
+    // set it induces
+    pairsFromKeyed(simhashChunked(sh, nBits, chunks),
+        maxHamming = chunks - 1, maxBucket)
       .withColumn("radius", lit(chunks - 1).cast("long"))
   }
 

@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Bench's per-gate counters: attribution to the labelled gate only,
-  * equal deterministic counters across runs, and the record's shape.
+  * equal deterministic counters across runs, and the record's shape; and
+  * that every gate leaves the session as it found it.
   */
 class BenchSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
@@ -143,5 +144,26 @@ class BenchSpec extends SparkSpec {
     } finally Seq("events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"$sf/$t.parquet").unpersist(true)
     }
+  }
+
+  test("every gate, its result unpersisted, leaves no cache behind") {
+    // what Bench, Verify and Explain rely on now that nothing sweeps the
+    // session between gates: a gate owns its caches (CacheScope)
+    val leaks = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      val (rdds, entries) = cacheState()
+      val outcome =
+        try {
+          val df = fn(spark, sf)
+          df.count()
+          df.unpersist(true)
+          None
+        } catch { case e: Exception => Some(s"$name failed: ${e.getMessage}") }
+      val (rddsAfter, entriesAfter) = cacheState()
+      val leaked = rddsAfter -- rdds
+      outcome.orElse(Option.when(leaked.nonEmpty || entriesAfter > entries)(
+        s"$name: ${leaked.size} RDDs, ${entriesAfter - entries} CacheManager entries"))
+    }
+    assert(leaks.isEmpty, s"${leaks.size} gates left cached state:\n" +
+      leaks.mkString("\n"))
   }
 }

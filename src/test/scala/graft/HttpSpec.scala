@@ -239,4 +239,33 @@ class HttpSpec extends SparkSpec {
     assert(resp.body().contains(""""metric":"graft.query.latency.ms""""))
     assert(resp.body().contains(""""func""""))
   }
+
+  test("server soak: 50 puts and 50 queries leave no cache beyond the first pair") {
+    val soakStore = new graft.store.Store(
+      spark, java.nio.file.Files.createTempDirectory("http_soak").toString)
+    val soak = new HttpApi(spark, soakStore, nowMs = () => Now).start()
+    val at = s"http://127.0.0.1:${soak.boundPort}"
+    def send(path: String, body: String): HttpResponse[String] =
+      client.send(HttpRequest.newBuilder(URI.create(s"$at$path"))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+    val query = s"""{"start":$T0s,"end":$T2s,"queries":[
+                   |  {"metric":"soak","aggregator":"sum","tags":{}}]}""".stripMargin
+    // request i puts one point per host at minute i, then reads the sum
+    def round(i: Int): Unit = {
+      val ts = T0s + 60L * i
+      val put = send("/api/put", Seq("h1", "h2")
+        .map(h => s"put soak $ts ${i + 1}.0 host=$h").mkString("\n"))
+      assert(put.statusCode() === 200, s"put $i: ${put.body()}")
+      val q = send("/api/query", query)
+      assert(q.statusCode() === 200, s"query $i: ${q.body()}")
+      assert(q.body().contains(s""""$ts":${2.0 * (i + 1)}"""), s"query $i: ${q.body()}")
+    }
+    try {
+      round(0)
+      val afterFirst = cacheState()
+      (1 until 50).foreach(round)
+      assertNoCacheBeyond(afterFirst, "50 HTTP puts and queries")
+    } finally soak.stop()
+  }
 }

@@ -85,7 +85,8 @@ class PipelineSpec extends SparkSpec {
       (1L, "aaa"), (2L, "bbb"), (3L, "ccc"), (4L, "ddd"), (5L, "eee"))
       .toDF("doc_id", "text")
     val pairs = Seq((1L, 3L), (3L, 5L), (2L, 4L)).toDF("id1", "id2")
-    val kept = Dedup.collapse(d, pairs).select("doc_id").as[Long].collect().toSet
+    val kept = CacheScope(cache =>
+      Dedup.collapse(cache, d, pairs).select("doc_id").as[Long].collect().toSet)
     assert(kept === Set(1L, 2L)) // cluster {1,3,5} → 1; {2,4} → 2
   }
 
@@ -1534,21 +1535,81 @@ class PipelineSpec extends SparkSpec {
     assert(boom.getMessage === "left")
     // fail-FAST on the SECOND slot: a right-side failure must not wait
     // out a long left chain (the pre-r17 form awaited f1 first), and the
-    // surviving chain's jobs are cancelled — the left builder here would
-    // take ~100 runs of the suite's budget if its job survived
-    val t0 = System.nanoTime()
-    val boom2 = intercept[IllegalStateException] {
-      Dedup.inParallel[Long, Int](
-        { Thread.sleep(3000); spark.range(5).count() },
-        throw new IllegalStateException("right"))
+    // surviving chain is stopped before it reaches Spark — its 3 s of
+    // pre-Spark work is interrupted, so it never submits its job
+    val sc = spark.sparkContext
+    val leftJobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("pipeline.spec.chain") == "left")
+          leftJobs.incrementAndGet()
     }
-    assert(boom2.getMessage === "right")
-    // the left chain sleeps 3 s before touching Spark; fail-fast means
-    // we do NOT wait for its Spark work, only for its termination — but
-    // the pre-Spark sleep itself is not interruptible work we cancel,
-    // so just assert the failure surfaced with the right exception and
-    // the call returned within the sleep + slack
-    assert((System.nanoTime() - t0) / 1e9 < 10.0)
+    sc.addSparkListener(listener)
+    try {
+      val boom2 = intercept[IllegalStateException] {
+        Dedup.inParallel[Long, Int](
+          {
+            sc.setLocalProperty("pipeline.spec.chain", "left")
+            Thread.sleep(3000)
+            spark.range(5).count()
+          },
+          throw new IllegalStateException("right"))
+      }
+      assert(boom2.getMessage === "right")
+      org.apache.spark.ListenerProbe.drain(sc)
+      assert(leftJobs.get === 0, "the surviving left chain still ran its job")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("inParallel: cancelling the caller's job group ends both chains") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{JobFailed, SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = "pipeline-spec-caller"
+    val started = new CountDownLatch(2)
+    val inGroup = new ConcurrentLinkedQueue[Int]
+    val ended = new ConcurrentLinkedQueue[(Int, Boolean)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          inGroup.add(e.jobId)
+          started.countDown()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        ended.add(e.jobId -> e.jobResult.isInstanceOf[JobFailed])
+    }
+    // each chain is one job whose tasks would sleep for two minutes
+    def longChain(): Long = spark.range(0, 2, 1, 2).as[Long]
+      .map { i => Thread.sleep(120000); i }.collect().sum
+    var outcome: Either[Throwable, (Long, Long)] = null
+    val caller = new Thread(() => {
+      sc.setJobGroup(group, "caller", interruptOnCancel = true)
+      outcome = try Right(Dedup.inParallel(longChain(), longChain()))
+        catch { case t: Throwable => Left(t) }
+      sc.clearJobGroup()
+    })
+    sc.addSparkListener(listener)
+    try {
+      caller.start()
+      assert(started.await(60, TimeUnit.SECONDS),
+        "the chains' jobs did not run under the caller's job group")
+      sc.cancelJobGroup(group)
+      caller.join(60000)
+      assert(!caller.isAlive, "cancelling the caller's group did not end the call")
+      assert(outcome.isLeft, s"the chains finished: $outcome")
+      org.apache.spark.ListenerProbe.drain(sc)
+      import scala.jdk.CollectionConverters._
+      val jobs = inGroup.asScala.toSet
+      val failed = ended.asScala.collect { case (id, true) => id }.toSet
+      assert(jobs.subsetOf(failed),
+        s"jobs $jobs of the group, cancelled: ${failed & jobs}")
+    } finally {
+      sc.removeSparkListener(listener)
+      if (caller.isAlive) caller.interrupt()
+    }
   }
 
   test("pl_neardup_eval: confusion counts consistent, rates exact") {
@@ -1988,7 +2049,19 @@ class PipelineSpec extends SparkSpec {
       "Similarity.ivfPqKnn" -> (() =>
         Similarity.ivfPqKnn(emb, emb.filter($"vec_id" < 3), k = 2)),
       "Sketches.cmsHeavyHitters" -> (() => Sketches.cmsHeavyHitters(docs)),
-      "TextAnalysis.tfidfKeywords" -> (() => TextAnalysis.tfidfKeywords(docs)))
+      "TextAnalysis.tfidfKeywords" -> (() => TextAnalysis.tfidfKeywords(docs)),
+      "TextAnalysis.unigramNll" -> (() => TextAnalysis.unigramNll(docs)),
+      "TextAnalysis.bigramNll" -> (() => TextAnalysis.bigramNll(docs)),
+      "TextAnalysis.sboNll" -> (() => TextAnalysis.sboNll(docs)),
+      "TextAnalysis.knNll" -> (() => TextAnalysis.knNll(docs)),
+      "TextAnalysis.heapsGrowth" -> (() => TextAnalysis.heapsGrowth(docs)),
+      "Dedup.bloomDecontaminate" -> (() => Dedup.bloomDecontaminate(
+        docs.filter($"doc_id" % 13 =!= 0), docs.filter($"doc_id" % 13 === 0))),
+      "Dedup.simhashPairsAuto" -> (() => Dedup.simhashPairsAuto(docs)),
+      // a lazy result: collapse keeps its drop frame in the caller's scope
+      "Dedup.collapse" -> (() => CacheScope.eager { cache =>
+        Dedup.collapse(cache, docs, cache.keep(Dedup.minhashLshPairs(docs)))
+      }))
     ops.foreach { case (name, op) =>
       val before = cacheState()
       val out = op()

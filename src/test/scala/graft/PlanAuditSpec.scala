@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Plan-shape regression net over the gate queries, using the same
-  * fingerprint parser as `Explain --plans-md`: asserts the properties
+  * fingerprint walk as `Explain --plans-md`: asserts the properties
   * that make these plans right at 100 TB — filter pushdown reaching the
   * parquet scan, bounded shuffle counts, no cartesian products or
   * nested-loop joins outside the deliberate broadcast-centroid/query
@@ -19,7 +19,30 @@ class PlanAuditSpec extends SparkSpec {
     val df: DataFrame = SparkEntry.queries(name)(spark, sf)
     df.count() // AQE-final plan
     val plan = df.queryExecution.explainString(FormattedMode)
-    (Explain.fingerprint(plan), plan)
+    (Explain.fingerprint(df.queryExecution.executedPlan), plan)
+  }
+
+  test("fingerprint counts what ran: final plans only, each cached plan once") {
+    // a materialized join of two materialized aggregates, one of them
+    // read twice: formatted explain prints every cached plan at each
+    // scan site, final and initial, and resumes the outer tree after
+    // each nested initial section
+    def agg(m: Int) = spark.range(0, 1000, 1, 4).selectExpr(s"id % $m AS k")
+      .groupBy("k").count()
+    val a = agg(7).persist()
+    val b = agg(5).withColumnRenamed("count", "n").persist()
+    val out = a.join(b, "k").join(a.withColumnRenamed("count", "c2"), "k")
+      .persist()
+    try {
+      Seq(a, b, out).foreach(_.count())
+      val plan = out.queryExecution.explainString(FormattedMode)
+      assert(plan.contains("== Initial Plan =="), plan)
+      val f = Explain.fingerprint(out.queryExecution.executedPlan)
+      // one exchange between each aggregate's partial and final halves
+      assert(f.exchanges === 2, plan)
+      assert(f.hashAggregates === 4, plan)
+      assert(f.broadcastJoins + f.sortMergeJoins === 2, plan)
+    } finally Seq(out, b, a).foreach(_.unpersist(true))
   }
 
   test("downsample scan: pushdown, no joins, hash-agg only, few shuffles") {
@@ -44,37 +67,14 @@ class PlanAuditSpec extends SparkSpec {
     // asymmetric-self-join lesson — each downstream reference re-runs
     // the whole upstream chain) shows up here as a budget breach before
     // it shows up as an sf1 regression. Measured: 9 real shuffles with
-    // the two persists.
-    // The count walks the EXECUTED tree — each cached relation priced
-    // once, exchange reuse priced zero — because the string fingerprint
-    // re-prints every cached subtree at every scan site.
+    // the two persists. The fingerprint prices each cached relation
+    // once and exchange reuse zero.
     val (f, plan) = fp("pl_e2e_curation")
     assert(f.nestedLoopJoins == 0 && !plan.contains("CartesianProduct"),
       s"a curation stage degenerated\n$plan")
     assert(f.sortAggregates == 0, s"lost hash aggregation\n$plan")
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    val df = SparkEntry.queries("pl_e2e_curation")(spark, sf)
-    df.count()
-    val seenCaches = scala.collection.mutable.Set.empty[SparkPlan]
-    def shuffles(p: SparkPlan): Int = {
-      val self = p match {
-        case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => 1
-        case _ => 0
-      }
-      val kids = p match {
-        case _: ReusedExchangeExec => Seq.empty // reuse: already priced
-        case c: InMemoryTableScanExec =>
-          if (seenCaches.add(c.relation.cachedPlan)) Seq(c.relation.cachedPlan)
-          else Seq.empty
-        case other => planKids(other)
-      }
-      self + kids.map(shuffles).sum
-    }
-    val n = shuffles(df.queryExecution.executedPlan)
-    assert(n <= 14,
-      s"composed curation shuffles: $n — cross-stage plan bloat (budget 14)")
+    assert(f.exchanges <= 14,
+      s"composed curation shuffles: ${f.exchanges} — cross-stage plan bloat (budget 14)")
   }
 
   test("near-dup blocked join: equi-join only — no cartesian, no BNLJ") {
@@ -245,8 +245,9 @@ class PlanAuditSpec extends SparkSpec {
     assert(f.nestedLoopJoins == 0 && !plan.contains("CartesianProduct"),
       s"candidate join degenerated\n$plan")
     assert(f.sortAggregates == 0, "bucket counts must stay hash-agg")
-    // measured: 7 (bucket-cap agg pair, cap semi-join, candidate
-    // self-join pair, pair distinct, output sort)
+    // measured: 7 before runtime (bucket-cap agg pair, cap semi-join,
+    // candidate self-join pair, pair distinct, output sort); AQE's final
+    // plan at sf0.001 broadcasts the semi-join and the self-join: 4
     assert(f.exchanges <= 7, s"simhash_auto shuffles: ${f.exchanges}\n$plan")
   }
 
