@@ -78,7 +78,7 @@ object Explain {
       })
   }
 
-  private val flagship = Seq("q_scan_range", "q_ds_avg", "q_agg_sum",
+  private[graft] val flagship = Seq("q_scan_range", "q_ds_avg", "q_agg_sum",
     "q_rate", "q_rollup_route", "q_routed_maintained", "pl_dedup_minhash",
     "pl_dedup_incr", "pl_knn_ivf", "pl_neardup_cos")
 
@@ -97,9 +97,9 @@ object Explain {
       case Seq("--plans-md", path) => writePlansMd(spark, sfDir, path)
       case picked =>
         val names = if (picked.isEmpty) flagship else picked
-        SparkEntry.queries.toSeq.sortBy(_._1)
-          .filter { case (n, _) => names.exists(n.contains) }
-          .foreach { case (name, fn) =>
+        SparkEntry.gates.sortBy(_.name)
+          .filter(g => names.exists(g.name.contains))
+          .foreach { case Gate(name, fn, _) =>
             println(s"\n========== $name ==========")
             val df = fn(spark, sfDir)
             try df.explain("formatted") finally df.unpersist(true)
@@ -113,7 +113,7 @@ object Explain {
     * plans for the flagship set.
     */
   private def writePlansMd(spark: SparkSession, sfDir: String, path: String): Unit = {
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val rows = SparkEntry.gates.sortBy(_.name).map { case Gate(name, fn, _) =>
       val df = fn(spark, sfDir)
       try {
         val err = try { df.count(); None } catch {

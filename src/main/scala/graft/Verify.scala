@@ -1,8 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each gate's result → parquet, plus its
+  * oracle SQL in oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -21,16 +21,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      spark.sparkContext.setJobDescription(s"verify: $name")
-      try {
-        val df = fn(spark, sfDir)
-        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        finally df.unpersist(true) // a materialized result is the gate's only cache
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -43,8 +33,17 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.gates.filter(g => selected(g.name)).map { g =>
+      spark.sparkContext.setJobDescription(s"verify: ${g.name}")
+      try {
+        val df = g.build(spark, sfDir)
+        try df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/${g.name}")
+        finally df.unpersist(true) // a materialized result is the gate's only cache
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${g.name} failed: ${e.getMessage}")
+      }
+      s"${q(g.name)}: ${q(g.oracle)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -10,6 +10,20 @@ import org.apache.spark.sql.functions._
   */
 object GraftFunctions {
 
+  /** The 4-decimal rounding rule shared with the DuckDB oracles
+    * (`SparkEntry.sroundSql`): `floor(x*10⁴ + 0.5 + 1e-6)/10⁴` evaluates
+    * identically in Spark and DuckDB on the same input double, unlike
+    * `round()` (Spark rounds the exact decimal expansion, DuckDB rounds
+    * after an fp multiply — they disagree on boundary doubles).
+    */
+  def round4(c: Column): Column = floor(c * 10000 + 0.5 + 1e-6) / 10000.0
+
+  /** [[round4]]'s grid index as a long: an integer that sums in any order. */
+  def quant4(c: Column): Column = floor(c * 10000 + 0.5 + 1e-6).cast("long")
+
+  /** JVM twin of [[quant4]]; `quant4(x) / 10000.0` is [[round4]]'s value. */
+  def quant4(x: Double): Long = math.floor(x * 10000 + 0.5 + 1e-6).toLong
+
   /** Exact OpenTSDB percentile, replicating the reference's R-6-style
     * interpolation (`src/agg/aggregate.cpp:341-387`):
     *

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.CacheScope
-import graft.functions.GraftFunctions.md5Hash60
+import graft.functions.GraftFunctions.{md5Hash60, round4}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -329,6 +329,29 @@ object Dedup {
   }
   private val inParallelSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Every doc pair sharing a shingle, `(id1, id2, i, n1, n2)` with
+    * id1 < id2: the intersection size `i` and both set sizes, by a
+    * shared-shingle equi-join. `maxDocFreq` drops shingles in more docs
+    * than that first (see [[ngramJaccardPairs]]).
+    */
+  private def sharedShingles(cache: CacheScope, docs: DataFrame, n: Int,
+      maxDocFreq: Option[Int]): DataFrame = {
+    // consumed by three plan branches (sizes + both join sides) — kept
+    // so tokenize+md5 runs once; spills to disk when it outgrows memory
+    var sh: DataFrame = cache.keep(shingleHashes(docs, n).select("id", "h"))
+    maxDocFreq.foreach { cap =>
+      val hot = sh.groupBy("h").count().filter(col("count") > cap).select("h")
+      sh = sh.join(hot, Seq("h"), "left_anti")
+    }
+    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
+    sh.as("a")
+      .join(sh.as("b"), col("a.h") === col("b.h") && col("a.id") < col("b.id"))
+      .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
+      .agg(count(lit(1)).as("i"))
+      .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("n", "n1"), "id1")
+      .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("n", "n2"), "id2")
+  }
+
   /** Near-duplicate pairs by exact n-gram Jaccard ≥ `threshold`.
     * `maxDocFreq` drops shingles appearing in more than that many docs —
     * the standard skew guard: a stop-shingle shared by 1M docs would
@@ -339,23 +362,7 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.8,
       maxDocFreq: Option[Int] = Some(1000)): DataFrame = CacheScope.eager { cache =>
-    // consumed by three plan branches (sizes + both join sides) — kept
-    // so tokenize+md5 runs once; spills to disk when it outgrows memory
-    var sh: DataFrame = cache.keep(shingleHashes(docs, n).select("id", "h"))
-    maxDocFreq.foreach { df =>
-      val hot = sh.groupBy("h").count().filter(col("count") > df).select("h")
-      sh = sh.join(hot, Seq("h"), "left_anti")
-    }
-    val sizes = sh.groupBy("id").agg(count("*").as("n"))
-    val a = sh.as("a")
-    val b = sh.as("b")
-    val inter = a
-      .join(b, col("a.h") === col("b.h") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
-      .agg(count("*").as("i"))
-    inter
-      .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("n", "n1"), "id1")
-      .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("n", "n2"), "id2")
+    sharedShingles(cache, docs, n, maxDocFreq)
       .withColumn("jaccard",
         col("i").cast("double") / (col("n1") + col("n2") - col("i")))
       .filter(col("jaccard") >= threshold)
@@ -476,19 +483,7 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, n: Int = 3, threshold: Double = 0.9,
       maxDocFreq: Option[Int] = Some(1000)): DataFrame = CacheScope.eager { cache =>
-    var sh: DataFrame = cache.keep(shingleHashes(docs, n).select("id", "h"))
-    maxDocFreq.foreach { cap =>
-      val hot = sh.groupBy("h").count().filter(col("count") > cap).select("h")
-      sh = sh.join(hot, Seq("h"), "left_anti")
-    }
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-    val inter = sh.as("a")
-      .join(sh.as("b"), col("a.h") === col("b.h") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("id1"), col("b.id").as("id2"))
-      .agg(count(lit(1)).as("i"))
-    val withSizes = inter
-      .join(sizes.withColumnRenamed("id", "id1").withColumnRenamed("n", "n1"), "id1")
-      .join(sizes.withColumnRenamed("id", "id2").withColumnRenamed("n", "n2"), "id2")
+    val withSizes = sharedShingles(cache, docs, n, maxDocFreq)
     // both orientations from the one intersection relation
     withSizes.select(col("id1").as("contained"),
         col("id2").as("container"),
@@ -515,25 +510,10 @@ object Dedup {
     */
   def containmentEstimate(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.5, maxBucket: Int = 100): DataFrame = CacheScope.eager { cache =>
-    val mins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("hp") * a + b, lit(MinhashP))).as(s"m$i")
-    }
     val base = cache.keep(shingleHashes(docs, n)
       .groupBy("id")
-      .agg(mins.head, (mins.tail :+ count(lit(1)).as("nsh")): _*))
-    val banded0 = bandRows(base)
-    val banded =
-      if (maxBucket <= 0) banded0
-      else banded0.join(
-        banded0.groupBy("band", "x", "y").agg(count(lit(1)).as("_bc"))
-          .filter(col("_bc") <= maxBucket).drop("_bc"),
-        Seq("band", "x", "y"), "left_semi")
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.x") === col("b.x") &&
-          col("a.y") === col("b.y") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .distinct()
+      .agg(signatureMins.head, (signatureMins.tail :+ count(lit(1)).as("nsh")): _*))
+    val cand = bandPairs(capBandBuckets(bandRows(base), maxBucket))
     def sigAs(suffix: String) = base.select(
       (col("id").as(s"id$suffix") +: col("nsh").as(s"n$suffix") +:
         (0 until 8).map(i => col(s"m$i").as(s"m${i}_$suffix"))): _*)
@@ -558,7 +538,7 @@ object Dedup {
         col("o.container").as("container"), col("o.e").as("e"))
       .filter(col("e") >= threshold)
       .select(col("contained"), col("container"),
-        (floor(col("e") * 10000 + 0.5 + 1e-6) / 10000.0).as("est"))
+        round4(col("e")).as("est"))
   }
 
   /** MinHash parameters shared with the oracle SQL: universal hashes
@@ -569,15 +549,17 @@ object Dedup {
   val MinhashA: Seq[Long] = Seq(1103L, 12289L, 331L, 7577L, 901L, 5519L, 241L, 6007L)
   val MinhashB: Seq[Long] = Seq(12345L, 101L, 20201L, 761L, 4099L, 33301L, 515L, 9001L)
 
+  /** The signature aggregates m0..m7 over a shingle relation's `hp`. */
+  private val signatureMins: Seq[Column] =
+    MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
+      min(pmod(col("hp") * a + b, lit(MinhashP))).as(s"m$i")
+    }
+
   /** Signatures from [[shingleHashes]] rows — `hp` is the oracle-shared
     * md5-derived base hash, so signatures reproduce in DuckDB.
     */
-  private def signaturesFrom(sh: DataFrame): DataFrame = {
-    val mins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("hp") * a + b, lit(MinhashP))).as(s"m$i")
-    }
-    sh.groupBy("id").agg(mins.head, mins.tail: _*)
-  }
+  private def signaturesFrom(sh: DataFrame): DataFrame =
+    sh.groupBy("id").agg(signatureMins.head, signatureMins.tail: _*)
 
   /** Per-document MinHash signature columns m0..m7. */
   def minhashSignatures(docs: DataFrame, n: Int = 3): DataFrame =
@@ -592,6 +574,24 @@ object Dedup {
       struct(lit(k).as("band"), col(s"m${2 * k}").as("x"), col(s"m${2 * k + 1}").as("y"))): _*))
       .as("bk"))
     .select(col("id"), col("bk.band"), col("bk.x"), col("bk.y"))
+
+  /** Distinct doc pairs `(id1, id2)`, id1 < id2, sharing a band bucket. */
+  private def bandPairs(banded: DataFrame): DataFrame =
+    banded.as("a")
+      .join(banded.as("b"),
+        col("a.band") === col("b.band") && col("a.x") === col("b.x") &&
+          col("a.y") === col("b.y") && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id1"), col("b.id").as("id2"))
+      .distinct()
+
+  /** Adds the exact Jaccard of the shingle-hash sets `hs1` and `hs2`: the
+    * intersection size `i` and `jaccard`.
+    */
+  private def withSetJaccard(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("i", size(array_intersect(col("hs1"), col("hs2"))).cast("double"))
+      .withColumn("jaccard",
+        col("i") / (size(col("hs1")) + size(col("hs2")) - col("i")))
 
   /** LSH candidate pairs (band match on the signature), verified by exact
     * Jaccard ≥ `threshold`. The band join is the scale path: candidates
@@ -620,35 +620,18 @@ object Dedup {
     // 8-byte-hash relation; fusing them halves the largest shuffle and
     // lets the shingle flatMap stream straight into the aggregation
     // with no persist (measured 7.2 s → 5.6 s on the sf1 gate)
-    val mins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("hp") * a + b, lit(MinhashP))).as(s"m$i")
-    }
     val base = cache.keep(shingleHashes(docs, n)
       .groupBy("id")
-      .agg(mins.head, (mins.tail :+ collect_set(col("h")).as("hs")): _*))
+      .agg(signatureMins.head, (signatureMins.tail :+ collect_set(col("h")).as("hs")): _*))
     // explode into 4 band keys: (band_id, m_{2k}, m_{2k+1})
-    val banded0 = bandRows(base)
-    val banded =
-      if (maxBucket <= 0) banded0
-      else banded0.join(
-        banded0.groupBy("band", "x", "y").agg(count(lit(1)).as("_bc"))
-          .filter(col("_bc") <= maxBucket).drop("_bc"),
-        Seq("band", "x", "y"), "left_semi")
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.x") === col("b.x") &&
-          col("a.y") === col("b.y") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .distinct()
+    val cand = bandPairs(capBandBuckets(bandRows(base), maxBucket))
     // exact verification per candidate: shingle-hash-set intersection
     // (the sets rode along in the fused aggregation above)
     val sets = base.select(col("id"), col("hs"))
     cand
       .join(sets.select(col("id").as("id1"), col("hs").as("hs1")), "id1")
       .join(sets.select(col("id").as("id2"), col("hs").as("hs2")), "id2")
-      .withColumn("i", size(array_intersect(col("hs1"), col("hs2"))).cast("double"))
-      .withColumn("jaccard",
-        col("i") / (size(col("hs1")) + size(col("hs2")) - col("i")))
+      .transform(withSetJaccard)
       .filter(col("jaccard") >= threshold)
       .select(col("id1"), col("id2"), col("jaccard"))
   }
@@ -694,12 +677,9 @@ object Dedup {
       shingleBuckets: Int = 0): DataFrame = CacheScope.eager { cache =>
     // new-side signatures and verification sets from ONE aggregation
     // over the batch shingles (same fusion as minhashLshPairs)
-    val newMins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(col("hp") * a + b, lit(MinhashP))).as(s"m$i")
-    }
     val newBase = cache.keep(shingleHashes(newDocs, n)
       .groupBy("id")
-      .agg(newMins.head, (newMins.tail :+ collect_set(col("h")).as("hs")): _*))
+      .agg(signatureMins.head, (signatureMins.tail :+ collect_set(col("h")).as("hs")): _*))
     // the corpus-side twin of minhashLshPairs' band-bucket skew guard: a
     // pathological index bucket would multiply EVERY future batch's probe
     // fan-out, so cap corpus bucket membership before the band join (the
@@ -755,9 +735,7 @@ object Dedup {
       .join(newSets.select(col("id").as("new_id"), col("hs").as("hs1")), "new_id")
       .join(corpusSets.select(col("id").as("corpus_id"), col("hs").as("hs2")),
         "corpus_id")
-      .withColumn("i", size(array_intersect(col("hs1"), col("hs2"))).cast("double"))
-      .withColumn("jaccard",
-        col("i") / (size(col("hs1")) + size(col("hs2")) - col("i")))
+      .transform(withSetJaccard)
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.CacheScope
+import graft.functions.GraftFunctions.{quant4, round4}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -58,7 +59,7 @@ object Retrieval {
       .withColumn("s",
         idf * (col("tf") * (k1 + 1)) /
           (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / avgdl)))
-      .withColumn("sq", floor(col("s") * 10000 + 0.5 + 1e-6).cast("long"))
+      .withColumn("sq", quant4(col("s")))
       .groupBy(col(qidCol), col(idCol))
       .agg((sum(col("sq")) / 10000.0).as("score"))
     val w = Window.partitionBy(col(qidCol))
@@ -111,7 +112,7 @@ object Retrieval {
           xlx(col("b"), col("tt") * col("rest") / nTotal) +
           xlx(col("c"), (lit(nTotal) - col("tt")) * col("gg") / nTotal) +
           xlx(col("d"), (lit(nTotal) - col("tt")) * col("rest") / nTotal)))
-      .withColumn("llr", floor(col("g2") * 10000 + 0.5 + 1e-6) / 10000.0)
+      .withColumn("llr", round4(col("g2")))
     val w = Window.partitionBy(col("grp"))
       .orderBy(col("llr").desc, col("token"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -228,10 +229,9 @@ object Retrieval {
     big.filter(col("c12") >= minCount)
       .join(uni.select(col("w").as("w1"), col("c").as("c1")), "w1")
       .join(uni.select(col("w").as("w2"), col("c").as("c2")), "w2")
-      .withColumn("pmi", floor(
+      .withColumn("pmi", round4(
         log((col("c12").cast("double") * nt * nt) /
-          (lit(nb) * col("c1").cast("double") * col("c2").cast("double")))
-          * 10000 + 0.5 + 1e-6) / 10000.0)
+          (lit(nb) * col("c1").cast("double") * col("c2").cast("double")))))
       .orderBy(col("pmi").desc, col("w1"), col("w2")).limit(k)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("pmi").desc, col("w1"), col("w2"))).cast("long"))
@@ -286,12 +286,11 @@ object Retrieval {
     // the pure-smoothing ratio), so the probe join is a plain inner join
     val lr = spark.range(buckets).select(col("id").cast("int").as("b"))
       .join(tgtCnt, Seq("b"), "left").join(rawCnt, Seq("b"), "left")
-      .withColumn("lrq", floor(
-        (log((coalesce(col("ct"), lit(0L)).cast("double") + alpha) /
+      .withColumn("lrq", quant4(
+        log((coalesce(col("ct"), lit(0L)).cast("double") + alpha) /
              lit(ntg + alpha * buckets)) -
          log((coalesce(col("cr"), lit(0L)).cast("double") + alpha) /
-             lit(nr + alpha * buckets)))
-          * 10000 + 0.5 + 1e-6).cast("long"))
+             lit(nr + alpha * buckets))))
       .select("b", "lrq")
     // top-k selection via TakeOrdered (orderBy+limit), rank over k rows
     raw
@@ -331,9 +330,8 @@ object Retrieval {
       .join(broadcast(sizes.toDF("src_a", "na")), "src_a")
       .join(broadcast(sizes.toDF("src_b", "nb")), "src_b")
       .select(col("src_a"), col("src_b"), col("n_common"),
-        (floor(col("n_common").cast("double")
-            / (col("na") + col("nb") - col("n_common"))
-            * 10000 + 0.5 + 1e-6) / 10000.0).as("jaccard"))
+        round4(col("n_common").cast("double")
+          / (col("na") + col("nb") - col("n_common"))).as("jaccard"))
       .orderBy("src_a", "src_b")
   }
 

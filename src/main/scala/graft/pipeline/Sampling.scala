@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.functions.GraftFunctions.md5Hash60
+import graft.functions.GraftFunctions.{md5Hash60, quant4}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,12 +85,11 @@ object Sampling {
       .collect().map(r => r.getString(0) -> r.getLong(1))
     val n = counts.map(_._2).sum
     val invT = 1.0 / temperature
-    def q4(x: Double): Long = math.floor(x * 10000 + 0.5 + 1e-6).toLong
-    val powq = counts.map { case (s, c) => s -> q4(math.pow(c.toDouble, invT)) }
+    val powq = counts.map { case (s, c) => s -> quant4(math.pow(c.toDouble, invT)) }
       .toMap
     val spq = powq.values.sum
     val rates = counts.map { case (s, c) =>
-      s -> (q4((n.toDouble * powq(s)) / (spq.toDouble * c)) / 10000.0)
+      s -> (quant4((n.toDouble * powq(s)) / (spq.toDouble * c)) / 10000.0)
     }.toMap
     mixtureSample(df, sourceCol, idCol, rates, defaultRate = 0.0, salt)
   }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.CacheScope
-import graft.functions.GraftFunctions.dotp
+import graft.functions.GraftFunctions.{dotp, quant4, round4}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -212,7 +212,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): Array[Long] = {
     val vq = emb.select(col(idCol),
       posexplode(transform(col(vecCol),
-        x => floor(x.cast("double") * 10000 + 0.5 + 1e-6).cast("long")))
+        x => quant4(x.cast("double"))))
         .as(Seq("j", "v")))
     val n = BigInt(emb.count())
     val sj = vq.groupBy("j").agg(sum(col("v")).as("s"))
@@ -250,8 +250,7 @@ object Similarity {
     val d = array(direction.map(lit): _*)
     val dot = aggregate(sequence(lit(0), lit(direction.length - 1)), lit(0L),
       (acc, i) => acc +
-        floor(element_at(col(vecCol), i + 1).cast("double") * 10000 + 0.5 + 1e-6)
-          .cast("long") * element_at(d, i + 1))
+        quant4(element_at(col(vecCol), i + 1).cast("double")) * element_at(d, i + 1))
     emb.select(col(idCol), (dot.cast("double") / 1e8).as("pc1"))
   }
 
@@ -270,7 +269,7 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     val vq = emb.select(col(idCol),
       posexplode(transform(col(vecCol),
-        x => floor(x.cast("double") * 10000 + 0.5 + 1e-6).cast("long")))
+        x => quant4(x.cast("double"))))
         .as(Seq("j", "v")))
     val mom = vq.groupBy("j").agg(
       count(lit(1)).as("n"), sum(col("v")).as("s1"),
@@ -314,7 +313,7 @@ object Similarity {
     // yields nulls (non-ANSI) and the aggregate would silently emit
     // null y rows — error per offending row instead
     val vq0 = transform(col(vecCol),
-      x => floor(x.cast("double") * 10000 + 0.5 + 1e-6).cast("long"))
+      x => quant4(x.cast("double")))
     val vq = when(size(col(vecCol)) >= dim, vq0).otherwise(raise_error(
       concat(lit(s"randomProject: embedding has fewer than dim=$dim components: "),
         size(col(vecCol)).cast("string"))))
@@ -328,13 +327,6 @@ object Similarity {
         (col("yq").cast("double") / 10000.0 / math.sqrt(outDim.toDouble))
           .as("y"))
   }
-
-  /** The shared gate rounding (PipelineQueries.sround's JVM twin) —
-    * centroids are rounded with it every k-means iteration so both
-    * engines iterate from bit-identical literals.
-    */
-  private def round4(x: Double): Double =
-    math.floor(x * 10000 + 0.5 + 1e-6) / 10000.0
 
   /** Lloyd k-means over the embedding column — corpus clustering for
     * curation pipelines (SemDeDup-style semantic grouping, cluster-
@@ -390,8 +382,10 @@ object Similarity {
           array((0 until dim).map(i =>
             sum(element_at(col("v"), i + 1))): _*).as("sv"))
         .as[(Long, Long, Seq[Double])].collect()
+      // centroids round to the oracle's 1e-4 grid every iteration, so
+      // both engines iterate from bit-identical literals
       val updated = sums.map { case (cid, n, sv) =>
-        cid -> sv.map(s => round4(s / n))
+        cid -> sv.map(s => quant4(s / n) / 10000.0)
       }.toMap
       cents = cents.map { case (cid, cv) => cid -> updated.getOrElse(cid, cv) }
     }
@@ -429,7 +423,7 @@ object Similarity {
       .withColumn("d2", aggregate(
         zip_with(col("v"), col("cv"), (x, c) => (x - c) * (x - c)),
         lit(0.0), (a, x) => a + x))
-      .withColumn("d2q", floor(col("d2") * 10000 + 0.5 + 1e-6).cast("long"))
+      .withColumn("d2q", quant4(col("d2")))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n"), (sum(col("d2q")) / 10000.0).as("inertia"))
   }
@@ -494,7 +488,7 @@ object Similarity {
     val cand = bruteKnn(corpus, corpus.filter(col(idCol) === queryId), kCand,
         idCol, vecCol)
       .select(col("nid"),
-        floor(col("cos") * 10000 + 0.5 + 1e-6).cast("long").as("relq"))
+        quant4(col("cos")).as("relq"))
     val rel = cand.as[(Long, Long)].collect().toMap
     val ids = rel.keySet
     val cv = prep(corpus.filter(col(idCol).isin(ids.toSeq: _*)), idCol,
@@ -502,8 +496,7 @@ object Similarity {
     val simPairs = cv.as("a")
       .join(cv.select(col("nid").as("mid"), col("nv").as("mv"),
         col("nn").as("mn")).as("b"), col("nid") < col("mid"))
-      .withColumn("simq", floor(
-        pairCos("nv", "nn", "mv", "mn") * 10000 + 0.5 + 1e-6).cast("long"))
+      .withColumn("simq", quant4(pairCos("nv", "nn", "mv", "mn")))
       .select(col("nid"), col("mid"), col("simq"))
       .as[(Long, Long, Long)].collect()
     val sim = simPairs.flatMap { case (a, b, s) =>
@@ -568,7 +561,7 @@ object Similarity {
             sum(element_at(col("sv"), i + 1))): _*).as("svs"))
         .as[(Int, Long, Long, Seq[Double])].collect()
       val updated = sums.map { case (s, cid, n, svs) =>
-        (s, cid) -> svs.map(x => round4(x / n))
+        (s, cid) -> svs.map(x => quant4(x / n) / 10000.0)
       }.toMap
       books = books.zipWithIndex.map { case (book, s) =>
         book.map { case (cid, cv) => cid -> updated.getOrElse((s, cid), cv) }
@@ -1092,7 +1085,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val dim = emb.select(size(col(vecCol)).as("d")).head.getInt(0)
     val q = transform(col(vecCol),
-      x => floor(x.cast("double") * 10000 + 0.5 + 1e-6).cast("long"))
+      x => quant4(x.cast("double")))
     val pts = emb.select(col(idCol).cast("long").as("id"), q.as("q"))
     val row = pts.agg(
       count(lit(1)).as("n"),
@@ -1108,8 +1101,7 @@ object Similarity {
       transform(col("q"), x => x * x), lit(0L), (acc, x) => acc + x)
     val scored = pts
       .withColumn("cos_centroid", when(q2 === 0L, lit(0.0)).otherwise(
-        floor(dot.cast("double") / (sqrt(q2.cast("double")) * math.sqrt(m2.toDouble))
-          * 10000 + 0.5 + 1e-6) / 10000.0))
+        round4(dot.cast("double") / (sqrt(q2.cast("double")) * math.sqrt(m2.toDouble)))))
       .select(col("id").as(idCol), col("cos_centroid"))
       .orderBy(col("cos_centroid"), col(idCol))
       .limit(k)

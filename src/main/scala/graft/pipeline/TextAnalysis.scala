@@ -2,6 +2,7 @@ package graft.pipeline
 
 import graft.CacheScope
 import graft.functions.GraftFunctions
+import graft.functions.GraftFunctions.{quant4, round4}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -341,8 +342,7 @@ object TextAnalysis {
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val idf = log(lit(n + 1.0) / (col("df") + 1.0)) + 1.0
     val scored = tf.join(dfreq, "token")
-      .withColumn("score",
-        floor(col("tf") * idf * 10000 + 0.5 + 1e-6) / 10000.0)
+      .withColumn("score", round4(col("tf") * idf))
     val w = Window.partitionBy(col(idCol))
       .orderBy(col("score").desc, col("token"))
     scored.withColumn("rank", row_number().over(w))
@@ -413,13 +413,12 @@ object TextAnalysis {
       eta: Double = 1.0, textCol: String = "text"): DataFrame = CacheScope { cache =>
     val spark = docs.sparkSession
     import spark.implicits._
-    def q4(c: Column): Column = floor(c * 10000 + 0.5 + 1e-6) / 10000.0
     val featNames = qualityFeatureCols(col(textCol), tokens(col(textCol)))
       .map(_._1)
     val base = withTokens(docs, textCol)
     val feats = qualityFeatureCols(col(textCol), col("w_"))
     val table = cache.keep(base.select(
-      feats.map { case (n, c) => q4(c).as(n) } :+
+      feats.map { case (n, c) => round4(c).as(n) } :+
         when(label, lit(1.0)).otherwise(lit(0.0)).as("y"): _*))
     val n = table.count().toDouble
     val w = Array.fill(featNames.size + 1)(0.0) // features then bias
@@ -435,8 +434,7 @@ object TextAnalysis {
         .head()
       var j = 0
       while (j <= featNames.size) {
-        w(j) = math.floor(
-          (w(j) - eta * (sums.getLong(j) / 1000000.0) / n) * 10000 + 0.5 + 1e-6) / 10000.0
+        w(j) = quant4(w(j) - eta * (sums.getLong(j) / 1000000.0) / n) / 10000.0
         j += 1
       }
     }

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.functions.GraftFunctions.quant4
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +34,7 @@ object Forecast {
     import spark.implicits._
     val out: Dataset[(String, Long, Double)] = series
       .select(col(keyCol).cast("string"), col(tsCol).cast("long"),
-        floor(col(valCol) * 10000 + 0.5 + 1e-6).cast("long"))
+        quant4(col(valCol)))
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (key, it) =>
@@ -75,7 +76,7 @@ object Forecast {
     val m = period
     val out: Dataset[(String, Long, Double)] = series
       .select(col(keyCol).cast("string"), col(tsCol).cast("long"),
-        floor(col(valCol) * 10000 + 0.5 + 1e-6).cast("long"))
+        quant4(col(valCol)))
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (key, it) =>
@@ -124,7 +125,7 @@ object Forecast {
     import spark.implicits._
     val out: Dataset[(String, Long, String)] = series
       .select(col(keyCol).cast("string"), col(tsCol).cast("long"),
-        floor(col(valCol) * 10000 + 0.5 + 1e-6).cast("long"))
+        quant4(col(valCol)))
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .mapGroups { (key, it) =>
@@ -177,7 +178,7 @@ object Forecast {
     import spark.implicits._
     val out: Dataset[(String, Long, Double, Boolean)] = series
       .select(col(keyCol).cast("string"), col(tsCol).cast("long"),
-        floor(col(valCol) * 10000 + 0.5 + 1e-6).cast("long"))
+        quant4(col(valCol)))
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (key, it) =>

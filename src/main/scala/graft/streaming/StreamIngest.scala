@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.GraftFunctions.quant4
 import graft.ingest.Ingest
 import graft.model.Dp
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -137,13 +138,13 @@ object StreamIngest {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val spark = series.sparkSession
     import spark.implicits._
-    val muQ = math.floor(mu * 10000 + 0.5 + 1e-6).toLong
+    val muQ = quant4(mu)
     val devQ = sigma * 10000.0
     val kQ = math.floor(devQ / 2.0).toLong
     val hQ = math.floor(devQ * 5.0).toLong
     series
       .select(col(keyCol).cast("string"), col(tsCol).cast("long"),
-        floor(col(valCol) * 10000 + 0.5 + 1e-6).cast("long"))
+        quant4(col(valCol)))
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[Long, (String, Long, Double)](

@@ -30,10 +30,10 @@ class IncrSessionSpec extends SparkSpec {
   }
 
   test("pl_dedup_incr_fixed is runnable from a second session on the same dir") {
-    val r1 = PipelineQueries.queries("pl_dedup_incr_fixed")(spark, sf)
+    val r1 = SparkEntry.queries("pl_dedup_incr_fixed")(spark, sf)
     val n1 = r1.count()
     val sess2 = spark.newSession()
-    val r2 = PipelineQueries.queries("pl_dedup_incr_fixed")(sess2, sf)
+    val r2 = SparkEntry.queries("pl_dedup_incr_fixed")(sess2, sf)
     assert(r2.count() === n1)
     assert(n1 > 0)
   }
@@ -86,7 +86,7 @@ object IncrRestartCheck {
     // (SparkEntry.storeFixture) — each must survive its first session
     // being STOPPED and re-resolve for the second
     def gates(s: SparkSession): (Long, Long) = (
-      PipelineQueries.queries("pl_dedup_incr_fixed")(s, dir).count(),
+      SparkEntry.queries("pl_dedup_incr_fixed")(s, dir).count(),
       SparkEntry.queries("q_routed_maintained")(s, dir).count())
     val s1 = fresh()
     val (n1, m1) = gates(s1)
