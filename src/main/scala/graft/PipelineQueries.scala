@@ -313,14 +313,6 @@ w$k AS MATERIALIZED (SELECT w.w, w.f, replace(w.s, '<'||b.a||'><'||b.b||'>', '<'
       s"+ (1.0 - len(list_distinct(w)) / CAST(len(w) AS DOUBLE)) * ${lrW("dup_token_frac")} " +
       s"+ least((length(text) - (len(w) - 1)) / (CAST(len(w) AS DOUBLE) * 8.0), 1.0) * ${lrW("avg_word_len_norm")})))"
 
-  private val fcLangScores = TextAnalysis.langProfiles.map { case (lang, ws) =>
-    s"len(list_filter(w, t -> t IN (${stopIn(ws)}))) AS s_$lang"
-  }.mkString(",\n    ")
-
-  private val fcLangCase = TextAnalysis.langProfiles
-    .map { case (lang, _) => s"WHEN s_$lang = best AND best > 0 THEN '$lang'" }
-    .mkString(" ")
-
   private val sigCols = Dedup.MinhashA.zip(Dedup.MinhashB).zipWithIndex.map {
     case ((a, b), i) => s"min(($a * h + $b) % ${Dedup.MinhashP}) AS m$i"
   }.mkString(",\n    ")
@@ -1068,12 +1060,12 @@ r AS (
          |  SELECT source, CAST(len(w) AS BIGINT) AS ntok,
          |    $qualitySql AS q,
          |    $lrScoreSql AS lr,
-         |    $fcLangScores
+         |    $langScores
          |  FROM t),
          |b AS (SELECT *, greatest($langBest) AS best FROM f),
          |r AS (
          |  SELECT source, ntok, q, lr,
-         |    CASE $fcLangCase ELSE 'und' END AS lang
+         |    CASE $langCase ELSE 'und' END AS lang
          |  FROM b)
          |SELECT source, count(*) AS n_docs,
          |  CAST(sum(ntok) AS BIGINT) AS n_tokens,
@@ -1480,13 +1472,13 @@ r AS (
          |  SELECT doc_id, keep_id, len(w) AS ntok,
          |    $dupFracSql AS dupfrac,
          |    $qualitySql AS q,
-         |    $fcLangScores
+         |    $langScores
          |  FROM t),
          |best AS (SELECT *, greatest($langBest) AS best FROM feat),
          |r AS (
          |  SELECT feat.doc_id,
          |    CASE WHEN feat.doc_id != keep_id THEN 'duplicate'
-         |         WHEN (CASE $fcLangCase ELSE 'und' END) != 'en' THEN 'lang'
+         |         WHEN (CASE $langCase ELSE 'und' END) != 'en' THEN 'lang'
          |         WHEN ntok < 15 THEN 'too_short'
          |         WHEN ntok > 95 THEN 'too_long'
          |         WHEN dupfrac > 0.65 THEN 'repetitive_tokens'
@@ -1829,13 +1821,13 @@ r AS (
          |  SELECT doc_id, keep_id, len(w) AS ntok,
          |    $dupFracSql AS dupfrac,
          |    $qualitySql AS q,
-         |    $fcLangScores
+         |    $langScores
          |  FROM t),
          |best AS (SELECT *, greatest($langBest) AS best FROM feat),
          |fcr AS (
          |  SELECT feat.doc_id,
          |    CASE WHEN feat.doc_id != keep_id THEN 'duplicate'
-         |         WHEN (CASE $fcLangCase ELSE 'und' END) != 'en' THEN 'lang'
+         |         WHEN (CASE $langCase ELSE 'und' END) != 'en' THEN 'lang'
          |         WHEN ntok < 15 THEN 'too_short'
          |         WHEN ntok > 95 THEN 'too_long'
          |         WHEN dupfrac > 0.65 THEN 'repetitive_tokens'

@@ -97,14 +97,14 @@ object ServerMain {
     val udpOn = !strict || cfg.bool("udp.server.enabled", false)
     // diediedie on the put socket = full-process shutdown, like the
     // reference's admin stop task (admin.cpp:317-331)
-    val tcp = if (!tcpOn) None else Some(new TcpLineServer(spark, store,
+    val tcp = if (!tcpOn) None else Some(new TcpLineServer(store,
       proto = "plain", port = tcpPort, seqs = seqs,
       walDir = wal("tcp-plain"), bindAddr = bind,
       recorder = Some(recorder), onShutdownCmd = Some(() => sys.exit(0))))
-    val influx = if (!tcpOn) None else Some(new TcpLineServer(spark, store,
+    val influx = if (!tcpOn) None else Some(new TcpLineServer(store,
       proto = "influx", port = influxPort, seqs = seqs,
       walDir = wal("tcp-influx"), bindAddr = bind))
-    val udp = if (!udpOn) None else Some(new UdpLineServer(spark, store,
+    val udp = if (!udpOn) None else Some(new UdpLineServer(store,
       port = udpPort, seqs = seqs, walDir = wal("udp"), bindAddr = bind))
     // MQTT subscription (the reference's mqtt.settings,
     // `src/utils/mqtt.cpp:101-210`). Two spellings: the compact env form
@@ -128,7 +128,7 @@ object ServerMain {
     val mqttSpecs = mqttEnv.getOrElse(
       parseMqttSettings(cfg.str("mqtt.settings", "")))
     val mqtt = mqttSpecs.map { case (host, mport, topics) =>
-      new MqttLineClient(spark, store, host, mport, topics,
+      new MqttLineClient(store, host, mport, topics,
         seqs = seqs, walDir = wal("mqtt"))
     }
     // retention purge: a set tsdb.retention.threshold drops day

@@ -16,9 +16,11 @@ import org.apache.spark.sql.SparkSession
   * (`src/core/http.cpp:95-116`, over its TCP server `src/core/tcp.cpp:339`).
   * Zero new dependencies: `com.sun.net.httpserver` ships with the JDK.
   *
-  * The driver JVM hosts the server; each request plans and runs ordinary
-  * Spark jobs, so a query's heavy lifting is distributed while the HTTP
-  * edge only shuttles the capped, collected response. All JSON/text
+  * The driver JVM hosts the server; each query plans and runs ordinary
+  * Spark jobs, so its heavy lifting is distributed while the HTTP edge
+  * only shuttles the capped, collected response. A put's parsed batch is
+  * already on the driver, and the store commits it there, with no Spark
+  * job ([[Store.ingest]]'s `Seq[Dp]` form). All JSON/text
   * shaping stays in the codec objects ([[QueryApi]], [[Info]], [[Admin]],
   * [[Meta]]) — this file is routing, parameter decoding, ingest seq
   * stamping, and status codes.
@@ -171,10 +173,8 @@ final class HttpApi(
       .forall(LineParsers.influxWellFormed)) 200 else 400), "", Plain)
   }
 
-  private def ingest(dps: Seq[Dp]): Unit = if (dps.nonEmpty) {
-    import spark.implicits._
-    store.ingest(spark.createDataset(seqs.stamp(dps)).toDF())
-  }
+  private def ingest(dps: Seq[Dp]): Unit =
+    if (dps.nonEmpty) store.ingest(seqs.stamp(dps))
 
   /** Top-level element count of a JSON put body (for the failed count —
     * the reference counts per-object parse failures, tsdb.cpp:2349-2378).
@@ -251,7 +251,7 @@ final class HttpApi(
   def flushSelfMetrics(): Seq[SelfMetrics.Sample] = {
     val samples = recorder.map(_.drain()).getOrElse(Nil)
     if (samples.nonEmpty)
-      store.ingest(SelfMetrics.toDp(spark, samples, nextSeqWindow()))
+      store.ingest(SelfMetrics.toDp(samples, nextSeqWindow()))
     samples
   }
 

@@ -2,7 +2,8 @@ package graft.api
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.model.Dp
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -12,10 +13,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (`src/utils/stats.cpp:230-600`, `src/core/query.cpp:1311-1314`).
   *
   * A [[QueryExecutionListener]] records one latency sample per completed
-  * DataFrame action; [[SelfMetrics.toDp]] shapes the samples as the
-  * canonical dp schema so they can be written through the normal ingest
-  * path (`Ingest.writePartitioned`) and queried with the same planner as
-  * any other metric.
+  * DataFrame action; [[SelfMetrics.toDp]] shapes the samples as
+  * canonical data points, so they are written through the store's
+  * ingest and queried with the same planner as any other metric.
   */
 object SelfMetrics {
 
@@ -66,18 +66,14 @@ object SelfMetrics {
     r
   }
 
-  /** Drained samples as the canonical dp frame (metric, tags, ts, value,
-    * seq) — ready for `Ingest.writePartitioned` / the query planner.
-    * `baseSeq` offsets the within-batch index so repeated flushes into a
-    * maintained [[graft.store.Store]] keep seq increasing across batches
-    * (the store's dedup contract).
+  /** Drained samples as canonical data points, ready for the driver-side
+    * [[graft.store.Store.ingest]]. `baseSeq` offsets the within-batch
+    * index so repeated flushes into a maintained store keep seq
+    * increasing across batches (the store's dedup contract).
     */
-  def toDp(spark: SparkSession, samples: Seq[Sample],
-      baseSeq: Long = 0L): DataFrame = {
-    import spark.implicits._
+  def toDp(samples: Seq[Sample], baseSeq: Long = 0L): Seq[Dp] =
     samples.zipWithIndex.map { case (s, i) =>
-      (s.metric, Map("func" -> s.func, "status" -> s.status), s.tsMs, s.value,
+      Dp(s.metric, Map("func" -> s.func, "status" -> s.status), s.tsMs, s.value,
         baseSeq + i.toLong)
-    }.toDF("metric", "tags", "ts", "value", "seq")
-  }
+    }
 }

@@ -6,7 +6,6 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicBoolean
 
 import graft.store.Store
-import org.apache.spark.sql.SparkSession
 
 /** Minimal MQTT 3.1.1 wire codec — just the packets a subscribing
   * telemetry client needs (CONNECT/CONNACK, SUBSCRIBE/SUBACK, PUBLISH/
@@ -128,7 +127,6 @@ object MqttCodec {
   * Kafka instead — same parsers, same store ([[graft.streaming.StreamIngest]]).
   */
 final class MqttLineClient(
-    spark: SparkSession,
     store: Store,
     broker: String,
     port: Int,
@@ -144,10 +142,10 @@ final class MqttLineClient(
 
   private val formatOf = topics.toMap
   private val plainBatcher = new LineBatcher(
-    spark, store, l => LineParsers.parsePlain(l).toSeq, lingerMs, maxBatch,
+    store, l => LineParsers.parsePlain(l).toSeq, lingerMs, maxBatch,
     seqs, walDir.map(d => new Wal(d + "/plain")))
   private val lineBatcher = new LineBatcher(
-    spark, store, l => LineParsers.parseInflux(l, nowMs()), lingerMs,
+    store, l => LineParsers.parseInflux(l, nowMs()), lingerMs,
     maxBatch, seqs, walDir.map(d => new Wal(d + "/line")))
 
   private val running = new AtomicBoolean(true)

@@ -9,7 +9,6 @@ import scala.io.Source
 
 import graft.model.Dp
 import graft.store.Store
-import org.apache.spark.sql.SparkSession
 
 /** Monotonic per-batch seq windows for driver-side ingest edges (HTTP
   * request bodies, TCP connections, UDP packets). Each batch claims a
@@ -37,19 +36,19 @@ final class SeqWindows(nowMs: () => Long = () => System.currentTimeMillis()) {
 
 /** Line-batching core shared by the socket transports: receiver threads
   * enqueue raw lines; one flusher thread drains them into
-  * [[Store.ingest]] batches (parse → seq-stamp → one Spark job per
-  * micro-batch). Batching is the load-bearing part — one job per LINE
-  * would drown the scheduler; one job per accumulated batch is the same
-  * shape as Structured Streaming's micro-batches and the reference's
-  * per-connection buffer flush (`src/core/tcp.cpp:460-534`).
+  * [[Store.ingest]] batches (parse → seq-stamp → one store commit per
+  * micro-batch). Batching is the load-bearing part — one commit per LINE
+  * would write a file set per point; one commit per accumulated batch is
+  * the same shape as Structured Streaming's micro-batches and the
+  * reference's per-connection buffer flush (`src/core/tcp.cpp:460-534`).
   *
-  * The driver JVM hosts the listener (like the HTTP edge); everything
-  * after `Store.ingest` is ordinary distributed Spark. A deployment that
-  * needs more edge bandwidth than one driver socket puts Kafka in front
-  * and uses [[graft.streaming.StreamIngest]] — same parsers, same store.
+  * The driver JVM hosts the listener (like the HTTP edge), and a batch is
+  * already on the driver, so the store commits it there without a Spark
+  * job. A deployment that needs more edge bandwidth than one driver
+  * socket puts Kafka in front and uses [[graft.streaming.StreamIngest]] —
+  * same parsers, same store, its DataFrame ingest.
   */
 private[graft] final class LineBatcher(
-    spark: SparkSession,
     store: Store,
     parse: String => Seq[Dp],
     lingerMs: Long,
@@ -90,10 +89,7 @@ private[graft] final class LineBatcher(
       // regardless of data-point failures (tsdb.cpp:2440-2450) — a data
       // error must not silently drop replication progress markers
       try {
-        if (dps.nonEmpty) {
-          import spark.implicits._
-          store.ingest(spark.createDataset(dps).toDF())
-        }
+        if (dps.nonEmpty) store.ingest(dps)
       } finally cps.foreach(l => store.checkpoints.add(l.stripPrefix("_cp ").trim))
     }
   }
@@ -166,7 +162,6 @@ private[graft] final class LineBatcher(
   * @param proto "plain" (OpenTSDB put) or "influx" (line protocol)
   */
 final class TcpLineServer(
-    spark: SparkSession,
     store: Store,
     proto: String = "plain",
     port: Int = 0, // 0 = ephemeral (tests)
@@ -195,7 +190,7 @@ final class TcpLineServer(
   }
 
   private val batcher = new LineBatcher(
-    spark, store, parse, lingerMs, maxBatch, seqs, walDir.map(new Wal(_)))
+    store, parse, lingerMs, maxBatch, seqs, walDir.map(new Wal(_)))
   private val server = new ServerSocket()
   server.bind(new InetSocketAddress(bindAddr, port))
 
@@ -218,7 +213,7 @@ final class TcpLineServer(
           // HttpApi's /api/stats (tsdb.cpp:2403-2406 → stats handler)
           val samples = recorder.map(_.drain()).getOrElse(Nil)
           if (samples.nonEmpty)
-            store.ingest(graft.api.SelfMetrics.toDp(spark, samples, seqs.next()))
+            store.ingest(graft.api.SelfMetrics.toDp(samples, seqs.next()))
           reply(graft.api.Info.statsLines(samples))
         case "help" if proto == "plain" =>
           reply("available commands: put stats version help diediedie")
@@ -264,7 +259,6 @@ final class TcpLineServer(
   * by construction; drops under overload are the protocol's contract.
   */
 final class UdpLineServer(
-    spark: SparkSession,
     store: Store,
     port: Int = 0,
     lingerMs: Long = 200L,
@@ -274,7 +268,7 @@ final class UdpLineServer(
     bindAddr: String = "127.0.0.1") {
 
   private val batcher = new LineBatcher(
-    spark, store, l => LineParsers.parsePlain(l).toSeq, lingerMs, maxBatch,
+    store, l => LineParsers.parsePlain(l).toSeq, lingerMs, maxBatch,
     seqs, walDir.map(new Wal(_)))
   private val socket = new DatagramSocket(new InetSocketAddress(bindAddr, port))
 

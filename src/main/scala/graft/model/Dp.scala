@@ -1,5 +1,7 @@
 package graft.model
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,6 +45,24 @@ object Dp {
       ",")
     // concat_ws skips nulls → tagless series key is just the metric
     concat_ws(",", metric, nullif(joined, lit("")))
+  }
+
+  /** [[seriesKey]] of one point, on the driver: the string Spark derives.
+    * `array_sort` orders tag keys by their UTF-8 bytes, which is code
+    * point order, while `String`'s own ordering compares UTF-16 code
+    * units — the two disagree between a supplementary character and one
+    * in U+E000–U+FFFF — so the keys sort by their UTF-8 bytes here. A tag
+    * with a null value is dropped, as `array_join` drops its null entry,
+    * and the key reads back through UTF-8 as a Spark string does (an
+    * unpaired surrogate becomes '?').
+    */
+  def seriesKey(metric: String, tags: Map[String, String]): String = {
+    val entries = Option(tags).getOrElse(Map.empty).toSeq.filter(_._2 != null)
+      .map { case (k, v) => (k.getBytes(UTF_8), s"$k=$v") }
+      .sortWith((a, b) => java.util.Arrays.compareUnsigned(a._1, b._1) < 0)
+    val key = (Option(metric) ++ Some(entries.map(_._2).mkString(",")).filter(_.nonEmpty))
+      .mkString(",")
+    new String(key.getBytes(UTF_8), UTF_8)
   }
 
   /** Attach the canonical `skey` column. */

@@ -13,8 +13,8 @@ import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,11 +24,19 @@ import org.apache.spark.sql.types._
   * older than the catalog's resident week; queries never derive them
   * from fact data.
   *
-  * Raw data lives in date partitions, one parquet file per batch
-  * partition and date (compacted per date on a batch cadence). Each row
-  * carries the dp columns and its canonical series key `skey`, written
-  * next to them, so a query reads the key instead of deriving it per row
-  * (see [[readDataFiles]] for files written without it).
+  * A batch comes in through one of two entry points, which differ only
+  * in their data writer. A batch already on the driver (an HTTP put, a
+  * socket batch, the self-metrics flush) is `ingest(Seq[Dp])`: the
+  * driver writes one parquet file per date and runs no Spark job. A
+  * DataFrame (a streaming micro-batch, a bulk load) is
+  * `ingest(DataFrame)`: Spark writes one file per batch partition and
+  * date. Both compute the metadata partials with one kernel,
+  * [[Store.slicePartials]] — on the driver, or in the tasks of one
+  * shuffle by (skey, day) — and share the rest of the commit. Raw data
+  * lives in date partitions, compacted per date on a batch cadence. Each
+  * row carries the dp columns and its canonical series key `skey`,
+  * written next to them, so a query reads the key instead of deriving it
+  * per row (see [[readDataFiles]] for files written without it).
   *
   *   - `series_index` (skey, metric, tags): the per-metric series
   *     registry (`g_metric_map` + `Mapping`, reference
@@ -183,9 +191,8 @@ final class Store(spark: SparkSession, root: String,
   def dataForRange(startMs: Long, endMs: Long, slackMs: Long = 0L): DataFrame =
     currentDataManifest() match {
       case Some((_, entries)) =>
-        def ld(ms: Long) = java.time.Instant.ofEpochMilli(ms).atZone(sessionZone).toLocalDate
-        val lo = ld(startMs - slackMs).minusDays(1).toString
-        val hi = ld(endMs + slackMs).plusDays(1).toString
+        val lo = localDate(startMs - slackMs).minusDays(1).toString
+        val hi = localDate(endMs + slackMs).plusDays(1).toString
         // ISO date strings order lexicographically = chronologically
         readDataFiles(entries.view.filterKeys(d => d >= lo && d <= hi)
           .values.flatten.toSeq)
@@ -194,6 +201,12 @@ final class Store(spark: SparkSession, root: String,
 
   private def sessionZone = java.time.ZoneId.of(
     spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID))
+
+  /** The date of `ms` in `zone`: a data row's `date=` partition under the
+    * session timezone, as `to_date` derives it.
+    */
+  private def localDate(ms: Long, zone: java.time.ZoneId = sessionZone) =
+    java.time.Instant.ofEpochMilli(ms).atZone(zone).toLocalDate
 
   /** Committed data files as dp columns + `skey`. Files the store wrote
     * carry the key (named `*.sk.parquet`), and the scan reads it as a
@@ -390,31 +403,59 @@ final class Store(spark: SparkSession, root: String,
     */
   val checkpoints = new CheckPoints(spark, root)
 
-  /** Ingest one batch: append the data, then append the batch's
-    * metadata deltas. Thread-safe: batches from concurrent edges are
-    * serialized on [[writeLock]].
+  /** Ingest one batch held as a DataFrame (a streaming micro-batch, a
+    * bulk load): Spark writes its data ([[appendData]]) while the
+    * partials are computed in one shuffle ([[computeSliceState]]).
+    * Thread-safe: batches from concurrent edges are serialized on
+    * [[writeLock]].
     */
-  def ingest(batch: DataFrame): Unit = writeLock.synchronized {
+  def ingest(batch: DataFrame): Unit = commit {
+    CacheScope { cache =>
+      val keyed = cache.keep(Dp.withSeriesKey(batch.select(Dp.columns.map(col): _*)))
+      // The append and the slice partials race on materializing the
+      // SAME cached `keyed` blocks (the block manager serializes
+      // per-partition computes), so the append's write overlaps the
+      // partials instead of following it
+      val dataCommit = Future(appendData(keyed))(ingestPool)
+      val partials = computeSliceState(keyed)
+      Await.result(dataCommit, Duration.Inf)
+      partials
+    }
+  }
+
+  /** Ingest one batch already on the driver (an HTTP put, a socket
+    * batch, a self-metrics flush): the driver keys it, writes one data
+    * file per date ([[appendLocal]]) and runs [[Store.slicePartials]]
+    * itself — no Spark job and no generated class. Thread-safe like the
+    * DataFrame form.
+    */
+  def ingest(dps: Seq[Dp]): Unit = commit {
+    val keyed = dps.map(d => Dp.seriesKey(d.metric, d.tags) -> d)
+    appendLocal(keyed)
+    keyed.groupBy { case (k, d) => (k, Store.floorTo(d.ts, Rollup.DayMs)) }.toSeq
+      .flatMap { case ((k, day), rows) =>
+        Store.slicePartials(k, day,
+          rows.map(_._2).sortBy(_.seq).map(d => (d.ts, Double.box(d.value))))
+      }
+  }
+
+  /** The commit both ingest forms share around their data writer:
+    * snapshot the checkpoints, take the catalog the batch is checked
+    * against, let `writeData` commit the data and return its partials,
+    * then commit the metadata, run the compaction cadence and persist the
+    * checkpoints.
+    */
+  private def commit(writeData: => Seq[Store.Partial]): Unit = writeLock.synchronized {
     // snapshot BEFORE the flush: checkpoints that arrive mid-commit wait
     // for the next cycle, exactly the reference's rotate-task ordering
     checkpoints.takeSnapshot()
     // the state this batch is checked against: current without a job
     // unless another process committed since the last check
     val prior = catalog()
-    val days = CacheScope { cache =>
-      val keyed = cache.keep(Dp.withSeriesKey(batch.select(Dp.columns.map(col): _*)))
-      // The append and the slice aggregation race on materializing the
-      // SAME cached `keyed` blocks (the block manager serializes
-      // per-partition computes), so the append's write overlaps the
-      // aggregation instead of following it
-      val dataCommit = Future(appendData(keyed))(ingestPool)
-      val partials = computeSliceState(keyed)
-      // metadata must not commit before the data it describes: a crash
-      // window may lose metadata for committed data but never the reverse
-      Await.result(dataCommit, Duration.Inf)
-      commitMetadata(prior, partials)
-    }
-    maybeCompact(days)
+    // metadata must not commit before the data it describes: a crash
+    // window may lose metadata for committed data but never the reverse
+    val partials = writeData
+    maybeCompact(commitMetadata(prior, partials))
     // the batch (and everything before it) is committed: the snapshot's
     // checkpoints are now safe to serve to replication followers. A
     // checkpoint-file failure must NOT fail the ingest that already
@@ -442,31 +483,55 @@ final class Store(spark: SparkSession, root: String,
     keyed.select((Dp.columns :+ "skey").map(col): _*)
       .withColumn("date", to_date(timestamp_millis(col("ts"))))
       .write.mode(SaveMode.Overwrite).partitionBy("date").parquet(tmp)
-    // adopting a pre-manifest layout: fold the existing files into the
-    // first manifest so nothing already on disk goes unreferenced
-    val (prevSeq, prevEntries) = currentDataManifest()
-      .getOrElse((0L, bootstrapDataEntries()))
-    val entries = scala.collection.mutable.Map(prevEntries.toSeq: _*)
-    val touched = Seq.newBuilder[String]
-    fs.listStatus(new Path(tmp)).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("date=")).foreach { dp =>
+    publishAppended(fs.listStatus(new Path(tmp)).toSeq.filter(_.isDirectory)
+      .map(_.getPath).filter(_.getName.startsWith("date=")).flatMap { dp =>
         val date = dp.getName.stripPrefix("date=")
-        touched += date
         val liveDir = new Path(s"$dataPath/date=$date")
         fs.mkdirs(liveDir)
-        var i = 0
-        fs.listStatus(dp)
+        fs.listStatus(dp).toSeq
           .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
-          .foreach { f =>
+          .zipWithIndex.map { case (f, i) =>
             val name = s"g${gen}_$i$KeyedSuffix"
-            i += 1
             fs.rename(f.getPath, new Path(liveDir, name))
-            entries(date) = entries.getOrElse(date, Nil) :+ s"date=$date/$name"
+            date -> s"date=$date/$name"
           }
-      }
-    publishDataManifest(prevSeq + 1, entries.toMap)
+      })
     fs.delete(new Path(tmp), true)
-    gcDataFiles(touched.result())
+  }
+
+  /** [[appendData]] for a batch on the driver: one file per date,
+    * written hidden by [[writeLocal]] and renamed in, then committed to
+    * the data manifest the same way.
+    */
+  private def appendLocal(keyed: Seq[(String, Dp)]): Unit = {
+    val gen = System.nanoTime()
+    val zone = sessionZone
+    publishAppended(keyed.groupBy { case (_, d) => localDate(d.ts, zone).toString }.toSeq
+      .sortBy(_._1).map { case (date, rows) =>
+        val name = s"g${gen}_0$KeyedSuffix"
+        val tmp = new Path(s"$dataPath/date=$date/.$name")
+        writeLocal(tmp.toString, dataFileSchema, rows.map { case (k, d) =>
+          Row(d.metric, d.tags, d.ts, d.value, d.seq, k)
+        })
+        fs.rename(tmp, new Path(s"$dataPath/date=$date/$name"))
+        date -> s"date=$date/$name"
+      })
+  }
+
+  /** Publish the data manifest with the files `moveIn` puts in place
+    * (date, relative path) appended, then drop the touched dates'
+    * unreferenced files. Adopting a pre-manifest layout: the files on
+    * disk before `moveIn` runs fold into the first manifest, so nothing
+    * already there goes unreferenced.
+    */
+  private def publishAppended(moveIn: => Seq[(String, String)]): Unit = {
+    val (prevSeq, prevEntries) = currentDataManifest()
+      .getOrElse((0L, bootstrapDataEntries()))
+    val files = moveIn
+    publishDataManifest(prevSeq + 1, files.foldLeft(prevEntries) { case (m, (date, f)) =>
+      m.updated(date, m.getOrElse(date, Nil) :+ f)
+    })
+    gcDataFiles(files.map(_._1).distinct)
   }
 
   // per-date count of shuffle-free appends since that date's data
@@ -485,9 +550,7 @@ final class Store(spark: SparkSession, root: String,
     // both candidates (dedup'd) and let the existence check skip the one
     // this batch didn't actually write. Sessions on UTC collapse to the
     // single exact date.
-    def localDate(ms: Long) =
-      java.time.Instant.ofEpochMilli(ms).atZone(sessionZone).toLocalDate.toString
-    days.flatMap(d => Seq(localDate(d), localDate(d + Rollup.DayMs - 1)))
+    days.flatMap(d => Seq(localDate(d), localDate(d + Rollup.DayMs - 1)).map(_.toString))
       .distinct.foreach { date =>
         val n = batchesSinceCompact(date) + 1
         if (n >= compactEveryBatches && exists(s"$dataPath/date=$date")) {
@@ -497,73 +560,62 @@ final class Store(spark: SparkSession, root: String,
       }
   }
 
-  /** The batch's partials, collected once: per (series, day, hour) the
-    * rollup accumulators (cnt/min/max/sum) and the slice inputs — the
-    * min and max ts, and whether a point was out of order within the
-    * batch or NaN/Inf. Within-batch OOO is a window over the BATCH's
-    * rows in `seq` order (bounded by batch size — the reference's
-    * in-memory page state); the cross-batch test against the stored hwm
-    * runs on the driver in [[commitMetadata]]. The window's shuffle by
-    * (skey, day) also serves the aggregate, whose keys extend it. Row
-    * layout: skey, day, wts, cnt, min, max, sum, bmin, bmax, booo.
+  /** The batch's partials, collected once: one shuffle by (skey, day),
+    * sorted by `seq` within each slice, whose tasks run
+    * [[Store.slicePartials]] on each run of one slice's rows.
     */
-  private def computeSliceState(keyed: DataFrame): Seq[Row] = {
-    val w = Window.partitionBy(col("skey"), col("day")).orderBy(col("seq"))
-      .rowsBetween(Window.unboundedPreceding, -1)
+  private def computeSliceState(keyed: DataFrame): Seq[Store.Partial] =
     keyed
       .withColumn("day", col("ts") - pmod(col("ts"), lit(Rollup.DayMs)))
-      .withColumn("prior", max(col("ts")).over(w))
-      .groupBy(col("skey"), col("day"),
-        (col("ts") - pmod(col("ts"), lit(Rollup.HourMs))).as("wts"))
-      .agg(
-        count(col("value")).as("cnt"),
-        min(col("value")).as("min"),
-        max(col("value")).as("max"),
-        sum(col("value")).as("sum"),
-        min(col("ts")).as("bmin"),
-        max(col("ts")).as("bmax"),
-        max(coalesce(
-          (col("prior").isNotNull && col("ts") <= col("prior")) ||
-            isnan(col("value")) ||
-            col("value") === Double.PositiveInfinity ||
-            col("value") === Double.NegativeInfinity,
-          lit(false))).as("booo"))
-      .collect().toSeq
-  }
+      .repartition(col("skey"), col("day"))
+      .sortWithinPartitions("skey", "day", "seq")
+      .select("skey", "day", "ts", "value")
+      .rdd.mapPartitions { it =>
+        val rows = it.buffered
+        Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
+          val (k, day) = (rows.head.getString(0), rows.head.getLong(1))
+          val points = Vector.newBuilder[(Long, java.lang.Double)]
+          while (rows.hasNext && rows.head.getLong(1) == day && rows.head.getString(0) == k) {
+            val r = rows.next()
+            points += r.getLong(2) -> (if (r.isNullAt(3)) null else Double.box(r.getDouble(3)))
+          }
+          Store.slicePartials(k, day, points.result())
+        }
+      }.collect().toSeq
 
-  /** Commit the batch's metadata from its collected partials, reading
-    * back only the state of days older than the resident week
-    * ([[hwmOf]]): per touched day, the hourly partials as a 1h delta,
-    * their per-series fold as a 1d delta (sum of sums, min of mins —
-    * the composition rule of the reference's level-2 build), and the
-    * touched slices' new state — the batch's slice checked against the
-    * catalog's (`hwm` = max, `ooo` = or, plus the cross-batch test: a
-    * batch point at or before the stored hwm) — plus the series the
-    * catalog lacks. The driver writes each as one file into a new
-    * generation dir, publishes the manifests, and replaces the catalog
-    * snapshot with one that holds the new state and series. Returns the
-    * touched days, for the compaction cadence.
+  /** Commit the batch's metadata from its partials, reading back only
+    * the state of days older than the resident week ([[hwmOf]]): per
+    * touched day, the hourly partials as a 1h delta, their per-series
+    * fold as a 1d delta (sum of sums, min of mins — the composition rule
+    * of the reference's level-2 build), and the touched slices' new
+    * state — the batch's slice checked against the catalog's (`hwm` =
+    * max, `ooo` = or, plus the cross-batch test: a batch point at or
+    * before the stored hwm) — plus the series the catalog lacks. The
+    * driver writes each as one file into a new generation dir, publishes
+    * the manifests, and replaces the catalog snapshot with one that holds
+    * the new state and series. Returns the touched days, for the
+    * compaction cadence.
     */
-  private def commitMetadata(prior: Catalog, partials: Seq[Row]): Seq[Long] = {
+  private def commitMetadata(prior: Catalog, partials: Seq[Store.Partial]): Seq[Long] = {
     if (partials.isEmpty) return Nil
     val gen = System.nanoTime()
-    val bySlice = partials.groupBy(r => (r.getLong(1), r.getString(0)))
+    val bySlice = partials.groupBy(p => (p.day, p.skey))
     val days = bySlice.keys.map(_._1).toSeq.distinct.sorted
-    // Spark's aggregate rules: nulls skipped, NaN above every number
-    def fold(hours: Seq[Row], i: Int)(f: (Double, Double) => Double): Any =
-      hours.filterNot(_.isNullAt(i)).map(_.getDouble(i)).reduceOption(f)
+    // Spark's aggregate rules: nulls skipped, min/max as Store.minOf/maxOf
+    def fold(hours: Seq[Store.Partial])(v: Store.Partial => java.lang.Double)(
+        f: (Double, Double) => Double): java.lang.Double =
+      hours.flatMap(h => Option(v(h))).map(_.doubleValue).reduceOption(f)
         .map(Double.box).orNull
-    val order = Ordering.Double.TotalOrdering
     val daily = bySlice.toSeq.map { case ((day, k), slice) =>
-      val hours = slice.sortBy(_.getLong(2))
-      day -> Row(k, hours.map(_.getLong(3)).sum, fold(hours, 4)(order.min),
-        fold(hours, 5)(order.max), fold(hours, 6)(_ + _), day, day)
+      val hours = slice.sortBy(_.wts)
+      day -> Row(k, hours.map(_.cnt).sum, fold(hours)(_.min)(Store.minOf),
+        fold(hours)(_.max)(Store.maxOf), fold(hours)(_.sum)(_ + _), day, day)
     }
     val hwm = hwmOf(prior, days)
     val state = bySlice.toSeq.map { case ((day, k), hours) =>
-      val bmin = hours.map(_.getLong(7)).min
-      val bmax = hours.map(_.getLong(8)).max
-      val ooo = hours.exists(_.getBoolean(9))
+      val bmin = hours.map(_.bmin).min
+      val bmax = hours.map(_.bmax).max
+      val ooo = hours.exists(_.ooo)
       (day, k, hwm(day).get(k).fold(Slice(bmax, ooo))(h => Slice(h max bmax,
         ooo || bmin <= h || prior.days.get(day).exists(_.marked(k)))))
     }
@@ -578,12 +630,12 @@ final class Store(spark: SparkSession, root: String,
     val stateDirs = deltas(statePath, stateSchema,
       state.map { case (day, k, s) => day -> Row(k, s.hwm, s.ooo, day) })
     val (stateSeq, stateEntries) = appendToManifest(statePath, stateDirs)
-    appendToManifest(rollupPath, deltas(rollupPath, rollupSchema, partials.map(r =>
-      r.getLong(1) -> Row(r(0), r(3), r(4), r(5), r(6), r(2), r(1)))))
+    appendToManifest(rollupPath, deltas(rollupPath, rollupSchema, partials.map(p =>
+      p.day -> Row(p.skey, p.cnt, p.min, p.max, p.sum, p.wts, p.day))))
     appendToManifest(rollup1dPath, deltas(rollup1dPath, rollupSchema, daily))
     // new series: the append-only index gains one file, written hidden
     // and renamed in, since readers list the index dir
-    val newRows = partials.map(_.getString(0)).distinct.filterNot(prior.keys).sorted
+    val newRows = partials.map(_.skey).distinct.filterNot(prior.keys).sorted
       .map { k => val (metric, tags) = Dp.parseKey(k); Row(k, metric, tags) }
     val indexFile = if (newRows.isEmpty) None else {
       val name = s"g$gen.parquet"
@@ -723,7 +775,7 @@ final class Store(spark: SparkSession, root: String,
     val local = java.time.LocalDate.parse(date)
     def startMs(d: java.time.LocalDate) = d.atStartOfDay(sessionZone).toInstant.toEpochMilli
     Seq(startMs(local), startMs(local.plusDays(1)) - 1)
-      .map(ms => ms - Math.floorMod(ms, Rollup.DayMs)).distinct
+      .map(Store.floorTo(_, Rollup.DayMs)).distinct
       .foreach(foldDeltas)
   }
 
@@ -914,6 +966,66 @@ private object Store {
     * point arrived at or before it (or was NaN/Inf).
     */
   final case class Slice(hwm: Long, ooo: Boolean)
+
+  /** One hour of one slice in a batch: the rollup accumulators (`min`,
+    * `max` and `sum` null when no point carries a value), the min and max
+    * ts, and whether a point was out of order within the batch or NaN/Inf.
+    */
+  final case class Partial(skey: String, day: Long, wts: Long, cnt: Long,
+      min: java.lang.Double, max: java.lang.Double, sum: java.lang.Double,
+      bmin: Long, bmax: Long, ooo: Boolean)
+
+  /** `ms` floored to a multiple of `unit` (a UTC day or hour). */
+  def floorTo(ms: Long, unit: Long): Long = ms - Math.floorMod(ms, unit)
+
+  /** Spark's `min` and `max` of doubles, one value at a time: NaN above
+    * every number and -0.0 equal to 0.0 (`compareDoubles`), and the
+    * running value changes only for a strictly smaller (larger) one, so
+    * of equal values the first stays.
+    */
+  def minOf(acc: Double, x: Double): Double = if (compareDoubles(x, acc) < 0) x else acc
+  def maxOf(acc: Double, x: Double): Double = if (compareDoubles(x, acc) > 0) x else acc
+
+  /** The partials kernel: one (series, day) slice's points (ts, value) in
+    * `seq` order to its per-hour [[Partial]]s. A point is out of order
+    * when it is at or before the max ts of the points before it — the
+    * reference's in-memory page test, bounded by batch size. Spark's
+    * aggregate rules hold: a null value counts only in the ts columns,
+    * min and max are [[minOf]]/[[maxOf]] in `seq` order, and the sum adds
+    * in `seq` order from 0.0. Both ingest forms run it, so their
+    * metadata agree bit for bit.
+    */
+  def slicePartials(skey: String, day: Long,
+      points: Seq[(Long, java.lang.Double)]): Seq[Partial] = {
+    final class Hour(val wts: Long, var bmin: Long, var bmax: Long) {
+      var cnt = 0L
+      var min, max, sum = 0.0
+      var ooo = false
+    }
+    val hours = scala.collection.mutable.TreeMap.empty[Long, Hour]
+    var hwm: Option[Long] = None
+    points.foreach { case (ts, v) =>
+      val wts = floorTo(ts, Rollup.HourMs)
+      val h = hours.getOrElseUpdate(wts, new Hour(wts, ts, ts))
+      h.bmin = h.bmin min ts
+      h.bmax = h.bmax max ts
+      h.ooo ||= hwm.exists(ts <= _)
+      hwm = Some(hwm.fold(ts)(_ max ts))
+      if (v != null) {
+        val x = v.doubleValue
+        h.ooo ||= x.isNaN || x.isInfinite
+        h.min = if (h.cnt == 0) x else minOf(h.min, x)
+        h.max = if (h.cnt == 0) x else maxOf(h.max, x)
+        h.sum += x
+        h.cnt += 1
+      }
+    }
+    hours.values.map { h =>
+      def valued(x: Double): java.lang.Double = if (h.cnt == 0) null else Double.box(x)
+      Partial(skey, day, h.wts, h.cnt, valued(h.min), valued(h.max), valued(h.sum),
+        h.bmin, h.bmax, h.ooo)
+    }.toSeq
+  }
 
   /** Days whose hwm the catalog holds: the newest week of days with
     * slice state — the reference's archive threshold.

@@ -128,7 +128,7 @@ class ApiSpec extends SparkSpec {
       assert(samples.exists(s =>
         s.metric == "graft.query.latency.ms" && s.status == "ok" && s.value >= 0))
       assert(samples.exists(_.metric == "graft.query.count"))
-      val dp = SelfMetrics.toDp(spark, samples)
+      val dp = SelfMetrics.toDp(samples).toDF()
       assert(dp.columns.toSeq === Seq("metric", "tags", "ts", "value", "seq"))
       // round-trips through the normal query planner
       val latest = dp.filter(col("metric") === "graft.query.latency.ms")
@@ -328,7 +328,7 @@ class StreamingSpec extends SparkSpec {
       SelfMetrics.Sample("graft.query.latency.ms", "count", "ok", 1000L, 12.5),
       SelfMetrics.Sample("graft.query.latency.ms", "collect", "ok", 2000L, 7.5),
       SelfMetrics.Sample("graft.query.count", "count", "ok", 1000L, 1.0))
-    val dp = SelfMetrics.toDp(spark, samples)
+    val dp = SelfMetrics.toDp(samples).toDF()
     val res = Planner
       .planSub(dp, TsQuery(0L, 10000L),
         SubQuery("graft.query.latency.ms", "avg", Some("0all-avg"),

@@ -61,6 +61,40 @@ class HttpSpec extends SparkSpec {
         s""""dps":{"$T0s":11.0,"${T0s + 3600}":22.0}}]""")
   }
 
+  test("a put commits from the driver: no Spark job, no generated class") {
+    import org.apache.spark.ListenerProbe
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // 300 lines over 12 series on two dates, some rewriting a point
+    val lines = (0 until 300).map { i =>
+      val ts = T0s - 1800 + 30L * (i % 120)
+      s"put driver.m $ts ${i * 0.5} host=h${i % 6} dc=d${i % 2}"
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    api.boundPort // the server boots before the count starts
+    ListenerProbe.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(post("/api/put", lines.mkString("\n")).statusCode() === 200)
+      ListenerProbe.drain(sc)
+      assert(jobs.get === 0, "Spark jobs run by the put")
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+        "classes compiled by the put")
+    } finally sc.removeSparkListener(listener)
+    // committed, and the last line of a rewritten (series, ts) wins
+    val last = (0 until 300).groupMapReduce(i => (i % 6, i % 120))(identity)(_ max _)
+    val resp = post("/api/query",
+      s"""{"start":${T0s - 1800},"end":$T2s,"queries":[
+         |{"metric":"driver.m","aggregator":"sum","downsample":"0all-sum"}]}""".stripMargin)
+    assert(resp.statusCode() === 200)
+    assert(resp.body().contains(s":${last.values.map(_ * 0.5).sum}}"), resp.body())
+  }
+
   test("gzip and deflate request bodies inflate before parse (tcollector)") {
     def postEncoded(path: String, body: Array[Byte],
         encoding: String): HttpResponse[String] =

@@ -109,7 +109,7 @@ class MqttSpec extends SparkSpec {
   test("plain-topic publishes land in the store; QoS1 is PUBACKed") {
     val broker = new MiniMqttBroker
     val store = freshStore()
-    val client = new MqttLineClient(spark, store, "127.0.0.1", broker.port,
+    val client = new MqttLineClient(store, "127.0.0.1", broker.port,
       topics = Seq("tele/plain" -> "plain"), seqs = new SeqWindows(() => Now))
     try {
       assert(broker.subscribed.take() === "tele/plain")
@@ -132,7 +132,7 @@ class MqttSpec extends SparkSpec {
       retained = Seq("tele/plain" -> s"put mqtt.ret $T0s 4.5 host=r"))
     val store = freshStore()
     // construction must survive the PUBLISH-before-SUBACK interleaving
-    val client = new MqttLineClient(spark, store, "127.0.0.1", broker.port,
+    val client = new MqttLineClient(store, "127.0.0.1", broker.port,
       topics = Seq("tele/plain" -> "plain"), seqs = new SeqWindows(() => Now))
     try {
       val resp = awaitContains(store, client, "mqtt.ret", "4.5")
@@ -143,7 +143,7 @@ class MqttSpec extends SparkSpec {
   test("broker restart: client re-subscribes and keeps ingesting") {
     val broker1 = new MiniMqttBroker
     val store = freshStore()
-    val client = new MqttLineClient(spark, store, "127.0.0.1", broker1.port,
+    val client = new MqttLineClient(store, "127.0.0.1", broker1.port,
       topics = Seq("tele/plain" -> "plain"), keepAliveSec = 1,
       seqs = new SeqWindows(() => Now))
     try {
@@ -167,7 +167,7 @@ class MqttSpec extends SparkSpec {
   test("line-topic publishes parse as Influx; string payloads skipped") {
     val broker = new MiniMqttBroker
     val store = freshStore()
-    val client = new MqttLineClient(spark, store, "127.0.0.1", broker.port,
+    val client = new MqttLineClient(store, "127.0.0.1", broker.port,
       topics = Seq("tele/line" -> "line", "tele/plain" -> "plain"),
       seqs = new SeqWindows(() => Now))
     try {

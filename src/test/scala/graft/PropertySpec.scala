@@ -40,11 +40,6 @@ class PropertySpec extends SparkSpec {
   private def samples[A](g: Gen[A]): Seq[A] =
     (0 until Cases).map(i => g.pureApply(Gen.Parameters.default, Seed(42L + i)))
 
-  /** JVM twin of [[Dp.seriesKey]]. */
-  private def skeyOf(metric: String, tags: Map[String, String]): String =
-    (metric +: tags.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" })
-      .mkString(",")
-
   private def runDs(points: Seq[Dp], ds: String): Map[(String, Long), Double] = {
     val end = points.map(_.ts).max + 1
     Planner
@@ -174,7 +169,7 @@ class PropertySpec extends SparkSpec {
         .select("skey", "ts", "value").as[(String, Long, Double)]
         .collect().map { case (k, t, v) => (k, t) -> v }.toMap
       val expect = (base ++ overrides)
-        .groupBy(p => (skeyOf(p.metric, p.tags), p.ts))
+        .groupBy(p => (Dp.seriesKey(p.metric, p.tags), p.ts))
         .map { case (k, ps) => k -> ps.maxBy(_.seq).value }
       assert(res === expect, s"case $i")
     }
@@ -428,6 +423,24 @@ class PropertySpec extends SparkSpec {
     val h = 0L
     val far = (0 until 4).foldLeft(h)((x, b) => x ^ (1L << (b * 10)))
     assert(!combos.forall { case (_, bs) => keyOf(h, bs) == keyOf(far, bs) })
+  }
+
+  test("the driver-side series key equals Spark's for any tag map") {
+    import org.apache.spark.sql.functions.col
+    // supplementary characters (U+1D538, U+1F600) against U+FF21 and
+    // U+E000: UTF-16 code units and UTF-8 bytes order these two groups
+    // oppositely, and Spark sorts tag keys by their UTF-8 bytes
+    val chars = Gen.oneOf("a", "b", "Z", "0", "_", "é", "ß", "中", "\uFF21", "\uE000",
+      "\uD835\uDD38", "\uD83D\uDE00")
+    def text(min: Int) = Gen.choose(min, 3).flatMap(Gen.listOfN(_, chars)).map(_.mkString)
+    val tagsGen = Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.zip(text(1), text(0)))).map(_.toMap)
+    val cases = samples(Gen.listOfN(60, Gen.zip(text(1), tagsGen))).flatten :+
+      ("m" -> Map("\uFF21" -> "x", "\uD835\uDD38" -> "y"))
+    val derived = cases.toDF("metric", "tags")
+      .select(Dp.seriesKey(col("metric"), col("tags"))).as[String].collect().toSeq
+    assert(derived === cases.map { case (m, t) => Dp.seriesKey(m, t) })
+    // the last case: String's order would put U+1D538 first
+    assert(derived.last === "m,\uFF21=x,\uD835\uDD38=y")
   }
 
   test("SeqWindows: windows are strictly increasing under concurrent claims") {

@@ -36,7 +36,7 @@ class SocketSpec extends SparkSpec {
   }
 
   test("TCP plain: put lines over a real socket become queryable points") {
-    val tcp = new TcpLineServer(spark, store, proto = "plain", seqs = seqs)
+    val tcp = new TcpLineServer(store, proto = "plain", seqs = seqs)
     try {
       val sock = new Socket("127.0.0.1", tcp.boundPort)
       val out = sock.getOutputStream
@@ -60,7 +60,7 @@ class SocketSpec extends SparkSpec {
   }
 
   test("TCP plain: inline version command answered on-socket") {
-    val tcp = new TcpLineServer(spark, store, proto = "plain", seqs = seqs)
+    val tcp = new TcpLineServer(store, proto = "plain", seqs = seqs)
     try {
       val sock = new Socket("127.0.0.1", tcp.boundPort)
       sock.getOutputStream.write("version\n".getBytes(UTF_8))
@@ -73,7 +73,7 @@ class SocketSpec extends SparkSpec {
   }
 
   test("TCP plain: inline help answered on-socket") {
-    val tcp = new TcpLineServer(spark, store, proto = "plain", seqs = seqs)
+    val tcp = new TcpLineServer(store, proto = "plain", seqs = seqs)
     try {
       val sock = new Socket("127.0.0.1", tcp.boundPort)
       sock.getOutputStream.write("help\n".getBytes(UTF_8))
@@ -87,7 +87,7 @@ class SocketSpec extends SparkSpec {
 
   test("TCP plain: inline stats drains self-metrics as put lines") {
     val recorder = graft.api.SelfMetrics.install(spark)
-    val tcp = new TcpLineServer(spark, store, proto = "plain", seqs = seqs,
+    val tcp = new TcpLineServer(store, proto = "plain", seqs = seqs,
       recorder = Some(recorder))
     try {
       // the recorder hears actions via the (async) listener bus: keep
@@ -117,7 +117,7 @@ class SocketSpec extends SparkSpec {
 
   test("TCP plain: diediedie answers then runs the shutdown hook") {
     val stopped = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val tcp = new TcpLineServer(spark, store, proto = "plain", seqs = seqs,
+    val tcp = new TcpLineServer(store, proto = "plain", seqs = seqs,
       onShutdownCmd = Some(() => stopped.set(true)))
     try {
       val sock = new Socket("127.0.0.1", tcp.boundPort)
@@ -134,7 +134,7 @@ class SocketSpec extends SparkSpec {
   }
 
   test("TCP influx: line protocol port explodes fields into _field series") {
-    val tcp = new TcpLineServer(spark, store, proto = "influx", seqs = seqs,
+    val tcp = new TcpLineServer(store, proto = "influx", seqs = seqs,
       nowMs = () => Now)
     try {
       val sock = new Socket("127.0.0.1", tcp.boundPort)
@@ -153,7 +153,7 @@ class SocketSpec extends SparkSpec {
   }
 
   test("UDP: datagrams of put lines land best-effort, last-wins vs TCP") {
-    val udp = new UdpLineServer(spark, store, seqs = seqs)
+    val udp = new UdpLineServer(store, seqs = seqs)
     try {
       val sock = new DatagramSocket()
       val payload = Seq(
@@ -171,7 +171,7 @@ class SocketSpec extends SparkSpec {
   }
 
   test("cross-transport dedup: later seq window wins on the same (series, ts)") {
-    val tcp = new TcpLineServer(spark, store, proto = "plain", seqs = seqs)
+    val tcp = new TcpLineServer(store, proto = "plain", seqs = seqs)
     try {
       // first write 1.0, quiesce, then overwrite with 9.0 on a later window
       val s1 = new Socket("127.0.0.1", tcp.boundPort)

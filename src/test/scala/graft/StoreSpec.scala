@@ -510,56 +510,89 @@ class StoreSpec extends SparkSpec {
       var seq = 0L
       def next() = { seq += 1; seq }
       // five puts over two days: hosts a and b land anywhere on a
-      // half-hour grid (late points, rewritten timestamps, some NaN);
-      // host c is in order and clean; host d first appears in put 3
+      // half-hour grid (late points, rewritten timestamps, some NaN and
+      // ±Inf); host c is in order and clean; host d first appears in put
+      // 3; the tagless series moves back an hour a put (late across puts);
+      // hosts z and zn hold 0.0 and -0.0 in one hour, in both orders
       val puts = (0 until 5).map { b =>
         val messy = (0 until 8).map { _ =>
           val ts = T0 + rnd.nextInt(2) * D + rnd.nextInt(48) * 30 * 60000L
-          val v = if (rnd.nextInt(12) == 0) Double.NaN else rnd.nextInt(1000) / 10.0
+          val v = rnd.nextInt(24) match {
+            case 0 | 1 => Double.NaN
+            case 2 => Double.PositiveInfinity
+            case 3 => Double.NegativeInfinity
+            case _ => rnd.nextInt(1000) / 10.0
+          }
           (Seq("a", "b")(rnd.nextInt(2)), ts, v, next())
         }
         val inOrder = (0 until 4).map(j =>
           ("c", T0 + (b * 4 + j) * 2 * H + 60000L, rnd.nextInt(1000) / 10.0, next()))
         val fresh = if (b < 2) Nil else Seq(("d", T0 + b * 9 * H, b.toDouble, next()))
-        messy ++ inOrder ++ fresh
+        val tagless = ("", T0 + (5 - b) * H + 120000L, rnd.nextInt(1000) / 10.0, next())
+        val zeros = Seq(("z", 0.0, -0.0), ("zn", -0.0, 0.0)).flatMap { case (h, x, y) =>
+          Seq((h, T0 + b * H + 60000L, x, next()), (h, T0 + b * H + 120000L, y, next()))
+        }
+        messy ++ inOrder ++ fresh ++ zeros :+ tagless
       }
-      def dp(rows: Seq[(String, Long, Double, Long)]) =
-        spark.createDataset(rows.map { case (h, ts, v, q) =>
-          Dp("p.m", Map("host" -> h), ts, v, q)
-        }).toDF()
+      // host "" is the tagless series
+      def points(rows: Seq[(String, Long, Double, Long)]) = rows.map { case (h, ts, v, q) =>
+        Dp("p.m", if (h.isEmpty) Map.empty[String, String] else Map("host" -> h), ts, v, q)
+      }
+      def dp(rows: Seq[(String, Long, Double, Long)]) = spark.createDataset(points(rows)).toDF()
       def mkStore(name: String) = {
         val root = java.nio.file.Files.createTempDirectory(name).toString
         (root, new Store(spark, root, compactEveryBatches = 0))
       }
       val (rootN, byPut) = mkStore(s"store_prop_n$seed")
       puts.foreach(p => byPut.ingest(dp(p)))
+      // the same puts as batches already on the driver
+      val (rootS, bySeq) = mkStore(s"store_prop_s$seed")
+      puts.foreach(p => bySeq.ingest(points(p)))
       val (_, once) = mkStore(s"store_prop_1$seed")
       once.ingest(dp(puts.flatten))
 
       def marks(st: Store) = st.oooMarks.as[(String, Long)].collect().toSet
       def answers(st: Store) = propQueries.map(q => rounded(QueryApi.runQuery(st, q)))
+      def views(st: Store) = (exactRows(st.rollup1h), exactRows(st.rollup1d), answers(st))
       val truthMarks = Rollup.oooSlices(dp(puts.flatten)).as[(String, Long)].collect().toSet
       // the data exercises both halves of a routed answer
       assert(truthMarks.nonEmpty && !truthMarks.exists(_._1 == "p.m,host=c"), s"seed $seed")
-      assert(deltasPerDay(rootN, "rollup_1h").values.forall(_ > 1))
+      assert(truthMarks.contains(("p.m", T0)), s"seed $seed")
+      Seq(rootN, rootS).foreach(r => assert(deltasPerDay(r, "rollup_1h").values.forall(_ > 1)))
 
-      val before = (exactRows(byPut.rollup1h), exactRows(byPut.rollup1d), answers(byPut))
+      val before = views(byPut)
       assert(marks(byPut) === truthMarks, s"seed $seed")
       assert(marks(once) === truthMarks, s"seed $seed")
       assert(roundedRows(byPut.rollup1h) === roundedRows(once.rollup1h), s"seed $seed")
       assert(roundedRows(byPut.rollup1d) === roundedRows(once.rollup1d), s"seed $seed")
       assert(before._3 === answers(once), s"seed $seed")
+      // both ingest forms run one partials kernel: the views keep their bits
+      assert(marks(bySeq) === truthMarks, s"seed $seed")
+      assert(views(bySeq) === before, s"seed $seed")
+      assert(exactRows(bySeq.seriesIndex) === exactRows(byPut.seriesIndex), s"seed $seed")
+      assert(exactRows(bySeq.data) === exactRows(byPut.data), s"seed $seed")
+      // as Spark's min and max, an hour's min and max keep the first of
+      // two equal zeros
+      Seq(byPut, bySeq, once).foreach(st => Seq(st.rollup1h, st.rollup1d).foreach { v =>
+        val zeros = exactRows(v.filter(col("skey").startsWith("p.m,host=z"))
+          .select(col("skey"), col("min"), col("max")))
+        assert(zeros === Set(Seq("p.m,host=z", "0.0", "0.0"),
+          Seq("p.m,host=zn", "-0.0", "-0.0")), s"seed $seed")
+      })
 
-      Seq("2024-01-05", "2024-01-06").foreach(byPut.compactDay(_))
-      Seq("slice_state", "rollup_1h", "rollup_1d").foreach(t =>
-        assert(deltasPerDay(rootN, t).values.forall(_ == 1), s"$t seed $seed"))
-      assert(marks(byPut) === truthMarks, s"seed $seed")
-      // the fold adds sums in commit order: the merged views keep their bits
-      assert((exactRows(byPut.rollup1h), exactRows(byPut.rollup1d), answers(byPut)) === before,
-        s"seed $seed")
+      Seq(byPut, bySeq).foreach(st => Seq("2024-01-05", "2024-01-06").foreach(st.compactDay(_)))
+      Seq(rootN, rootS).foreach(r => Seq("slice_state", "rollup_1h", "rollup_1d").foreach(t =>
+        assert(deltasPerDay(r, t).values.forall(_ == 1), s"$t seed $seed")))
+      Seq(byPut, bySeq).foreach { st =>
+        assert(marks(st) === truthMarks, s"seed $seed")
+        // the fold adds sums in commit order: the merged views keep their bits
+        assert(views(st) === before, s"seed $seed")
+      }
       // and a fresh catalog loaded from the folded files agrees
-      val reopened = new Store(spark, rootN, compactEveryBatches = 0)
-      assert(marks(reopened) === truthMarks && answers(reopened) === before._3, s"seed $seed")
+      Seq(rootN, rootS).foreach { r =>
+        val reopened = new Store(spark, r, compactEveryBatches = 0)
+        assert(marks(reopened) === truthMarks && answers(reopened) === before._3, s"seed $seed")
+      }
     }
   }
 

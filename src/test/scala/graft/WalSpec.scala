@@ -50,7 +50,7 @@ class WalSpec extends SparkSpec {
 
     // process 2: same wal dir; the flush loop drains the tail with no
     // socket traffic at all
-    val tcp = new TcpLineServer(spark, store, proto = "plain",
+    val tcp = new TcpLineServer(store, proto = "plain",
       seqs = new SeqWindows(() => Now), walDir = Some(walDir))
     try {
       tcp.awaitQuiesce()
@@ -64,7 +64,7 @@ class WalSpec extends SparkSpec {
   test("clean pass: socket lines land in the store and the WAL drains to empty") {
     val store = newStore()
     val walDir = Files.createTempDirectory("wal_clean").toString
-    val tcp = new TcpLineServer(spark, store, proto = "plain",
+    val tcp = new TcpLineServer(store, proto = "plain",
       seqs = new SeqWindows(() => Now), walDir = Some(walDir))
     try {
       val sock = new Socket("127.0.0.1", tcp.boundPort)
@@ -97,7 +97,7 @@ class WalSpec extends SparkSpec {
     val w = new Wal(walDir)
     lines.foreach(w.append)
     w.close()
-    val first = new TcpLineServer(spark, store, proto = "plain",
+    val first = new TcpLineServer(store, proto = "plain",
       seqs = new SeqWindows(() => Now), walDir = Some(walDir))
     first.awaitQuiesce()
     first.stop()
@@ -109,7 +109,7 @@ class WalSpec extends SparkSpec {
     val leftover = new Wal(walDir)
     lines.foreach(leftover.append)
     leftover.close()
-    val second = new TcpLineServer(spark, store, proto = "plain",
+    val second = new TcpLineServer(store, proto = "plain",
       seqs = new SeqWindows(() => Now + 60000), walDir = Some(walDir))
     try {
       second.awaitQuiesce()
