@@ -111,6 +111,9 @@ object QueryApi {
   /** Bounded collect — the ONLY place bulk data reaches the driver. The
     * limit is part of the plan, so an over-cap query never materializes
     * more than cap+1 rows driver-side (no unbounded collect, ever).
+    * Spark takes a limit's partitions in rounds, a job each; an answer
+    * the planner kept in one partition (its small-input plan) is taken
+    * in one job.
     */
   private def cappedCollect(df: DataFrame, maxDps: Int): Array[Row] = {
     val rows = df.limit(maxDps + 1).collect()
@@ -126,13 +129,20 @@ object QueryApi {
     */
   def executeQuery(dp: DataFrame, q: TsQuery,
       opt: Planner.Options = Planner.Options(),
-      maxDps: Int = DefaultMaxDps): String = {
+      maxDps: Int = DefaultMaxDps): String =
+    executeQuery(dp, q, opt, maxDps, force = None)
+
+  /** [[executeQuery]] with the planner's one-partition decision forced
+    * when `force` is set (see [[Planner.planRouted]]).
+    */
+  private[graft] def executeQuery(dp: DataFrame, q: TsQuery,
+      opt: Planner.Options, maxDps: Int, force: Option[Boolean]): String = {
     // the cap is a RESPONSE budget, shared across sub-queries — each
     // sub collects against what the previous ones left (the reference
     // caps the whole response buffer, not per sub-query)
     var remaining = maxDps
     val sets = q.subQueries.flatMap { sub =>
-      val subSets = runSub(dp, q, sub, opt, remaining)
+      val subSets = runSub(dp, q, sub, opt, remaining, force)
       remaining -= subSets.iterator.map(_.dps.size).sum
       if (remaining < 0) throw ResponseTooLarge(maxDps)
       subSets
@@ -175,13 +185,13 @@ object QueryApi {
   }
 
   private def runSub(dp: DataFrame, q: TsQuery, sub: SubQuery,
-      opt: Planner.Options, maxDps: Int = DefaultMaxDps): Seq[ResultSet] = {
+      opt: Planner.Options, maxDps: Int, force: Option[Boolean]): Seq[ResultSet] = {
     // without a series index, ask the planner to carry each output row's
     // member series keys — aggregateTags then derives from the collected
     // rows themselves, not a second fact scan
     val planOpt =
       if (opt.seriesIndex.isEmpty) opt.copy(collectSeriesKeys = true) else opt
-    val df = Planner.planRouted(dp, q, sub, planOpt)
+    val df = Planner.planRouted(dp, q, sub, planOpt, force)
     val perSeries = df.columns.contains("skey")
 
     if (perSeries) {

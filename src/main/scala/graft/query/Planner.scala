@@ -30,6 +30,20 @@ import org.apache.spark.sql.functions._
   * include the series key — partial aggregation (map-side combine) applies
   * to dedup (max_by) and every downsample fn except percentile; nothing
   * collects to the driver.
+  *
+  * Small inputs run in one partition. Each query decides once, from the
+  * estimated size of what it reads: the analyzed `sizeInBytes` of its dp
+  * frame plus, when routed, its rollup source ([[estimatedBytes]]; for a
+  * file scan, the listed files' bytes: no job, no footer read). At or
+  * below [[SmallInputBytes]] a `coalesce(1)` sits right above each scan
+  * and its filters, which still push down through it. One partition
+  * satisfies every aggregate, window and sort, so the plan has no
+  * exchange, and its joins hash in place instead of broadcasting: the
+  * answer is one job of one task, where each shuffle stage would be a
+  * job of its own. Larger inputs keep the parallel plan above. The bound
+  * sits between the largest served query's input (about 0.58 MB: two
+  * compacted days of 160 series plus the live day) and the sf0.1 event
+  * view (2.35 MB); SCALING.md has the measurements.
   */
 object Planner {
 
@@ -87,12 +101,39 @@ object Planner {
       percentileSketchBucketMs: Long = Long.MaxValue,
       percentileSketchAccuracy: Int = 10000)
 
+  /** Inputs estimated at or below this many bytes plan in one partition
+    * (see Scale notes above).
+    */
+  val SmallInputBytes: Long = 1L << 20
+
+  /** A planner input's estimated size: its analyzed plan's `sizeInBytes`.
+    * For a file scan that is the size of the files its index listed when
+    * the read resolved, so the estimate runs no job and reads no footer.
+    */
+  private[graft] def estimatedBytes(df: DataFrame): BigInt =
+    df.queryExecution.analyzed.stats.sizeInBytes
+
+  private def isSmall(inputs: DataFrame*): Boolean =
+    inputs.map(estimatedBytes).sum <= SmallInputBytes
+
   /** Plan one sub-query against a dp DataFrame. */
   def planSub(
       dp: DataFrame,
       q: TsQuery,
       sub: SubQuery,
-      opt: Options = Options()): DataFrame = {
+      opt: Options = Options()): DataFrame =
+    planSub(dp, q, sub, opt, small = isSmall(dp))
+
+  /** [[planSub]] with the one-partition decision given: `small` plans
+    * the whole sub-query in one partition from the scan up.
+    */
+  private[graft] def planSub(
+      dp: DataFrame,
+      q: TsQuery,
+      sub: SubQuery,
+      opt: Options,
+      small: Boolean): DataFrame = {
+    def onePartition(df: DataFrame) = if (small) df.coalesce(1) else df
 
     val dsOpt = sub.downsample.map(Downsample.parse).filter(_.func != "none")
 
@@ -109,7 +150,8 @@ object Planner {
     // series index the matching keys resolve on the driver (lazily: a
     // source that derives skey needs them only for first/last's rank)
     lazy val keys = opt.seriesIndex.map(matchingSeries(_, sub))
-    var df = selectSeries(dp.filter(col("ts").between(scanStart, scanEnd)), sub, keys)
+    var df = onePartition(
+      selectSeries(dp.filter(col("ts").between(scanStart, scanEnd)), sub, keys))
 
     // ---- 3. last-wins dedup (seq = ingest order). max_by gets map-side
     // partial aggregation, so duplicates collapse before the shuffle.
@@ -147,7 +189,9 @@ object Planner {
       // participate in the cross-series aggregation (query.cpp step 6→7).
       ds.fill match {
         case FillPolicy.None => ()
-        case f if !ds.isAll =>
+        // a window that holds no bucket boundary scans nothing and has
+        // no spine to fill (an empty `sequence` range fails to fold)
+        case f if !ds.isAll && scanStart <= scanEnd =>
           val i = ds.intervalMs
           val spineStart = ds.stepUp(q.startMs)
           val lastBucket = q.endMs - math.floorMod(q.endMs, i)
@@ -156,8 +200,12 @@ object Planner {
             .withColumn(
               "ts",
               explode(sequence(lit(spineStart), lit(lastBucket), lit(i))))
+          // the spine's other side passes the broadcast threshold; in
+          // one partition a hash join needs neither exchange nor job
+          val values = df.select("skey", "ts", "value")
           val joined = spine
-            .join(df.select("skey", "ts", "value"), Seq("skey", "ts"), "left")
+            .join(if (small) values.hint("shuffle_hash") else values,
+              Seq("skey", "ts"), "left")
           // zero/nan substitute a value; null leaves the gap row's NULL
           df = f.valueOrNull match {
             case Some(fv) => joined.withColumn("value", coalesce(col("value"), lit(fv)))
@@ -194,7 +242,8 @@ object Planner {
           .orderBy(if (dir == "top") col("score").desc else col("score").asc, col("skey"))
           .limit(n)
           .select("skey")
-        df.join(broadcast(keep), Seq("skey"), "left_semi")
+        df.join(if (small) keep.hint("shuffle_hash") else broadcast(keep),
+            Seq("skey"), "left_semi")
           .select(col("skey"), Dp.tagsFromKey(col("skey")).as("tags"),
             col("ts"), col("value"))
 
@@ -238,7 +287,7 @@ object Planner {
             .agg(sort_array(collect_set(col("skey"))).as("skeys_"))
             .withColumn("ts", lit(null).cast("long"))
             .withColumn("value", lit(null).cast("double"))
-          values.unionByName(roster.select(values.columns.map(col): _*))
+          onePartition(values.unionByName(roster.select(values.columns.map(col): _*)))
         } else grouped.agg(valueAgg)
     }
 
@@ -249,7 +298,7 @@ object Planner {
       if (out.columns.contains("skeys_")) {
         val rated = rate(out.filter(col("ts").isNotNull), sub,
           groupKeysOf(out))
-        rated.unionByName(out.filter(col("ts").isNull))
+        onePartition(rated.unionByName(out.filter(col("ts").isNull)))
       } else rate(out, sub, groupKeysOf(out))
     } else out
   }
@@ -276,13 +325,24 @@ object Planner {
       dp: DataFrame,
       q: TsQuery,
       sub: SubQuery,
-      opt: Options): DataFrame = {
+      opt: Options): DataFrame =
+    planRouted(dp, q, sub, opt, force = None)
+
+  /** [[planRouted]] with the one-partition decision forced when `force`
+    * is set; None decides from the inputs' estimated size.
+    */
+  private[graft] def planRouted(
+      dp: DataFrame,
+      q: TsQuery,
+      sub: SubQuery,
+      opt: Options,
+      force: Option[Boolean]): DataFrame = {
     import graft.rollup.Rollup
     val dsOpt = sub.downsample.map(Downsample.parse).filter(_.func != "none")
     val routedLevel =
       if (opt.rollup1h.isEmpty) None else Rollup.route(dsOpt, sub.rollupUsage)
     routedLevel match {
-      case None => planSub(dp, q, sub, opt)
+      case None => planSub(dp, q, sub, opt, force.getOrElse(isSmall(dp)))
       case Some(level) =>
         val ds = dsOpt.get
         val snapped = Rollup.snap(ds.intervalMs, level)
@@ -290,6 +350,8 @@ object Planner {
           if (level == Rollup.DayMs)
             opt.rollup1d.getOrElse(Rollup.rollup1d(opt.rollup1h.get))
           else opt.rollup1h.get
+        val small = force.getOrElse(isSmall(dp, source))
+        def onePartition(df: DataFrame) = if (small) df.coalesce(1) else df
         val scanEnd = q.endMs - math.floorMod(q.endMs, snapped) + snapped - 1
 
         // series selection, shared by the raw and rollup sides: with an
@@ -297,15 +359,15 @@ object Planner {
         // on their stored skey; otherwise per-row predicates (key-derived
         // columns on the rollup side, which carries skey only)
         val keys = opt.seriesIndex.map(matchingSeries(_, sub))
-        val raw = selectSeries(dp, sub, keys)
-          .filter(col("ts").between(q.startMs, scanEnd))
-        val rolled = (keys match {
+        val raw = onePartition(selectSeries(dp, sub, keys)
+          .filter(col("ts").between(q.startMs, scanEnd)))
+        val rolled = onePartition((keys match {
           case Some(ks) => source.filter(keyIn(ks))
           case None => source
             .filter(Dp.metricFromKey(col("skey")) === sub.metric)
             .filter(TagFilters.compileAll(Dp.tagsFromKey(col("skey")),
               sub.tags, sub.explicitTags))
-        }).filter(col("wts").between(q.startMs, scanEnd))
+        }).filter(col("wts").between(q.startMs, scanEnd)))
         // marks cover WHOLE day slices intersecting the range: an OOO
         // point's earlier-ingested witness may lie outside the query
         // window but inside the slice
@@ -322,11 +384,11 @@ object Planner {
             }).filter(col("day").between(dayLo, dayHi))
               .select("skey", "day").collect()
               .map(r => (r.getString(0), r.getLong(1))).toSeq
-            Rollup.downsampleWithFallback(raw, rolled, resolved, snapped, ds.func)
+            Rollup.downsampleWithFallback(raw, rolled, resolved, snapped, ds.func, small)
           case None =>
-            val derived = Rollup.oooSlices(
-              selectSeries(dp, sub, keys).filter(col("ts").between(dayLo, dayHi)))
-            Rollup.downsampleWithFallback(raw, rolled, derived, snapped, ds.func)
+            val derived = Rollup.oooSlices(onePartition(
+              selectSeries(dp, sub, keys).filter(col("ts").between(dayLo, dayHi))))
+            Rollup.downsampleWithFallback(raw, rolled, derived, snapped, ds.func, small)
         }
         // hand the per-series buckets to the shared pipeline tail (fill,
         // cross-series aggregation, rate): an identity re-downsample at
@@ -351,7 +413,8 @@ object Planner {
             .withColumn("seq", lit(0L)),
           q,
           tail,
-          opt.copy(dedup = false, seriesIndex = None, rollup1h = None))
+          opt.copy(dedup = false, seriesIndex = None, rollup1h = None),
+          small)
     }
   }
 

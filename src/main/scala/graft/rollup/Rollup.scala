@@ -120,20 +120,26 @@ object Rollup {
     */
   def downsampleWithFallback(dp: DataFrame, rollup: DataFrame,
       intervalMs: Long, func: String): DataFrame =
-    downsampleWithFallback(dp, rollup, oooSlices(dp), intervalMs, func)
+    downsampleWithFallback(dp, rollup, oooSlices(dp), intervalMs, func, onePartition = false)
 
   /** Variant taking a precomputed `(skey, day)` marks frame — at scale
     * the invalidation table is maintained incrementally at ingest (the
     * reference sets `out_of_order2` on write, `src/core/ts.cpp:281-324`),
-    * not re-derived per query.
+    * not re-derived per query. `onePartition`: every input already has
+    * one partition (the planner's small-input plan), so the joins hash
+    * in place instead of broadcasting the marks, and the merge keeps one
+    * partition.
     */
   def downsampleWithFallback(dp: DataFrame, rollup: DataFrame,
-      precomputedMarks: DataFrame, intervalMs: Long, func: String): DataFrame = {
-    val marks = broadcast(precomputedMarks)
+      precomputedMarks: DataFrame, intervalMs: Long, func: String,
+      onePartition: Boolean): DataFrame = {
+    val marks =
+      if (onePartition) precomputedMarks.hint("shuffle_hash")
+      else broadcast(precomputedMarks)
     mergeFallback(
       withDay(rollup, "wts").join(marks, Seq("skey", "day"), "left_anti"),
       withDay(Dp.ensureSeriesKey(dp), "ts").join(marks, Seq("skey", "day"), "left_semi"),
-      intervalMs, func)
+      intervalMs, func, onePartition)
   }
 
   /** Variant taking marks already resolved on the driver (the store's
@@ -142,30 +148,33 @@ object Rollup {
     * runs; with no marks the raw branch folds away at plan time.
     */
   def downsampleWithFallback(dp: DataFrame, rollup: DataFrame,
-      marks: Seq[(String, Long)], intervalMs: Long, func: String): DataFrame = {
+      marks: Seq[(String, Long)], intervalMs: Long, func: String,
+      onePartition: Boolean): DataFrame = {
     val marked = marks.groupBy(_._2).toSeq.sortBy(_._1)
       .map { case (day, ms) => col("day") === day && col("skey").isin(ms.map(_._1).sorted: _*) }
       .reduceOption(_ || _).getOrElse(lit(false))
     mergeFallback(
       withDay(rollup, "wts").filter(!marked),
       withDay(Dp.ensureSeriesKey(dp), "ts").filter(marked),
-      intervalMs, func)
+      intervalMs, func, onePartition)
   }
 
   private def withDay(df: DataFrame, tsCol: String): DataFrame =
     df.withColumn("day", col(tsCol) - pmod(col(tsCol), lit(DayMs)))
 
   /** Clean rollup slices plus the marked slices recomputed from raw
-    * (last-wins dedup at raw resolution), downsampled together.
+    * (last-wins dedup at raw resolution), downsampled together. A union
+    * of two one-partition inputs has two partitions, so `onePartition`
+    * coalesces it back to one.
     */
   private def mergeFallback(clean: DataFrame, rawSlices: DataFrame,
-      intervalMs: Long, func: String): DataFrame = {
+      intervalMs: Long, func: String, onePartition: Boolean): DataFrame = {
     val recomputed = rawSlices
       .groupBy(col("skey"), col("ts"))
       .agg(max_by(col("value"), col("seq")).as("value"))
-    downsampleFromRollup(
-      clean.drop("day").unionByName(rollup1hKeyed(recomputed), allowMissingColumns = false),
-      intervalMs, func)
+    val merged =
+      clean.drop("day").unionByName(rollup1hKeyed(recomputed), allowMissingColumns = false)
+    downsampleFromRollup(if (onePartition) merged.coalesce(1) else merged, intervalMs, func)
   }
 
   /** Downsample a rollup table to `intervalMs` buckets with function

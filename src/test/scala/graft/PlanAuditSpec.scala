@@ -1,5 +1,7 @@
 package graft
 
+import graft.model.DpView
+import graft.query.Planner
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
@@ -15,7 +17,7 @@ class PlanAuditSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def fp(name: String): (Explain.Fingerprint, String) = {
+  private def fp(name: String, sf: String = sf): (Explain.Fingerprint, String) = {
     val df: DataFrame = SparkEntry.queries(name)(spark, sf)
     df.count() // AQE-final plan
     val plan = df.queryExecution.explainString(FormattedMode)
@@ -48,7 +50,18 @@ class PlanAuditSpec extends SparkSpec {
   test("downsample scan: pushdown, no joins, hash-agg only, few shuffles") {
     val (f, plan) = fp("q_ds_avg")
     assert(f.pushedFilters, "ts/metric bounds must reach the parquet scan")
-    assert(f.exchanges <= 3, s"q_ds_avg shuffles: ${f.exchanges}\n$plan")
+    // below Planner.SmallInputBytes the plan keeps one partition
+    assert(f.exchanges === 0, s"q_ds_avg shuffles: ${f.exchanges}\n$plan")
+    assert(f.sortMergeJoins == 0 && f.nestedLoopJoins == 0)
+    assert(f.sortAggregates == 0, "downsample must stay hash-aggregated")
+  }
+
+  test("downsample scan over an input above the small-input bound: parallel, few shuffles") {
+    val large = sf.replace("sf0.001", "sf0.1")
+    assert(Planner.estimatedBytes(DpView.dp(spark, large)) > Planner.SmallInputBytes)
+    val (f, plan) = fp("q_ds_avg", large)
+    assert(f.pushedFilters, "ts/metric bounds must reach the parquet scan")
+    assert(f.exchanges >= 1 && f.exchanges <= 3, s"q_ds_avg shuffles: ${f.exchanges}\n$plan")
     assert(f.sortMergeJoins == 0 && f.nestedLoopJoins == 0)
     assert(f.sortAggregates == 0, "downsample must stay hash-aggregated")
   }

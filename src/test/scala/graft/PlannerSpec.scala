@@ -159,6 +159,15 @@ class PlannerSpec extends SparkSpec {
     assert(res(4 * H).isNaN && res(5 * H).isNaN)
   }
 
+  test("fill over a window that holds no bucket boundary answers empty") {
+    // 1h30..3h59 holds no 4h boundary: the stepped-up start is past the
+    // last bucket, so nothing is scanned and there is no spine to fill
+    val res = Planner
+      .planSub(dpDf, TsQuery(H + 1800000L, 4 * H - 1),
+        SubQuery("m", "sum", Some("4h-avg-zero")))
+    assert(res.count() === 0)
+  }
+
   test("dedup=false skips last-wins: duplicate rows both survive") {
     val dup = Dp("m", Map("host" -> "h1"), 60000L, 99.0, 100L)
     val df = spark.createDataset(dps :+ dup).toDF()

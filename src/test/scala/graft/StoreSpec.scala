@@ -1,8 +1,8 @@
 package graft
 
 import graft.api.QueryApi
-import graft.model.{Dp, SubQuery, TsQuery}
-import graft.query.Planner
+import graft.model.{Dp, RateOptions, RollupUsage, SubQuery, TsQuery}
+import graft.query.{FillPolicy, Planner}
 import graft.rollup.Rollup
 import graft.store.Store
 import org.apache.spark.sql.functions._
@@ -378,11 +378,170 @@ class StoreSpec extends SparkSpec {
       var json = ""
       val sites = jobSites { json = QueryApi.runQuery(st, q) }
       assert(json.contains("\"dps\":{\""), json)
-      assert(sites.nonEmpty)
+      // a small input plans in one partition: the collect is one job
+      assert(sites.size === 1, sites.mkString("\n----\n"))
       // series, marks and aggregateTags all resolve from the catalog
       sites.foreach(site => assert(site.contains("QueryApi$.cappedCollect"),
         s"a job ran outside the answer's collect:\n$site"))
     }
+  }
+
+  /** The six shapes of the wirebench `serve` workload, over
+    * [[servedStore]]'s metric, hosts and two days.
+    */
+  private val servedShapes: Seq[(String, TsQuery)] = {
+    val (h, d) = (H / 1000, D / 1000)
+    val (start, e) = (T0 / 1000, T0 / 1000 + 2 * d)
+    def body(from: Long, sub: String) =
+      QueryApi.parseRequest(s"""{"start":$from,"end":$e,"queries":[{"metric":"srv.m",$sub}]}""")
+    Seq(
+      "dash_6h" -> body(e - 6 * h,
+        """"aggregator":"avg","downsample":"1m-avg","tags":{"host":"wildcard(*)"}"""),
+      "week_1h" -> body(e - 7 * d,
+        """"aggregator":"avg","downsample":"1h-avg","tags":{"dc":"*"}"""),
+      "hist_1d" -> body(start,
+        """"aggregator":"max","downsample":"1d-max","tags":{"host":"literal_or(a|c)"}"""),
+      "day_p99" -> body(e - d, """"aggregator":"p99","downsample":"15m-avg""""),
+      "hist_dev" -> body(start,
+        """"aggregator":"avg","downsample":"1d-dev","tags":{"dc":"*"}"""),
+      "rate_6h" -> body(e - 6 * h,
+        """"aggregator":"sum","rate":true,"rateOptions":{"counter":true},"tags":{"dc":"*"}"""))
+  }
+
+  /** The `PushedFilters` of each file scan in a physical plan, sorted. */
+  private def pushedFilters(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val p = plan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    p.collect { case s: FileSourceScanExec => s.metadata("PushedFilters") }.sorted
+  }
+
+  test("each served shape over a small store runs one job, no exchange, and pushes the parallel plan's filters") {
+    val st = servedStore("store_shapes")
+    servedShapes.foreach { case (shape, q) =>
+      val sub = q.subQueries.head
+      def plan(force: Option[Boolean]) = Planner.planRouted(QueryApi.storeFrame(st, q),
+        q, sub, st.plannerOptions(), force).queryExecution.executedPlan
+      val small = plan(None)
+      val f = Explain.fingerprint(small)
+      assert(f.exchanges === 0 && f.broadcastJoins === 0, s"$shape:\n$small")
+      // the coalesce sits above the filters: every scan keeps its pushdown
+      val pushed = pushedFilters(small)
+      assert(pushed.nonEmpty && pushed.forall(_ != "[]"), s"$shape: $pushed")
+      assert(pushed === pushedFilters(plan(Some(false))), shape)
+      var json = ""
+      val sites = jobSites { json = QueryApi.runQuery(st, q) }
+      assert(json.contains("\"dps\":{\""), s"$shape: $json")
+      assert(sites.size === 1, s"$shape:\n${sites.mkString("\n----\n")}")
+    }
+  }
+
+  test("a store input above SmallInputBytes keeps its parallel plan and its exchanges") {
+    val root = java.nio.file.Files.createTempDirectory("store_large").toString
+    val st = new Store(spark, root, compactEveryBatches = 0)
+    // one point a second for 60 series over 3 hours: a few MB of parquet
+    st.ingest(spark.range(0, 60 * 3 * 3600).select(
+      lit("big.m").as("metric"),
+      map(lit("host"), concat(lit("h"), (col("id") % 60).cast("string"))).as("tags"),
+      (lit(T0) + expr("id div 60") * 1000L).as("ts"),
+      (col("id") % 1000).cast("double").as("value"),
+      col("id").as("seq")))
+    val q = QueryApi.parseRequest(s"""{"start":${T0 / 1000},"end":${T0 / 1000 + 3 * 3600},
+      |"queries":[{"metric":"big.m","aggregator":"sum","downsample":"1m-max"}]}""".stripMargin)
+    val dp = QueryApi.storeFrame(st, q)
+    assert(Planner.estimatedBytes(dp) > Planner.SmallInputBytes, Planner.estimatedBytes(dp))
+    val df = Planner.planRouted(dp, q, q.subQueries.head, st.plannerOptions())
+    val plan = df.queryExecution.executedPlan
+    assert(Explain.fingerprint(plan).exchanges > 0, plan)
+    assert(QueryApi.runQuery(st, q) === QueryApi.executeQuery(dp, q, st.plannerOptions(),
+      QueryApi.DefaultMaxDps, force = Some(true)))
+  }
+
+  test("property: the one-partition plan answers every sub-query as the parallel plan does") {
+    val root = java.nio.file.Files.createTempDirectory("store_equiv").toString
+    val st = new Store(spark, root, compactEveryBatches = 0)
+    val rnd = new scala.util.Random(11)
+    var seq = 0L
+    def next() = { seq += 1; seq }
+    def dps(rows: Seq[(String, Int, Long, Long)]) = spark.createDataset(rows.map {
+      case (m, host, ts, v) =>
+        Dp(m, Map("host" -> s"h$host", "dc" -> (if (host % 2 == 0) "east" else "west")),
+          ts, v.toDouble, next())
+    }).toDF()
+    // a gauge of six hosts every 20 minutes over two days, with gaps,
+    // and a counter of four hosts every 30 minutes that resets; integer
+    // values, in three batches
+    val gauge = for {
+      k <- 0 until 144; host <- 0 until 6 if rnd.nextInt(7) != 0
+    } yield ("eq.g", host, T0 + k * 20 * 60000L, rnd.nextInt(1000).toLong)
+    val counter = (0 until 4).flatMap { host =>
+      var v = 0L
+      (0 until 96).map { k =>
+        v = if (rnd.nextInt(20) == 0) rnd.nextInt(10).toLong else v + rnd.nextInt(100)
+        ("eq.c", host, T0 + k * 30 * 60000L, v)
+      }
+    }
+    (gauge ++ counter).sortBy(_._3).grouped(800).foreach(b => st.ingest(dps(b)))
+    // a late batch: rewrites and off-grid points behind the high-water
+    // mark mark (series, day) slices out of order on both days
+    st.ingest(dps((0 until 12).map { i =>
+      val (host, ts) = (rnd.nextInt(6), T0 + rnd.nextInt(2) * D + rnd.nextInt(24) * H)
+      ("eq.g", host, if (i % 2 == 0) ts else ts + 7 * 60000L, rnd.nextInt(1000).toLong)
+    }))
+    val marks = st.oooMarks.as[(String, Long)].collect()
+    assert(marks.map(_._2).toSet === Set(T0, T0 + D), marks.toSeq)
+
+    val funcs = Seq("avg", "sum", "count", "min", "max", "dev", "first", "last", "p50", "p90", "p99")
+    val fills = Seq("", "-zero", "-nan", "-null")
+    val aggs = Seq("none", "sum", "avg", "count", "min", "max", "dev", "first", "last",
+      "p95", "top2", "bottom3")
+    val tagSets = Seq(Map.empty[String, String], Map("host" -> "*"), Map("dc" -> "*"),
+      Map("dc" -> "east"), Map("host" -> "literal_or(h1|h4)"))
+    val queries = (0 until 44).map { i =>
+      val interval = Seq("30m", "1h", "2h", "6h", "1d", "0all")(rnd.nextInt(6))
+      val fill = if (interval == "0all") "" else fills(i / 11)
+      val tags = tagSets(i % tagSets.size)
+      val rate = i % 4 == 3
+      val from = T0 + rnd.nextInt(30) * H + rnd.nextInt(60) * 60000L
+      TsQuery(from, from + (6 + rnd.nextInt(40)) * H, msResolution = true, Seq(SubQuery(
+        metric = if (rate) "eq.c" else "eq.g",
+        aggregator = aggs(i % aggs.size),
+        downsample = Some(s"$interval-${funcs(i % funcs.size)}$fill"),
+        rate = rate,
+        rateOptions = RateOptions(counter = rate, dropResets = i % 8 == 3),
+        tags = tags,
+        groupByTags = tags.keys.toSeq.sorted)))
+    }
+    /** What a sub-query exercises, for the coverage check below. */
+    def features(sub: SubQuery): Set[String] = {
+      val ds = graft.query.Downsample.parse(sub.downsample.get)
+      Set(s"fn ${ds.func}", s"fill ${ds.fill}",
+        if (Rollup.route(Some(ds), RollupUsage.FallbackRaw).isEmpty) "raw" else "routed") ++
+        Some("dropResets").filter(_ => sub.rateOptions.dropResets) ++
+        Some("topN/bottomN").filter(_ => sub.aggregator.matches("(top|bottom)\\d")) ++
+        Some("group-by").filter(_ => sub.groupByTags.nonEmpty)
+    }
+
+    val integral = """-?\d+\.0(?![0-9])|"NaN"|"Inf"""".r
+    val number = """-?\d+\.\d+|"NaN"|"Inf"""".r
+    val covered = queries.flatMap { q =>
+      def json(small: Boolean) = QueryApi.executeQuery(QueryApi.storeFrame(st, q), q,
+        st.plannerOptions(), QueryApi.DefaultMaxDps, force = Some(small))
+      val (one, parallel) = (json(true), json(false))
+      assert(rounded(one) === rounded(parallel), q)
+      // integer-valued answers are order-free: they match bit for bit
+      val values = number.findAllIn(parallel).toSeq
+      if (values.forall(v => integral.pattern.matcher(v).matches)) assert(one === parallel, q)
+      if (parallel.contains("\"dps\":{\"")) features(q.subQueries.head) else Set.empty[String]
+    }.toSet
+    // every feature is covered by an answer that holds points
+    val wanted = funcs.map(f => s"fn $f") ++
+      Seq(FillPolicy.None, FillPolicy.Zero, FillPolicy.NaN, FillPolicy.Null).map(f => s"fill $f") ++
+      Seq("raw", "routed", "dropResets", "topN/bottomN", "group-by")
+    assert(wanted.toSet -- covered === Set.empty)
   }
 
   test("store query plan: the series key is read, never derived above the scan") {
