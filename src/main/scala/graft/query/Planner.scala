@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   * + `tags` (per-series results) or the grouping tag columns (aggregated
   * results).
   *
-  * Scale notes: every stage is a hash aggregation or window over keys that
-  * include the series key — partial aggregation (map-side combine) applies
-  * to dedup (max_by) and every downsample fn except percentile; nothing
-  * collects to the driver.
+  * Scale notes: in the parallel plan every stage is a hash aggregation or
+  * window over keys that include the series key — partial aggregation
+  * (map-side combine) applies to dedup (max_by) and every downsample fn
+  * except percentile; nothing collects to the driver.
   *
   * Small inputs run in one partition. Each query decides once, from the
   * estimated size of what it reads: the analyzed `sizeInBytes` of its dp
